@@ -162,7 +162,7 @@ def build_app(store) -> Flask:
     from .serving_cache import ServingCache
 
     cache = ServingCache(store)
-    app.serving_cache = cache  # observability handle (serving_bench counters)
+    app.serving_cache = cache  # observability handle (tier counters)
 
     @app.before_request
     def _serving_pool():
@@ -195,9 +195,9 @@ def build_app(store) -> Flask:
     resp_lock = threading.Lock()
     resp_token = [None]
     RESP_MAX_ENTRIES = 128
-    # SPARK_GRAFT_RESPONSE_CACHE=0 disables layer 0 entirely — the bench's
-    # cold-execution arm (serving_bench --no-response-cache), so the 20 s
-    # deadline is demonstrated against real execution, not LRU hits
+    # SPARK_GRAFT_RESPONSE_CACHE=0 disables layer 0 entirely — the
+    # cold-execution arm, so the 20 s deadline is demonstrated against
+    # real execution, not LRU hits
     resp_enabled = os.environ.get("SPARK_GRAFT_RESPONSE_CACHE", "1") != "0"
 
     def run_query(payload: dict) -> Response:

@@ -192,7 +192,7 @@ class KVTier:
         # state — snapshot isolation, the read the reference's Postgres
         # gives during a concurrent ingest transaction. Without this,
         # every fact adopt forced an inline index REBUILD (a GIL-bound
-        # footer walk) under 32 request threads (serving_bench --stacks,
+        # footer walk) under 32 request threads (stack-sampled serving run,
         # r11: kv_index_build:transfer fired 4x inside one client window).
         self._prev_indexes: dict[str, _TableIndex] = {}
         # (table, tenant) → sorted page rows, valid for one fingerprint

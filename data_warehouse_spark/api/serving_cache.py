@@ -140,8 +140,8 @@ class ServingCache:
         # Spark job (key → {"event", "rows"}); a thundering herd of 32
         # first-requests otherwise runs 32 identical jobs
         self._inflight: dict[tuple, dict] = {}
-        # observability: per-kind hit/miss/fallback counts (serving_bench
-        # reports these — the measurement of WHICH path served a run)
+        # observability: per-kind hit/miss/fallback counts (the
+        # measurement of WHICH path served a run)
         self.counters: "collections.Counter[str]" = collections.Counter()
         # the tier PAST the snapshot bound: row-group-pruned point reads
         # over the same artifacts (kv_tier module docstring) — tables the
@@ -208,7 +208,7 @@ class ServingCache:
         on the leader's Spark job: bounded staleness of exactly one
         committed snapshot, the read a Postgres client gets when its
         query started before a concurrent ingest transaction committed
-        (the reference's semantics).  serving_bench --stacks (r11)
+        (the reference's semantics).  A stack-sampled serving run (r11)
         measured follower blocking as the hottest request-side frame
         during the merge window (32 threads × coalesced waits); the
         bbtest poll contract is preserved because a poll repeats until

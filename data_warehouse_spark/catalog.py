@@ -88,14 +88,6 @@ def load_all(spark: SparkSession, sf_dir: str) -> LazyTables:
     return LazyTables(spark, sf_dir)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view (SQL entry point)."""
-    tables = load_all(spark, sf_dir)
-    for name in TESTDATA_TABLES:
-        tables[name].createOrReplaceTempView(name)
-    return tables
-
-
 # ---------------------------------------------------------------------------
 # Derived warehouse tables — Spark side
 # ---------------------------------------------------------------------------
@@ -291,7 +283,7 @@ def materialize_base_tables(
             if _source_row_groups(sf_dir, name) >= n_files:
                 # already splittable to the target parallelism — the rewrite
                 # exists solely for under-split testdata; a source with
-                # >= n_files row groups (scale_up output, any real pipeline's
+                # >= n_files row groups (a scaled fixture, any real pipeline's
                 # parquet) scans at full parallelism as-is, and skipping the
                 # copy saves a full-dataset rewrite + its disk (20 GB at
                 # sf100). A 2-4-row-group file would still cap scan

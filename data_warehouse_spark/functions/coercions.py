@@ -50,9 +50,3 @@ def status_code(name: str) -> int:
         raise ValueError(
             f"unknown status {name!r}; expected one of {sorted(STATUS_CODES)}"
         ) from None
-
-
-def iso_timestamp(col: Column | str) -> Column:
-    """Render a timestamp as the reference API's ISO form (UTC session TZ)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss")

@@ -149,7 +149,7 @@ def table_fingerprint(store, name: str) -> str | None:
         # bumps per sub-operation, and on every new epoch all 32 request
         # threads used to start the same O(dirs) walk concurrently —
         # each stretched ~Nx by the GIL convoy (stack-sampled at ~70% of
-        # total thread time in serving_bench --stacks). One thread walks,
+        # total thread time in a 32-client serving run). One thread walks,
         # the rest block on the lock (GIL released) and read the memo.
         lock = _store_locks(store).setdefault(name, threading.Lock())
         with lock:
@@ -314,8 +314,8 @@ def stale_window(store) -> tuple[str, str, list[str]] | None:
     discipline as table_fingerprint): the inventory diff walks
     O(partition dirs) of GIL-bound driver work, and r10's deferred rollup
     maintenance made the window the STEADY-STATE balance serving path —
-    serving_bench --stacks caught a bad draw with ~6000 of ~16000 thread
-    samples inside this walk (every mutation epoch, all 32 request
+    a stack-sampled serving run caught a bad draw with ~6000 of ~16000
+    thread samples inside this walk (every mutation epoch, all 32 request
     threads re-walked concurrently, each stretched ~Nx by the GIL
     convoy; wall 62 s vs 14 s on good draws). One thread walks per
     epoch; the rest block on the lock (GIL released) and read the memo."""
@@ -364,7 +364,7 @@ def window_for_token(store, token: str | None):
     adopting files mid-request moves the live window token, and before
     r11 the pinned request fell back to the Spark path — under a 9 s
     contended merge tick EVERY in-flight balance request fell back,
-    measured as the fixture→queryable tail (serving_bench --stacks).
+    measured as the fixture→queryable tail (stack-sampled serving run).
     Because the window's inputs are immutable, serving the PINNED state
     is exact snapshot-isolation semantics — the same read the reference
     gets from Postgres MVCC during a concurrent ingest transaction

@@ -27,7 +27,9 @@ fixed iteration count and exact cross-engine fold orders
 
 from __future__ import annotations
 
+import collections
 import math
+import threading
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -357,8 +359,9 @@ def lsh_topk(
         None if planes is None else tuple(tuple(p) for p in planes),
         multiprobe, tuple(query_ids), id_col, vec_col,
     )
-    if pk is not None and pk in _TOPK_PLAN_CACHE:
-        return _TOPK_PLAN_CACHE[pk]
+    cached = _plan_cache_get(pk)
+    if cached is not None:
+        return cached
     planes = _resolve_planes(embeddings, planes)
     bucketed = _lsh_bucketed_corpus(embeddings, id_col, vec_col, planes,
                                     index_cache_key)
@@ -397,9 +400,7 @@ def lsh_topk(
         .select("query_id", "neighbor_id", "rank")
         .orderBy("query_id", "rank")
     )
-    if pk is not None:
-        _TOPK_PLAN_CACHE[pk] = out
-    return out
+    return _plan_cache_put(pk, out)
 
 
 def kmeans_refine(
@@ -552,8 +553,37 @@ _IVF_INDEX_CACHE: dict[tuple, tuple] = {}
 # Same lifecycle contract as the index caches: cache_key must uniquely
 # identify the corpus DATA, entries die with the Spark app (applicationId
 # in the key) and are evicted by clear_ivf_cache — plans built over a
-# persisted index must not outlive the index's eviction.
-_TOPK_PLAN_CACHE: dict[tuple, DataFrame] = {}
+# persisted index must not outlive the index's eviction. Bounded LRU: a
+# long-lived session serving many distinct signatures keeps only the most
+# recent _TOPK_PLAN_CACHE_MAX plans (the catalog builds ~14 per corpus).
+_TOPK_PLAN_CACHE_MAX = 64
+_TOPK_PLAN_CACHE: collections.OrderedDict[tuple, DataFrame] = (
+    collections.OrderedDict()
+)
+_TOPK_PLAN_LOCK = threading.Lock()
+
+
+def _plan_cache_get(pk) -> DataFrame | None:
+    """The cached plan for ``pk`` (marked most recently used), or None."""
+    if pk is None:
+        return None
+    with _TOPK_PLAN_LOCK:
+        out = _TOPK_PLAN_CACHE.get(pk)
+        if out is not None:
+            _TOPK_PLAN_CACHE.move_to_end(pk)
+        return out
+
+
+def _plan_cache_put(pk, out: DataFrame) -> DataFrame:
+    """Cache ``out`` under ``pk`` (no-op for None), evicting the least
+    recently used plans past the bound; returns ``out``."""
+    if pk is not None:
+        with _TOPK_PLAN_LOCK:
+            _TOPK_PLAN_CACHE[pk] = out
+            _TOPK_PLAN_CACHE.move_to_end(pk)
+            while len(_TOPK_PLAN_CACHE) > _TOPK_PLAN_CACHE_MAX:
+                _TOPK_PLAN_CACHE.popitem(last=False)
+    return out
 
 
 def _plan_cache_key(embeddings: DataFrame, index_cache_key, *parts):
@@ -595,10 +625,12 @@ def clear_ivf_cache(cache_key: str | None = None) -> int:
             pass  # session already stopped — nothing to release
     # cached plans reference the just-unpersisted index frames — evict them
     # together (they hold no rows or persisted blocks themselves)
-    for k in [
-        k for k in _TOPK_PLAN_CACHE if cache_key is None or k[1] == cache_key
-    ]:
-        del _TOPK_PLAN_CACHE[k]
+    with _TOPK_PLAN_LOCK:
+        for k in [
+            k for k in _TOPK_PLAN_CACHE
+            if cache_key is None or k[1] == cache_key
+        ]:
+            del _TOPK_PLAN_CACHE[k]
     return len(doomed) + len(lsh_doomed)
 
 
@@ -919,8 +951,9 @@ def ivf_topk(
         embeddings, index_cache_key, "ivf_topk", k, n_cells, nprobe,
         tuple(query_ids), id_col, vec_col, train_iters, fast,
     )
-    if pk is not None and pk in _TOPK_PLAN_CACHE:
-        return _TOPK_PLAN_CACHE[pk]
+    cached = _plan_cache_get(pk)
+    if cached is not None:
+        return cached
     n_cells = _resolve_n_cells(embeddings, n_cells)
     if nprobe is None:
         nprobe = auto_nprobe(n_cells)
@@ -960,9 +993,7 @@ def ivf_topk(
         .select("query_id", "neighbor_id", "rank")
         .orderBy("query_id", "rank")
     )
-    if pk is not None:
-        _TOPK_PLAN_CACHE[pk] = out
-    return out
+    return _plan_cache_put(pk, out)
 
 
 # single source of truth for the stored-index layout — consumers (the
@@ -1789,8 +1820,9 @@ def pq_topk(
         embeddings, index_cache_key, "pq_topk", k,
         (m, sub, kc), tuple(query_ids), id_col, vec_col, train_iters,
     )
-    if pk is not None and pk in _TOPK_PLAN_CACHE:
-        return _TOPK_PLAN_CACHE[pk]
+    cached = _plan_cache_get(pk)
+    if cached is not None:
+        return cached
     cache_k = None
     if index_cache_key is not None:
         spark = embeddings.sparkSession
@@ -1871,9 +1903,7 @@ def pq_topk(
         .select("query_id", "neighbor_id", "rank")
         .orderBy("query_id", "rank")
     )
-    if pk is not None:
-        _TOPK_PLAN_CACHE[pk] = out
-    return out
+    return _plan_cache_put(pk, out)
 
 
 def _ivfpq_adist_scored(
@@ -2034,8 +2064,9 @@ def ivfpq_topk(
         embeddings, index_cache_key, "ivfpq_topk", k, n_cells, nprobe,
         (m, sub, kc), tuple(query_ids), id_col, vec_col, train_iters,
     )
-    if pk is not None and pk in _TOPK_PLAN_CACHE:
-        return _TOPK_PLAN_CACHE[pk]
+    cached = _plan_cache_get(pk)
+    if cached is not None:
+        return cached
     scored = _ivfpq_adist_scored(
         embeddings, query_ids, n_cells, nprobe, m, sub, kc,
         id_col, vec_col, index_cache_key, train_iters,
@@ -2053,9 +2084,7 @@ def ivfpq_topk(
         .select("query_id", "neighbor_id", "rank")
         .orderBy("query_id", "rank")
     )
-    if pk is not None:
-        _TOPK_PLAN_CACHE[pk] = out
-    return out
+    return _plan_cache_put(pk, out)
 
 
 def ivfpq_refine_topk(
@@ -2092,8 +2121,9 @@ def ivfpq_refine_topk(
         n_cells, nprobe, (m, sub, kc), tuple(query_ids), id_col, vec_col,
         train_iters,
     )
-    if pk is not None and pk in _TOPK_PLAN_CACHE:
-        return _TOPK_PLAN_CACHE[pk]
+    cached = _plan_cache_get(pk)
+    if cached is not None:
+        return cached
     scored = _ivfpq_adist_scored(
         embeddings, query_ids, n_cells, nprobe, m, sub, kc,
         id_col, vec_col, index_cache_key, train_iters,
@@ -2135,6 +2165,4 @@ def ivfpq_refine_topk(
         .select("query_id", "neighbor_id", "rank")
         .orderBy("query_id", "rank")
     )
-    if pk is not None:
-        _TOPK_PLAN_CACHE[pk] = out
-    return out
+    return _plan_cache_put(pk, out)

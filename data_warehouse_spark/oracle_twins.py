@@ -445,18 +445,6 @@ FROM (SELECT doc_id, unnest(shingles) AS ngram FROM sh)
 GROUP BY ngram ORDER BY doc_freq DESC, ngram LIMIT {k}"""
 
 
-def stratified_sample_sql(rates: dict[str, int], default_pct: int, salt: str) -> str:
-    whens = " ".join(
-        f"WHEN '{lang}' THEN {pct}" for lang, pct in sorted(rates.items())
-    )
-    bucket = H60.format(s=f"concat(CAST(doc_id AS VARCHAR), '{salt}')")
-    return f"""
-SELECT doc_id, lang, ({bucket}) % 100 AS sample_bucket
-FROM documents
-WHERE ({bucket}) % 100 < (CASE lang {whens} ELSE {default_pct} END)
-ORDER BY doc_id"""
-
-
 def repetition_sql(n: int = 3) -> str:
     return f"""
 WITH tok AS (SELECT doc_id, {_toks()} AS toks FROM documents),
@@ -718,23 +706,6 @@ ranked AS (
 )
 SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= {k}
 ORDER BY query_id, rank"""
-
-
-def embedding_neardup_sql(planes: list[list[float]], threshold: float = 0.95, dim: int = 64) -> str:
-    bucket = _bucket_expr("v", planes, dim)
-    return f"""
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-b AS (SELECT vec_id, v, {bucket} AS bucket FROM e),
-pairs AS (
-  SELECT a.vec_id AS id_a, b2.vec_id AS id_b, a.v AS va, b2.v AS vb
-  FROM b a JOIN b b2 ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id
-)
-SELECT DISTINCT id_a, id_b FROM pairs
-WHERE {_cos('va', 'vb', dim)} >= {threshold}
-ORDER BY id_a, id_b"""
 
 
 def embedding_neardup_auto_sql(

@@ -219,28 +219,6 @@ def parse_account_meta(spark: SparkSession, raw: DataFrame | None) -> DataFrame:
     )
 
 
-SNAPSHOT_SCHEMA = T.StructType(
-    [
-        T.StructField("tenant", T.StringType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("version", T.IntegerType(), False),
-    ]
-)
-
-
-def read_snapshots(spark: SparkSession, root: str) -> DataFrame:
-    """Snapshot inventory: version list per account (file names only)."""
-    pattern = os.path.join(root, "t_*", "account", "*", "snapshot", "*")
-    raw = _read_wholetext(spark, pattern)
-    if raw is None:
-        return _empty(spark, SNAPSHOT_SCHEMA)
-    return raw.select(
-        F.regexp_extract("path", r"/t_([^/]+)/account/", 1).alias("tenant"),
-        F.regexp_extract("path", r"/account/([^/]+)/snapshot/", 1).alias("name"),
-        F.regexp_extract("path", r"/snapshot/(\d+)$", 1).cast("int").alias("version"),
-    )
-
-
 ACCOUNT_EVENT_SCHEMA = T.StructType(
     [
         T.StructField("tenant", T.StringType(), False),
@@ -251,13 +229,6 @@ ACCOUNT_EVENT_SCHEMA = T.StructType(
         T.StructField("version", T.IntegerType(), False),
     ]
 )
-
-
-def read_account_events(spark: SparkSession, root: str) -> DataFrame:
-    """Account events: filename carries (status, _, transaction); first line
-    of the file is the event version (S5)."""
-    pattern = os.path.join(root, "t_*", "account", "*", "events", "*", "*")
-    return parse_account_events(spark, _read_wholetext(spark, pattern))
 
 
 def read_account_event_paths(spark: SparkSession, paths: list[str]) -> DataFrame:

@@ -490,8 +490,15 @@ class TableStore:
             vdir = self._resolve(name)
             if vdir is None:
                 vdir = self._new_version_dir(name)
-                n, _adopted = self._adopt_files(staging, vdir)
-                self._swap(name, vdir)
+                n, adopted = self._adopt_files(staging, vdir)
+                if adopted:
+                    self._swap(name, vdir)
+                else:
+                    # an ``assume_nonempty`` batch that came up empty: a
+                    # version dir with no parquet file would make every
+                    # later read fail schema inference, so the table stays
+                    # absent and ``read`` serves its empty schema frame
+                    shutil.rmtree(vdir, ignore_errors=True)
             else:
                 n, adopted = self._adopt_files(staging, vdir)
                 if n:

@@ -152,6 +152,14 @@ def ingest_abc_schema() -> T.StructType:
 
 ABC_PRIMARY_KEYS = ["tenant", "src_tenant", "transaction", "transfer", "side"]
 
+# rollup-maintenance deferral bound (balance_view.maintain
+# defer_under_files): a busy tick skips the rollup converge while the
+# append-only stale window stays under this many part files — serving
+# answers EXACT balances through that window (KV Arrow delta), and the
+# first idle tick (or a window overflow) converges N deferred ticks in one
+# combined CDC apply
+ROLLUP_DEFER_FILES = 24
+
 
 def _driver_df(spark: SparkSession, rows, schema) -> DataFrame:
     """createDataFrame for a DRIVER-OWNED tick batch as ONE slice.
@@ -291,27 +299,11 @@ class IngestionPipeline:
         spark: SparkSession,
         primary_root: str,
         store: TableStore,
-        strict: bool = True,
         listing_cache: bool = True,
-        rollup_defer_files: int | None = -1,
     ):
         self.spark = spark
         self.root = primary_root
         self.store = store
-        self.strict = strict
-        # rollup-maintenance deferral bound (balance_view.maintain
-        # defer_under_files): a busy tick skips the rollup converge while
-        # the append-only stale window stays under this many part files —
-        # serving answers EXACT balances through that window (KV Arrow
-        # delta), and the first idle tick (or a window overflow) converges
-        # N deferred ticks in one combined CDC apply. -1 = env default
-        # (SPARK_GRAFT_ROLLUP_DEFER_FILES, default 24); None/0 = always
-        # converge in-tick (the pre-r10 behavior).
-        if rollup_defer_files == -1:
-            rollup_defer_files = int(
-                os.environ.get("SPARK_GRAFT_ROLLUP_DEFER_FILES", "24")
-            )
-        self.rollup_defer_files = rollup_defer_files or None
         # per-directory mtime watermarks: steady-state ticks examine only
         # changed-or-pending accounts (O(changed dirs), the reference's 2 s
         # cadence target at warehouse width). False = re-walk every tick.
@@ -466,7 +458,7 @@ class IngestionPipeline:
                         )
                     m.extra.pop("_active_keys", None)
                     balance_view.maintain(
-                        store, defer_under_files=self.rollup_defer_files
+                        store, defer_under_files=ROLLUP_DEFER_FILES
                     )
                     clock.lap("rollup_converge_check")
             inv = spark.createDataFrame(
@@ -505,7 +497,7 @@ class IngestionPipeline:
             # table) or a crash between merge and maintenance. Deferral
             # bound passed through: a busy tick leaves small windows to
             # the first idle tick (which calls maintain BARE and converges).
-            balance_view.maintain(store, defer_under_files=self.rollup_defer_files)
+            balance_view.maintain(store, defer_under_files=ROLLUP_DEFER_FILES)
             clock.lap("rollup_converge_check")
 
     # ------------------------------------------------------------------
@@ -738,7 +730,7 @@ class IngestionPipeline:
             picked = spark.createDataFrame(picked_rows, ev_schema).persist()
             accounts = self._accounts_pushdown(scan_keys)
             try:
-                self._expand_and_merge(m, files_read, picked, accounts, clock=clock)
+                self._expand_and_merge(m, files_read, picked, accounts, clock)
             finally:
                 picked.unpersist()
         return m
@@ -773,7 +765,7 @@ class IngestionPipeline:
         for t, txn in sorted(active):
             p = os.path.join(root, f"t_{t}", "transaction", txn)
             (txn_paths if os.path.exists(p) else missing).append(p)
-        if missing and self.strict:
+        if missing:
             raise InvariantViolation(
                 f"event names missing transaction file(s): {missing[:3]}"
             )
@@ -802,12 +794,10 @@ class IngestionPipeline:
                 ):
                     continue
                 if status != ev_status:
-                    if self.strict:
-                        raise InvariantViolation(
-                            f"transfer {tenant}/{txn}/{transfer} "
-                            f"status={status} != event status={ev_status}"
-                        )
-                    continue
+                    raise InvariantViolation(
+                        f"transfer {tenant}/{txn}/{transfer} "
+                        f"status={status} != event status={ev_status}"
+                    )
                 new_transfers[(tenant, txn, transfer)] = (
                     tenant, txn, transfer, status,
                     ct, cn, dt, dn, amount, cur, vd,
@@ -927,16 +917,11 @@ class IngestionPipeline:
             # small: serving answers exact balances through the window (KV
             # Arrow delta), and the first idle tick converges all deferred
             # appends in one combined CDC apply (balance_view.maintain).
-            # With deferral active, the tick-final maintain (the
-            # rollup_converge_check lap in run_once's finally) is the ONE
-            # maintenance call per tick — a second in-body call here paid
-            # a redundant stale-window inventory + fingerprint walk that
-            # stretched to ~2 s under 32-client GIL contention
-            # (serving_bench --stacks, r11). Only the pre-r10 "always
-            # converge in-tick" mode (defer disabled) keeps the in-body
-            # call, preserving its converge-before-markers ordering.
-            if self.rollup_defer_files is None:
-                balance_view.maintain(store)
+            # The tick-final maintain (the rollup_converge_check lap in
+            # run_once's finally) is the ONE maintenance call per tick — a
+            # second in-body call here paid a redundant stale-window
+            # inventory + fingerprint walk that stretched to ~2 s under
+            # 32-client GIL contention (r11).
             clock.lap("rollup_maintain")
 
             if batch:
@@ -983,12 +968,11 @@ class IngestionPipeline:
         m: TickMetrics,
         files_read: dict,
         inv: DataFrame,
-        clock: _StageClock | None = None,
+        clock: _StageClock,
         scan_keys: list[tuple[str, str]] | None = None,
         ev_rows: list | None = None,
     ) -> TickMetrics:
         spark, root, store = self.spark, self.root, self.store
-        clock = clock or _StageClock(m)
         active_keys: set[tuple[str, str]] = set()
         m.extra["_active_keys"] = active_keys
 
@@ -1038,7 +1022,7 @@ class IngestionPipeline:
             # for small batches, executor-side RDD map for wide ones: both
             # a Spark text JOB over thousands of tiny files (~10 s) and a
             # driver python loop (~7 s GIL-starved) measured far slower
-            # under concurrent serving load (serving_bench --stacks)
+            # under concurrent serving load (stack-sampled serving run)
             if len(new_meta_paths) <= 256:
                 meta_rows = primary.read_account_meta_rows(new_meta_paths)
             else:
@@ -1164,7 +1148,7 @@ class IngestionPipeline:
         picked.count()  # materialize here so the clock owns the event reads
         clock.lap("event_read_pick")
         try:
-            self._expand_and_merge(m, files_read, picked, accounts, clock=clock)
+            self._expand_and_merge(m, files_read, picked, accounts, clock)
         finally:
             picked.unpersist()
         return m
@@ -1175,11 +1159,9 @@ class IngestionPipeline:
         files_read: dict,
         picked: DataFrame,
         accounts: DataFrame,
-        monotonic_markers: bool = False,
-        clock: _StageClock | None = None,
+        clock: _StageClock,
     ) -> None:
         spark, root, store = self.spark, self.root, self.store
-        clock = clock or _StageClock(m)
 
         # --- transaction expansion (D6 status gate): content reads only
         #     for transactions the picked active events name ---------------
@@ -1194,7 +1176,7 @@ class IngestionPipeline:
         for tenant, txn in txn_keys:
             p = os.path.join(root, f"t_{tenant}", "transaction", txn)
             (txn_paths if os.path.exists(p) else missing).append(p)
-        if missing and self.strict:
+        if missing:
             # reference: the transaction read future fails → stream crash
             raise InvariantViolation(
                 f"event names missing transaction file(s): {missing[:3]}"
@@ -1247,19 +1229,15 @@ class IngestionPipeline:
         )
 
         # D8 invariant: transfer status must equal the event's status
-        if self.strict:
-            bad = relevant.filter(F.col("status") != F.col("event_status")).limit(1).collect()
-            if bad:
-                r = bad[0]
-                raise InvariantViolation(
-                    f"transfer {r['tenant']}/{r['transaction']}/{r['transfer']} "
-                    f"status={r['status']} != event status={r['event_status']}"
-                )
-            good = relevant
-        else:
-            good = relevant.filter(F.col("status") == F.col("event_status"))
+        bad = relevant.filter(F.col("status") != F.col("event_status")).limit(1).collect()
+        if bad:
+            r = bad[0]
+            raise InvariantViolation(
+                f"transfer {r['tenant']}/{r['transaction']}/{r['transfer']} "
+                f"status={r['status']} != event status={r['event_status']}"
+            )
 
-        new_transfers = good.select(
+        new_transfers = relevant.select(
             "tenant",
             "transaction",
             "transfer",
@@ -1299,7 +1277,7 @@ class IngestionPipeline:
         # part files (file-level CDC via the stale window); any mismatch —
         # crash replay, compaction — degrades to a recompute, never to a
         # wrong serve. Small windows defer (see _expand_and_merge_local).
-        balance_view.maintain(store, defer_under_files=self.rollup_defer_files)
+        balance_view.maintain(store, defer_under_files=ROLLUP_DEFER_FILES)
         clock.lap("rollup_maintain")
 
         # --- marker advance (D10), LAST so crash-replay re-reads ----------
@@ -1308,28 +1286,15 @@ class IngestionPipeline:
         # event) per processed event (:180-186), so the final value is the
         # lexicographic max (snapshot, version) pair — and last_syn_event may
         # DECREASE when the snapshot advances (versions restart per snapshot).
-        # Only accounts whose position actually moved are rewritten.
+        # Only accounts whose position actually moved are rewritten; the
+        # watermark selection upstream guarantees picked positions never
+        # precede the marker.
         ev_pos = picked.groupBy("tenant", "account").agg(
             F.max(F.struct("snapshot_version", "version")).alias("pos")
         )
-        # batch mode: assignment semantics (`!=`) — the watermark selection
-        # upstream guarantees picked positions never precede the marker.
-        # stream mode (monotonic_markers): files can arrive out of order
-        # ACROSS micro-batches (late writers, replayed pending events), so
-        # the marker may only move lexicographically FORWARD — a stale
-        # position must never regress it.
-        if monotonic_markers:
-            moved = F.struct(
-                F.col("pos.snapshot_version").cast("int").alias("s"),
-                F.col("pos.version").cast("int").alias("v"),
-            ) > F.struct(
-                F.col("last_syn_snapshot").alias("s"),
-                F.col("last_syn_event").alias("v"),
-            )
-        else:
-            moved = (
-                F.col("pos.snapshot_version") != F.col("last_syn_snapshot")
-            ) | (F.col("pos.version") != F.col("last_syn_event"))
+        moved = (
+            F.col("pos.snapshot_version") != F.col("last_syn_snapshot")
+        ) | (F.col("pos.version") != F.col("last_syn_event"))
         advanced = (
             accounts.join(
                 ev_pos.withColumnRenamed("account", "name"), ["tenant", "name"]

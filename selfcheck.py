@@ -54,56 +54,11 @@ def value_hash(df) -> str:
     return hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
 
 
-def fixture_cosines(sf_dir: str, max_pairs: int = 200_000) -> dict:
-    """Measure a scaled fixture's SAME-SOURCE cross-copy cosine distribution
-    (scale_up.py's sign-flip isometry claims these are ≈0; this records the
-    actual distribution in the SCALE artifact instead of assuming the
-    energy-spread precondition holds). Pairs are (copy_i, copy_j) replicas
-    of the same source vector — the worst case for any dedup threshold."""
-    con = duckdb.connect()
-    off = 10_000_000  # scale_up.OFFSET
-    row = con.execute(
-        f"""
-        WITH e AS (
-            SELECT vec_id % {off} AS src, vec_id // {off} AS copy, embedding
-            FROM read_parquet('{sf_dir}/embeddings.parquet')
-        ),
-        pairs AS (
-            SELECT list_cosine_similarity(a.embedding, b.embedding) AS cos
-            FROM e a JOIN e b ON a.src = b.src AND a.copy < b.copy
-            LIMIT {max_pairs}
-        )
-        SELECT count(*) AS n,
-               round(avg(abs(cos)), 4) AS mean_abs,
-               round(quantile_cont(abs(cos), 0.5), 4) AS p50_abs,
-               round(quantile_cont(abs(cos), 0.99), 4) AS p99_abs,
-               round(max(abs(cos)), 4) AS max_abs,
-               sum(CASE WHEN abs(cos) >= 0.85 THEN 1 ELSE 0 END)
-                   AS n_above_dedup_threshold
-        FROM pairs
-        """
-    ).fetchone()
-    keys = ["n", "mean_abs", "p50_abs", "p99_abs", "max_abs",
-            "n_above_dedup_threshold"]
-    return {"metric": "cross_copy_cosine", "sf_dir": sf_dir,
-            **dict(zip(keys, (None if v is None else float(v) for v in row)))}
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--only", default="")
-    ap.add_argument(
-        "--fixture-cosines",
-        action="store_true",
-        help="instead of the oracle gate, print the scaled fixture's "
-        "same-source cross-copy cosine distribution (scale_up.py isometry "
-        "spot-check) and exit",
-    )
     args = ap.parse_args()
-    if args.fixture_cosines:
-        print(json.dumps(fixture_cosines(args.sf)))
-        return 0
 
     import importlib.util
 

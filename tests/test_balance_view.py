@@ -167,8 +167,8 @@ def test_stale_window_memoized_and_single_flighted(spark, tmp_path):
     """The window walk is O(partition dirs) of GIL-bound driver work and —
     with r10's deferred maintenance — the STEADY-STATE balance serving
     path: it must compute once per mutation epoch (memo) with concurrent
-    callers funneled through one walker (single-flight; the serving_bench
-    --stacks bad-draw convoy: 32 threads re-walking per request, 62 s
+    callers funneled through one walker (single-flight; the stack-sampled
+    bad-draw convoy: 32 threads re-walking per request, 62 s
     draws). Pin: N concurrent calls in a stable epoch = exactly one
     uncached computation, all callers get the identical result."""
     import threading as th
@@ -404,7 +404,7 @@ def test_serving_equivalence_with_direct_aggregate(spark, tmp_path):
 def test_deferral_bound_worst_case_window_serves_and_converges(spark, tmp_path):
     """r10 verdict item 7: pin the deferral's WORST case, not just its
     exactness.  Fill the append-only window to exactly bound-1 part files
-    (the default bound is 24 — SPARK_GRAFT_ROLLUP_DEFER_FILES) spanning
+    (the tick's bound is 24 — ingest.ROLLUP_DEFER_FILES) spanning
     MANY tenants, then assert (a) every deferral decision held to the
     bound, (b) the KV window path serves balances EXACTLY (rollup base +
     Arrow delta over all 23 files, zero Spark jobs) within a generous

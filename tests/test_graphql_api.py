@@ -329,9 +329,9 @@ def test_response_cache_hits_and_invalidates(spark, tmp_path):
 
 
 def test_response_cache_env_disable(spark, tmp_path, monkeypatch):
-    """SPARK_GRAFT_RESPONSE_CACHE=0 (serving_bench --no-response-cache, the
-    cold-execution arm) turns layer 0 off entirely: repeats of the exact
-    request triple re-execute, response_hit stays 0, answers unchanged."""
+    """SPARK_GRAFT_RESPONSE_CACHE=0 (the cold-execution arm) turns layer 0
+    off entirely: repeats of the exact request triple re-execute,
+    response_hit stays 0, answers unchanged."""
     monkeypatch.setenv("SPARK_GRAFT_RESPONSE_CACHE", "0")
     root = str(tmp_path / "data")
     write(

@@ -242,15 +242,61 @@ def test_queued_event_does_not_expand(pipeline):
     assert m.transfers_discovered == 0
 
 
-def test_status_mismatch_invariant(pipeline):
+def _assert_invariant_violation(pipeline, monkeypatch, path, bad):
+    """Reference D8: an event whose transaction file says another status,
+    or names no transaction file at all, fails the tick with
+    InvariantViolation before any transfer merge or marker advance.
+    ``path`` is the tick body expected to run: the first full-scan tick
+    (``_expand_and_merge``) or a listing-cache delta tick
+    (``_expand_and_merge_local``, after a valid account was primed)."""
     pipe, root, store = pipeline
     t = "t_TEN_BAD"
-    write(os.path.join(root, t, "account", "B", "snapshot", "0000000000"), "EUR FORMAT_X\n")
-    # event says committed(1), transaction file says rollbacked(2) → D8 throws
-    write(os.path.join(root, t, "transaction", "TB"), "rollbacked\nTX TEN_BAD B TEN_BAD B 2020-01-01T00:00:00Z 5 EUR\n")
-    write(os.path.join(root, t, "account", "B", "events", "0000000000", "1_5_TB"), "1\n")
+    acct = os.path.join(root, t, "account", "B")
+    write(os.path.join(acct, "snapshot", "0000000000"), "EUR FORMAT_X\n")
+    expected_marks = (0, 0)
+    if path == "_expand_and_merge_local":
+        write(os.path.join(root, t, "transaction", "TA"), "committed\nTX TEN_BAD B TEN_BAD B 2020-01-01T00:00:00Z 5 EUR\n")
+        write(os.path.join(acct, "events", "0000000000", "1_5_TA"), "1\n")
+        _backdate(root)
+        assert pipe.run_once().transfers_discovered == 1
+        expected_marks = (0, 1)
+    calls = []
+    orig = getattr(IngestionPipeline, path)
+
+    def spy(self, *a, **kw):
+        calls.append(path)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(IngestionPipeline, path, spy)
+    transfers_before = store.read("transfer").count()
+    if bad == "status_mismatch":
+        # event says committed(1), transaction file says rollbacked(2)
+        write(os.path.join(root, t, "transaction", "TB"), "rollbacked\nTX2 TEN_BAD B TEN_BAD B 2020-01-02T00:00:00Z 5 EUR\n")
+    write(os.path.join(acct, "events", "0000000000", "1_5_TB"), "2\n")
     with pytest.raises(InvariantViolation):
         pipe.run_once()
+    assert calls == [path]
+    acc = store.read("account").filter("name = 'B'").collect()[0]
+    assert (acc["last_syn_snapshot"], acc["last_syn_event"]) == expected_marks
+    assert store.read("transfer").count() == transfers_before
+
+
+def test_status_mismatch_invariant(pipeline, monkeypatch):
+    _assert_invariant_violation(
+        pipeline, monkeypatch, "_expand_and_merge", "status_mismatch"
+    )
+
+
+@pytest.mark.parametrize(
+    "path,bad",
+    [
+        ("_expand_and_merge", "missing_transaction"),
+        ("_expand_and_merge_local", "status_mismatch"),
+        ("_expand_and_merge_local", "missing_transaction"),
+    ],
+)
+def test_invariant_violation_on_every_tick_path(pipeline, monkeypatch, path, bad):
+    _assert_invariant_violation(pipeline, monkeypatch, path, bad)
 
 
 def test_transaction_id_with_underscores(pipeline):

@@ -2026,3 +2026,34 @@ def test_topk_plan_cache_reuses_identical_plan_and_evicts(spark):
     assert all(k[1] == "plan-test-other" for k in similarity._TOPK_PLAN_CACHE)
     similarity.clear_ivf_cache()
     assert not similarity._TOPK_PLAN_CACHE
+
+
+def test_topk_plan_cache_is_a_bounded_lru(spark):
+    """The plan cache holds at most _TOPK_PLAN_CACHE_MAX plans: past the
+    bound the least recently used signature is evicted, a recently read
+    one survives, and an immediately repeated *_topk call still returns
+    its cached frame."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    bound = similarity._TOPK_PLAN_CACHE_MAX
+    similarity.clear_ivf_cache()
+    keys = [("app", "lru-test", "sig", i) for i in range(bound + 5)]
+    for pk in keys[:bound]:
+        similarity._plan_cache_put(pk, emb)
+    assert similarity._plan_cache_get(keys[0]) is emb  # now most recent
+    for pk in keys[bound:]:
+        similarity._plan_cache_put(pk, emb)
+    assert len(similarity._TOPK_PLAN_CACHE) == bound
+    assert keys[0] in similarity._TOPK_PLAN_CACHE
+    assert not any(pk in similarity._TOPK_PLAN_CACHE for pk in keys[1:6])
+    a = similarity.lsh_topk(
+        emb, [0, 1, 2], k=5, planes=similarity.hyperplanes(),
+        index_cache_key="lru-test",
+    )
+    b = similarity.lsh_topk(
+        emb, [0, 1, 2], k=5, planes=similarity.hyperplanes(),
+        index_cache_key="lru-test",
+    )
+    assert a is b
+    assert len(similarity._TOPK_PLAN_CACHE) == bound
+    similarity.clear_ivf_cache("lru-test")
+    assert not similarity._TOPK_PLAN_CACHE

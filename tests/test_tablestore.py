@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import types as T
 
 from data_warehouse_spark.sources.tables import TableStore
@@ -603,3 +604,29 @@ def test_insert_missing_replay_adopts_no_empty_file_and_laps_total(spark, tmp_pa
     )
     assert n2 == 0
     assert set(store.last_merge_laps["t"]) == {"plan", "write_action", "adopt"}
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_first_write_of_empty_batch_leaves_table_absent(spark, tmp_path, partitioned):
+    """The first write of a table, passed ``assume_nonempty=True`` with a
+    batch that turns out empty, must not publish a version dir without a
+    parquet file: the table stays absent, ``read`` serves the empty schema
+    frame, and the next nonempty write publishes normally."""
+    store = (
+        _store(spark, tmp_path)
+        if partitioned
+        else TableStore(spark, str(tmp_path / "wh"), {"t": SCHEMA})
+    )
+    n = store.merge_insert_missing(
+        "t", _rows(spark, []), ["tenant", "name"],
+        partition_values=[] if partitioned else None,
+        assume_nonempty=True, assume_unique=True,
+    )
+    assert n == 0
+    assert not store.exists("t")
+    assert store.read("t").collect() == []
+    assert store.read("t").schema == SCHEMA
+    assert store.merge_insert_missing(
+        "t", _rows(spark, [("A", "x", 1)]), ["tenant", "name"]
+    ) == 1
+    assert [tuple(r) for r in store.read("t").collect()] == [("A", "x", 1)]
