@@ -338,9 +338,10 @@ class ListingCache:
         state[0] = dirs
 
     def settle(self, examined, active) -> None:
-        """After a SUCCESSFUL tick: examined accounts that read nothing and
-        moved no marks are dormant; active ones stay pending. Never called
-        on a failed tick — pending survives, the retry re-examines."""
+        """After a tick: examined accounts that read nothing and moved no
+        marks are dormant; ``active`` ones stay pending. A failed tick
+        passes every examined key as active — their rescanned mtimes are
+        already adopted, so only pending makes the retry re-examine them."""
         active = set(active)
         for key in examined:
             state = self._accounts.get(key)

@@ -94,21 +94,6 @@ def tenant_names(root: str) -> list[str]:
     return names
 
 
-def discover_tenants(spark: SparkSession, root: str) -> DataFrame:
-    """Tenant = directory ``t_<name>`` under the root (S1+S2).
-
-    Directory names are metadata — one scandir of a single level, the same
-    listing Spark's FileIndex would perform; rows then distribute normally.
-    """
-    names = [(n,) for n in tenant_names(root)]
-    schema = T.StructType([T.StructField("tenant", T.StringType(), False)])
-    if not names:
-        return _empty(spark, schema)
-    # ONE slice: the default 32-slice parallelize makes every downstream
-    # task pay a python-worker round trip per slice (see ingest._driver_df)
-    return spark.createDataFrame(spark.sparkContext.parallelize(names, 1), schema)
-
-
 def _with_path(df: DataFrame) -> DataFrame:
     return df.withColumn("path", F.input_file_name())
 

@@ -14,6 +14,15 @@ Delta in this image, both halves are emulated:
     files are hard-linked into the new snapshot (O(touched data) I/O +
     O(#files) metadata, the same cost model as Delta/Iceberg MERGE).
 
+Two writers sit behind the verbs. A Spark ``DataFrame`` batch runs the
+Spark plan (anti-join, partitioned write). A driver-owned ``pyarrow.Table``
+batch — the ingestion tick's — commits with NO Spark job while it and the
+hive dirs it touches hold at most :data:`ARROW_COMMIT_MAX_ROWS` rows: a
+PK-column probe of the touched dirs (row groups pruned by min/max), part
+files written in Spark's exact layout (``arrow_parts``), and the same
+staging / ``_adopt_files`` / ``_swap`` / commit machinery. Larger batches,
+compaction and the full-rewrite verbs stay on Spark.
+
 **Snapshot isolation** — a table directory holds immutable version dirs plus
 an atomically-replaced ``_current`` pointer::
 
@@ -40,9 +49,13 @@ import time
 import urllib.parse
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import arrow_parts
 
 # partition-pruned MERGE only engages when the batch touches at most this
 # many partition values (an IN-list any optimizer folds into pruning)
@@ -54,7 +67,15 @@ COMPACT_FILE_THRESHOLD = 16
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 # Spark's directory name for a NULL partition value
-HIVE_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+HIVE_NULL_PARTITION = arrow_parts.HIVE_NULL_PARTITION
+
+# a pyarrow.Table batch commits without a Spark job (arrow_parts) while
+# the batch plus the rows of the hive dirs it must read — counted from
+# the parquet footers — stay at or under this many rows; above it the
+# verb hands the batch to its Spark plan. Sized so the driver-side key
+# probe / partition rewrite stays well under the ~1 s a Spark write job
+# costs on a 4-core box (pyarrow decodes ~10^6 key rows per 0.1 s)
+ARROW_COMMIT_MAX_ROWS = 250_000
 
 
 class TableStore:
@@ -173,6 +194,9 @@ class TableStore:
         # instrument behind the tick-cadence work; read by the profiling
         # harnesses, never by the engine itself
         self.last_merge_laps: dict[str, dict[str, float]] = {}
+        # per-table writer of the LAST merge call: "arrow" (driver-owned
+        # batch committed by arrow_parts, no Spark job) or "spark"
+        self.last_merge_path: dict[str, str] = {}
         # a typo'd or partition-column cluster key would silently disable
         # clustering forever (part files don't carry partition columns) —
         # fail construction instead
@@ -375,7 +399,7 @@ class TableStore:
     def merge_insert_missing(
         self,
         name: str,
-        batch: DataFrame,
+        batch: DataFrame | pa.Table,
         keys: list[str],
         partition_values: list[tuple] | None = None,
         assume_nonempty: bool = False,
@@ -405,11 +429,41 @@ class TableStore:
         for a 1000-row batch (micro-probed ~0.2-0.3 s of the ~1.1 s
         steady merge). A non-unique batch passed with this flag would let
         duplicate PK rows coexist in one snapshot — only set it from
-        call sites whose batch is a dict-keyed driver twin."""
-        # dedupe the batch itself on PK first (replayed fixtures)
+        call sites whose batch is a dict-keyed driver twin.
+
+        A ``pyarrow.Table`` batch (driver-owned rows, declared column
+        names) commits with NO Spark job while it and the rows of the hive
+        dirs it must probe stay within :data:`ARROW_COMMIT_MAX_ROWS`: the
+        key check reads only the PK columns of the touched first-level
+        partition dirs (row groups pruned by min/max), the new rows are
+        written to staging in Spark's layout (``arrow_parts``), and the
+        same adopt/refresh/compact commit as the Spark plan publishes
+        them. Above the cut-off the table is handed to the Spark plan."""
         self.last_adopted_files = []  # never carry a previous merge's files
         laps = self.last_merge_laps[name] = {}
         _t0 = time.perf_counter()
+        if isinstance(batch, pa.Table):
+            fresh_tbl = self._arrow_missing_rows(name, batch, keys, assume_unique)
+            if fresh_tbl is not None:
+                self.last_merge_path[name] = "arrow"
+                laps["plan"] = time.perf_counter() - _t0
+                if fresh_tbl.num_rows == 0:
+                    laps["write_action"] = laps["adopt"] = 0.0
+                    return 0
+                staging = f"{self._table_dir(name)}.stage-{uuid.uuid4().hex[:8]}"
+                try:
+                    _t0 = time.perf_counter()
+                    self._write_arrow(name, fresh_tbl, staging)
+                    laps["write_action"] = time.perf_counter() - _t0
+                    _t0 = time.perf_counter()
+                    n = self._commit_staging(name, staging)
+                    laps["adopt"] = time.perf_counter() - _t0
+                    return n
+                finally:
+                    shutil.rmtree(staging, ignore_errors=True)
+            batch = self._arrow_to_df(name, batch)
+        self.last_merge_path[name] = "spark"
+        # dedupe the batch itself on PK first (replayed fixtures)
         fresh = batch if assume_unique else batch.dropDuplicates(keys)
         if self.exists(name):
             current = self.read(name)
@@ -487,37 +541,153 @@ class TableStore:
                     fresh.unpersist()
             laps["write_action"] = time.perf_counter() - _t0
             _t0 = time.perf_counter()
-            vdir = self._resolve(name)
-            if vdir is None:
-                vdir = self._new_version_dir(name)
-                n, adopted = self._adopt_files(staging, vdir)
-                if adopted:
-                    self._swap(name, vdir)
-                else:
-                    # an ``assume_nonempty`` batch that came up empty: a
-                    # version dir with no parquet file would make every
-                    # later read fail schema inference, so the table stays
-                    # absent and ``read`` serves its empty schema frame
-                    shutil.rmtree(vdir, ignore_errors=True)
-            else:
-                n, adopted = self._adopt_files(staging, vdir)
-                if n:
-                    self.spark.catalog.refreshByPath(vdir)
-                    # a 2 s append cadence accumulates one part-file set per
-                    # tick; compact over-fragmented partitions before they
-                    # become the classic small-file problem. Only the dirs
-                    # THIS adopt touched can newly cross the threshold, so
-                    # the fragmentation check is O(touched dirs), never a
-                    # per-tick walk of the whole table (GIL-convoy fodder
-                    # under concurrent serving; absurd at 100 TB width)
-                    self.compact(
-                        name,
-                        dirs={os.path.dirname(p) for p in adopted},
-                    )
+            n = self._commit_staging(name, staging)
             laps["adopt"] = time.perf_counter() - _t0
             return n
         finally:
             shutil.rmtree(staging, ignore_errors=True)
+
+    def _commit_staging(self, name: str, staging: str) -> int:
+        """Publish an insert-missing batch written to ``staging`` (either
+        writer): adopt its part files into the current version — or into a
+        first version, swapped in — then refresh and compact the touched
+        dirs. Returns the row count adopted."""
+        vdir = self._resolve(name)
+        if vdir is None:
+            vdir = self._new_version_dir(name)
+            n, adopted = self._adopt_files(staging, vdir)
+            if adopted:
+                self._swap(name, vdir)
+            else:
+                # an ``assume_nonempty`` batch that came up empty: a
+                # version dir with no parquet file would make every
+                # later read fail schema inference, so the table stays
+                # absent and ``read`` serves its empty schema frame
+                shutil.rmtree(vdir, ignore_errors=True)
+        else:
+            n, adopted = self._adopt_files(staging, vdir)
+            if n:
+                self.spark.catalog.refreshByPath(vdir)
+                # a 2 s append cadence accumulates one part-file set per
+                # tick; compact over-fragmented partitions before they
+                # become the classic small-file problem. Only the dirs
+                # THIS adopt touched can newly cross the threshold, so
+                # the fragmentation check is O(touched dirs), never a
+                # per-tick walk of the whole table (GIL-convoy fodder
+                # under concurrent serving; absurd at 100 TB width)
+                self.compact(
+                    name,
+                    dirs={os.path.dirname(p) for p in adopted},
+                )
+        return n
+
+    # ---- the Arrow (no Spark job) commit path ---------------------------
+
+    def _arrow_writable(self, name: str) -> bool:
+        """Every column of ``name`` has a Spark-identical Arrow encoding and
+        every partition column decodes from its dir name."""
+        schema = self.schemas[name]
+        if any(arrow_parts.arrow_type(f.dataType) is None for f in schema.fields):
+            return False
+        types = {f.name: f.dataType for f in schema.fields}
+        return all(
+            isinstance(types[c], (T.StringType, T.IntegerType, T.LongType))
+            for c in self.partitions.get(name, [])
+        )
+
+    def _arrow_files(self, name: str, vdir: str, pvals) -> list[tuple[str, dict]]:
+        """(path, typed partition values) of the data files under the
+        first-level partition dirs holding ``pvals`` (values of the first
+        partition column; None = every file of the version)."""
+        pcols = self.partitions.get(name, [])
+        if pvals is None or not pcols:
+            tops = [vdir]
+        else:
+            want = {f"{pcols[0]}={self._part_dir_value(v)}" for v in pvals}
+            rows = [(v,) for v in pvals]
+            tops = [
+                os.path.join(vdir, e)
+                for e in sorted(os.listdir(vdir))
+                if "=" in e
+                and (e in want or self._unquoted_match(e, pcols[0], rows))
+            ]
+        types = {f.name: f.dataType for f in self.schemas[name].fields}
+        out = []
+        for top in tops:
+            for path in arrow_parts.parquet_files(top):
+                raw = arrow_parts.dir_values(os.path.relpath(path, vdir))
+                out.append((path, {
+                    c: arrow_parts.typed_partition_value(raw.get(c), types[c])
+                    for c in pcols
+                }))
+        return out
+
+    def _arrow_scope(
+        self, name: str, batch: pa.Table, keys: list[str], assume_unique: bool,
+        vdir: str | None, pvals,
+    ):
+        """``(deduped batch, [(path, partition values, footer)])`` of the
+        files under the first-level dirs holding ``pvals`` (None = the whole
+        version), or None when the batch must take the Spark plan: a column
+        type Arrow cannot write as Spark does, or more than
+        ARROW_COMMIT_MAX_ROWS rows in the batch plus those files."""
+        if not self._arrow_writable(name):
+            return None
+        fresh = batch if assume_unique else arrow_parts.dedupe(batch, keys)
+        files = [
+            (path, fixed, pq.read_metadata(path))
+            for path, fixed in (self._arrow_files(name, vdir, pvals) if vdir else [])
+        ]
+        if fresh.num_rows + sum(md.num_rows for *_, md in files) > ARROW_COMMIT_MAX_ROWS:
+            return None
+        return fresh, files
+
+    def _arrow_missing_rows(
+        self, name: str, batch: pa.Table, keys: list[str], assume_unique: bool
+    ) -> pa.Table | None:
+        """The rows of ``batch`` whose key the table does not hold yet, or
+        None when the batch must take the Spark plan."""
+        pcols = self.partitions.get(name, [])
+        # partition-pruned key probe, the same scope as the Spark
+        # anti-join: the first-level dirs of the batch's partition values
+        # when that column is part of the key, else the whole version
+        pvals = (
+            sorted(set(arrow_parts.column_values(batch, pcols[0])), key=str)
+            if pcols and pcols[0] in keys
+            else None
+        )
+        scope = self._arrow_scope(
+            name, batch, keys, assume_unique, self._resolve(name), pvals
+        )
+        if scope is None:
+            return None
+        fresh, files = scope
+        found = arrow_parts.existing_keys(
+            files, fresh, keys, {c for c in pcols if c in keys}
+        )
+        return arrow_parts.without_keys(fresh, keys, found)
+
+    def _write_arrow(self, name: str, table: pa.Table, dest: str) -> None:
+        """The Arrow twin of :meth:`_write_table_parquet`."""
+        arrow_parts.write_parts(
+            table,
+            dest,
+            self.schemas[name],
+            list(self.partitions.get(name, [])),
+            self.month_partitions.get(name),
+            self.cluster_by.get(name, []),
+            self.block_size.get(name),
+        )
+
+    def _arrow_to_df(self, name: str, table: pa.Table) -> DataFrame:
+        """A driver-owned Arrow batch as a one-slice DataFrame with the
+        declared types and the batch's nullability (the Spark plan's
+        input when the Arrow path declines)."""
+        from ..materialize import driver_df
+
+        struct = arrow_parts.spark_struct(table, self.schemas[name])
+        rows = list(zip(*(c.to_pylist() for c in table.columns)))
+        return driver_df(self.spark, rows, struct)
 
     def compact(
         self,
@@ -721,6 +891,8 @@ class TableStore:
         and rewritten; every other partition's files are hard-linked into
         the new snapshot unchanged — O(touched partitions) I/O, O(#files)
         metadata, never O(table)."""
+        _t0 = time.perf_counter()
+        self.last_merge_path[name] = "spark"
         fresh = (batch if assume_unique else batch.dropDuplicates(keys)).cache()
         try:
             if not assume_nonempty and fresh.isEmpty():
@@ -750,11 +922,12 @@ class TableStore:
                                      insert_only_col)
         finally:
             fresh.unpersist()
+            self.last_merge_laps[name] = {"write_action": time.perf_counter() - _t0}
 
     def merge_upsert_prepare(
         self,
         name: str,
-        batch: DataFrame,
+        batch: DataFrame | pa.Table,
         keys: list[str],
         partition_values: list[tuple],
         insert_only_col: str | None = None,
@@ -778,7 +951,15 @@ class TableStore:
         The caller MUST NOT write ``name`` between prepare and commit
         (commit verifies and refuses). An uncommitted staged dir is
         harmless: invisible to readers, pruned by the next ``_swap`` of
-        the table (or by :meth:`merge_upsert_abort`)."""
+        the table (or by :meth:`merge_upsert_abort`).
+
+        A ``pyarrow.Table`` batch stages with NO Spark job while it and
+        the touched partitions (row counts from the parquet footers) stay
+        within :data:`ARROW_COMMIT_MAX_ROWS`: the touched partitions are
+        read with pyarrow, merged in Python with the same DO UPDATE /
+        insert-only rules, and written in Spark's layout
+        (``arrow_parts``); the untouched partitions are hard-linked and
+        the handle commits through the same :meth:`merge_upsert_commit`."""
         if not self.exists(name):
             return None
         pcols = self.partitions.get(name, [])
@@ -790,7 +971,6 @@ class TableStore:
         old_vdir = self._resolve(name)
         laps = self.last_merge_laps[name] = {}
         _t0 = time.perf_counter()
-        fresh = batch if assume_unique else batch.dropDuplicates(keys)
         # dir-existence pruning (see _present_partition_values): values with
         # no partition dir hold no rows, so the copy-on-write read restricts
         # to the PRESENT subset — and when none are present (the steady
@@ -798,42 +978,99 @@ class TableStore:
         # with: the staged snapshot is exactly the batch, no table read, no
         # anti-joins, one write job over the batch itself
         present = self._present_partition_values(name, pcols[0], pvals)
-        if present:
-            touched = self.read(name)
-            for i, c in enumerate(pcols):
-                touched = touched.filter(
-                    self._partition_filter(c, [row[i] for row in present])
-                )
-            batch_keys, fresh_eff = self._split_insert_only(
-                fresh, touched, keys, insert_only_col
+        merged_tbl = None
+        if isinstance(batch, pa.Table):
+            merged_tbl = self._arrow_upsert_rows(
+                name, batch, keys, present, insert_only_col, assume_unique, old_vdir
             )
-            kept = touched.join(
-                F.broadcast(batch_keys),
-                self._key_cond(touched, batch_keys, keys),
-                "left_anti",
-            )
-            merged = kept.unionByName(fresh_eff)
+            if merged_tbl is None:
+                batch = self._arrow_to_df(name, batch)
+        if merged_tbl is not None:
+            self.last_merge_path[name] = "arrow"
+            laps["plan"] = time.perf_counter() - _t0
+            _t0 = time.perf_counter()
+            new_vdir = self._new_version_dir(name)
+            self._write_arrow(name, merged_tbl, new_vdir)
         else:
-            merged = fresh.drop(insert_only_col) if insert_only_col else fresh
-        # the ONE Spark action of the stage: write the merged touched
-        # partitions into an unpublished version dir
-        laps["plan"] = time.perf_counter() - _t0
-        _t0 = time.perf_counter()
-        new_vdir = self._write_version(name, merged)
+            self.last_merge_path[name] = "spark"
+            fresh = batch if assume_unique else batch.dropDuplicates(keys)
+            if present:
+                touched = self.read(name)
+                for i, c in enumerate(pcols):
+                    touched = touched.filter(
+                        self._partition_filter(c, [row[i] for row in present])
+                    )
+                batch_keys, fresh_eff = self._split_insert_only(
+                    fresh, touched, keys, insert_only_col
+                )
+                kept = touched.join(
+                    F.broadcast(batch_keys),
+                    self._key_cond(touched, batch_keys, keys),
+                    "left_anti",
+                )
+                merged = kept.unionByName(fresh_eff)
+            else:
+                merged = fresh.drop(insert_only_col) if insert_only_col else fresh
+            # the ONE Spark action of the stage: write the merged touched
+            # partitions into an unpublished version dir
+            laps["plan"] = time.perf_counter() - _t0
+            _t0 = time.perf_counter()
+            new_vdir = self._write_version(name, merged)
         laps["write_action"] = time.perf_counter() - _t0
         _t0 = time.perf_counter()
-        touched_dirs = {
-            "=".join((pcols[0], self._part_dir_value(row[0]))) for row in pvals
-        }
+        self._link_untouched(old_vdir, new_vdir, pcols[0], pvals)
+        laps["adopt"] = time.perf_counter() - _t0
+        return (name, old_vdir, new_vdir)
+
+    def _arrow_upsert_rows(
+        self, name, batch: pa.Table, keys, present, insert_only_col,
+        assume_unique, old_vdir,
+    ) -> pa.Table | None:
+        """The Arrow body of :meth:`merge_upsert_prepare`: the rows of the
+        touched partitions after the MERGE (kept rows + DO UPDATE rows +
+        insert-only rows whose key is absent), or None when the batch must
+        take the Spark plan."""
+        scope = self._arrow_scope(
+            name, batch, keys, assume_unique, old_vdir, [row[0] for row in present]
+        )
+        if scope is None:
+            return None
+        fresh, files = scope
+        cols = [f.name for f in self.schemas[name].fields]
+        if insert_only_col:
+            flags = arrow_parts.column_values(fresh, insert_only_col)
+            ups = fresh.filter(pa.array([not f for f in flags])).select(cols)
+            ins = fresh.filter(pa.array(flags)).select(cols)
+        else:
+            ups, ins = fresh.select(cols), None
+        if present:
+            # the Spark plan reads the touched partitions back, so every
+            # column of its output is nullable; mirror that in the file
+            schema = pa.schema([f.with_nullable(True) for f in ups.schema])
+            touched = arrow_parts.read_rows(files, schema)
+            kept = arrow_parts.without_keys(
+                touched, keys, set(arrow_parts.key_tuples(ups, keys))
+            )
+            parts = [kept, ups.cast(schema)]
+            if ins is not None:
+                held = set(arrow_parts.key_tuples(touched, keys))
+                parts.append(arrow_parts.without_keys(ins, keys, held).cast(schema))
+            merged = pa.concat_tables(parts)
+        else:
+            merged = pa.concat_tables([ups, ins]) if ins is not None else ups
+        return merged
+
+    def _link_untouched(self, old_vdir: str, new_vdir: str, pcol: str, pvals) -> None:
+        """Hard-link every first-level partition dir of ``old_vdir`` the
+        batch's ``pvals`` do not touch into ``new_vdir``."""
+        touched_dirs = {f"{pcol}={self._part_dir_value(row[0])}" for row in pvals}
         for entry in os.listdir(old_vdir):
             src = os.path.join(old_vdir, entry)
             if not (os.path.isdir(src) and "=" in entry):
                 continue
-            if entry in touched_dirs or self._unquoted_match(entry, pcols[0], pvals):
+            if entry in touched_dirs or self._unquoted_match(entry, pcol, pvals):
                 continue
             self._link_tree(src, os.path.join(new_vdir, entry))
-        laps["adopt"] = time.perf_counter() - _t0
-        return (name, old_vdir, new_vdir)
 
     def merge_upsert_commit(self, prep) -> None:
         """Publish a prepared upsert (the durability point — one pointer
@@ -1061,16 +1298,7 @@ class TableStore:
             merged_touched = kept.unionByName(fresh_eff)
             new_vdir = self._write_version(name, merged_touched)
             # link untouched partitions' files into the new snapshot
-            touched_dirs = {
-                "=".join((pcols[0], self._part_dir_value(row[0]))) for row in pvals
-            }
-            for entry in os.listdir(old_vdir):
-                src = os.path.join(old_vdir, entry)
-                if not (os.path.isdir(src) and "=" in entry):
-                    continue
-                if entry in touched_dirs or self._unquoted_match(entry, pcols[0], pvals):
-                    continue
-                self._link_tree(src, os.path.join(new_vdir, entry))
+            self._link_untouched(old_vdir, new_vdir, pcols[0], pvals)
             self._swap(name, new_vdir)
             n_new = fresh_eff.count() if want_counts else 0
         finally:
@@ -1109,11 +1337,9 @@ class TableStore:
 
     @staticmethod
     def _part_dir_value(value) -> str:
-        """Spark's hive-dir encoding of one partition value: NULL becomes
-        __HIVE_DEFAULT_PARTITION__, everything else is URL-quoted."""
-        if value is None:
-            return HIVE_NULL_PARTITION
-        return urllib.parse.quote(str(value), safe="")
+        """Spark's hive-dir encoding of one partition value (its
+        ``escapePathName``; NULL becomes __HIVE_DEFAULT_PARTITION__)."""
+        return arrow_parts.escape_path_name(value)
 
     @staticmethod
     def _unquoted_match(entry: str, pcol: str, pvals) -> bool:

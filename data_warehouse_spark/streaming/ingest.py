@@ -50,13 +50,26 @@ Round-9 architecture (the O(changed dirs) / driver-side-metadata split):
   local rows (``_tick_body_delta``), with account marks served by the KV
   tier's Arrow reads; tiny primary files (1-line metas/events, small
   transactions) read through driver/executor parse twins
-  (``primary.read_*_rows``). Spark does what it is for — the keyed MERGE
-  writes. Under 32 concurrent serving clients each Spark action costs
-  1.5–3 s of contended scheduling regardless of data size; this split
-  took the contended merge tick from 63–103 s to 16–20 s (SCALE_r9).
+  (``primary.read_*_rows``). Under 32 concurrent serving clients each
+  Spark action costs 1.5–3 s of contended scheduling regardless of data
+  size; this split took the contended merge tick from 63–103 s to
+  16–20 s (SCALE_r9).
+* The delta tick's keyed MERGE writes need no Spark job either: its
+  batches are ``pyarrow.Table`` s built from the tick's PK-keyed dicts
+  (signed balance changes included), and the ``TableStore`` verbs commit
+  them with pyarrow — a PK-column probe of the touched hive dirs, part
+  files in Spark's exact layout, the same adopt / pointer-swap commit
+  (``sources/arrow_parts.py``). A small steady tick submits ZERO Spark
+  jobs; in traced benchmark runs on a 4-core box the 60-transaction
+  transfer merge fell from 0.9–2.1 s to 12–65 ms. Batches whose touched partitions exceed
+  ``tables.ARROW_COMMIT_MAX_ROWS`` (read from the parquet footers) go
+  to the Spark plans, as do compaction and rollup convergence.
+  ``TickMetrics.extra["merge"]`` records, per table, which writer
+  committed it (``arrow`` | ``spark``) and its seconds.
 * The full-scan path (first tick, cache miss, KV refusal) keeps the
-  distributed joins — at 100 TB width the delta IS small by definition
-  of steady state, and a bootstrap scan wants executors.
+  distributed joins and the Spark MERGE writes — at 100 TB width the
+  delta IS small by definition of steady state, and a bootstrap scan
+  wants executors.
 
 Idempotence: every write is keyed MERGE and markers advance LAST; a crash
 anywhere replays the tick's reads (watermarks unchanged) and the PK merges
@@ -88,6 +101,7 @@ from ..schemas import (
     TRANSFER_SCHEMA,
 )
 from ..sources import listing, primary
+from ..sources.arrow_parts import arrow_table
 from ..sources.tables import TableStore
 
 
@@ -248,6 +262,31 @@ def _ingest_transfer_schema():
     return T.StructType(fields)
 
 
+def _nullable(struct: T.StructType, keep: tuple[str, ...] = ()) -> T.StructType:
+    """``struct`` with every field nullable except those in ``keep``."""
+    return T.StructType(
+        [T.StructField(f.name, f.dataType, f.nullable if f.name in keep else True)
+         for f in struct.fields]
+    )
+
+
+# the Arrow batches the delta tick commits carry the nullability the Spark
+# plans gave the same rows, so files from either writer are identical: the
+# transfer batch was built all-nullable, and the signed-change union keeps
+# only its literal ``side`` non-null
+_TRANSFER_BATCH = _nullable(_ingest_transfer_schema())
+_ABC_BATCH = _nullable(ingest_abc_schema(), keep=("side",))
+
+
+def _note_merge(m: "TickMetrics", store: TableStore, table: str) -> None:
+    """Record which writer committed ``table`` this tick and its seconds
+    (``store.last_merge_laps``) in ``m.extra["merge"]``; a table merged
+    twice in one tick sums its seconds."""
+    rec = m.extra.setdefault("merge", {}).setdefault(table, {"path": None, "s": 0.0})
+    rec["path"] = store.last_merge_path.get(table)
+    rec["s"] = round(rec["s"] + sum(store.last_merge_laps.get(table, {}).values()), 4)
+
+
 def _read_tagged_rows(chunk: list[tuple[str, str]]) -> tuple[list, list]:
     """Executor body of the fused meta+event content read: one chunk of
     ('m'|'e', path) pairs → (meta_rows, event_rows) via the same reader
@@ -256,6 +295,20 @@ def _read_tagged_rows(chunk: list[tuple[str, str]]) -> tuple[list, list]:
         primary.read_account_meta_rows([p for k, p in chunk if k == "m"]),
         primary.read_account_event_rows([p for k, p in chunk if k == "e"]),
     )
+
+
+def _signed_change_rows(transfers) -> list[tuple]:
+    """Driver twin of :func:`_signed_changes` over transfer tuples in
+    ``_ingest_transfer_schema`` order: per committed transfer a credit row
+    (+amount) and a debit row (−amount), in ``ingest_abc_schema`` order."""
+    out = []
+    for tenant, txn, transfer, status, ct, cn, dt, dn, amount, _cur, vd in transfers:
+        if status != 1:
+            continue
+        neg = None if amount is None else -amount
+        out.append((ct, cn, vd, amount, tenant, txn, transfer, "c"))
+        out.append((dt, dn, vd, neg, tenant, txn, transfer, "d"))
+    return out
 
 
 def _signed_changes(transfers: DataFrame) -> DataFrame:
@@ -329,21 +382,21 @@ class IngestionPipeline:
         files_read = {"meta": 0, "events": 0, "transactions": 0}
         m.extra["files_read"] = files_read
         clock = _StageClock(m)
-        spark, root, store = self.spark, self.root, self.store
+        root, store = self.root, self.store
 
         # --- tenants (D3 get-else-insert); names reused for listing -----
         # insert-missing MERGE only when a tenant dir is NEW — the merge
-        # reads the table, so skipping it keeps idle ticks Spark-free; the
+        # reads the table, so skipping it keeps idle ticks write-free; the
         # cached set only grows after a SUCCESSFUL merge. The merge runs
         # CONCURRENTLY with the rest of the tick (nothing in the tick body
         # reads the tenant table; it is PK-idempotent and independent of
-        # every other merge) and is joined before the tick returns —
-        # folding its ~0.8 s contended action under the tick's other work.
+        # every other merge) and is joined before the tick returns. The
+        # names are driver data, so the batch is an Arrow table and the
+        # store commits it without a Spark job.
         tenant_fut = None
         tenant_pool = None
         tenant_names = primary.tenant_names(root)
         if set(tenant_names) - self._merged_tenants:
-            tenants_df = primary.discover_tenants(spark, root)
             tenant_pool = ThreadPoolExecutor(
                 max_workers=1, thread_name_prefix="tick-tenant"
             )
@@ -351,15 +404,8 @@ class IngestionPipeline:
                 self._in_ingest_pool,
                 store.merge_insert_missing,
                 "tenant",
-                tenants_df.select(F.col("tenant").alias("name")),
+                arrow_table([(n,) for n in tenant_names], TENANT_SCHEMA),
                 PRIMARY_KEYS["tenant"],
-                # the caller's new-names check proves the batch nonempty; a
-                # restart-replay batch whose anti-join empties adopts zero
-                # files (_adopt_files skips the schema-only 0-row part file
-                # an empty non-partitioned write leaves, SPARK-23271) — one
-                # wasted action on the rare replay instead of an isEmpty
-                # probe + cache on every new-tenant tick
-                assume_nonempty=True,
                 assume_unique=True,  # scandir names of ONE directory
             )
         clock.lap("tenants")
@@ -371,6 +417,7 @@ class IngestionPipeline:
             if tenant_fut is not None:
                 try:
                     m.tenants_discovered = tenant_fut.result()
+                    _note_merge(m, store, "tenant")
                     # only grows after a SUCCESSFUL merge (failure → retry
                     # tick re-merges; DO NOTHING makes the replay a no-op)
                     self._merged_tenants |= set(tenant_names)
@@ -452,10 +499,14 @@ class IngestionPipeline:
                     ok = True
                     return result
                 finally:
-                    if ok:
-                        self._cache.settle(
-                            scan_keys, m.extra.pop("_active_keys", ())
-                        )
+                    # a failed tick leaves every examined account pending:
+                    # the rescan already adopted their new dir mtimes, so
+                    # the retry's sweep would otherwise find them unchanged
+                    # and never re-read the delta (lost transactions)
+                    self._cache.settle(
+                        scan_keys,
+                        m.extra.pop("_active_keys", ()) if ok else scan_keys,
+                    )
                     m.extra.pop("_active_keys", None)
                     balance_view.maintain(
                         store, defer_under_files=ROLLUP_DEFER_FILES
@@ -485,10 +536,13 @@ class IngestionPipeline:
                         (r["tenant"], r["account"])
                         for r in inv.select("tenant", "account").distinct().collect()
                     )
-                elif ok:
-                    # failed ticks never settle — pending survives, the
-                    # supervisor's retry re-examines everything it touched
-                    self._cache.settle(scan_keys, m.extra.pop("_active_keys", ()))
+                else:
+                    # a failed tick leaves everything it examined pending,
+                    # so the supervisor's retry re-examines it (see above)
+                    self._cache.settle(
+                        scan_keys,
+                        m.extra.pop("_active_keys", ()) if ok else scan_keys,
+                    )
             m.extra.pop("_active_keys", None)
             inv.unpersist()
             # convergence check for the serving balance rollup: pure-Python
@@ -582,8 +636,9 @@ class IngestionPipeline:
         five Spark jobs of joins/windows/collects — under 32 concurrent
         serving clients each Spark action costs 1.5–3 s of contended
         scheduling regardless of data size, and this path removes ~6 of
-        them from the merge tick. Spark keeps what it is for: the content
-        reads and the keyed MERGE writes. Semantics are the exact mirror
+        them from the merge tick; the keyed MERGE writes commit Arrow
+        batches without Spark (see :meth:`_expand_and_merge_local`), and
+        Spark keeps the wide content reads. Semantics are the exact mirror
         of :meth:`_tick_body` (same watermark rules, same boundary
         replay), pinned by the cached≡uncached pipeline test."""
         spark, store = self.spark, self.store
@@ -678,16 +733,11 @@ class IngestionPipeline:
             if pending_discovery:
                 store.merge_insert_missing(
                     "account",
-                    _driver_df(
-                        spark, sorted(pending_discovery), ACCOUNT_SCHEMA
-                    ),
+                    arrow_table(sorted(pending_discovery), ACCOUNT_SCHEMA),
                     PRIMARY_KEYS["account"],
-                    partition_values=[
-                        (t,) for t in sorted({r[0] for r in pending_discovery})
-                    ],
-                    assume_nonempty=True,
                     assume_unique=True,  # marks-gated: one row per new key
                 )
+                _note_merge(m, store, "account")
                 clock.lap("marker_advance")
             return m
 
@@ -713,16 +763,11 @@ class IngestionPipeline:
             if pending_discovery:
                 store.merge_insert_missing(
                     "account",
-                    _driver_df(
-                        spark, sorted(pending_discovery), ACCOUNT_SCHEMA
-                    ),
+                    arrow_table(sorted(pending_discovery), ACCOUNT_SCHEMA),
                     PRIMARY_KEYS["account"],
-                    partition_values=[
-                        (t,) for t in sorted({r[0] for r in pending_discovery})
-                    ],
-                    assume_nonempty=True,
                     assume_unique=True,  # marks-gated: one row per new key
                 )
+                _note_merge(m, store, "account")
             ev_schema = T.StructType(
                 [T.StructField(f.name, f.dataType, True)
                  for f in primary.ACCOUNT_EVENT_SCHEMA.fields]
@@ -749,11 +794,14 @@ class IngestionPipeline:
         the status-invariant check and the marker positions are set logic
         over O(batch) tuples — running them as Spark joins cost 3 extra
         contended actions per tick (txn_expand alone measured 13–16 s
-        under 32 serving clients at sf10). Spark keeps the keyed MERGE
-        writes — the actual durable state changes. Semantics pinned by
-        the cached≡uncached pipeline equality test and the golden ingest
-        suite; raises TwinUnsupported (via read_transaction_rows) for
-        timestamp shapes only the Spark parse can mirror."""
+        under 32 serving clients at sf10). The three batches (transfer,
+        signed balance changes, the fused account markers) are pyarrow
+        tables the store verbs commit without a Spark job while the
+        touched partitions are small. Semantics pinned by the
+        cached≡uncached pipeline equality test, the golden ingest suite
+        and tests/test_arrow_commit.py; raises TwinUnsupported (via
+        read_transaction_rows) for timestamp shapes only the Spark parse
+        can mirror."""
         spark, root, store = self.spark, self.root, self.store
 
         # D6 status gate: only ACTIVE events name transactions to read
@@ -804,14 +852,12 @@ class IngestionPipeline:
                 )
         clock.lap("txn_expand")
 
-        tschema = T.StructType(
-            [T.StructField(f.name, f.dataType, True)
-             for f in _ingest_transfer_schema().fields]
+        # driver-owned batches as pyarrow tables: the store's verbs commit
+        # them without a Spark job while the touched partitions are small
+        tbatch = arrow_table(sorted(new_transfers.values(), key=str), _TRANSFER_BATCH)
+        abc_batch = arrow_table(
+            _signed_change_rows(new_transfers.values()), _ABC_BATCH
         )
-        tdf = _driver_df(
-            spark, sorted(new_transfers.values(), key=str), tschema
-        )
-        abc_df = _signed_changes(tdf)
 
         # fused account MERGE batch, computed FIRST (pure driver logic over
         # picked_rows + marks): marker advances — assignment semantics
@@ -850,12 +896,15 @@ class IngestionPipeline:
         else:  # steady state: advances only, zero extra plan nodes
             batch, schema, ins_col = advanced, ACCOUNT_SCHEMA, None
         acct_pvals = [(t,) for t in sorted({r[0] for r in batch})]
+        acct_batch = arrow_table(batch, schema)
 
         # transfer + balance-change merges AND the account MERGE's staging
         # write run CONCURRENTLY: three different tables, all derived from
-        # driver-local rows — under serving contention each Spark action
-        # pays 1.5–2.5 s of scheduling latency regardless of batch size,
-        # so the trio costs max() instead of sum(). The D10 "markers
+        # driver-local rows. On the Arrow path each is a pyarrow key probe
+        # + part-file write (GIL released for the I/O); a batch over the
+        # store's cut-off becomes a Spark job, whose 1.5–2.5 s of
+        # scheduling latency under serving contention the overlap then
+        # hides (max() instead of sum()). The D10 "markers
         # advance LAST" contract holds because only the account SWAP (the
         # pointer rename — the durability point) is ordered after the
         # transfer/abc merges; the staged snapshot stays invisible until
@@ -882,7 +931,7 @@ class IngestionPipeline:
                             self._in_ingest_pool,
                             store.merge_upsert_prepare,
                             "account",
-                            _driver_df(spark, batch, schema),
+                            acct_batch,
                             PRIMARY_KEYS["account"],
                             acct_pvals,
                             ins_col,
@@ -894,7 +943,7 @@ class IngestionPipeline:
                     if new_transfers:
                         fut_t = pool.submit(
                             self._in_ingest_pool,
-                            store.merge_insert_missing, "transfer", tdf,
+                            store.merge_insert_missing, "transfer", tbatch,
                             PRIMARY_KEYS["transfer"],
                             [(t,) for t in t_tenants], True,
                             assume_unique=True,  # new_transfers keyed by PK
@@ -903,15 +952,19 @@ class IngestionPipeline:
                             self._in_ingest_pool,
                             store.merge_insert_missing,
                             "account_balance_change",
-                            abc_df, ABC_PRIMARY_KEYS,
+                            abc_batch, ABC_PRIMARY_KEYS,
                             [(t,) for t in abc_tenants], bool(abc_tenants),
                             # one row per (transfer, side): PK carries `side`
                             assume_unique=True,
                         )
                         m.transfers_discovered = fut_t.result()
                         fut_abc.result()
+                        _note_merge(m, store, "transfer")
+                        _note_merge(m, store, "account_balance_change")
                     if fut_prep is not None:
                         prep = fut_prep.result()
+                        if prep is not None:
+                            _note_merge(m, store, "account")
             clock.lap("transfer_abc_merge")
             # rollup maintenance DEFERRED while the append-only window is
             # small: serving answers exact balances through the window (KV
@@ -939,6 +992,7 @@ class IngestionPipeline:
                         insert_only_col=ins_col,
                         assume_unique=True,  # pos/pending dicts keyed by PK
                     )
+                    _note_merge(m, store, "account")
             clock.lap("marker_advance")
         finally:
             if prep is not None and not committed:
@@ -1047,6 +1101,7 @@ class IngestionPipeline:
                     (t,) for t in sorted({r[0] for r in meta_rows})
                 ],
             )
+            _note_merge(m, store, "account")
         clock.lap("account_discovery")
 
         accounts = _keys_pushdown(store.read("account"))
@@ -1272,6 +1327,8 @@ class IngestionPipeline:
             m.transfers_discovered = fut_t.result()
             fut_abc.result()
         new_transfers.unpersist()
+        _note_merge(m, store, "transfer")
+        _note_merge(m, store, "account_balance_change")
         clock.lap("transfer_abc_merge")
         # maintain the serving balance rollup from exactly the appended
         # part files (file-level CDC via the stale window); any mismatch —
@@ -1310,6 +1367,7 @@ class IngestionPipeline:
             )
         )
         self.store.merge_upsert("account", advanced, PRIMARY_KEYS["account"])
+        _note_merge(m, store, "account")
         clock.lap("marker_advance")
 
     # ------------------------------------------------------------------

@@ -224,6 +224,7 @@ _OPS = st.lists(
             # dict model is deterministic
             unique_by=lambda r: (r[0], r[1]),
         ),
+        st.booleans(),  # insert / upsert batch as a pyarrow.Table
     ),
     min_size=1,
     max_size=6,
@@ -241,9 +242,18 @@ def test_tablestore_merge_verbs_match_dict_model(spark, tmp_path_factory, ops):
     leave the table exactly where the obvious dict model lands: the MERGE
     verbs are the reference semantics (ON CONFLICT DO NOTHING / DO
     UPDATE / WHEN MATCHED DELETE), partition copy-on-write and version
-    swaps are implementation detail the model must not observe."""
+    swaps are implementation detail the model must not observe.
+
+    Each insert / upsert batch goes through the DataFrame (Spark) path or
+    the pyarrow.Table (Arrow) path at random; upserts go through the
+    prepare/commit pair whenever it can stage. Table ``f`` adds a derived
+    month partition (from a timestamp that moves with ``v``) and
+    ``cluster_by``, so an upsert can move a row between month dirs."""
+    import datetime
+
     from pyspark.sql import types as T
 
+    from data_warehouse_spark.sources.arrow_parts import arrow_table
     from data_warehouse_spark.sources.tables import TableStore
 
     schema = T.StructType(
@@ -253,22 +263,58 @@ def test_tablestore_merge_verbs_match_dict_model(spark, tmp_path_factory, ops):
             T.StructField("v", T.IntegerType(), False),
         ]
     )
+    fschema = T.StructType(
+        list(schema.fields) + [T.StructField("ts", T.TimestampType(), False)]
+    )
+
+    def ts(v):
+        return datetime.datetime(2020, 1 + v % 12, 1 + v % 28, v % 24)
+
     root = str(tmp_path_factory.mktemp("props-store"))
-    store = TableStore(spark, root, {"t": schema}, partitions={"t": ["tenant"]})
+    store = TableStore(
+        spark, root, {"t": schema, "f": fschema},
+        partitions={"t": ["tenant"], "f": ["tenant"]},
+        month_partitions={"f": ("m", "ts")},
+        cluster_by={"f": ["name"]},
+    )
+    keys = ["tenant", "name"]
     model: dict[tuple[str, str], int] = {}
 
-    for verb, rows in ops:
-        batch = spark.createDataFrame(rows, schema)
+    for verb, rows, as_arrow in ops:
         seen = {(t, n): v for t, n, v in rows}  # PKs unique per batch
+        for name, struct, data in (
+            ("t", schema, rows),
+            ("f", fschema, [(t, n, v, ts(v)) for t, n, v in rows]),
+        ):
+            batch = (
+                arrow_table(data, struct) if as_arrow and verb != "delete"
+                else spark.createDataFrame(data, struct)
+            )
+            writer = "arrow" if as_arrow else "spark"
+            if verb == "insert":
+                store.merge_insert_missing(name, batch, keys)
+            elif verb == "upsert":
+                prep = store.merge_upsert_prepare(
+                    name, batch, keys, sorted({(r[0],) for r in rows})
+                )
+                if prep is not None:
+                    store.merge_upsert_commit(prep)
+                else:  # first write: the plain verb (Spark)
+                    writer = "spark"
+                    store.merge_upsert(
+                        name, spark.createDataFrame(data, struct), keys
+                    )
+            else:
+                store.merge_delete(name, batch, keys)
+                writer = None
+            if writer is not None:
+                assert store.last_merge_path[name] == writer
         if verb == "insert":
-            store.merge_insert_missing("t", batch, ["tenant", "name"])
             for k, v in seen.items():
                 model.setdefault(k, v)
         elif verb == "upsert":
-            store.merge_upsert("t", batch, ["tenant", "name"])
             model.update(seen)
         else:
-            store.merge_delete("t", batch, ["tenant", "name"])
             for k in seen:
                 model.pop(k, None)
 
@@ -276,6 +322,14 @@ def test_tablestore_merge_verbs_match_dict_model(spark, tmp_path_factory, ops):
         (r["tenant"], r["name"]): r["v"] for r in store.read("t").collect()
     } if store.exists("t") else {}
     assert got == model
+    fgot = {
+        (r["tenant"], r["name"]): (r["v"], r["ts"]) for r in store.read("f").collect()
+    } if store.exists("f") else {}
+    assert fgot == {k: (v, ts(v)) for k, v in model.items()}
+    if store.exists("f"):
+        # every row sits in the month dir of its own timestamp
+        for r in store.read("f", keep_derived=True).collect():
+            assert r["m"] == r["ts"].strftime("%Y-%m")
 
 
 _IVM_OPS = st.lists(
