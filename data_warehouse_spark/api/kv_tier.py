@@ -56,9 +56,8 @@ import datetime
 import decimal
 import os
 import threading
-import urllib.parse
 
-HIVE_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+from ..sources.arrow_parts import hive_value
 
 _TWO_DP = decimal.Decimal("0.01")
 _ZERO = decimal.Decimal("0.00")
@@ -71,8 +70,7 @@ def _tenant_of(path: str, vdir: str) -> str | None:
     while len(d) > len(vdir):
         base = os.path.basename(d)
         if base.startswith("tenant="):
-            raw = base[len("tenant="):]
-            return None if raw == HIVE_NULL_PARTITION else urllib.parse.unquote(raw)
+            return hive_value(base[len("tenant="):])
         d = os.path.dirname(d)
     return None
 
@@ -548,11 +546,7 @@ class KVTier:
                 tenant = None
                 for part in path.split(os.sep):
                     if part.startswith("tenant="):
-                        raw = part[len("tenant="):]
-                        tenant = (
-                            None if raw == HIVE_NULL_PARTITION
-                            else urllib.parse.unquote(raw)
-                        )
+                        tenant = hive_value(part[len("tenant="):])
                         break
                 names = by_tenant.get(tenant)
                 if tenant is not None and not names:

@@ -34,7 +34,7 @@ read, O(file footers) per rebuild — with the Spark path as the final
 fallback.  The fresh-or-None interface is identical across all three.
 
 Parquet decode is pyarrow (no py4j round-trip); hive partition dirs are
-decoded with ``urllib.parse.unquote`` — the exact inverse of the
+decoded with ``arrow_parts.hive_value`` — the exact inverse of the
 store's ``_part_dir_value`` (Spark's hive escaping).
 """
 
@@ -44,15 +44,14 @@ import collections
 import decimal
 import os
 import threading
-import urllib.parse
 from typing import Any
 
 from ..operators import balance_view
+from ..sources.arrow_parts import hive_value
 from . import kv_tier
 
 _TWO_DP = decimal.Decimal("0.01")
 _ZERO = decimal.Decimal("0.00")
-HIVE_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _parquet_files(vdir: str) -> list[str]:
@@ -83,8 +82,7 @@ def _read_columns(files: list[str], columns: list[str], vdir: str,
             prefix = f"{partition_col}="
             if not d.startswith(prefix):
                 raise ValueError(f"expected hive dir '{prefix}*', got {d!r}")
-            raw = d[len(prefix):]
-            pval = None if raw == HIVE_NULL_PARTITION else urllib.parse.unquote(raw)
+            pval = hive_value(d[len(prefix):])
         tbl = pq.read_table(f, columns=data_cols)
         cols = [tbl.column(c).to_pylist() for c in data_cols]
         for vals in zip(*cols) if cols else []:

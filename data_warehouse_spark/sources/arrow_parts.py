@@ -17,33 +17,48 @@ machinery cannot tell the two apart:
 * a derived month level is ``yyyy-MM`` of the UTC timestamp;
 * timestamps are INT96, ``decimal(p>18)`` is FIXED_LEN_BYTE_ARRAY, int is
   int32, strings are UTF8 binary; nullability follows the batch schema;
-* the footer carries Spark's ``org.apache.spark.sql.parquet.row.metadata``
-  schema JSON and ``org.apache.spark.version``;
 * one ``part-00000-<uuid>.c000.snappy.parquet`` per hive dir, rows sorted
   by the table's ``cluster_by`` columns (nulls first), row groups sized to
   the table's ``parquet.block.size`` when declared.
 
 Only the types listed in :func:`arrow_type` are mirrored; a table with any
 other column type stays on the Spark writer.
+
+The footer carries no key-value metadata: not Arrow's ``ARROW:schema``
+(Spark's files lack it, and with it pyarrow readers would restore other
+column types than they infer for Spark's files), nor Spark's
+``org.apache.spark.sql.parquet.row.metadata`` / ``org.apache.spark.version``
+(pyarrow writes custom keys only beside ``ARROW:schema``). No reader here
+needs them: ``TableStore.read`` passes the declared schema, Spark infers
+the same types from these physical and logical types when it does infer,
+and it reads a file without a version under
+``spark.sql.parquet.int96RebaseModeInRead`` — CORRECTED by default since
+Spark 4, the mode it reads its own 4.x files in.
+
+The key probe prunes row groups with their min/max statistics, as the KV
+serving tier's row-group index does for point reads; it does not use that
+index, because the index lives in the serving layer (``api``, which
+depends on this package, not the other way round), is built per published
+version for one string key column, and the probe runs on the ingest
+thread over the version it is about to append to, with multi-column keys
+of any type.
 """
 
 from __future__ import annotations
 
 import bisect
-import json
 import os
 import urllib.parse
 import uuid
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-import pyspark
 from pyspark.sql import types as T
 
 # Spark's directory name for a NULL partition value
 HIVE_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
-SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 
 # the characters Spark's ExternalCatalogUtils.escapePathName turns into
 # %XX in a hive dir name (POSIX set): ASCII controls plus "#%'*/:=?\{[]^
@@ -62,6 +77,12 @@ def escape_path_name(value) -> str:
     return "".join(
         f"%{ord(c):02X}" if c in _HIVE_ESCAPED else c for c in str(value)
     )
+
+
+def hive_value(raw: str) -> str | None:
+    """The partition value the hive dir name ``col=<raw>`` holds: the
+    inverse of :func:`escape_path_name` (the NULL sentinel becomes None)."""
+    return None if raw == HIVE_NULL_PARTITION else urllib.parse.unquote(raw)
 
 
 def arrow_type(dt: T.DataType) -> pa.DataType | None:
@@ -133,10 +154,32 @@ def dedupe(table: pa.Table, keys: list[str]) -> pa.Table:
     return table if all(mask) else table.filter(pa.array(mask))
 
 
-def without_keys(table: pa.Table, keys: list[str], doomed: set) -> pa.Table:
-    if not doomed:
-        return table
-    return table.filter(pa.array([k not in doomed for k in key_tuples(table, keys)]))
+def key_hits(table: pa.Table, keys: list[str], other: pa.Table) -> pa.Array:
+    """Boolean mask over ``table``: does the row's key (NULL-safe) occur
+    in ``other``? Vectorized ``is_in`` on the key column with the most
+    distinct values in the smaller side, whose values form the hash set
+    (``is_in`` matches NULL to NULL); key tuples reach Python only for
+    rows that hit — a 60-row batch against a 10^6-row partition compares
+    the few rows that share a key value, never the partition."""
+    small, big = (table, other) if table.num_rows <= other.num_rows else (other, table)
+    first = max(keys, key=lambda k: len(pc.unique(small.column(k))))
+
+    def hits(t: pa.Table, o: pa.Table):
+        col = t.column(first)
+        return pc.is_in(col, value_set=pc.unique(o.column(first)).cast(col.type))
+
+    big_hit = hits(big, small)
+    big_sub = big.filter(big_hit)
+    small_hit = hits(small, big_sub)
+    hit, other_hit = (big_hit, small_hit) if big is table else (small_hit, big_hit)
+    if len(keys) == 1:
+        return hit.combine_chunks() if isinstance(hit, pa.ChunkedArray) else hit
+    idx = np.flatnonzero(hit.to_numpy(zero_copy_only=False))
+    want = set(key_tuples(other.filter(other_hit), keys))
+    mask = np.zeros(table.num_rows, dtype=bool)
+    for i, k in zip(idx, key_tuples(table.take(pa.array(idx, pa.int64())), keys)):
+        mask[i] = k in want
+    return pa.array(mask)
 
 
 # ---- reading what the hive dirs hold -----------------------------------
@@ -148,7 +191,7 @@ def dir_values(relpath: str) -> dict[str, str | None]:
     for seg in relpath.split(os.sep)[:-1]:
         col, eq, raw = seg.partition("=")
         if eq:
-            out[col] = None if raw == HIVE_NULL_PARTITION else urllib.parse.unquote(raw)
+            out[col] = hive_value(raw)
     return out
 
 
@@ -188,20 +231,20 @@ def _may_hold(stats, values: list, has_null: bool) -> bool:
         return True
 
 
-def existing_keys(
+def held_rows(
     files: list[tuple[str, dict, pq.FileMetaData]],
     table: pa.Table,
     keys: list[str],
     fixed_cols: set[str],
-) -> set[tuple]:
-    """The batch keys already present in ``files``.
+) -> pa.Array:
+    """Mask over ``table``: the rows whose key ``files`` already hold.
 
     ``files`` holds (path, partition values of its dir, footer); key
     columns in ``fixed_cols`` come from the dir, the others are read —
     only those columns, only from row groups whose min/max statistics can
     hold a batch value (tight ranges on files sorted by the key, i.e.
-    every file the store writes for a ``cluster_by`` table)."""
-    want = set(key_tuples(table, keys))
+    every file the store writes for a ``cluster_by`` table) — and matched
+    with :func:`key_hits`."""
     data_keys = [k for k in keys if k not in fixed_cols]
     probe: dict[str, tuple[list, bool]] = {}
     for k in data_keys:
@@ -211,18 +254,8 @@ def existing_keys(
         except TypeError:  # unorderable values: no pruning on this column
             non_null = None
         probe[k] = (non_null, None in vals)
-    # the probe column: the data key with the most distinct batch values
-    # (the most selective one — for the balance-change key that is the
-    # transaction id, not the constant source tenant)
-    first = max(data_keys, key=lambda k: len(probe[k][0] or ()), default=None)
-    first_set = pc.unique(table.column(first)) if first else None
-    found: set[tuple] = set()
+    held = np.zeros(table.num_rows, dtype=bool)
     for path, fixed, md in files:
-        if not data_keys:
-            key = tuple(fixed.get(k) for k in keys)
-            if key in want and md.num_rows:
-                found.add(key)
-            continue
         names = [md.schema.column(i).name for i in range(md.num_columns)]
         groups = []
         for g in range(md.num_row_groups):
@@ -239,21 +272,17 @@ def existing_keys(
                 groups.append(g)
         if not groups:
             continue
-        pf = pq.ParquetFile(path, metadata=md, coerce_int96_timestamp_unit="us")
-        # vectorized prefilter on the probe column (is_in matches NULL to a
-        # NULL in the value set): the other key columns are read, and rows
-        # reach Python, only where it hits — never on a fresh batch
-        col = pf.read_row_groups(groups, columns=[first], use_threads=False).column(first)
-        hit = pc.is_in(col, value_set=first_set.cast(col.type))
-        if not pc.any(hit).as_py():
-            continue
-        got = pf.read_row_groups(groups, columns=data_keys, use_threads=False).filter(hit)
-        cols = {k: got.column(k).to_pylist() for k in data_keys}
-        for i in range(got.num_rows):
-            key = tuple(fixed[k] if k in fixed_cols else cols[k][i] for k in keys)
-            if key in want:
-                found.add(key)
-    return found
+        got = pq.ParquetFile(
+            path, metadata=md, coerce_int96_timestamp_unit="us"
+        ).read_row_groups(groups, columns=data_keys, use_threads=False)
+        n = got.num_rows if data_keys else 1
+        got = pa.table({
+            k: pa.repeat(pa.scalar(fixed[k], table.schema.field(k).type), n)
+            if k in fixed_cols else got.column(k)
+            for k in keys
+        })
+        held |= key_hits(table, keys, got).to_numpy(zero_copy_only=False)
+    return pa.array(held)
 
 
 def read_rows(files: list[tuple[str, dict, pq.FileMetaData]], schema: pa.Schema) -> pa.Table:
@@ -267,7 +296,7 @@ def read_rows(files: list[tuple[str, dict, pq.FileMetaData]], schema: pa.Schema)
         cols = []
         for f in schema:
             if f.name in fixed:
-                cols.append(pa.array([fixed[f.name]] * n, f.type))
+                cols.append(pa.repeat(pa.scalar(fixed[f.name], f.type), n))
             else:
                 cols.append(t.column(f.name).cast(f.type))
         parts.append(pa.Table.from_arrays(cols, schema=schema))
@@ -277,58 +306,6 @@ def read_rows(files: list[tuple[str, dict, pq.FileMetaData]], schema: pa.Schema)
 
 
 # ---- writing -----------------------------------------------------------
-
-def _row_metadata(schema: pa.Schema, declared: T.StructType) -> str:
-    by_name = {f.name: f.dataType for f in declared.fields}
-    return json.dumps(
-        {
-            "type": "struct",
-            "fields": [
-                {
-                    "name": f.name,
-                    "type": by_name[f.name].jsonValue(),
-                    "nullable": f.nullable,
-                    "metadata": {},
-                }
-                for f in schema
-            ],
-        },
-        separators=(",", ":"),
-    )
-
-
-def _varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        byte, n = n & 0x7F, n >> 7
-        out.append(byte | (0x80 if n else 0))
-        if not n:
-            return bytes(out)
-
-
-def _with_key_values(image: bytes, kv: dict[str, str]) -> bytes:
-    """A parquet file image with ``kv`` as its footer's key-value
-    metadata. pyarrow writes custom footer keys only beside its own
-    ARROW:schema entry, which Spark's files lack (and which would make
-    pyarrow readers restore other column types than they infer for
-    Spark's files), so the file is written without metadata and the keys
-    are appended here: FileMetaData field 5, ``list<KeyValue>``, in the
-    thrift compact protocol (long-form field header, as the field follows
-    higher-numbered ones)."""
-    n = int.from_bytes(image[-8:-4], "little")
-    footer = image[-8 - n:-8]
-    assert footer[-1] == 0 and len(kv) < 15  # the struct's stop byte
-    out = bytearray(footer[:-1])
-    out += b"\x09" + _varint(5 << 1)  # type LIST, field id 5 (zigzag)
-    out.append((len(kv) << 4) | 0x0C)  # list header: size, STRUCT
-    for key, value in kv.items():
-        for text in (key, value):  # fields 1 and 2, BINARY, delta 1
-            b = text.encode()
-            out += b"\x18" + _varint(len(b)) + b
-        out.append(0)
-    out.append(0)
-    return image[:-8 - n] + bytes(out) + len(out).to_bytes(4, "little") + b"PAR1"
-
 
 def _plain_bytes(col) -> int:
     """PLAIN-encoded size of a column chunk's values."""
@@ -357,10 +334,6 @@ def _dictionary_columns(part: pa.Table) -> list[str]:
     return out
 
 
-def _month(v) -> str | None:
-    return None if v is None else f"{v.year:04d}-{v.month:02d}"
-
-
 def write_parts(
     table: pa.Table,
     dest: str,
@@ -377,23 +350,27 @@ def write_parts(
     data_cols = [
         f.name for f in declared.fields if f.name not in partition_cols
     ]
-    dir_cols = list(partition_cols)
-    dir_vals = [column_values(table, c) for c in partition_cols]
+    dirs = table.select(partition_cols)
     if month is not None:
-        dir_cols.append(month[0])
-        dir_vals.append([_month(v) for v in column_values(table, month[1])])
-    groups: dict[tuple, list[int]] = {}
-    for i, key in enumerate(zip(*dir_vals) if dir_vals else [()] * table.num_rows):
-        groups.setdefault(key, []).append(i)
+        # yyyy-MM of the stored (UTC) instant
+        dirs = dirs.append_column(
+            month[0], pc.strftime(table.column(month[1]), format="%Y-%m")
+        )
+    combos = (
+        dirs.group_by(dirs.column_names, use_threads=False).aggregate([]).to_pylist()
+        if table.num_rows else []
+    )
     data = table.select(data_cols)
-    meta = {
-        SPARK_ROW_METADATA: _row_metadata(data.schema, declared),
-        "org.apache.spark.version": pyspark.__version__,
-    }
     sort_keys = [(c, "ascending") for c in cluster_by if c in data_cols]
     os.makedirs(dest, exist_ok=True)
-    for key, idx in groups.items():
-        part = data.take(pa.array(idx, pa.int64()))
+    for combo in combos:
+        part = data
+        if len(combos) > 1:
+            mask = None
+            for c, v in combo.items():
+                m = pc.is_null(dirs.column(c)) if v is None else pc.equal(dirs.column(c), v)
+                mask = m if mask is None else pc.and_(mask, m)
+            part = data.filter(mask)
         if sort_keys:
             part = part.take(
                 pc.sort_indices(part, sort_keys=sort_keys, null_placement="at_start")
@@ -406,14 +383,12 @@ def write_parts(
         else:
             rows = max(1, part.num_rows)  # one group, as under Spark's 128 MB
         d = os.path.join(
-            dest, *(f"{c}={escape_path_name(v)}" for c, v in zip(dir_cols, key))
+            dest, *(f"{c}={escape_path_name(v)}" for c, v in combo.items())
         )
         os.makedirs(d, exist_ok=True)
-        path = os.path.join(d, f"part-00000-{uuid.uuid4()}.c000.snappy.parquet")
-        buf = pa.BufferOutputStream()
         pq.write_table(
             part,
-            buf,
+            os.path.join(d, f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"),
             version="1.0",
             compression="snappy",
             use_deprecated_int96_timestamps=True,
@@ -421,6 +396,4 @@ def write_parts(
             use_dictionary=_dictionary_columns(part) or False,
             store_schema=False,
         )
-        with open(path, "wb") as fh:
-            fh.write(_with_key_values(buf.getvalue().to_pybytes(), meta))
     open(os.path.join(dest, "_SUCCESS"), "w").close()

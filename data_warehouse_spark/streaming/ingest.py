@@ -406,6 +406,13 @@ class IngestionPipeline:
                 "tenant",
                 arrow_table([(n,) for n in tenant_names], TENANT_SCHEMA),
                 PRIMARY_KEYS["tenant"],
+                # the caller's new-names check proves the batch nonempty; a
+                # restart-replay batch whose anti-join empties adopts zero
+                # files (_adopt_files skips the schema-only 0-row part file
+                # an empty non-partitioned write leaves, SPARK-23271) — one
+                # wasted action on the rare replay instead of an isEmpty
+                # probe + cache on every new-tenant tick
+                assume_nonempty=True,
                 assume_unique=True,  # scandir names of ONE directory
             )
         clock.lap("tenants")
@@ -735,6 +742,10 @@ class IngestionPipeline:
                     "account",
                     arrow_table(sorted(pending_discovery), ACCOUNT_SCHEMA),
                     PRIMARY_KEYS["account"],
+                    partition_values=[
+                        (t,) for t in sorted({r[0] for r in pending_discovery})
+                    ],
+                    assume_nonempty=True,
                     assume_unique=True,  # marks-gated: one row per new key
                 )
                 _note_merge(m, store, "account")
@@ -765,6 +776,10 @@ class IngestionPipeline:
                     "account",
                     arrow_table(sorted(pending_discovery), ACCOUNT_SCHEMA),
                     PRIMARY_KEYS["account"],
+                    partition_values=[
+                        (t,) for t in sorted({r[0] for r in pending_discovery})
+                    ],
+                    assume_nonempty=True,
                     assume_unique=True,  # marks-gated: one row per new key
                 )
                 _note_merge(m, store, "account")

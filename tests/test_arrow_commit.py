@@ -20,7 +20,7 @@ from data_warehouse_spark.api.kv_tier import KVTier
 from data_warehouse_spark.materialize import driver_df
 from data_warehouse_spark.operators import balance_view
 from data_warehouse_spark.sources import tables
-from data_warehouse_spark.sources.arrow_parts import SPARK_ROW_METADATA, arrow_table
+from data_warehouse_spark.sources.arrow_parts import arrow_table
 from data_warehouse_spark.streaming import ingest
 from data_warehouse_spark.streaming.ingest import (
     ABC_PRIMARY_KEYS,
@@ -62,10 +62,10 @@ def _account_rows(wave: int, tenants) -> list[tuple]:
     ]
 
 
-def _layout(store, name, files) -> dict[str, dict]:
+def _layout(spark, store, name, files) -> dict[str, dict]:
     """Per hive dir of ``files`` (relative to the current version): the
-    part file's column descriptors, Spark schema JSON and stored rows in
-    file order."""
+    part file's column descriptors, the schema Spark infers from it and
+    its stored rows in file order."""
     vdir = store._resolve(name)
     out: dict[str, dict] = {}
     for path in files:
@@ -79,7 +79,7 @@ def _layout(store, name, files) -> dict[str, dict]:
                  c.max_definition_level, c.length)
                 for c in cols
             ],
-            "spark_schema": md.metadata[SPARK_ROW_METADATA.encode()],
+            "spark_schema": spark.read.parquet(path).schema,
             "rows": pq.read_table(path, coerce_int96_timestamp_unit="us").to_pylist(),
         }
     return out
@@ -107,7 +107,7 @@ def _write_both(spark, stores, name, rows, struct, keys) -> dict:
         batch = driver_df(spark, rows, struct) if mode == "spark" else arrow_table(rows, struct)
         store.merge_insert_missing(name, batch, keys)
         assert store.last_merge_path[name] == mode
-        layouts[mode] = _layout(store, name, store.last_adopted_files)
+        layouts[mode] = _layout(spark, store, name, store.last_adopted_files)
     _assert_same_layout(name, layouts["spark"], layouts["arrow"])
     return layouts["arrow"]
 
@@ -123,7 +123,7 @@ def _upsert_both(spark, stores, rows, struct, tenants) -> dict:
         store.merge_upsert_commit(prep)
         assert store.last_merge_path["account"] == mode
         vdir = store._resolve("account")
-        layouts[mode] = _layout(store, "account", [
+        layouts[mode] = _layout(spark, store, "account", [
             os.path.join(vdir, d, f)
             for d in sorted(os.listdir(vdir)) if d in {f"tenant={store._part_dir_value(t)}" for t in tenants}
             for f in os.listdir(os.path.join(vdir, d)) if f.endswith(".parquet")
@@ -135,7 +135,7 @@ def _upsert_both(spark, stores, rows, struct, tenants) -> dict:
 def test_arrow_and_spark_writers_lay_out_identical_tables(spark, tmp_path):
     """Rows written once through the Arrow path and once through Spark:
     same hive dir names (escaped tenants included), same parquet physical
-    schemas and Spark schema JSON, same sort order and stored instants,
+    schemas and Spark-inferred schemas, same sort order and stored instants,
     and the same answers from every reader — store.read, the KV tier's
     lookup / sorted_page / delta_sums, compaction and the balance rollup."""
     stores = {

@@ -11,7 +11,7 @@ import datetime
 import decimal
 import os
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -224,7 +224,11 @@ _OPS = st.lists(
             # dict model is deterministic
             unique_by=lambda r: (r[0], r[1]),
         ),
-        st.booleans(),  # insert / upsert batch as a pyarrow.Table
+        # the route of an insert / upsert batch: "arrow" = a pyarrow.Table
+        # through insert-missing or upsert prepare/commit; "spark" = a
+        # DataFrame through the same verbs; "plain" = a DataFrame through
+        # the one-call merge_upsert (insert-missing has no third route)
+        st.sampled_from(["arrow", "spark", "plain"]),
     ),
     min_size=1,
     max_size=6,
@@ -232,6 +236,16 @@ _OPS = st.lists(
 
 
 @given(ops=_OPS)
+# every route runs on an existing table in every run, next to the random
+# interleavings: the plain verb's copy-on-write upsert, then both
+# prepare/commit routes, each moving a row between month dirs of ``f``
+@example(ops=[
+    ("insert", [("A", "x", 1), ("B", "y", 2)], "arrow"),
+    ("upsert", [("A", "x", 3), ("C", "x", 4)], "plain"),
+    ("upsert", [("A", "x", 5), ("B", "x", 6)], "spark"),
+    ("upsert", [("B", "y", 7), ("C", "y", 8)], "arrow"),
+    ("insert", [("A", "y", 9), ("B", "y", 10)], "spark"),
+])
 @settings(
     max_examples=12,
     deadline=None,
@@ -244,9 +258,10 @@ def test_tablestore_merge_verbs_match_dict_model(spark, tmp_path_factory, ops):
     UPDATE / WHEN MATCHED DELETE), partition copy-on-write and version
     swaps are implementation detail the model must not observe.
 
-    Each insert / upsert batch goes through the DataFrame (Spark) path or
-    the pyarrow.Table (Arrow) path at random; upserts go through the
-    prepare/commit pair whenever it can stage. Table ``f`` adds a derived
+    Each insert batch goes through the DataFrame (Spark) or the
+    pyarrow.Table (Arrow) path at random; each upsert through one of three
+    routes: merge_upsert with a DataFrame (partition copy-on-write), or
+    prepare/commit with a DataFrame or with a pyarrow.Table. Table ``f`` adds a derived
     month partition (from a timestamp that moves with ``v``) and
     ``cluster_by``, so an upsert can move a row between month dirs."""
     import datetime
@@ -280,26 +295,28 @@ def test_tablestore_merge_verbs_match_dict_model(spark, tmp_path_factory, ops):
     keys = ["tenant", "name"]
     model: dict[tuple[str, str], int] = {}
 
-    for verb, rows, as_arrow in ops:
+    for verb, rows, route in ops:
         seen = {(t, n): v for t, n, v in rows}  # PKs unique per batch
         for name, struct, data in (
             ("t", schema, rows),
             ("f", fschema, [(t, n, v, ts(v)) for t, n, v in rows]),
         ):
             batch = (
-                arrow_table(data, struct) if as_arrow and verb != "delete"
+                arrow_table(data, struct) if route == "arrow" and verb != "delete"
                 else spark.createDataFrame(data, struct)
             )
-            writer = "arrow" if as_arrow else "spark"
+            writer = "arrow" if route == "arrow" else "spark"
             if verb == "insert":
                 store.merge_insert_missing(name, batch, keys)
             elif verb == "upsert":
-                prep = store.merge_upsert_prepare(
-                    name, batch, keys, sorted({(r[0],) for r in rows})
-                )
+                prep = None
+                if route != "plain":
+                    prep = store.merge_upsert_prepare(
+                        name, batch, keys, sorted({(r[0],) for r in rows})
+                    )
                 if prep is not None:
                     store.merge_upsert_commit(prep)
-                else:  # first write: the plain verb (Spark)
+                else:  # the plain verb, or a first write prepare declines
                     writer = "spark"
                     store.merge_upsert(
                         name, spark.createDataFrame(data, struct), keys
@@ -330,6 +347,37 @@ def test_tablestore_merge_verbs_match_dict_model(spark, tmp_path_factory, ops):
         # every row sits in the month dir of its own timestamp
         for r in store.read("f", keep_derived=True).collect():
             assert r["m"] == r["ts"].strftime("%Y-%m")
+
+
+_KEY_ROWS = st.lists(
+    st.tuples(st.sampled_from(["x", "y", None]), st.sampled_from([1, 2, None])),
+    max_size=12,
+)
+
+
+@given(left=_KEY_ROWS, right=_KEY_ROWS)
+@settings(max_examples=200, deadline=None)
+def test_key_hits_is_null_safe_key_membership(left, right):
+    """The Arrow path's vectorized key match is tuple membership with NULL
+    equal to NULL (the MERGE key condition), for one key column and two,
+    whichever side is larger."""
+    import pyarrow as pa
+
+    from data_warehouse_spark.sources.arrow_parts import key_hits
+
+    schema = pa.schema([("a", pa.string()), ("b", pa.int32())])
+
+    def table(rows):
+        return pa.Table.from_pylist([{"a": a, "b": b} for a, b in rows], schema=schema)
+
+    want = set(right)
+    assert key_hits(table(left), ["a", "b"], table(right)).to_pylist() == [
+        k in want for k in left
+    ]
+    bs = {b for _a, b in right}
+    assert key_hits(table(left), ["b"], table(right)).to_pylist() == [
+        b in bs for _a, b in left
+    ]
 
 
 _IVM_OPS = st.lists(
