@@ -1,4 +1,4 @@
-"""Distributed filesystem listing for the primary-storage crawl.
+"""Primary-storage listing for the ingestion crawl.
 
 The reference's explorer reads only watermark-selected files: it LISTS
 directory levels (names are data: tenant, account, snapshot version, event
@@ -6,113 +6,16 @@ status/transaction) and READS content only where the watermarks say there is
 something new (PrimaryDataExplorationService.scala:107-178, notably the
 event-dir count skip ``lastSynchronizedEvent >= data.size``).
 
-This module is the listing half of that contract. Directory scans are
-distributed as RDD ``flatMap`` stages over the parent-directory list — the
-same work Spark's ``InMemoryFileIndex`` parallelizes for large tables, but
-WITHOUT instantiating a read of file contents. Content reads happen later,
-against explicit path lists the watermark logic has pruned to O(new).
-
-On a real cluster this becomes a listFiles against the object store /
-DFS namenode; the per-tick volume is O(#accounts) directory entries of
-strings, never file bytes.
+This module is the listing half of that contract: :class:`ListingCache`
+finds the accounts whose directories changed since they were last
+examined, and rescans exactly those — snapshot and event files by name,
+never their content. Content reads happen later, against explicit path
+lists the watermark logic has pruned to O(new).
 """
 
 from __future__ import annotations
 
 import os
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-SNAPSHOT_FILE_SCHEMA = T.StructType(
-    [
-        T.StructField("tenant", T.StringType(), False),
-        T.StructField("account", T.StringType(), False),
-        T.StructField("version", T.IntegerType(), False),
-        T.StructField("path", T.StringType(), False),
-    ]
-)
-
-EVENT_FILE_SCHEMA = T.StructType(
-    [
-        T.StructField("tenant", T.StringType(), False),
-        T.StructField("account", T.StringType(), False),
-        T.StructField("snapshot_version", T.IntegerType(), False),
-        T.StructField("filename", T.StringType(), False),
-        T.StructField("path", T.StringType(), False),
-    ]
-)
-
-
-def _slices(n: int) -> int:
-    return max(1, min(n, 64))
-
-
-def snapshot_inventory(spark: SparkSession, root: str, tenants: list[str]) -> DataFrame:
-    """(tenant, account, version, path) for every snapshot FILE, from
-    directory listings alone — the version is the file name (S1/S2 + the
-    snapshot half of D4). Accounts are the ``version == 0`` rows (an account
-    without snapshot 0 is undiscoverable, as in the reference where the
-    metadata read requires it)."""
-
-    def scan_accounts(tenant: str):
-        base = os.path.join(root, f"t_{tenant}", "account")
-        try:
-            with os.scandir(base) as it:
-                return [(tenant, e.name) for e in it if e.is_dir()]
-        except (FileNotFoundError, NotADirectoryError):
-            return []
-
-    def scan_snapshots(ta):
-        tenant, account = ta
-        base = os.path.join(root, f"t_{tenant}", "account", account, "snapshot")
-        out = []
-        try:
-            with os.scandir(base) as it:
-                for e in it:
-                    if e.is_file() and e.name.isdigit():
-                        out.append((tenant, account, int(e.name), e.path))
-        except (FileNotFoundError, NotADirectoryError):
-            pass
-        return out
-
-    sc = spark.sparkContext
-    # parallelism is #tenants-bound; a repartition between the two levels
-    # was measured a net LOSS at 8 tenants x 50k accounts (idle tick
-    # 3.4 s -> 4.6 s: the per-tick shuffle costs more than the widened
-    # scandir parallelism saves) — scale-out at width is sharding tenants
-    # across ingest workers, not intra-tick shuffles (INGEST_BENCH.json)
-    rdd = (
-        sc.parallelize(tenants, _slices(len(tenants) or 1))
-        .flatMap(scan_accounts)
-        .flatMap(scan_snapshots)
-    )
-    return spark.createDataFrame(rdd, SNAPSHOT_FILE_SCHEMA)
-
-
-def event_files(spark: SparkSession, root: str, snapshot_dirs: DataFrame) -> DataFrame:
-    """Event-file listing for the given (tenant, account, version) snapshot
-    rows: (tenant, account, snapshot_version, filename, path). Names carry
-    (status, hint, transaction); only the event VERSION lives in content —
-    which is exactly what the count-skip lets us avoid reading."""
-
-    def scan_events(row):
-        tenant, account, version = row.tenant, row.account, int(row.version)
-        base = os.path.join(
-            root, f"t_{tenant}", "account", account, "events", f"{version:010d}"
-        )
-        out = []
-        try:
-            with os.scandir(base) as it:
-                for e in it:
-                    if e.is_file() and e.name:
-                        out.append((tenant, account, version, e.name, e.path))
-        except (FileNotFoundError, NotADirectoryError):
-            pass
-        return out
-
-    rdd = snapshot_dirs.select("tenant", "account", "version").rdd.flatMap(scan_events)
-    return spark.createDataFrame(rdd, EVENT_FILE_SCHEMA)
 
 
 # --- per-directory mtime watermark cache (idle ticks O(changed dirs)) --------
@@ -129,24 +32,11 @@ def _guarded_mtime(path: str, now_ns: int, guard_ns: int) -> int | None:
 def _scan_account_dirs(
     root: str, tenant: str, account: str, now_ns: int,
     guard_ns: int = 2_000_000_000,
-    read_content: bool = False,
 ) -> tuple:
     """One account's fresh (snapshot rows, event-file rows, tracked-dir
-    mtimes[, content bytes]) — the unit of a delta rescan; runs
-    driver-side for small deltas and inside an RDD map for wide ones
-    (executor processes — zero driver GIL time). Event files are listed
-    for EVERY version dir here (a superset of the watermark-selected set
-    — the tick filters later), so the delta path needs no second listing
-    job.
-
-    ``read_content=True`` additionally captures the RAW BYTES of every
-    1-line file the tick could want to parse — event files and the
-    snapshot-0 meta file — while the scan is already in the directory
-    (4th return element, path→bytes). The wide-delta tick then parses
-    driver-side from the dict instead of paying a SECOND executor job
-    for content (~0.3 s of job round trip per merge tick at sf1). A
-    read that races a concurrent delete is simply omitted; the parser
-    falls back to a direct read for missing paths."""
+    mtimes) — the unit of a rescan. Event files are listed for EVERY
+    version dir here (a superset of the watermark-selected set — the tick
+    filters later), so the tick needs no second listing pass."""
     adir = os.path.join(root, f"t_{tenant}", "account", account)
     snap_dir = os.path.join(adir, "snapshot")
     ev_dir = os.path.join(adir, "events")
@@ -156,22 +46,11 @@ def _scan_account_dirs(
     }
     rows: list[tuple[str, str, int, str]] = []
     ev_rows: list[tuple[str, str, int, str, str]] = []
-    content: dict[str, bytes] = {}
-
-    def _grab(path: str) -> None:
-        try:
-            with open(path, "rb") as fh:
-                content[path] = fh.read()
-        except OSError:
-            pass  # raced a writer/delete — parser falls back to a re-read
-
     try:
         with os.scandir(snap_dir) as it:
             for e in it:
                 if e.is_file() and e.name.isdigit():
                     rows.append((tenant, account, int(e.name), e.path))
-                    if read_content and int(e.name) == 0:
-                        _grab(e.path)
     except (FileNotFoundError, NotADirectoryError):
         pass
     try:
@@ -191,37 +70,9 @@ def _scan_account_dirs(
                         ev_rows.append(
                             (tenant, account, version, f.name, f.path)
                         )
-                        if read_content:
-                            _grab(f.path)
         except (FileNotFoundError, NotADirectoryError):
             pass
-    if read_content:
-        return rows, ev_rows, dirs, content
     return rows, ev_rows, dirs
-
-
-def rescan_accounts_distributed(
-    spark: SparkSession, root: str, keys: list, now_ns: int,
-    read_content: bool = False,
-) -> list:
-    """[(tenant, account, snap_rows, ev_rows, dirs[, content])] for a WIDE delta,
-    scanned on executors: a few thousand driver-side scandirs are ~0.25 s
-    of pure Python, but under 32 concurrent request threads the GIL
-    round-robin stretched that to ~8 s (serving bench, sf1). Executor
-    processes have their own interpreters — the driver only collects."""
-    sc = spark.sparkContext
-
-    def scan(key):
-        tenant, account = key
-        return (
-            tenant,
-            account,
-            *_scan_account_dirs(
-                root, tenant, account, now_ns, read_content=read_content
-            ),
-        )
-
-    return sc.parallelize(keys, _slices(len(keys))).map(scan).collect()
 
 
 class ListingCache:
@@ -229,10 +80,9 @@ class ListingCache:
     O(tree width).
 
     The reference re-walks the whole account tree every 2 s tick
-    (PrimaryDataExplorationService.scala:107-178); that is the measured
-    O(tree-width) floor at warehouse scale (TICK_ATTRIBUTION_SF10: a sf10
-    idle tick spent 3.2 s listing having read zero files). This cache
-    replaces the re-walk with a directory-mtime watermark sweep:
+    (PrimaryDataExplorationService.scala:107-178), an O(tree-width) floor
+    even for a tick that reads nothing. This cache replaces the re-walk
+    with a directory-mtime watermark sweep:
 
     * per account we record the mtime of every directory whose content can
       change the tick's outcome — ``snapshot/`` (new snapshot files),
@@ -252,21 +102,18 @@ class ListingCache:
     Concurrency guard: an mtime recorded within ``GUARD_NS`` of the scan is
     untrusted (a concurrent writer can land inside the same timestamp after
     our scandir) — the dir is treated as changed until a sweep observes it
-    quiet. Crash safety: state is in-memory; a restarted pipeline does one
-    full scan (first tick) and re-converges — the cache is an optimization,
-    never a correctness input.
+    quiet. Crash safety: state is in-memory; a new cache starts empty, its
+    first sweep registers every account dir as pending, so a restarted
+    pipeline examines the whole tree once and re-converges — the cache is
+    an optimization, never a correctness input.
 
-    Scale: the sweep is O(accounts) *stat calls* (no scandir, no content),
-    threadable because ``os.stat`` releases the GIL; the expensive parts —
-    scandir + Spark joins — are O(changed ∪ pending). At extreme width the
-    deployment story stays the committed one (INGEST_BENCH: shard tenants
-    across ingest workers), each worker sweeping its shard.
+    Scale: the sweep is O(accounts) *stat calls* (no scandir, no content);
+    the scandirs and content reads are O(changed ∪ pending).
     """
 
     GUARD_NS = 2_000_000_000  # 2 s — mtime resolution + writer-race window
 
     def __init__(self) -> None:
-        self.primed = False
         # tenant -> mtime_ns of t_<tenant>/account parent (None = rescan)
         self._parents: dict[str, int | None] = {}
         # (tenant, account) -> [dirs: dict[path -> mtime_ns|None], pending]
@@ -298,13 +145,6 @@ class ListingCache:
         return names
 
     # -- lifecycle -------------------------------------------------------
-    def prime(self, keys) -> None:
-        """Register accounts found by a full (first-tick) inventory scan as
-        pending — they settle to dormant after one examined-idle tick."""
-        for t, a in keys:
-            self._accounts.setdefault((t, a), [{}, True])
-        self.primed = True
-
     def sweep(self, root: str, tenants: list[str], now_ns: int) -> list[tuple[str, str]]:
         """(tenant, account) keys needing examination this tick: pending
         ones, plus any whose tracked dir mtimes moved (or are untrusted)."""
@@ -323,19 +163,14 @@ class ListingCache:
 
     def rescan_account(
         self, root: str, tenant: str, account: str, now_ns: int
-    ) -> list[tuple[str, str, int, str]]:
+    ) -> tuple[list, list]:
         """Fresh (snapshot rows, event-file rows) for one account —
-        SNAPSHOT_FILE_SCHEMA / EVENT_FILE_SCHEMA shapes — refreshing the
+        ``(tenant, account, version, path)`` and ``(tenant, account,
+        snapshot_version, filename, path)`` tuples — refreshing the
         tracked mtime set: snapshot/, events/, every events/<version>/."""
         rows, ev_rows, dirs = _scan_account_dirs(root, tenant, account, now_ns)
-        self.adopt(tenant, account, dirs)
+        self._accounts.setdefault((tenant, account), [{}, True])[0] = dirs
         return rows, ev_rows
-
-    def adopt(self, tenant: str, account: str, dirs: dict) -> None:
-        """Install an externally-scanned mtime set (the RDD rescan path
-        collects (rows, dirs) from executors — no driver GIL time)."""
-        state = self._accounts.setdefault((tenant, account), [{}, True])
-        state[0] = dirs
 
     def settle(self, examined, active) -> None:
         """After a tick: examined accounts that read nothing and moved no

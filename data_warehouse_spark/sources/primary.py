@@ -142,9 +142,7 @@ def read_account_meta_paths(spark: SparkSession, paths: list[str]) -> DataFrame:
     return parse_account_meta(spark, read_paths(spark, paths))
 
 
-def read_account_meta_rows(
-    paths: list[str], content: dict[str, bytes] | None = None
-) -> list[tuple[str, str, str, str]]:
+def read_account_meta_rows(paths: list[str]) -> list[tuple[str, str, str, str]]:
     """Driver-side twin of :func:`read_account_meta_paths` for BOUNDED
     new-account batches: (tenant, name, currency, format) rows.
 
@@ -153,21 +151,13 @@ def read_account_meta_rows(
     concurrent serving load (GIL-stretched driver coordination) vs ~50 ms
     of direct reads. Semantics identical to the Spark form, pinned by
     test_ingest: same framing bound on EVERY line (FramingException),
-    same substring parse, same path-derived tenant/account.
-
-    ``content``: optional path→raw-bytes prefetch (the wide-delta rescan
-    captures 1-line file bytes executor-side while it lists — the parse
-    then runs here with ZERO file I/O and no second Spark job). A path
-    missing from the dict falls back to a direct read."""
+    same substring parse, same path-derived tenant/account."""
     import re
 
     out = []
     for p in paths:
-        data = content.get(p) if content is not None else None
-        if data is None:
-            with open(p, "rb") as fh:
-                data = fh.read()
-        text = data.decode("utf-8", errors="replace")
+        with open(p, "rb") as fh:
+            text = fh.read().decode("utf-8", errors="replace")
         lines = text.split("\n")
         if any(len(line.encode("utf-8")) > MAX_LINE_BYTES for line in lines):
             raise ValueError(
@@ -233,9 +223,7 @@ def _int_cast(s: str, where: str) -> int:
         ) from None
 
 
-def read_account_event_rows(
-    paths: list[str], content: dict[str, bytes] | None = None
-) -> list[tuple]:
+def read_account_event_rows(paths: list[str]) -> list[tuple]:
     """Driver/executor twin of :func:`read_account_event_paths`:
     (tenant, account, status, transaction, snapshot_version, version)
     rows, exactly the ACCOUNT_EVENT_SCHEMA shape (None where the Spark
@@ -244,17 +232,13 @@ def read_account_event_rows(
     for the same reason as :func:`read_account_meta_rows`: a tick's
     event batch is thousands of 1-line files, and both a Spark text job
     and a GIL-starved driver loop measured seconds under serving load —
-    an RDD map over path chunks reads them executor-side. ``content``:
-    optional path→raw-bytes prefetch (see :func:`read_account_meta_rows`)."""
+    an RDD map over path chunks reads them executor-side."""
     import re
 
     out = []
     for p in paths:
-        data = content.get(p) if content is not None else None
-        if data is None:
-            with open(p, "rb") as fh:
-                data = fh.read()
-        text = data.decode("utf-8", errors="replace")
+        with open(p, "rb") as fh:
+            text = fh.read().decode("utf-8", errors="replace")
         lines = text.split("\n")
         if any(len(line.encode("utf-8")) > MAX_LINE_BYTES for line in lines):
             raise ValueError(

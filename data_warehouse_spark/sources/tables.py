@@ -853,7 +853,7 @@ class TableStore:
     def merge_upsert(
         self,
         name: str,
-        batch: DataFrame,
+        batch: DataFrame | pa.Table,
         keys: list[str],
         partition_values: list[tuple] | None = None,
         assume_nonempty: bool = False,
@@ -891,9 +891,14 @@ class TableStore:
         part of the PK, only the partitions the batch touches are recomputed
         and rewritten; every other partition's files are hard-linked into
         the new snapshot unchanged — O(touched partitions) I/O, O(#files)
-        metadata, never O(table)."""
+        metadata, never O(table).
+
+        A ``pyarrow.Table`` batch (the ingestion tick's account batch when
+        :meth:`merge_upsert_prepare` declines it) runs the same Spark plan."""
         _t0 = time.perf_counter()
         self.last_merge_path[name] = "spark"
+        if isinstance(batch, pa.Table):
+            batch = self._arrow_to_df(name, batch)
         fresh = (batch if assume_unique else batch.dropDuplicates(keys)).cache()
         try:
             if not assume_nonempty and fresh.isEmpty():
@@ -946,8 +951,10 @@ class TableStore:
         Driver-known-batch contract only: ``partition_values`` required,
         batch assumed non-empty, no counts. Returns an opaque handle for
         commit/abort, or ``None`` when the fast-stage preconditions don't
-        hold (table missing, not single-level PK-partitioned, too many
-        partitions) — the caller then falls back to plain merge_upsert.
+        hold (not single-level PK-partitioned, more than
+        :data:`MAX_PRUNE_PARTITIONS` partitions) — the caller then falls
+        back to plain merge_upsert. An absent table stages its first
+        version: the batch itself.
 
         The caller MUST NOT write ``name`` between prepare and commit
         (commit verifies and refuses). An uncommitted staged dir is
@@ -962,8 +969,6 @@ class TableStore:
         written in Spark's layout; the untouched partitions are
         hard-linked and the handle commits through the same
         :meth:`merge_upsert_commit`."""
-        if not self.exists(name):
-            return None
         pcols = self.partitions.get(name, [])
         if not (len(pcols) == 1 and pcols[0] in keys):
             return None
@@ -1020,7 +1025,8 @@ class TableStore:
             new_vdir = self._write_version(name, merged)
         laps["write_action"] = time.perf_counter() - _t0
         _t0 = time.perf_counter()
-        self._link_untouched(old_vdir, new_vdir, pcols[0], pvals)
+        if old_vdir is not None:
+            self._link_untouched(old_vdir, new_vdir, pcols[0], pvals)
         laps["adopt"] = time.perf_counter() - _t0
         return (name, old_vdir, new_vdir)
 

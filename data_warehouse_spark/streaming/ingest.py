@@ -7,16 +7,20 @@ store, bounded per tick by per-account high-watermarks
 
 Spark re-expression: one :class:`IngestionPipeline` whose ``run_once`` is a
 tick — set-oriented instead of per-entity async loops, and **O(new files)**
-in content reads, exactly like the reference:
+in content reads, exactly like the reference. Every tick, the first one
+included, runs the same body over the accounts the listing cache hands it:
 
-  listing      snapshot inventory from directory names only (versions are
-               file names — zero content reads); event files listed only
-               under watermark-selected snapshot dirs
   tenants      discovered dirs            → MERGE insert-missing
-  accounts     snapshot-0 metadata read ONLY for accounts not yet in the
-               table (anti-join on the listing, O(new) content reads)
+  listing      :class:`~..sources.listing.ListingCache` sweep — changed or
+               pending accounts only (every account on the first tick);
+               their snapshot and event files listed by name (versions
+               are file names — zero content reads)
+  marks        the examined accounts' watermarks from the KV tier's
+               row-group-pruned Arrow reads ({} for an absent table)
+  accounts     snapshot-0 metadata read ONLY for accounts without marks
+               (O(new) content reads)
   snapshots    high-watermark filter (version ≥ last_syn_snapshot),
-               row_number ≤ 2 per account — the reference's bounded
+               first 2 per account — the reference's bounded
                incremental window (take(2) — :121)
   events       the reference's count-skip: a boundary snapshot dir is read
                only when it holds MORE files than last_syn_event
@@ -33,48 +37,33 @@ in content reads, exactly like the reference:
   markers      account watermarks advanced in the same tick (D10), only for
                accounts whose position actually moved
 
-An idle tick (nothing new anywhere) performs directory listings and ZERO
-content reads and ZERO table writes — ``TickMetrics.extra["files_read"]``
-instruments this.
+The watermark logic (D4 selection, D5 count-skip, D6/D7/D8 expansion, D10
+marker positions) is plain Python over the examined accounts' local rows.
+The listing cache makes a steady tick O(changed directories): a tick is a
+pure function of (tree, account marks), so an account whose examination
+read nothing and moved nothing is a fixed point until a tracked mtime
+moves, and a fully idle tick runs zero Spark jobs, zero content reads and
+zero table writes (``TickMetrics.extra["files_read"]`` instruments this).
 
-Round-9 architecture (the O(changed dirs) / driver-side-metadata split):
-
-* :class:`~..sources.listing.ListingCache` tracks per-directory mtimes;
-  a steady-state tick examines only changed-or-pending accounts, and a
-  fully idle tick runs ZERO Spark jobs (measured 0.0 s at sf10 —
-  TICK_ATTRIBUTION_SF10). The soundness argument: a tick is a pure
-  function of (tree, account marks); an account whose examination read
-  nothing and moved nothing is a fixed point until a tracked mtime moves.
-* On a delta, the watermark logic (D4 selection, D5 count-skip, D6/D7/D8
-  expansion, D10 marker positions) runs DRIVER-SIDE over the delta's
-  local rows (``_tick_body_delta``), with account marks served by the KV
-  tier's Arrow reads; tiny primary files (1-line metas/events, small
-  transactions) read through driver/executor parse twins
-  (``primary.read_*_rows``). Under 32 concurrent serving clients each
-  Spark action costs 1.5–3 s of contended scheduling regardless of data
-  size; this split took the contended merge tick from 63–103 s to
-  16–20 s (SCALE_r9).
-* The delta tick's keyed MERGE writes need no Spark job either: its
-  batches are ``pyarrow.Table`` s built from the tick's PK-keyed dicts
-  (signed balance changes included), and the ``TableStore`` verbs commit
-  them with pyarrow — a PK-column probe of the touched hive dirs, part
-  files in Spark's exact layout, the same adopt / pointer-swap commit
-  (``sources/arrow_parts.py``). A small steady tick submits ZERO Spark
-  jobs; in traced benchmark runs on a 4-core box the 60-transaction
-  transfer merge fell from 0.9–2.1 s to 12–65 ms. Batches whose touched partitions exceed
-  ``tables.ARROW_COMMIT_MAX_ROWS`` (read from the parquet footers) go
-  to the Spark plans, as do compaction and rollup convergence.
-  ``TickMetrics.extra["merge"]`` records, per table, which writer
-  committed it (``arrow`` | ``spark``) and its seconds.
-* The full-scan path (first tick, cache miss, KV refusal) keeps the
-  distributed joins and the Spark MERGE writes — at 100 TB width the
-  delta IS small by definition of steady state, and a bootstrap scan
-  wants executors.
+The keyed MERGE writes need no Spark job either: the batches are
+``pyarrow.Table`` s built from the tick's PK-keyed dicts (signed balance
+changes included), and the ``TableStore`` verbs commit them with pyarrow —
+a PK-column probe of the touched hive dirs, part files in Spark's exact
+layout, the same adopt / pointer-swap commit (``sources/arrow_parts.py``).
+Spark stays where width needs executors: meta/event batches over 256 files
+and transaction batches over 64 read on executors, batches whose touched
+partitions exceed ``tables.ARROW_COMMIT_MAX_ROWS`` (read from the parquet
+footers) go to the store's Spark plans, as do compaction and rollup
+convergence, and a transaction timestamp shape only Spark's
+``to_timestamp`` parses is read with the Spark text parse.
+``TickMetrics.extra["merge"]`` records, per table, which writer committed
+it (``arrow`` | ``spark``) and its seconds.
 
 Idempotence: every write is keyed MERGE and markers advance LAST; a crash
 anywhere replays the tick's reads (watermarks unchanged) and the PK merges
 drop the duplicates — the same guarantee the reference gets from ON CONFLICT
-DO NOTHING.
+DO NOTHING. A failed tick (a KV-marks lookup refused twice included) leaves
+every account it examined pending, so the next tick examines it again.
 
 ``run_forever`` wraps ``run_once`` in the 2 s single-flight cadence
 (Trigger.ProcessingTime semantics; the reference's Lock/Free actor gives the
@@ -89,8 +78,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from ..operators import balance_view
@@ -112,12 +100,11 @@ class InvariantViolation(Exception):
 
 class _StageClock:
     """Per-stage wall attribution for a tick. Each tick stage ends in a
-    driver action (collect / MERGE / maintain), so segment boundaries are
+    driver action (read / MERGE / maintain), so segment boundaries are
     real execution boundaries, not lazy-plan noise. Written into
     ``TickMetrics.extra["stage_sec"]`` — the evidence behind the
-    O(new files)-per-tick contract (a stage growing with CORPUS size, not
-    batch size, is the bug this exists to catch; see SERVING_BENCH_SF10's
-    42 s tick that prompted it)."""
+    O(new files)-per-tick contract: a stage growing with CORPUS size, not
+    batch size, is the bug this exists to catch."""
 
     def __init__(self, metrics: "TickMetrics"):
         self.stages: dict[str, float] = {}
@@ -173,24 +160,6 @@ ABC_PRIMARY_KEYS = ["tenant", "src_tenant", "transaction", "transfer", "side"]
 # first idle tick (or a window overflow) converges N deferred ticks in one
 # combined CDC apply
 ROLLUP_DEFER_FILES = 24
-
-
-def _driver_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """createDataFrame for a DRIVER-OWNED tick batch as ONE slice.
-
-    The default path parallelizes local rows into ``defaultParallelism``
-    (32) python slices; every downstream task evaluation then pays a
-    python-worker round trip PER SLICE — a 500-row staging write measured
-    1.55 s from a 32-slice source vs 0.74 s from a single slice, and the
-    whole anti-join+cache merge plan dropped 2.84 s → 0.97 s (write-probe,
-    r11 round 2). One slice = one python eval; these batches are
-    O(files per tick) rows by the tick contract, so one task is the right
-    parallelism (guide §2.2: fewer, larger map tasks). Delegates to the
-    shared :func:`..materialize.driver_df` (one implementation of the
-    single-slice rule; the ANN/serving paths use it too)."""
-    from ..materialize import driver_df
-
-    return driver_df(spark, rows, schema)
 
 
 def warehouse_store(spark: SparkSession, root: str) -> TableStore:
@@ -270,10 +239,10 @@ def _nullable(struct: T.StructType, keep: tuple[str, ...] = ()) -> T.StructType:
     )
 
 
-# the Arrow batches the delta tick commits carry the nullability the Spark
-# plans gave the same rows, so files from either writer are identical: the
-# transfer batch was built all-nullable, and the signed-change union keeps
-# only its literal ``side`` non-null
+# the tick's Arrow batches carry the nullability of the part files the
+# Spark plans wrote for the same rows (transfer all-nullable, signed
+# changes non-null only in their literal ``side``), so every file of a
+# table has one schema whichever writer produced it
 _TRANSFER_BATCH = _nullable(_ingest_transfer_schema())
 _ABC_BATCH = _nullable(ingest_abc_schema(), keep=("side",))
 
@@ -298,9 +267,11 @@ def _read_tagged_rows(chunk: list[tuple[str, str]]) -> tuple[list, list]:
 
 
 def _signed_change_rows(transfers) -> list[tuple]:
-    """Driver twin of :func:`_signed_changes` over transfer tuples in
-    ``_ingest_transfer_schema`` order: per committed transfer a credit row
-    (+amount) and a debit row (−amount), in ``ingest_abc_schema`` order."""
+    """This tick's transfer tuples (``_ingest_transfer_schema`` order) →
+    signed per-account change rows with provenance PK, in
+    ``ingest_abc_schema`` order: per committed transfer a credit row
+    (+amount) and a debit row (−amount) — the semantics of
+    catalog.account_balance_change_view, restricted to a batch."""
     out = []
     for tenant, txn, transfer, status, ct, cn, dt, dn, amount, _cur, vd in transfers:
         if status != 1:
@@ -311,56 +282,16 @@ def _signed_change_rows(transfers) -> list[tuple]:
     return out
 
 
-def _signed_changes(transfers: DataFrame) -> DataFrame:
-    """This tick's committed transfer rows → signed per-account change rows
-    with provenance PK (semantics of catalog.account_balance_change_view,
-    restricted to a batch)."""
-    committed = transfers.filter(F.col("status") == 1)
-    base = [
-        F.col("value_date"),
-        F.col("amount").cast(T.DecimalType(28, 10)),
-        F.col("tenant").alias("src_tenant"),
-        F.col("transaction"),
-        F.col("transfer"),
-    ]
-    credit = committed.select(
-        F.col("credit_tenant").alias("tenant"),
-        F.col("credit_name").alias("name"),
-        *base,
-        F.lit("c").alias("side"),
-    )
-    debit = committed.select(
-        F.col("debit_tenant").alias("tenant"),
-        F.col("debit_name").alias("name"),
-        F.col("value_date"),
-        (-F.col("amount")).cast(T.DecimalType(28, 10)).alias("amount"),
-        F.col("tenant").alias("src_tenant"),
-        F.col("transaction"),
-        F.col("transfer"),
-        F.lit("d").alias("side"),
-    )
-    # column order per schema for the credit side too
-    credit = credit.select(
-        "tenant", "name", "value_date", "amount", "src_tenant", "transaction", "transfer", "side"
-    )
-    return credit.unionByName(debit)
-
-
 class IngestionPipeline:
-    def __init__(
-        self,
-        spark: SparkSession,
-        primary_root: str,
-        store: TableStore,
-        listing_cache: bool = True,
-    ):
+    def __init__(self, spark: SparkSession, primary_root: str, store: TableStore):
         self.spark = spark
         self.root = primary_root
         self.store = store
         # per-directory mtime watermarks: steady-state ticks examine only
         # changed-or-pending accounts (O(changed dirs), the reference's 2 s
-        # cadence target at warehouse width). False = re-walk every tick.
-        self._cache = listing.ListingCache() if listing_cache else None
+        # cadence target at warehouse width); empty on the first tick, whose
+        # sweep registers every account dir as pending
+        self._cache = listing.ListingCache()
         self._merged_tenants: set[str] = set()
         self._kv = None  # lazy KVTier for driver-side watermark lookups
 
@@ -439,178 +370,93 @@ class IngestionPipeline:
         clock: "_StageClock",
         tenant_names: list[str],
     ) -> TickMetrics:
-        spark, root, store = self.spark, self.root, self.store
-
-        # --- snapshot inventory: directory names only, zero content -----
-        # (persist+count materializes the listing ONCE here, so the stage
-        # clock attributes it to "listing", not to its first consumer)
-        scan_keys: list[tuple[str, str]] | None = None
-        if self._cache is not None and self._cache.primed:
-            now_ns = time.time_ns()
-            scan_keys = self._cache.sweep(root, tenant_names, now_ns)
-            if not scan_keys:
-                # idle fast-path: no dir changed, no account pending — the
-                # tick is a fixed point (pure function of (tree, marks));
-                # zero Spark jobs, zero reads, zero writes
-                clock.lap("listing")
-                balance_view.maintain(store)
-                clock.lap("rollup_converge_check")
-                return m
-            rows: list = []
-            ev_rows: list | None = []
-            # driver-side watermark path: marks via KV Arrow reads, D4/D5
-            # as python set logic — removes ~6 contended Spark actions
-            # from the merge tick; falls back to the Spark joins when the
-            # KV tier can't serve (foreign layout, mid-swap)
-            if len(scan_keys) > 256:
-                # wide delta: scan on executors (driver-side scandir loops
-                # are GIL-starved under concurrent serving load). The KV
-                # marks lookup needs only scan_keys, not the rescan rows —
-                # run it concurrently with the rescan Spark job instead of
-                # paying the two serially inside the listing stage.
-                with ThreadPoolExecutor(
-                    max_workers=1, thread_name_prefix="tick-kv"
-                ) as kvpool:
-                    marks_fut = kvpool.submit(
-                        self._kv_marks, sorted(set(scan_keys))
-                    )
-                    content: dict[str, bytes] = {}
-                    for tenant, account, acc_rows, acc_ev, dirs, cbytes in (
-                        listing.rescan_accounts_distributed(
-                            spark, root, scan_keys, now_ns,
-                            read_content=True,
-                        )
-                    ):
-                        self._cache.adopt(tenant, account, dirs)
-                        rows.extend(acc_rows)
-                        ev_rows.extend(acc_ev)
-                        content.update(cbytes)
-                    marks = marks_fut.result()
-            else:
-                content = {}
-                for tenant, account in scan_keys:
-                    acc_rows, acc_ev = self._cache.rescan_account(
-                        root, tenant, account, now_ns
-                    )
-                    rows.extend(acc_rows)
-                    ev_rows.extend(acc_ev)
-                marks = self._kv_marks(sorted(set(scan_keys)))
-            if marks is not None:
-                clock.lap("listing")
-                ok = False
-                try:
-                    result = self._tick_body_delta(
-                        m, files_read, rows, ev_rows, marks, clock, scan_keys,
-                        content,
-                    )
-                    ok = True
-                    return result
-                finally:
-                    # a failed tick leaves every examined account pending:
-                    # the rescan already adopted their new dir mtimes, so
-                    # the retry's sweep would otherwise find them unchanged
-                    # and never re-read the delta (lost transactions)
-                    self._cache.settle(
-                        scan_keys,
-                        m.extra.pop("_active_keys", ()) if ok else scan_keys,
-                    )
-                    m.extra.pop("_active_keys", None)
-                    balance_view.maintain(
-                        store, defer_under_files=ROLLUP_DEFER_FILES
-                    )
-                    clock.lap("rollup_converge_check")
-            inv = spark.createDataFrame(
-                rows, listing.SNAPSHOT_FILE_SCHEMA
-            ).persist()
-        else:
-            inv = listing.snapshot_inventory(spark, root, tenant_names).persist()
-        inv.count()
-        clock.lap("listing")
+        root, store = self.root, self.store
+        now_ns = time.time_ns()
+        scan_keys = self._cache.sweep(root, tenant_names, now_ns)
+        if not scan_keys:
+            # idle fast-path: no dir changed, no account pending — the
+            # tick is a fixed point (pure function of (tree, marks));
+            # zero Spark jobs, zero reads, zero writes
+            clock.lap("listing")
+            balance_view.maintain(store)
+            clock.lap("rollup_converge_check")
+            return m
         ok = False
         try:
-            result = self._tick_body(
-                m, files_read, inv, clock, scan_keys=scan_keys,
-                ev_rows=ev_rows if scan_keys is not None else None,
+            rows: list = []
+            ev_rows: list = []
+            for tenant, account in scan_keys:
+                acc_rows, acc_ev = self._cache.rescan_account(
+                    root, tenant, account, now_ns
+                )
+                rows.extend(acc_rows)
+                ev_rows.extend(acc_ev)
+            marks = self._kv_marks(sorted(set(scan_keys)))
+            clock.lap("listing")
+            result = self._tick_body_delta(
+                m, files_read, rows, ev_rows, marks, clock
             )
             ok = True
             return result
         finally:
-            if self._cache is not None:
-                if scan_keys is None:
-                    # first (full) scan: every discovered account starts
-                    # pending and settles after one examined-idle tick
-                    self._cache.prime(
-                        (r["tenant"], r["account"])
-                        for r in inv.select("tenant", "account").distinct().collect()
-                    )
-                else:
-                    # a failed tick leaves everything it examined pending,
-                    # so the supervisor's retry re-examines it (see above)
-                    self._cache.settle(
-                        scan_keys,
-                        m.extra.pop("_active_keys", ()) if ok else scan_keys,
-                    )
+            # a failed tick leaves every examined account pending: the
+            # rescan already adopted their new dir mtimes, so the retry's
+            # sweep would otherwise find them unchanged and never re-read
+            # the delta (lost transactions)
+            self._cache.settle(
+                scan_keys,
+                m.extra.pop("_active_keys", ()) if ok else scan_keys,
+            )
             m.extra.pop("_active_keys", None)
-            inv.unpersist()
             # convergence check for the serving balance rollup: pure-Python
             # noop when fresh (the idle-tick zero-write contract holds);
             # rebuilds once after a bootstrap (externally loaded change
-            # table) or a crash between merge and maintenance. Deferral
-            # bound passed through: a busy tick leaves small windows to
-            # the first idle tick (which calls maintain BARE and converges).
+            # table) or a crash between merge and maintenance. A busy tick
+            # leaves small append windows to the first idle tick, which
+            # calls maintain bare and converges.
             balance_view.maintain(store, defer_under_files=ROLLUP_DEFER_FILES)
             clock.lap("rollup_converge_check")
 
     # ------------------------------------------------------------------
-    def _kv_marks(self, keys: list[tuple[str, str]]) -> dict | None:
-        """Account watermarks for the delta keys via the KV tier's
+    def _kv_marks(self, keys: list[tuple[str, str]]) -> dict:
+        """Account watermarks for the examined keys via the KV tier's
         row-group-pruned Arrow reads — no Spark job. {} when the account
-        table does not exist yet (nothing is known); None when the tier
-        cannot serve (caller falls back to the Spark joins)."""
-        try:
-            from ..api.kv_tier import KVTier
+        table does not exist yet (nothing is known). A refusal (the table
+        swapped between the fingerprint read and the lookup, a file
+        retired mid-read) re-reads the fingerprint and retries once; a
+        second refusal fails the tick, which leaves every examined account
+        pending for the next one."""
+        from ..api.kv_tier import KVTier
 
-            if self._kv is None:
-                self._kv = KVTier(self.store)
+        if self._kv is None:
+            self._kv = KVTier(self.store)
+        for _attempt in range(2):
             fp = balance_view.table_fingerprint(self.store, "account")
             if fp is None:
                 return {}
-            return self._kv.lookup(
+            marks = self._kv.lookup(
                 "account",
                 fp,
                 keys,
                 ["currency", "format", "last_syn_snapshot", "last_syn_event"],
             )
-        except Exception:
-            return None
+            if marks is not None:
+                return marks
+        raise RuntimeError("KV tier refused the account-marks lookup twice")
 
     def _read_meta_event_rows_fused(
-        self,
-        meta_paths: list[str],
-        ev_paths: list[str],
-        content: dict[str, bytes] | None = None,
+        self, meta_paths: list[str], ev_paths: list[str]
     ) -> tuple[list, list]:
-        """ONE content-read job for the tick's two 1-line-file batches
-        (account snapshot-0 meta + event files). The un-fused flow paid
-        two sequential tiered jobs; their contents are independent (event
-        selection needs only meta KEYS, which come from the listing), so
-        a single executor job reads both sets — saving one Spark job
-        round trip (~0.3 s at sf1, more under serving contention) on
-        every discovery-carrying merge tick. Same per-kind reader twins,
-        same tiering rule as the single-kind paths."""
-        if content is not None and all(
-            p in content for p in meta_paths
-        ) and all(p in content for p in ev_paths):
-            # wide-delta prefetch: the rescan job already captured every
-            # byte — parse here with ZERO file I/O and ZERO Spark jobs
-            return (
-                primary.read_account_meta_rows(meta_paths, content),
-                primary.read_account_event_rows(ev_paths, content),
-            )
+        """ONE content read for the tick's two 1-line-file batches
+        (account snapshot-0 meta + event files): their contents are
+        independent (event selection needs only meta KEYS, which come from
+        the listing). Driver-side up to 256 files; above that a single
+        executor job reads both sets, one Spark job round trip instead of
+        two. Same per-kind reader twins either way."""
         if len(meta_paths) + len(ev_paths) <= 256:
             return (
-                primary.read_account_meta_rows(meta_paths, content),
-                primary.read_account_event_rows(ev_paths, content),
+                primary.read_account_meta_rows(meta_paths),
+                primary.read_account_event_rows(ev_paths),
             )
         tagged = [("m", p) for p in meta_paths] + [("e", p) for p in ev_paths]
         chunks = [tagged[i::32] for i in range(32)]
@@ -633,22 +479,13 @@ class IngestionPipeline:
         ev_rows: list,
         marks: dict,
         clock: _StageClock,
-        scan_keys: list[tuple[str, str]],
-        content: dict[str, bytes] | None = None,
     ) -> TickMetrics:
-        """Delta tick with DRIVER-side watermark logic: the listing rows
-        and account marks are already small local data (O(changed
-        accounts)), so snapshot selection (D4), the count-skip (D5) and
-        the picked-event filter run as plain Python set logic instead of
-        five Spark jobs of joins/windows/collects — under 32 concurrent
-        serving clients each Spark action costs 1.5–3 s of contended
-        scheduling regardless of data size, and this path removes ~6 of
-        them from the merge tick; the keyed MERGE writes commit Arrow
-        batches without Spark (see :meth:`_expand_and_merge_local`), and
-        Spark keeps the wide content reads. Semantics are the exact mirror
-        of :meth:`_tick_body` (same watermark rules, same boundary
-        replay), pinned by the cached≡uncached pipeline test."""
-        spark, store = self.spark, self.store
+        """The tick body over the examined accounts: their listing rows
+        and marks are small local data (O(changed accounts)), so snapshot
+        selection (D4), the count-skip (D5) and the picked-event filter
+        are plain Python set logic; the transfer expansion and the keyed
+        MERGE writes follow in :meth:`_expand_and_merge_local`."""
+        store = self.store
         active_keys: set[tuple[str, str]] = set()
         m.extra["_active_keys"] = active_keys
         # per key: [last_syn_snapshot, last_syn_event, currency, format]
@@ -676,8 +513,7 @@ class IngestionPipeline:
             # meta CONTENT is not read yet — the snapshot/event selection
             # below needs only the KEY's presence and its (0,0) watermark;
             # currency/format arrive from the FUSED meta+event content
-            # read (one executor job where this path used to pay two
-            # sequential ones, ~0.3 s of job round-trip each at sf1).
+            # read below
             for t, a, _p in new_meta:
                 if (t, a) not in marks:
                     marks[(t, a)] = (0, 0, None, None)
@@ -695,7 +531,7 @@ class IngestionPipeline:
         for key, versions in by_acct.items():
             mk = marks.get(key)
             if mk is None:
-                continue  # undiscoverable (no snapshot 0) — mirror inner join
+                continue  # undiscoverable (no snapshot 0)
             last_snap, last_ev = mk[0], mk[1]
             for v in sorted(x for x in versions if x >= last_snap)[:2]:
                 fs = ev_by_dir.get((key[0], key[1], v), ())
@@ -705,18 +541,17 @@ class IngestionPipeline:
         files_read["events"] = len(ev_paths)
         clock.lap("event_listing")
 
-        # --- FUSED content read: this tick's meta + event 1-line files in
-        # ONE tiered job. Discovery rows are NOT merged here: the tick
-        # body reads watermarks from the local `marks` dict, so the
-        # durable write can ride the tick's single fused account MERGE at
-        # the end (with the marker advance). The fused merge tags these
-        # rows insert-only (DO NOTHING), anti-joined against the account
-        # table ITSELF inside the write plan — a KV-tier false negative
-        # (a present key missing from `marks`) can therefore never rewind
-        # a live account's markers to (0,0); worst case is harmless
-        # re-read of already-applied events this tick.
+        # --- FUSED content read: this tick's meta + event 1-line files.
+        # Discovery rows are NOT merged here: the tick body reads
+        # watermarks from the local `marks` dict, so the durable write can
+        # ride the tick's single fused account MERGE at the end (with the
+        # marker advance). The fused merge tags these rows insert-only (DO
+        # NOTHING), checked against the account table ITSELF inside the
+        # write — a KV-tier false negative (a present key missing from
+        # `marks`) can therefore never rewind a live account's markers to
+        # (0,0); worst case is harmless re-read of already-applied events.
         meta_rows, parsed = self._read_meta_event_rows_fused(
-            [p for _, _, p in new_meta], sorted(ev_paths), content
+            [p for _, _, p in new_meta], sorted(ev_paths)
         )
         for t, n, c, f in meta_rows:
             if (t, n) in placeholder_keys:
@@ -726,9 +561,8 @@ class IngestionPipeline:
         m.accounts_discovered = len(pending_discovery)
         if placeholder_keys:
             # meta content yielded no row for these keys (reader twins
-            # normally raise instead — belt-and-braces): mirror the
-            # un-fused flow, where such keys never entered `marks` and
-            # their events were skipped at selection time
+            # normally raise instead — belt-and-braces): such keys never
+            # enter `marks`, and their events are skipped
             for k in placeholder_keys:
                 del marks[k]
             parsed = [r for r in parsed if (r[0], r[1]) not in placeholder_keys]
@@ -736,7 +570,7 @@ class IngestionPipeline:
         if not ev_paths:
             # idle examination: no content reads; the only write (if any)
             # is the deferred discovery batch — pure DO NOTHING semantics
-            # (anti-joined against the table itself, not the KV marks)
+            # (checked against the table itself, not the KV marks)
             if pending_discovery:
                 store.merge_insert_missing(
                     "account",
@@ -753,46 +587,19 @@ class IngestionPipeline:
             return m
 
         # --- the picked filter (D5 boundary replay) over the fused read -
+        # the event watermark applies ONLY to the boundary snapshot; event
+        # versions restart per snapshot, so a newer snapshot takes ALL its
+        # events (PrimaryDataExplorationService.scala:155-178). `>=` on the
+        # boundary replays the last event; the PK merge dedupes it
         picked_rows = []
         for t, a, status, txn, sv, ver in parsed:
             last_snap, last_ev = marks[(t, a)][0], marks[(t, a)][1]
             if sv > last_snap or ver >= last_ev:
                 picked_rows.append((t, a, status, txn, sv, ver))
         clock.lap("event_read_pick")
-        try:
-            self._expand_and_merge_local(
-                m, files_read, picked_rows, marks, clock, pending_discovery
-            )
-        except Exception as e:  # noqa: BLE001 — twin's fall-back signal
-            if "TwinUnsupported" not in f"{type(e).__name__}: {e}":
-                raise
-            # exotic transaction timestamps: run the DataFrame expansion.
-            # The Spark form joins the ACCOUNT TABLE for marker currency/
-            # format, so the deferred discovery batch must be durable
-            # first (TwinUnsupported raises before any merge, so this
-            # cannot double-write)
-            if pending_discovery:
-                store.merge_insert_missing(
-                    "account",
-                    arrow_table(sorted(pending_discovery), ACCOUNT_SCHEMA),
-                    PRIMARY_KEYS["account"],
-                    partition_values=[
-                        (t,) for t in sorted({r[0] for r in pending_discovery})
-                    ],
-                    assume_nonempty=True,
-                    assume_unique=True,  # marks-gated: one row per new key
-                )
-                _note_merge(m, store, "account")
-            ev_schema = T.StructType(
-                [T.StructField(f.name, f.dataType, True)
-                 for f in primary.ACCOUNT_EVENT_SCHEMA.fields]
-            )
-            picked = spark.createDataFrame(picked_rows, ev_schema).persist()
-            accounts = self._accounts_pushdown(scan_keys)
-            try:
-                self._expand_and_merge(m, files_read, picked, accounts, clock)
-            finally:
-                picked.unpersist()
+        self._expand_and_merge_local(
+            m, files_read, picked_rows, marks, clock, pending_discovery
+        )
         return m
 
     def _expand_and_merge_local(
@@ -804,19 +611,14 @@ class IngestionPipeline:
         clock: _StageClock,
         pending_discovery: list | tuple = (),
     ) -> None:
-        """Delta-path twin of :meth:`_expand_and_merge` with the D6/D7/D8
-        logic in PYTHON over the tick's local rows: the relevance filter,
-        the status-invariant check and the marker positions are set logic
-        over O(batch) tuples — running them as Spark joins cost 3 extra
-        contended actions per tick (txn_expand alone measured 13–16 s
-        under 32 serving clients at sf10). The three batches (transfer,
+        """D6/D7/D8 in Python over the tick's local rows: the relevance
+        filter, the status-invariant check and the marker positions are
+        set logic over O(batch) tuples. The three batches (transfer,
         signed balance changes, the fused account markers) are pyarrow
         tables the store verbs commit without a Spark job while the
-        touched partitions are small. Semantics pinned by the
-        cached≡uncached pipeline equality test, the golden ingest suite
-        and tests/test_arrow_commit.py; raises TwinUnsupported (via
-        read_transaction_rows) for timestamp shapes only the Spark parse
-        can mirror."""
+        touched partitions are small. Semantics pinned by the golden
+        ingest suite and tests/test_arrow_commit.py (the writer's ground
+        truth)."""
         spark, root, store = self.spark, self.root, self.store
 
         # D6 status gate: only ACTIVE events name transactions to read
@@ -829,25 +631,40 @@ class IngestionPipeline:
             p = os.path.join(root, f"t_{t}", "transaction", txn)
             (txn_paths if os.path.exists(p) else missing).append(p)
         if missing:
+            # reference: the transaction read future fails → stream crash
             raise InvariantViolation(
                 f"event names missing transaction file(s): {missing[:3]}"
             )
         files_read["transactions"] = len(txn_paths)
-        if len(txn_paths) <= 64:
-            txn_rows = primary.read_transaction_rows(txn_paths)
-        else:
-            chunks = [txn_paths[i::32] for i in range(32)]
+        try:
+            if len(txn_paths) <= 64:
+                txn_rows = primary.read_transaction_rows(txn_paths)
+            else:
+                chunks = [txn_paths[i::32] for i in range(32)]
+                txn_rows = [
+                    r
+                    for rs in spark.sparkContext.parallelize(chunks, len(chunks))
+                    .map(primary.read_transaction_rows)
+                    .collect()
+                    for r in rs
+                ]
+        except Exception as e:  # noqa: BLE001 — executors wrap the twin's signal
+            # TwinUnsupported arrives verbatim from the driver loop but
+            # wrapped in Py4J from executors — match by name; every other
+            # failure (malformed line, framing) keeps its strict semantics.
+            # A timestamp shape only Spark's to_timestamp parses: read the
+            # batch with the Spark text parse, whose column order is the
+            # twin's (TRANSFER_ROW_SCHEMA)
+            if "TwinUnsupported" not in f"{type(e).__name__}: {e}":
+                raise
             txn_rows = [
-                r
-                for rs in spark.sparkContext.parallelize(chunks, len(chunks))
-                .map(primary.read_transaction_rows)
-                .collect()
-                for r in rs
+                tuple(r)
+                for r in primary.read_transaction_paths(spark, txn_paths).collect()
             ]
 
         # D7 relevance + D8 invariant, then PK-dedupe (both discovering
-        # events name the same transfer — the PK merge deduped it before;
-        # the dict does now, and the merge still dedupes vs the table)
+        # events name the same transfer; the merge still dedupes vs the
+        # table)
         new_transfers: dict[tuple, tuple] = {}
         for tenant, txn, status, transfer, ct, cn, dt, dn, vd, amount, cur in txn_rows:
             for account, ev_status in active.get((tenant, txn), ()):
@@ -875,10 +692,14 @@ class IngestionPipeline:
         )
 
         # fused account MERGE batch, computed FIRST (pure driver logic over
-        # picked_rows + marks): marker advances — assignment semantics
-        # (`!=`), max lexicographic (snapshot, version) per account,
-        # exactly the DataFrame form's rules — PLUS this tick's deferred
-        # discovery rows, one write action instead of two
+        # picked_rows + marks): marker advances PLUS this tick's deferred
+        # discovery rows, one write instead of two. Assignment semantics,
+        # not max: the reference sets (lastSynchronizedSnapshot,
+        # lastSynchronizedEvent) := (snapshot, event) per processed event
+        # (:180-186), so the final value is the lexicographic max
+        # (snapshot, version) pair — and last_syn_event may DECREASE when
+        # the snapshot advances (versions restart per snapshot). Only
+        # accounts whose position actually moved are rewritten.
         pos: dict[tuple[str, str], tuple[int, int]] = {}
         for t, a, _status, _txn, sv, ver in picked_rows:
             cur = pos.get((t, a))
@@ -891,8 +712,8 @@ class IngestionPipeline:
                 continue
             advanced.append((key[0], key[1], mk[2], mk[3], sv, ver))
         adv_keys = {(t, a) for t, a, *_ in advanced}
-        # discovery rows are tagged insert-only (DO NOTHING): merge_upsert
-        # anti-joins them against the pruned account table INSIDE the one
+        # discovery rows are tagged insert-only (DO NOTHING): the upsert
+        # checks them against the pruned account table INSIDE the one
         # fused write, so a KV-marks false negative cannot rewind a live
         # account's markers to (0,0). Marker advances keep DO UPDATE.
         pending = sorted(
@@ -908,7 +729,7 @@ class IngestionPipeline:
                 + [T.StructField("__insert_only__", T.BooleanType(), False)]
             )
             ins_col = "__insert_only__"
-        else:  # steady state: advances only, zero extra plan nodes
+        else:  # steady state: advances only
             batch, schema, ins_col = advanced, ACCOUNT_SCHEMA, None
         acct_pvals = [(t,) for t in sorted({r[0] for r in batch})]
         acct_batch = arrow_table(batch, schema)
@@ -917,9 +738,8 @@ class IngestionPipeline:
         # write run CONCURRENTLY: three different tables, all derived from
         # driver-local rows. On the Arrow path each is a pyarrow key probe
         # + part-file write (GIL released for the I/O); a batch over the
-        # store's cut-off becomes a Spark job, whose 1.5–2.5 s of
-        # scheduling latency under serving contention the overlap then
-        # hides (max() instead of sum()). The D10 "markers
+        # store's cut-off becomes a Spark job, whose scheduling latency the
+        # overlap then hides (max() instead of sum()). The D10 "markers
         # advance LAST" contract holds because only the account SWAP (the
         # pointer rename — the durability point) is ordered after the
         # transfer/abc merges; the staged snapshot stays invisible until
@@ -932,7 +752,7 @@ class IngestionPipeline:
             if new_transfers or batch:
                 # driver-known-batch hints: the tick owns these rows, so
                 # partition value sets (tenant) and non-emptiness are known
-                # without Spark actions — saves two contended actions/merge
+                # without Spark actions
                 t_tenants = sorted({r[0] for r in new_transfers.values()})
                 abc_tenants = sorted(
                     {r[4] for r in new_transfers.values() if r[3] == 1}
@@ -986,20 +806,18 @@ class IngestionPipeline:
             # Arrow delta), and the first idle tick converges all deferred
             # appends in one combined CDC apply (balance_view.maintain).
             # The tick-final maintain (the rollup_converge_check lap in
-            # run_once's finally) is the ONE maintenance call per tick — a
-            # second in-body call here paid a redundant stale-window
-            # inventory + fingerprint walk that stretched to ~2 s under
-            # 32-client GIL contention (r11).
+            # _run_once_after_tenants' finally) is the ONE maintenance call
+            # per tick.
             clock.lap("rollup_maintain")
 
             if batch:
                 if prep is not None:
                     store.merge_upsert_commit(prep)  # one pointer rename
                     committed = True
-                else:  # stage preconditions didn't hold — classic path
+                else:  # more tenants than one pruned upsert takes
                     store.merge_upsert(
                         "account",
-                        _driver_df(spark, batch, schema),
+                        acct_batch,
                         PRIMARY_KEYS["account"],
                         partition_values=acct_pvals,
                         assume_nonempty=True,
@@ -1012,378 +830,6 @@ class IngestionPipeline:
         finally:
             if prep is not None and not committed:
                 store.merge_upsert_abort(prep)
-
-    def _accounts_pushdown(self, scan_keys: list[tuple[str, str]] | None) -> DataFrame:
-        """Account table restricted to the delta keys: tenant in-list
-        prunes partitions; wide key sets use a broadcast semi-join (a
-        thousands-literal In bloats every plan re-analysis — measured
-        14 s → 25 s on the sf1 merge tick)."""
-        spark, store = self.spark, self.store
-        df = store.read("account")
-        if not scan_keys:
-            return df
-        df = df.filter(F.col("tenant").isin(sorted({t for t, _ in scan_keys})))
-        if len(scan_keys) > 64:
-            keys_df = _driver_df(
-                spark, sorted(set(scan_keys)), "tenant string, name string"
-            )
-            df = df.join(F.broadcast(keys_df), ["tenant", "name"], "left_semi")
-        else:
-            df = df.filter(F.col("name").isin(sorted({a for _, a in scan_keys})))
-        return df
-
-    def _tick_body(
-        self,
-        m: TickMetrics,
-        files_read: dict,
-        inv: DataFrame,
-        clock: _StageClock,
-        scan_keys: list[tuple[str, str]] | None = None,
-        ev_rows: list | None = None,
-    ) -> TickMetrics:
-        spark, root, store = self.spark, self.root, self.store
-        active_keys: set[tuple[str, str]] = set()
-        m.extra["_active_keys"] = active_keys
-
-        # with a listing-cache delta, the inventory covers only the
-        # changed/pending accounts — push those keys into every account-
-        # table read. The tenant predicate prunes partitions (literal
-        # in-list: tenants are few); the name restriction uses a literal
-        # in-list only for SMALL deltas (row-group pruning via
-        # cluster_by name) and a broadcast semi-join above that — a
-        # thousands-literal In bloats every re-analysis of the plan
-        # (measured: sf1 merge tick 14 s → 25 s with a 2000-name in-list)
-        keys_df = None
-        if scan_keys and len(scan_keys) > 64:
-            keys_df = _driver_df(
-                spark, sorted(set(scan_keys)), "tenant string, name string"
-            )
-
-        def _keys_pushdown(df: DataFrame) -> DataFrame:
-            if scan_keys is None or not scan_keys:
-                return df
-            tenants = sorted({t for t, _ in scan_keys})
-            df = df.filter(F.col("tenant").isin(tenants))
-            if keys_df is None:
-                df = df.filter(
-                    F.col("name").isin(sorted({a for _, a in scan_keys}))
-                )
-            else:
-                df = df.join(F.broadcast(keys_df), ["tenant", "name"], "left_semi")
-            return df
-
-        # --- account discovery: meta content read ONLY for new accounts --
-        known = _keys_pushdown(store.read("account")).select(
-            "tenant", F.col("name").alias("account")
-        )
-        new_meta = (
-            inv.filter(F.col("version") == 0)
-            .join(known, ["tenant", "account"], "left_anti")
-            .select("tenant", "account", "path")
-            .collect()
-        )
-        active_keys.update((r["tenant"], r["account"]) for r in new_meta)
-        new_meta_paths = [r["path"] for r in new_meta]
-        files_read["meta"] = len(new_meta_paths)
-        if new_meta_paths:
-            # 1-line meta reads via read_account_meta_rows (the semantics
-            # twin of the Spark text parse, framing included) — driver-side
-            # for small batches, executor-side RDD map for wide ones: both
-            # a Spark text JOB over thousands of tiny files (~10 s) and a
-            # driver python loop (~7 s GIL-starved) measured far slower
-            # under concurrent serving load (stack-sampled serving run)
-            if len(new_meta_paths) <= 256:
-                meta_rows = primary.read_account_meta_rows(new_meta_paths)
-            else:
-                chunks = [new_meta_paths[i::32] for i in range(32)]
-                meta_rows = [
-                    r
-                    for rs in spark.sparkContext.parallelize(chunks, len(chunks))
-                    .map(primary.read_account_meta_rows)
-                    .collect()
-                    for r in rs
-                ]
-            meta = _driver_df(
-                spark,
-                [(t, n, c, f, 0, 0) for t, n, c, f in meta_rows],
-                ACCOUNT_SCHEMA,
-            )
-            m.accounts_discovered = store.merge_insert_missing(
-                "account", meta, PRIMARY_KEYS["account"],
-                # driver-known batch: the tenant set is in meta_rows, so
-                # the pvals distinct+collect action is skippable
-                partition_values=[
-                    (t,) for t in sorted({r[0] for r in meta_rows})
-                ],
-            )
-            _note_merge(m, store, "account")
-        clock.lap("account_discovery")
-
-        accounts = _keys_pushdown(store.read("account"))
-        acc_marks = accounts.select(
-            "tenant",
-            F.col("name").alias("account"),
-            "last_syn_snapshot",
-            "last_syn_event",
-        )
-
-        # --- snapshot selection (D4): ≥ watermark, ascending, take 2 ----
-        marked = inv.join(acc_marks, ["tenant", "account"]).filter(
-            F.col("version") >= F.col("last_syn_snapshot")
-        )
-        w = Window.partitionBy("tenant", "account").orderBy("version")
-        selected_snaps = marked.withColumn("rn", F.row_number().over(w)).filter(
-            F.col("rn") <= 2
-        )
-
-        # --- event listing over selected dirs + the reference count-skip
-        #     (read a boundary dir only when it holds more files than the
-        #     event watermark; newer snapshots read fully) ----------------
-        if ev_rows is not None:
-            # delta mode: the rescan already listed every version dir of
-            # the changed accounts (executor-side) — restrict that superset
-            # to the watermark-selected snapshots instead of paying a
-            # second RDD listing job
-            ev_all = spark.createDataFrame(ev_rows, listing.EVENT_FILE_SCHEMA)
-            ev_list = ev_all.join(
-                selected_snaps.select(
-                    "tenant",
-                    "account",
-                    F.col("version").alias("snapshot_version"),
-                ),
-                ["tenant", "account", "snapshot_version"],
-                "left_semi",
-            )
-        else:
-            ev_list = listing.event_files(
-                spark, root, selected_snaps.select("tenant", "account", "version")
-            )
-        wcnt = Window.partitionBy("tenant", "account", "snapshot_version")
-        qual_files = (
-            ev_list.join(acc_marks, ["tenant", "account"])
-            .withColumn("n_files", F.count(F.lit(1)).over(wcnt))
-            .filter(
-                (F.col("snapshot_version") > F.col("last_syn_snapshot"))
-                | (F.col("n_files") > F.col("last_syn_event"))
-            )
-        )
-        qual_rows = qual_files.select("tenant", "account", "path").collect()
-        active_keys.update((r["tenant"], r["account"]) for r in qual_rows)
-        ev_paths = [r["path"] for r in qual_rows]
-        files_read["events"] = len(ev_paths)
-        clock.lap("event_listing")
-        if not ev_paths:
-            return m  # idle tick: no content reads, no writes
-
-        # tiny-file event reads: same tiered strategy as the meta batch —
-        # driver loop when small, executor RDD map when wide (a Spark text
-        # job over thousands of 1-line files and a GIL-starved driver loop
-        # both measured ~5 s under concurrent serving load)
-        ev_schema = T.StructType(
-            [T.StructField(f.name, f.dataType, True)
-             for f in primary.ACCOUNT_EVENT_SCHEMA.fields]
-        )
-        if len(ev_paths) <= 256:
-            ev_rows = primary.read_account_event_rows(ev_paths)
-        else:
-            ev_chunks = [ev_paths[i::32] for i in range(32)]
-            ev_rows = [
-                r
-                for rs in spark.sparkContext.parallelize(ev_chunks, len(ev_chunks))
-                .map(primary.read_account_event_rows)
-                .collect()
-                for r in rs
-            ]
-        events = spark.createDataFrame(ev_rows, ev_schema)
-        snap_keys = selected_snaps.select(
-            "tenant",
-            "account",
-            F.col("version").alias("snapshot_version"),
-            "last_syn_snapshot",
-            "last_syn_event",
-        )
-        # the event watermark applies ONLY to the boundary snapshot
-        # (lastSynchronizedSnapshot == snapshot.version); event versions
-        # restart per snapshot, so a newer snapshot takes ALL its events
-        # (PrimaryDataExplorationService.scala:155-178). `>=` on the boundary
-        # replays the last event; the PK merge dedupes — the idempotence story
-        picked = (
-            events.join(snap_keys, ["tenant", "account", "snapshot_version"])
-            .filter(
-                (F.col("snapshot_version") > F.col("last_syn_snapshot"))
-                | (F.col("version") >= F.col("last_syn_event"))
-            )
-            .persist()
-        )
-        picked.count()  # materialize here so the clock owns the event reads
-        clock.lap("event_read_pick")
-        try:
-            self._expand_and_merge(m, files_read, picked, accounts, clock)
-        finally:
-            picked.unpersist()
-        return m
-
-    def _expand_and_merge(
-        self,
-        m: TickMetrics,
-        files_read: dict,
-        picked: DataFrame,
-        accounts: DataFrame,
-        clock: _StageClock,
-    ) -> None:
-        spark, root, store = self.spark, self.root, self.store
-
-        # --- transaction expansion (D6 status gate): content reads only
-        #     for transactions the picked active events name ---------------
-        active = picked.filter(F.col("status") != 0).select(
-            "tenant", "account", "transaction", F.col("status").alias("event_status")
-        )
-        txn_keys = [
-            (r["tenant"], r["transaction"])
-            for r in active.select("tenant", "transaction").distinct().collect()
-        ]
-        txn_paths, missing = [], []
-        for tenant, txn in txn_keys:
-            p = os.path.join(root, f"t_{tenant}", "transaction", txn)
-            (txn_paths if os.path.exists(p) else missing).append(p)
-        if missing:
-            # reference: the transaction read future fails → stream crash
-            raise InvariantViolation(
-                f"event names missing transaction file(s): {missing[:3]}"
-            )
-        files_read["transactions"] = len(txn_paths)
-
-        # tiny-file tier for the transaction batch (S6 twin): driver loop
-        # when small, executor RDD map when wide; TwinUnsupported (an
-        # exotic timestamp shape) falls back to the Spark text parse.
-        # A Spark text job over 1000 tiny files measured 16 s under
-        # concurrent serving load — the last tiered read in the tick
-        try:
-            if len(txn_paths) <= 64:
-                txn_rows = primary.read_transaction_rows(sorted(txn_paths))
-            else:
-                sorted_paths = sorted(txn_paths)
-                txn_chunks = [sorted_paths[i::32] for i in range(32)]
-                txn_rows = [
-                    r
-                    for rs in spark.sparkContext.parallelize(
-                        txn_chunks, len(txn_chunks)
-                    )
-                    .map(primary.read_transaction_rows)
-                    .collect()
-                    for r in rs
-                ]
-            transfers_raw = spark.createDataFrame(
-                txn_rows,
-                T.StructType(
-                    [T.StructField(f.name, f.dataType, True)
-                     for f in primary.TRANSFER_ROW_SCHEMA.fields]
-                ),
-            )
-        except Exception as e:  # noqa: BLE001 — RDD wraps the twin's signal
-            # TwinUnsupported arrives verbatim from the driver loop but
-            # wrapped in Py4J from executors — match by name; every other
-            # failure (malformed line, framing) keeps its strict semantics
-            if "TwinUnsupported" not in f"{type(e).__name__}: {e}":
-                raise
-            transfers_raw = primary.read_transaction_paths(spark, txn_paths)
-        joined = transfers_raw.join(
-            F.broadcast(active.select("tenant", "account", "transaction", "event_status")),
-            ["tenant", "transaction"],
-        )
-
-        # D7 relevance: transfer must touch the discovering account
-        relevant = joined.filter(
-            ((F.col("credit_tenant") == F.col("tenant")) & (F.col("credit_name") == F.col("account")))
-            | ((F.col("debit_tenant") == F.col("tenant")) & (F.col("debit_name") == F.col("account")))
-        )
-
-        # D8 invariant: transfer status must equal the event's status
-        bad = relevant.filter(F.col("status") != F.col("event_status")).limit(1).collect()
-        if bad:
-            r = bad[0]
-            raise InvariantViolation(
-                f"transfer {r['tenant']}/{r['transaction']}/{r['transfer']} "
-                f"status={r['status']} != event status={r['event_status']}"
-            )
-
-        new_transfers = relevant.select(
-            "tenant",
-            "transaction",
-            "transfer",
-            "status",
-            "credit_tenant",
-            "credit_name",
-            "debit_tenant",
-            "debit_name",
-            "amount",
-            "currency",
-            "value_date",
-        )
-        new_transfers = new_transfers.persist()
-        clock.lap("txn_expand")
-        # --- transfer + derived balance-change merges, CONCURRENT ---------
-        # (same rationale as the local twin: different tables, both
-        # PK-idempotent insert-missing, wall = max not sum). The signed
-        # changes derive from this tick's batch PRE-merge, so a
-        # crash-replay regenerates them; the persist above keeps the two
-        # concurrent plans from re-running the expansion joins twice.
-        with ThreadPoolExecutor(
-            max_workers=2, thread_name_prefix="tick-merge"
-        ) as pool:
-            fut_t = pool.submit(
-                store.merge_insert_missing, "transfer", new_transfers,
-                PRIMARY_KEYS["transfer"],
-            )
-            fut_abc = pool.submit(
-                store.merge_insert_missing, "account_balance_change",
-                _signed_changes(new_transfers), ABC_PRIMARY_KEYS,
-            )
-            m.transfers_discovered = fut_t.result()
-            fut_abc.result()
-        new_transfers.unpersist()
-        _note_merge(m, store, "transfer")
-        _note_merge(m, store, "account_balance_change")
-        clock.lap("transfer_abc_merge")
-        # maintain the serving balance rollup from exactly the appended
-        # part files (file-level CDC via the stale window); any mismatch —
-        # crash replay, compaction — degrades to a recompute, never to a
-        # wrong serve. Small windows defer (see _expand_and_merge_local).
-        balance_view.maintain(store, defer_under_files=ROLLUP_DEFER_FILES)
-        clock.lap("rollup_maintain")
-
-        # --- marker advance (D10), LAST so crash-replay re-reads ----------
-        # Assignment semantics, not max: the reference sets
-        # (lastSynchronizedSnapshot, lastSynchronizedEvent) := (snapshot,
-        # event) per processed event (:180-186), so the final value is the
-        # lexicographic max (snapshot, version) pair — and last_syn_event may
-        # DECREASE when the snapshot advances (versions restart per snapshot).
-        # Only accounts whose position actually moved are rewritten; the
-        # watermark selection upstream guarantees picked positions never
-        # precede the marker.
-        ev_pos = picked.groupBy("tenant", "account").agg(
-            F.max(F.struct("snapshot_version", "version")).alias("pos")
-        )
-        moved = (
-            F.col("pos.snapshot_version") != F.col("last_syn_snapshot")
-        ) | (F.col("pos.version") != F.col("last_syn_event"))
-        advanced = (
-            accounts.join(
-                ev_pos.withColumnRenamed("account", "name"), ["tenant", "name"]
-            )
-            .filter(moved)
-            .select(
-                "tenant",
-                "name",
-                "currency",
-                "format",
-                F.col("pos.snapshot_version").cast("int").alias("last_syn_snapshot"),
-                F.col("pos.version").cast("int").alias("last_syn_event"),
-            )
-        )
-        self.store.merge_upsert("account", advanced, PRIMARY_KEYS["account"])
-        _note_merge(m, store, "account")
-        clock.lap("marker_advance")
 
     # ------------------------------------------------------------------
     def run_forever(self, tick_seconds: float = 2.0, max_ticks: int | None = None):

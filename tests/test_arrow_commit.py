@@ -3,14 +3,13 @@
 Spark plan writes, and the ingestion tick stays exact through crashes on it.
 
 Every check compares against the Spark path over the same rows, or against
-the full-scan (all-Spark) golden ingest of the same primary tree."""
+the rows the writer of the primary tree knows the ingest must produce."""
 
 from __future__ import annotations
 
 import datetime
 import decimal
 import os
-import shutil
 import time
 
 import pyarrow.parquet as pq
@@ -240,32 +239,43 @@ def test_arrow_upsert_keeps_insert_only_semantics(spark, tmp_path):
 
 # --- the ingestion tick on the Arrow path ------------------------------------
 
+Q10 = D(1).scaleb(-10)  # decimal(28,10)
+
+
 class _Tree:
     """A primary-storage tree in the reference's layout, with the ground
-    truth of every transfer written."""
+    truth of every warehouse row its ingest must produce."""
 
     def __init__(self, root: str):
         self.root = root
-        self.versions: dict[tuple[str, str], int] = {}
-        self.balances: dict[tuple[str, str], D] = {}
+        self.versions: dict[tuple[str, str], int] = {}  # last event version
+        self.transfers: list[tuple] = []  # transfer table rows
         self.n = 0
 
-    def _write(self, rel: str, content: str) -> None:
+    def _write(self, rel: str, content: str) -> str:
         path = os.path.join(self.root, rel)
         os.makedirs(os.path.dirname(path), exist_ok=True)
         with open(path, "w") as fh:
             fh.write(content)
+        return path
 
     def account(self, tenant: str, name: str) -> None:
         self._write(f"t_{tenant}/account/{name}/snapshot/0000000000", "CZK FORMAT_F\n")
         self.versions[(tenant, name)] = 0
-        self.balances.setdefault((tenant, name), D(0))
 
-    def transfer(self, tenant: str, credit: str, debit: str, amount: str) -> None:
+    def transfer(
+        self, tenant: str, credit: str, debit: str, amount: str,
+        ts: str | None = None, value_date: datetime.datetime | None = None,
+    ) -> str:
+        """A committed one-transfer transaction plus its two events; returns
+        the transaction file's path. ``ts`` overrides the written timestamp,
+        ``value_date`` is then the instant it denotes."""
         self.n += 1
         txn = f"TRN{self.n:04d}"
-        ts = f"2020-{1 + self.n % 12:02d}-{1 + self.n % 28:02d}T01:02:03Z"
-        self._write(
+        if ts is None:
+            value_date = datetime.datetime(2020, 1 + self.n % 12, 1 + self.n % 28, 1, 2, 3)
+            ts = f"{value_date:%Y-%m-%dT%H:%M:%S}Z"
+        path = self._write(
             f"t_{tenant}/transaction/{txn}",
             f"committed\nTRX{self.n} {tenant} {credit} {tenant} {debit} {ts} {amount} CZK\n",
         )
@@ -275,8 +285,39 @@ class _Tree:
                 f"t_{tenant}/account/{acc}/events/0000000000/1_{amount}_{txn}",
                 f"{self.versions[(tenant, acc)]}\n",
             )
-        self.balances[(tenant, credit)] += D(amount)
-        self.balances[(tenant, debit)] -= D(amount)
+        self.transfers.append((
+            tenant, txn, f"TRX{self.n}", 1, tenant, credit, tenant, debit,
+            D(amount).quantize(Q10), "CZK", value_date,
+        ))
+        return path
+
+    def changes(self) -> list[tuple]:
+        """The signed balance-change rows: a credit (+) and a debit (−) row
+        per committed transfer, with the transfer's key as provenance."""
+        out = []
+        for tenant, txn, tr, _st, ct, cn, dt, dn, amount, _cur, vd in self.transfers:
+            out.append((ct, cn, vd, amount, tenant, txn, tr, "c"))
+            out.append((dt, dn, vd, -amount, tenant, txn, tr, "d"))
+        return out
+
+    def balances(self) -> dict[tuple[str, str], D]:
+        sums: dict = {}
+        for tenant, name, _vd, amount, *_ in self.changes():
+            sums[(tenant, name)] = sums.get((tenant, name), D(0)) + amount
+        return {k: v for k, v in sums.items() if v != 0}
+
+    def expected(self) -> dict:
+        """The four ingested tables, in :func:`_tables` form: every account
+        with its parsed meta (``CZK FORMAT_F`` → CZK, FORMAT) and its
+        markers on its last event."""
+        return {
+            "tenant": sorted({(t,) for t, _a in self.versions}, key=str),
+            "account": sorted(
+                ((t, a, "CZK", "FORMAT", 0, v) for (t, a), v in self.versions.items()), key=str
+            ),
+            "transfer": sorted(self.transfers, key=str),
+            "account_balance_change": sorted(self.changes(), key=str),
+        }
 
     def backdate(self) -> None:
         """Age every mtime past the listing cache's guard window."""
@@ -297,8 +338,8 @@ def _seed(tmp_path, spark):
     tree.backdate()
     store = warehouse_store(spark, str(tmp_path / "wh"))
     pipe = IngestionPipeline(spark, tree.root, store)
-    pipe.run_once()  # full scan (Spark), primes the listing cache
-    pipe.run_once()  # examines and settles the pending accounts
+    pipe.run_once()  # first tick: every account dir examined
+    pipe.run_once()  # examines and settles the accounts it read
     balance_view.maintain(store)  # converged rollup, as after an idle tick
     return tree, store, pipe
 
@@ -313,16 +354,6 @@ def _burst(tree: _Tree) -> None:
     tree.backdate()
 
 
-def _golden(spark, tmp_path, tree: _Tree) -> dict:
-    """Tables of the full-scan ingest of the same tree (uncached pipeline,
-    every merge on Spark)."""
-    root = str(tmp_path / "golden-data")
-    shutil.copytree(tree.root, root)
-    store = warehouse_store(spark, str(tmp_path / "golden-wh"))
-    IngestionPipeline(spark, root, store, listing_cache=False).run_once()
-    return _tables(store)
-
-
 def _tables(store) -> dict:
     return {
         name: sorted(map(tuple, store.read(name).collect()), key=str)
@@ -330,17 +361,12 @@ def _tables(store) -> dict:
     }
 
 
-def _assert_exact(store, tree: _Tree, golden: dict) -> None:
-    got = _tables(store)
-    assert got == golden
-    keys = [(r[0], r[1], r[2]) for r in got["transfer"]]
-    assert len(keys) == len(set(keys)) == tree.n  # none lost, none duplicated
-    sums: dict = {}
-    for r in got["account_balance_change"]:
-        sums[(r[0], r[1])] = sums.get((r[0], r[1]), D(0)) + r[3]
-    assert {k: v for k, v in sums.items() if v != 0} == {
-        k: v for k, v in tree.balances.items() if v != 0
-    }
+def _assert_exact(store, tree: _Tree) -> None:
+    """The warehouse holds exactly the tree's ground truth: no transfer
+    lost or duplicated, every signed change and marker exact."""
+    got, want = _tables(store), tree.expected()
+    for name in want:
+        assert got[name] == want[name], name
 
 
 def _tick_jobs(spark, pipe) -> tuple[object, set]:
@@ -366,7 +392,7 @@ def test_small_delta_tick_submits_no_spark_job(spark, tmp_path):
     """A steady delta tick of a few transactions commits transfer, balance
     change and account through the Arrow path with ZERO Spark jobs, records
     the path and seconds per table in TickMetrics.extra["merge"], and
-    leaves every table equal to the full-scan golden ingest."""
+    leaves every table equal to the tree's ground truth."""
     tree, store, pipe = _seed(tmp_path, spark)
     _burst(tree)
     m, jobs = _tick_jobs(spark, pipe)
@@ -377,22 +403,27 @@ def test_small_delta_tick_submits_no_spark_job(spark, tmp_path):
         assert set(rec) == {"path", "s"}, table
         assert rec["path"] == "arrow", table
         assert isinstance(rec["s"], float) and rec["s"] >= 0, table
-    _assert_exact(store, tree, _golden(spark, tmp_path, tree))
+    _assert_exact(store, tree)
 
 
-def test_full_scan_tick_reports_spark_merges(spark, tmp_path):
+def test_first_tick_reports_arrow_merges(spark, tmp_path):
+    """The first tick on an empty warehouse runs the same body as every
+    later one: each table's first version commits through the Arrow path,
+    and the tables equal the tree's ground truth."""
     tree = _Tree(str(tmp_path / "data"))
     tree.account("T1", "A")
     tree.account("T1", "B")
     tree.transfer("T1", "A", "B", "1")
     store = warehouse_store(spark, str(tmp_path / "wh"))
-    m = IngestionPipeline(spark, tree.root, store, listing_cache=False).run_once()
+    m = IngestionPipeline(spark, tree.root, store).run_once()
+    assert m.accounts_discovered == 2 and m.transfers_discovered == 1
     assert {t: r["path"] for t, r in m.extra["merge"].items()} == {
-        "tenant": "arrow",  # driver names: never a Spark job
-        "account": "spark",
-        "transfer": "spark",
-        "account_balance_change": "spark",
+        "tenant": "arrow",
+        "account": "arrow",
+        "transfer": "arrow",
+        "account_balance_change": "arrow",
     }
+    _assert_exact(store, tree)
 
 
 def test_batch_over_cutoff_takes_the_spark_path(spark, tmp_path, monkeypatch):
@@ -408,7 +439,21 @@ def test_batch_over_cutoff_takes_the_spark_path(spark, tmp_path, monkeypatch):
         "transfer": "spark", "account_balance_change": "spark", "account": "spark",
     }
     monkeypatch.undo()
-    _assert_exact(store, tree, _golden(spark, tmp_path, tree))
+    _assert_exact(store, tree)
+
+
+def test_account_batch_over_prune_limit_takes_the_plain_upsert(spark, tmp_path, monkeypatch):
+    """More tenants in the account batch than one pruned upsert takes:
+    prepare declines, and merge_upsert commits the same Arrow batch on its
+    Spark plan — the tables are the same."""
+    tree, store, pipe = _seed(tmp_path, spark)
+    _burst(tree)
+    monkeypatch.setattr(tables, "MAX_PRUNE_PARTITIONS", 0)
+    m = pipe.run_once()
+    assert m.transfers_discovered == 3
+    assert m.extra["merge"]["account"]["path"] == "spark"
+    monkeypatch.undo()
+    _assert_exact(store, tree)
 
 
 def _crash_replay(spark, tmp_path, monkeypatch, inject, partial) -> None:
@@ -424,15 +469,12 @@ def _crash_replay(spark, tmp_path, monkeypatch, inject, partial) -> None:
     m = pipe.run_once()  # replay
     assert m.extra["merge"]["transfer"]["path"] == "arrow"
     balance_view.maintain(store)  # the idle tick's convergence
-    golden = _golden(spark, tmp_path, tree)
-    _assert_exact(store, tree, golden)
+    _assert_exact(store, tree)
     rollup = {
         (r["tenant"], r["name"]): r["sum_amount"]
         for r in balance_view.read_if_fresh(store).collect()
     }
-    assert {k: v for k, v in rollup.items() if v != 0} == {
-        k: v for k, v in tree.balances.items() if v != 0
-    }
+    assert {k: v for k, v in rollup.items() if v != 0} == tree.balances()
 
 
 def _transfers(store) -> set:
@@ -508,3 +550,64 @@ def test_crash_before_account_commit_replays_exactly(spark, tmp_path, monkeypatc
         assert len([e for e in os.listdir(tdir) if e.startswith("v-")]) <= 2
 
     _crash_replay(spark, tmp_path, monkeypatch, inject, partial)
+
+
+def test_kv_marks_refusal_fails_the_tick_and_the_next_tick_ingests(spark, tmp_path, monkeypatch):
+    """The KV tier refuses the account-marks lookup. One refusal is retried
+    inside the tick; a second fails the tick before any write, leaving every
+    examined account pending — so the next tick ingests the tree exactly."""
+    tree, store, pipe = _seed(tmp_path, spark)
+    _burst(tree)
+    refusals = {"left": 2}
+    lookup = KVTier.lookup
+
+    def refusing(self, table, *a, **kw):
+        if table == "account" and refusals["left"]:
+            refusals["left"] -= 1
+            return None
+        return lookup(self, table, *a, **kw)
+
+    monkeypatch.setattr(KVTier, "lookup", refusing)
+    before = _tables(store)
+    with pytest.raises(RuntimeError, match="refused"):
+        pipe.run_once()
+    assert _tables(store) == before
+    assert pipe.run_once().transfers_discovered == 3
+    _assert_exact(store, tree)
+
+    tree.transfer("T2", "A", "B", "2")
+    tree.backdate()
+    refusals["left"] = 1
+    assert pipe.run_once().transfers_discovered == 1
+    assert refusals["left"] == 0
+    _assert_exact(store, tree)
+
+
+def test_spark_only_timestamp_shape_ingests_through_the_spark_parse(spark, tmp_path):
+    """A transaction whose timestamp only Spark's to_timestamp parses: the
+    driver twin declines it, the tick reads it with the Spark text parse on
+    the same body, stores exactly the Spark row and advances the markers."""
+    from data_warehouse_spark.sources import primary
+
+    tree, store, pipe = _seed(tmp_path, spark)
+    value_date = datetime.datetime(2020, 1, 2, 3, 4, 5)
+    path = tree.transfer("T1", "C", "A", "4.5", ts="2020-1-2T03:04:05Z", value_date=value_date)
+    tree.backdate()
+    with pytest.raises(primary.TwinUnsupported):
+        primary.read_transaction_rows([path])
+    (tenant, txn, status, transfer, ct, cn, dt, dn, vd, amount, cur), = [
+        tuple(r) for r in primary.read_transaction_paths(spark, [path]).collect()
+    ]
+    assert vd == value_date
+    m = pipe.run_once()
+    assert m.transfers_discovered == 1
+    assert m.extra["merge"]["transfer"]["path"] == "arrow"
+    stored = [tuple(r) for r in store.read("transfer").filter(f"transaction = '{txn}'").collect()]
+    assert stored == [(tenant, txn, transfer, status, ct, cn, dt, dn, amount, cur, vd)]
+    marks = {
+        r["name"]: (r["last_syn_snapshot"], r["last_syn_event"])
+        for r in store.read("account").filter("tenant = 'T1'").collect()
+    }
+    assert marks["C"] == (0, tree.versions[("T1", "C")])
+    assert marks["A"] == (0, tree.versions[("T1", "A")])
+    _assert_exact(store, tree)

@@ -242,32 +242,32 @@ def test_queued_event_does_not_expand(pipeline):
     assert m.transfers_discovered == 0
 
 
-def _assert_invariant_violation(pipeline, monkeypatch, path, bad):
+def _assert_invariant_violation(pipeline, monkeypatch, tick, bad):
     """Reference D8: an event whose transaction file says another status,
     or names no transaction file at all, fails the tick with
     InvariantViolation before any transfer merge or marker advance.
-    ``path`` is the tick body expected to run: the first full-scan tick
-    (``_expand_and_merge``) or a listing-cache delta tick
-    (``_expand_and_merge_local``, after a valid account was primed)."""
+    ``tick`` is the tick that meets the bad event: the ``first`` one, or a
+    ``delta`` tick after a valid transfer was ingested. Both run the one
+    tick body, ``_expand_and_merge_local``."""
     pipe, root, store = pipeline
     t = "t_TEN_BAD"
     acct = os.path.join(root, t, "account", "B")
     write(os.path.join(acct, "snapshot", "0000000000"), "EUR FORMAT_X\n")
-    expected_marks = (0, 0)
-    if path == "_expand_and_merge_local":
+    expected_marks = []  # the first tick's discovery rides the failed merge
+    if tick == "delta":
         write(os.path.join(root, t, "transaction", "TA"), "committed\nTX TEN_BAD B TEN_BAD B 2020-01-01T00:00:00Z 5 EUR\n")
         write(os.path.join(acct, "events", "0000000000", "1_5_TA"), "1\n")
         _backdate(root)
         assert pipe.run_once().transfers_discovered == 1
-        expected_marks = (0, 1)
+        expected_marks = [(0, 1)]
     calls = []
-    orig = getattr(IngestionPipeline, path)
+    orig = IngestionPipeline._expand_and_merge_local
 
     def spy(self, *a, **kw):
-        calls.append(path)
+        calls.append(tick)
         return orig(self, *a, **kw)
 
-    monkeypatch.setattr(IngestionPipeline, path, spy)
+    monkeypatch.setattr(IngestionPipeline, "_expand_and_merge_local", spy)
     transfers_before = store.read("transfer").count()
     if bad == "status_mismatch":
         # event says committed(1), transaction file says rollbacked(2)
@@ -275,28 +275,29 @@ def _assert_invariant_violation(pipeline, monkeypatch, path, bad):
     write(os.path.join(acct, "events", "0000000000", "1_5_TB"), "2\n")
     with pytest.raises(InvariantViolation):
         pipe.run_once()
-    assert calls == [path]
-    acc = store.read("account").filter("name = 'B'").collect()[0]
-    assert (acc["last_syn_snapshot"], acc["last_syn_event"]) == expected_marks
+    assert calls == [tick]
+    marks = [
+        (r["last_syn_snapshot"], r["last_syn_event"])
+        for r in store.read("account").filter("name = 'B'").collect()
+    ]
+    assert marks == expected_marks
     assert store.read("transfer").count() == transfers_before
 
 
 def test_status_mismatch_invariant(pipeline, monkeypatch):
-    _assert_invariant_violation(
-        pipeline, monkeypatch, "_expand_and_merge", "status_mismatch"
-    )
+    _assert_invariant_violation(pipeline, monkeypatch, "first", "status_mismatch")
 
 
 @pytest.mark.parametrize(
-    "path,bad",
+    "tick,bad",
     [
-        ("_expand_and_merge", "missing_transaction"),
-        ("_expand_and_merge_local", "status_mismatch"),
-        ("_expand_and_merge_local", "missing_transaction"),
+        ("first", "missing_transaction"),
+        ("delta", "status_mismatch"),
+        ("delta", "missing_transaction"),
     ],
 )
-def test_invariant_violation_on_every_tick_path(pipeline, monkeypatch, path, bad):
-    _assert_invariant_violation(pipeline, monkeypatch, path, bad)
+def test_invariant_violation_on_every_tick_path(pipeline, monkeypatch, tick, bad):
+    _assert_invariant_violation(pipeline, monkeypatch, tick, bad)
 
 
 def test_transaction_id_with_underscores(pipeline):
@@ -435,11 +436,10 @@ def _backdate(root: str) -> None:
 
 
 def test_listing_cache_idle_fast_path_and_reawaken(pipeline):
-    """Tick 1 ingests (full scan); tick 2 examines the pending accounts and
-    settles them; tick 3 is the idle FAST PATH — zero Spark stages beyond
-    the stage clock's bookends (the O(changed dirs) contract, r8 verdict
-    item #1). New files after dormancy must still be detected and the
-    resulting warehouse must be identical to an uncached pipeline's."""
+    """Tick 1 ingests (every account dir examined); tick 2 examines the
+    accounts tick 1 read and settles them; tick 3 is the idle FAST PATH —
+    no stage beyond the stage clock's bookends (the O(changed dirs)
+    contract). New files after dormancy must still be detected."""
     pipe, root, store = pipeline
     _write_transfer_fixture(root)
     _backdate(root)
@@ -468,39 +468,29 @@ def test_listing_cache_idle_fast_path_and_reawaken(pipeline):
 
 
 def test_listing_cache_matches_uncached_pipeline(spark, tmp_path):
-    """Same fixture, two pipelines (cache on/off), interleaved new data:
-    identical final tables — the cache is an optimization, never a
+    """Cached ticks, with new data landing between them, leave exactly the
+    tables the writer's ground truth implies — the same tables a full
+    re-walk of the tree must give: the cache is an optimization, never a
     correctness input."""
-    roots, stores = {}, {}
-    for mode in ("cached", "uncached"):
-        root = str(tmp_path / f"data_{mode}")
-        os.makedirs(root, exist_ok=True)
-        _write_transfer_fixture(root)
-        _backdate(root)
-        roots[mode] = root
-        stores[mode] = warehouse_store(spark, str(tmp_path / f"wh_{mode}"))
-    pipes = {
-        "cached": IngestionPipeline(spark, roots["cached"], stores["cached"]),
-        "uncached": IngestionPipeline(
-            spark, roots["uncached"], stores["uncached"], listing_cache=False
-        ),
-    }
-    for mode in pipes:
-        pipes[mode].run_once()
-        pipes[mode].run_once()  # settle / replay
-        t = "t_TENANT_TRN"
-        write(
-            os.path.join(roots[mode], t, "transaction", "TRN2"),
-            "committed\nTRX2 TENANT_TRN DEBIT TENANT_TRN CREDIT 2020-02-01T00:00:00Z 3.50 CZK\n",
-        )
-        write(os.path.join(roots[mode], t, "account", "CREDIT", "events", "0000000000", "1_-3.5_TRN2"), "2\n")
-        write(os.path.join(roots[mode], t, "account", "DEBIT", "events", "0000000000", "1_3.5_TRN2"), "2\n")
-        pipes[mode].run_once()
-        pipes[mode].run_once()
-    for table in ("tenant", "account", "transfer", "account_balance_change"):
-        a = sorted(map(tuple, stores["cached"].read(table).collect()))
-        b = sorted(map(tuple, stores["uncached"].read(table).collect()))
-        assert a == b, table
+    from .test_arrow_commit import _assert_exact, _Tree
+
+    tree = _Tree(str(tmp_path / "data"))
+    tree.account("TENANT_TRN", "CREDIT")
+    tree.account("TENANT_TRN", "DEBIT")
+    tree.transfer("TENANT_TRN", "CREDIT", "DEBIT", "1")
+    tree.backdate()
+    store = warehouse_store(spark, str(tmp_path / "wh"))
+    pipe = IngestionPipeline(spark, tree.root, store)
+    pipe.run_once()
+    pipe.run_once()  # settle / replay
+    _assert_exact(store, tree)
+    tree.transfer("TENANT_TRN", "DEBIT", "CREDIT", "3.50")
+    tree.account("TENANT_TRN", "LATE")
+    tree.transfer("TENANT_TRN", "LATE", "CREDIT", "0.25")
+    tree.backdate()
+    pipe.run_once()
+    pipe.run_once()
+    _assert_exact(store, tree)
 
 
 def test_driver_side_file_readers_match_spark_parsers(spark, tmp_path):

@@ -1,7 +1,5 @@
 """ListingCache (sources/listing.py): per-directory mtime watermarks that
-make a steady-state ingest tick O(changed dirs) instead of O(tree width) —
-the r8 verdict's tick-floor item (TICK_ATTRIBUTION_SF10: 3.2 s of listing
-in an idle tick that read zero files).
+make a steady-state ingest tick O(changed dirs) instead of O(tree width).
 
 Pure-Python unit tests here (the cache never touches Spark); the
 pipeline-level behavior — idle fast-path, delta inventory, pending
@@ -51,9 +49,9 @@ def test_pending_until_settled(tmp_path):
     _mk(root, "A", "acc1", events={0: ["1_x_TRN"]})
     _age(root)
     cache = ListingCache()
-    cache.prime([("A", "acc1")])
     now = time.time_ns()
-    # primed accounts are pending: examined even with no dir change
+    cache.sweep(root, ["A"], now)  # registers every account dir as pending
+    # registered accounts are pending: examined even with no dir change
     assert cache.sweep(root, ["A"], now) == [("A", "acc1")]
     cache.rescan_account(root, "A", "acc1", now)
     # an examination that read something keeps the account hot...
@@ -69,8 +67,8 @@ def test_detects_new_event_file_snapshot_and_account(tmp_path):
     _mk(root, "A", "acc1", events={0: ["1_x_TRN"]})
     _age(root)
     cache = ListingCache()
-    cache.prime([("A", "acc1")])
     now = time.time_ns()
+    cache.sweep(root, ["A"], now)
     cache.rescan_account(root, "A", "acc1", now)
     cache.settle([("A", "acc1")], [])
     assert cache.sweep(root, ["A"], now) == []
@@ -114,8 +112,8 @@ def test_fresh_mtimes_are_untrusted(tmp_path):
     root = str(tmp_path)
     _mk(root, "A", "acc1", events={0: ["1_x_TRN"]})  # mtimes = now
     cache = ListingCache()
-    cache.prime([("A", "acc1")])
     now = time.time_ns()
+    cache.sweep(root, ["A"], now)
     cache.rescan_account(root, "A", "acc1", now)
     cache.settle([("A", "acc1")], [])
     # nothing changed on disk, but the recorded mtimes were too fresh

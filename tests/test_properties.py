@@ -236,6 +236,12 @@ _OPS = st.lists(
 
 
 @given(ops=_OPS)
+# both prepare/commit routes stage a first version of an absent table
+@example(ops=[("upsert", [("A", "x", 1), ("B", "y", 2)], "arrow")])
+@example(ops=[
+    ("upsert", [("A", "x", 1), ("B", "y", 2)], "spark"),
+    ("upsert", [("A", "x", 3)], "arrow"),
+])
 # every route runs on an existing table in every run, next to the random
 # interleavings: the plain verb's copy-on-write upsert, then both
 # prepare/commit routes, each moving a row between month dirs of ``f``
@@ -309,18 +315,15 @@ def test_tablestore_merge_verbs_match_dict_model(spark, tmp_path_factory, ops):
             if verb == "insert":
                 store.merge_insert_missing(name, batch, keys)
             elif verb == "upsert":
-                prep = None
-                if route != "plain":
+                if route == "plain":
+                    store.merge_upsert(name, batch, keys)
+                else:
+                    # an absent table stages its first version too
                     prep = store.merge_upsert_prepare(
                         name, batch, keys, sorted({(r[0],) for r in rows})
                     )
-                if prep is not None:
+                    assert prep is not None
                     store.merge_upsert_commit(prep)
-                else:  # the plain verb, or a first write prepare declines
-                    writer = "spark"
-                    store.merge_upsert(
-                        name, spark.createDataFrame(data, struct), keys
-                    )
             else:
                 store.merge_delete(name, batch, keys)
                 writer = None
