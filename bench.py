@@ -154,7 +154,7 @@ def _make_action(sf: float | None):
 def _cap_explanations(explained: dict[str, dict], cap: int = 120) -> dict[str, dict]:
     """Trim the free-text 'explained' reason for the emitted JSON line —
     the driver's artifact keeps ~2 KB of output, and a paragraph-sized
-    explanation pushed BENCH_r07's JSON out of the buffer. Full text stays
+    explanation pushed round 7's JSON out of the buffer. Full text stays
     in BENCH_REFERENCE.json."""
     out = {}
     for name, entry in explained.items():
@@ -513,7 +513,7 @@ def main() -> None:
                               regressions, explained_regressions)
 
     total = round(sum(timings.values()), 4)
-    # the driver records only the last ~2 KB of output (BENCH_r07's JSON
+    # only the last ~2 KB of output is recorded (round 7's JSON
     # line outgrew it and arrived truncated/unparseable) — keep the line
     # compact: 3-decimal timings, terse separators, explanation text capped
     # (the full text lives in BENCH_REFERENCE.json's "explained" map)

@@ -241,7 +241,7 @@ class WarehouseContext:
         Fast path: both lookups are dict gets against the serving
         cache's version-pinned snapshots — zero Spark jobs per request
         (the difference between ~36 s and sub-s balance-page p95 at sf1
-        under 32 concurrent clients, SERVING_BENCH.json).  Each side
+        under 32 concurrent clients on a 32-core box).  Each side
         degrades independently to the original Spark plan: the account
         semi-join, and the balance lookup — itself two-tier, maintained
         rollup (``balance_view``) before the O(changes) direct

@@ -208,7 +208,7 @@ class KVTier:
         )
         # decoded row-group LRU: (path, rg_index, cols) → pa.Table. The
         # pyarrow decode is the GIL-held cost that sets the 32-thread
-        # serving ceiling (KV_BENCH r8: 2748/s at 1 thread vs 1044/s at
+        # serving ceiling (measured: 2748/s at 1 thread vs 1044/s at
         # 32 — a CPython decode convoy, not a tier lock); hot groups now
         # decode ONCE and repeat lookups run GIL-cheap bisect+take over
         # the cached Arrow table. Paths are immutable (copy-on-write

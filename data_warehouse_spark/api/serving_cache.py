@@ -1,7 +1,7 @@
 """Version-pinned in-memory snapshots of the DIMENSION tables for the
 HTTP serving tier.
 
-Why this exists — the measured serving story (SERVING_BENCH.json):
+Why this exists — the measured serving story (32-core box):
 submitting Spark jobs per HTTP request is the wrong tool for sub-second
 point serving.  With 32 concurrent GraphQL clients against the sf1
 warehouse, even after the maintained balance rollup removed the

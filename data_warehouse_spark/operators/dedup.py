@@ -388,23 +388,6 @@ def incremental_minhash_dedup(
     return vs_corpus.unionByName(within).orderBy("doc_id", "scope", "dup_of")
 
 
-def dedup_batch_against(
-    new_docs: DataFrame,
-    corpus_signatures: DataFrame,
-    id_col: str = "doc_id",
-    **kwargs,
-) -> DataFrame:
-    """The keep-side of :func:`incremental_minhash_dedup`: the batch rows
-    that survive — no corpus duplicate and no smaller-id batch duplicate —
-    with their original columns, ready to append to the corpus (and their
-    signatures to the store)."""
-    dups = incremental_minhash_dedup(new_docs, corpus_signatures, id_col=id_col, **kwargs)
-    doomed = dups.select(F.col("doc_id").alias("__doomed_id")).distinct()
-    return new_docs.join(
-        doomed, new_docs[id_col] == doomed["__doomed_id"], "left_anti"
-    )
-
-
 def simhash_signatures(
     documents: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

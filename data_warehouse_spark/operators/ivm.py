@@ -11,9 +11,9 @@ batch plus one merge into the (much smaller) rollup:
                    groups dropped
 
 This is exact for the DISTRIBUTIVE aggregates (COUNT, SUM) because an
-update arrives as delete+insert images (the ``TableStore.diff_previous``
-/ Delta-CDF convention), so any sequence of inserts/updates/deletes
-telescopes. Two SQL edge semantics are carried explicitly:
+update arrives as delete+insert images (the Delta-CDF convention), so
+any sequence of inserts/updates/deletes telescopes. Two SQL edge
+semantics are carried explicitly:
 
 - **NULL group keys** merge null-safely (the join uses ``eqNullSafe``,
   the same invariant ``TableStore._key_cond`` pins for MERGE) — a NULL
@@ -48,7 +48,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-CHANGE_COL = "_change"  # matches TableStore.diff_previous tagging
+CHANGE_COL = "_change"  # 'insert' | 'delete' row-image tag
 
 
 def measure_cols(sum_cols: list[str]) -> list[str]:

@@ -122,7 +122,7 @@ def brute_force_topk(
     local top-k under the final total order so only partitions×|queries|×k
     rows reach the global ranking window. The expression form's
     interpreted cosine folds measured ~20 s for 600 k vectors × 5 queries
-    at sf30 (ANN_ATTRIBUTION ``bf``); the vectorized scan is I/O-bound.
+    at sf30 (32-core ANN attribution run); the vectorized scan is I/O-bound.
     NaN cosines (zero-norm vectors) are kept for the global window —
     Spark orders NaN greatest — and only SUBSTITUTED with +inf inside the
     local argselection so such a candidate can never be dropped early."""
@@ -684,7 +684,7 @@ def _assign_cells(
     via the agreement witness (≥0.999), then regenerate that arm's pinned
     expectation — do NOT loosen the hash for the SFs where exactness
     holds. At 10⁹ vectors the parity fold alone is not a shippable index
-    build (O(N·√N·d) at ~200 GFLOP/s ceiling — ANN_ATTRIBUTION_SF100);
+    build (O(N·√N·d) at ~200 GFLOP/s ceiling, measured at sf100);
     BLAS recovers the 10-50× a dgemm has over strided numpy loops.
     """
     base = embeddings.select(
@@ -713,7 +713,7 @@ def _assign_cells_vectorized(
     Every ``F.aggregate``/``zip_with`` fold evaluates interpreted (no
     whole-stage codegen for higher-order functions), so the broadcast-join
     form of this assignment — N·cells cosine folds — measured 1379.7 s for
-    600 k vectors × 775 cells at sf30 (ANN_ATTRIBUTION_SF30 ivf_auto_cold)
+    600 k vectors × 775 cells at sf30 (cold auto-geometry IVF build)
     while the same flops are <1 s of vectorized float64. This is exactly
     the case the repo's UDF discipline reserves mapInPandas for: built-in
     operators CAN express the semantics but not the arithmetic intensity.
@@ -996,16 +996,9 @@ def ivf_topk(
     return _plan_cache_put(pk, out)
 
 
-# single source of truth for the stored-index layout — consumers (the
-# streaming sink's id gate, external tooling) must not re-hardcode it
+# single source of truth for the stored-index layout — external tooling
+# must not re-hardcode it
 IVF_CORPUS_SUBDIR = "corpus"
-IVF_ID_COLUMN = "neighbor_id"
-
-
-def stored_index_ids(spark, path: str) -> DataFrame:
-    """The id column of a stored IVF index's corpus — a column-pruned scan
-    (parquet reads just the id pages), for gating appends."""
-    return spark.read.parquet(f"{path}/{IVF_CORPUS_SUBDIR}").select(IVF_ID_COLUMN)
 
 
 def save_ivf_index(
@@ -1037,7 +1030,7 @@ def save_ivf_index(
 
     ``fast=True`` builds the stored artifact with the BLAS assignment —
     the shippable path for production-size corpora. The ASSIGNMENT keeps
-    the session build's measured 6–8× (ANN_ATTRIBUTION_SF30/SF100:
+    the session build's measured 6–8× (sf30/sf100 attribution runs:
     session auto-geometry build 316.7→38.4 s at 2 M vectors); the stored
     END-TO-END build measures ~2.5× because the artifact write
     (cell-partitioned parquet, one file per cell) is mode-independent
@@ -1056,7 +1049,7 @@ def save_ivf_index(
     # shuffle each cell's rows into ONE task before the partitioned write:
     # without this every task writes a file into every cell dir it sees —
     # tasks × √N-cells files (measured: the stored-artifact write was the
-    # dominant build cost at 2 M vectors, ANN_ATTRIBUTION_SF100 r11).
+    # dominant build cost at 2 M vectors, sf100).
     # After: one right-sized file per cell — fewer footers for the pruned
     # probe reads too.
     (
@@ -1118,7 +1111,7 @@ def append_to_ivf_index(
     and appended assignments cannot diverge) and append them to the
     cell-partitioned corpus. Assignment is the map-only vectorized
     Arrow-batch pass at any geometry (see :func:`_assign_cells`) — no
-    corpus shuffle, but a streaming sink appending every micro-batch
+    corpus shuffle, but a caller appending every micro-batch
     should budget the per-batch Arrow transfer (size the trigger so batches
     amortize it). Centroids stay fixed, so existing cell assignments,
     stored files, and in-flight probes are untouched; the classic
@@ -1126,8 +1119,7 @@ def append_to_ivf_index(
     cell sizes skew enough to hurt recall.
 
     Returns the number of vectors appended. Id uniqueness is the caller's
-    contract (pair with the dedup gate / MERGE upstream — e.g. gate the
-    embedding stream exactly like ``streaming.corpus_stream`` gates text).
+    contract (pair with a dedup gate or a keyed MERGE upstream).
 
     ``fast=True`` assigns the appended batch with the BLAS kernel (same
     scale mode as the fast build — the agreement witness generalizes to
@@ -1142,9 +1134,9 @@ def append_to_ivf_index(
     # materialize ONCE: the dim guard, the returned count, and the write
     # must all see the same rows (a live/nondeterministic source could
     # otherwise slip a bad row in between guard and write)
-    # scratch_dir: repeated callers (a streaming sink appending every
-    # micro-batch) pass a REUSED location so each batch does not leak a
-    # process-lifetime temp dir holding a full copy of the batch
+    # scratch_dir: repeated callers (one append per micro-batch) pass a
+    # REUSED location so each batch does not leak a process-lifetime temp
+    # dir holding a full copy of the batch
     assigned = storage_checkpoint(
         _assign_cells(new_embeddings, centroids, id_col, vec_col, fast=fast),
         path=scratch_dir,

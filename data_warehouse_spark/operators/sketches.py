@@ -85,9 +85,8 @@ def estimate_expr(
     table: list[list[int]], key: F.Column, width: int, depth: int
 ) -> F.Column:
     """The map-side CMS estimate of ``key`` against a collected sketch:
-    min over depths of a literal-array lookup. Shared by the batch gate
-    (:func:`cms_heavy_hitters`) and the streaming serving path
-    (``streaming/sketch_stream.estimate_counts``)."""
+    min over depths of a literal-array lookup — the pre-filter of
+    :func:`cms_heavy_hitters`."""
     # each depth row is a width-sized literal array; build it by parsing ONE
     # SQL string instead of F.lit(list), which assembles the array through
     # one py4j call PER ELEMENT (4×1024 round trips ≈ 3.2 s of driver wall

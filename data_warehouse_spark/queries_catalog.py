@@ -2442,7 +2442,7 @@ def _emb_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is the measured quadratic failure mode: at sf10 (200k vectors) the
     # 6-plane geometry produces 457M candidate pairs across 64 buckets
     # and 2930s of interpreted-HOF cosine; auto (9 planes, 512 buckets)
-    # cuts candidates ~10x. SCALE_r6.json carries both measurements.
+    # cuts candidates ~10x (both measured at sf10).
     return similarity.embedding_near_duplicates(
         cat.load_table(spark, sf_dir, "embeddings"),
         threshold=0.4,

@@ -21,16 +21,18 @@ Parsing rules pinned by the reference's code/golden tests:
     ``transfer creditTenant creditAccount debitTenant debitAccount
     valueDate(ISO zoned) amount currency`` (PrimaryPersistence.scala:229-259)
 
-Scale notes: every reader is one distributed ``spark.read.text`` over a glob
-(Spark's FileIndex does the listing; ``wholetext`` keeps file↔row alignment
-since filenames and first lines are data). Only tenant discovery lists a
-single directory level driver-side — O(#tenants), the same work Spark's own
-file index would do. The parse itself is all codegen'd expressions.
+Two forms per file kind. The ``read_*_paths`` readers are one distributed
+``spark.read.text`` over an explicit path list (``wholetext`` keeps
+file↔row alignment, since filenames and first lines are data), parsed with
+codegen'd expressions. The ``read_*_rows`` twins read the same files on the
+driver with the same semantics; the ingestion tick uses them, and falls
+back to the Spark form for a timestamp only ``to_timestamp`` parses
+(:class:`TwinUnsupported`). Tenant discovery lists a single directory level
+driver-side — O(#tenants).
 """
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -98,18 +100,6 @@ def _with_path(df: DataFrame) -> DataFrame:
     return df.withColumn("path", F.input_file_name())
 
 
-def _read_wholetext(spark: SparkSession, pattern: str) -> DataFrame | None:
-    """Distributed wholetext read of a glob; None when nothing matches.
-
-    The driver-side glob existence check mirrors what Spark's FileIndex
-    lists anyway and avoids an analysis-time exception (and its JVM log
-    spam) on every empty tick.
-    """
-    if not _glob.glob(pattern):
-        return None
-    return _with_path(spark.read.text(pattern, wholetext=True))
-
-
 def read_paths(spark: SparkSession, paths: list[str]) -> DataFrame | None:
     """Distributed wholetext read of an EXPLICIT path list — the pruned-read
     entry point: the ingestion tick lists directories first, applies the
@@ -129,12 +119,6 @@ ACCOUNT_META_SCHEMA = T.StructType(
         T.StructField("format", T.StringType(), False),
     ]
 )
-
-
-def read_account_meta(spark: SparkSession, root: str) -> DataFrame:
-    """Account metadata from snapshot version 0, first line (S4)."""
-    pattern = os.path.join(root, "t_*", "account", "*", "snapshot", "0000000000")
-    return parse_account_meta(spark, _read_wholetext(spark, pattern))
 
 
 def read_account_meta_paths(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -301,21 +285,16 @@ TRANSFER_ROW_SCHEMA = T.StructType(
 )
 
 
-def read_transactions(spark: SparkSession, root: str) -> DataFrame:
-    """Transaction files → transfer rows (S6, the stateful header parse).
+def read_transaction_paths(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Transaction files → transfer rows (S6, the stateful header parse)
+    over an explicit path list (only transactions named by this tick's
+    picked active events).
 
     The reference carries the line-1 status through an Akka
     ``statefulMapConcat``; in Spark the whole file is one row (``wholetext``)
     so header + body stay aligned without state: line 1 is the status word,
     every further non-empty line explodes into one transfer row.
     """
-    pattern = os.path.join(root, "t_*", "transaction", "*")
-    return parse_transactions(spark, _read_wholetext(spark, pattern))
-
-
-def read_transaction_paths(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """S6 over an explicit transaction path list (only transactions named by
-    this tick's picked active events)."""
     return parse_transactions(spark, read_paths(spark, paths))
 
 

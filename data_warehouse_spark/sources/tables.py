@@ -143,9 +143,9 @@ class TableStore:
                     f"must NOT be declared; source {src!r} must be declared"
                 )
         # destination paths of the most recent _adopt_files call — the
-        # per-append change capture diff_previous's docstring points to
-        # (valid until the next merge or a compaction removes them; the
-        # consumer re-checks existence)
+        # per-append change capture ``balance_view.maintain(adopted_files=)``
+        # reads (valid until the next merge or a compaction removes them;
+        # the consumer re-checks existence)
         self.last_adopted_files: list[str] = []
         # monotonic in-process mutation counter: bumped at the START and
         # END of every content-changing operation (swap, file adopt).
@@ -250,12 +250,6 @@ class TableStore:
         tdir = self._table_dir(name)
         os.makedirs(tdir, exist_ok=True)
         prev = self._resolve(name)
-        # record lineage BEFORE the swap: version dirs are unordered uuids,
-        # so the _previous pointer is what makes time travel resolvable
-        ptmp = os.path.join(tdir, f"_previous.tmp-{uuid.uuid4().hex[:8]}")
-        with open(ptmp, "w") as f:
-            f.write(os.path.basename(prev) if prev else "")
-        os.replace(ptmp, os.path.join(tdir, "_previous"))
         tmp = os.path.join(tdir, f"_current.tmp-{uuid.uuid4().hex[:8]}")
         with open(tmp, "w") as f:
             f.write(os.path.basename(new_version_dir))
@@ -322,30 +316,6 @@ class TableStore:
         out = df.select(*cols)
         self._df_memo[mkey] = (epoch, out)
         return out
-
-    def read_previous(self, name: str) -> DataFrame | None:
-        """Time travel, depth 1: the table as of the snapshot BEFORE the
-        last write, or None when no previous snapshot exists.
-
-        Depth matches the store's retention (current + previous — the same
-        two snapshots kept for in-flight readers), so a time-travel read is
-        always backed by live files; deeper history would need a retention
-        policy, not different read plumbing. The audit/debug answer to
-        "what did the 2 s tick just change?": diff read vs read_previous.
-        """
-        tdir = self._table_dir(name)
-        try:
-            with open(os.path.join(tdir, "_previous")) as f:
-                v = f.read().strip()
-        except FileNotFoundError:
-            return None
-        if not v or not os.path.isdir(os.path.join(tdir, v)):
-            return None
-        reader = self.spark.read
-        if self._all_partitions(name):
-            reader = reader.schema(self._read_schema(name))
-        df = reader.parquet(os.path.join(tdir, v))
-        return df.select(*[f.name for f in self.schemas[name].fields])
 
     # ---- writers -------------------------------------------------------
 
@@ -1099,42 +1069,6 @@ class TableStore:
         via _swap's orphan prune if never called)."""
         shutil.rmtree(prep[2], ignore_errors=True)
 
-    def diff_previous(self, name: str) -> DataFrame | None:
-        """Change-data-capture between the two retained SNAPSHOTS: every
-        row added or removed across the last version swap, tagged
-        ``_change`` = 'insert' | 'delete' (an update surfaces as
-        delete+insert of the row images — the Delta CDF convention without
-        a change log).
-
-        Snapshot granularity, precisely: overwrite / merge_upsert /
-        merge_delete / compact each swap a version, so their effect is one
-        diff. :meth:`merge_insert_missing` appends part files INTO the
-        current version without a swap — those rows become visible in the
-        diff only at the next swap (and a compaction right after an append
-        diffs empty, correctly: compaction rewrites files, not rows). For
-        per-append change capture use the sink's own return value (the
-        inserted count) or an epoch/provenance column, as the streaming
-        sinks here do.
-
-        Returns None when no previous snapshot exists. Implementation is
-        symmetric ``exceptAll`` over the two snapshots — exact on
-        duplicate rows too. Scale note: this is the snapshot-diff
-        FALLBACK for auditing/backfill; a hot 100 TB pipeline should
-        capture changes at MERGE time rather than diff two full table
-        scans.
-        """
-        prev = self.read_previous(name)
-        if prev is None:
-            return None
-        cur = self.read(name)
-        ins = cur.exceptAll(prev).select(
-            F.lit("insert").alias("_change"), *[f.name for f in self.schemas[name].fields]
-        )
-        del_ = prev.exceptAll(cur).select(
-            F.lit("delete").alias("_change"), *[f.name for f in self.schemas[name].fields]
-        )
-        return ins.unionByName(del_)
-
     def merge_delete(self, name: str, batch: DataFrame, keys: list[str]) -> int:
         """DELETE by key set (the MERGE … WHEN MATCHED THEN DELETE verb —
         GDPR/right-to-be-forgotten over a key list). Returns #rows deleted.
@@ -1144,10 +1078,8 @@ class TableStore:
         partitions the key batch touches are rewritten; everything else is
         hard-linked into the new snapshot. Deleting keys that don't exist
         is a no-op (idempotent — a replayed deletion request deletes
-        nothing twice). The previous snapshot stays readable
-        (:meth:`read_previous`) until the next write, which is the
-        retention story a deletion pipeline needs anyway (verify, then the
-        old version ages out)."""
+        nothing twice). The previous version dir stays on disk for
+        in-flight readers until the next write prunes it."""
         doomed = batch.dropDuplicates(keys).select(*keys).cache()
         try:
             if not self.exists(name) or doomed.isEmpty():
@@ -1207,30 +1139,6 @@ class TableStore:
         finally:
             touched.unpersist()
         return n_touched - n_kept
-
-    def delete_where(self, name: str, condition: F.Column) -> int:
-        """DELETE rows matching an arbitrary predicate (retention expiry:
-        ``delete_where("events", col("ts") < cutoff)``). Returns #deleted.
-
-        Full-snapshot rewrite of the surviving rows — predicate deletes
-        can't be partition-scoped without introspecting the expression, so
-        callers with a partition-aligned predicate should pass the key
-        batch to :meth:`merge_delete` instead. The overwrite re-applies
-        the table's declared partitioning, so survivors land laid out
-        exactly as before."""
-        if not self.exists(name):
-            return 0
-        current = self.read(name).cache()
-        try:
-            kept = current.filter(~condition | condition.isNull())
-            n_total = current.count()
-            n_kept = kept.count()
-            if n_kept == n_total:
-                return 0
-            self.overwrite(name, kept)
-        finally:
-            current.unpersist()
-        return n_total - n_kept
 
     def _split_insert_only(
         self, fresh: DataFrame, existing: DataFrame, keys: list[str],

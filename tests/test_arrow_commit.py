@@ -426,6 +426,32 @@ def test_first_tick_reports_arrow_merges(spark, tmp_path):
     _assert_exact(store, tree)
 
 
+def test_wide_first_tick_ingests_exactly(spark, tmp_path):
+    """A wide first tick — more than 256 meta+event files and more than 64
+    transactions — reads every file on the driver in the one tick body,
+    and the tables equal the tree's ground truth."""
+    tree = _Tree(str(tmp_path / "data"))
+    tenants, per_tenant, n_transfers = ("W1", "W2", "W3"), 50, 80
+    for t in tenants:
+        for a in range(per_tenant):
+            tree.account(t, f"A{a:02d}")
+    for i in range(n_transfers):
+        t = tenants[i % len(tenants)]
+        credit, debit = i % per_tenant, (i * 7 + 1) % per_tenant  # never equal
+        tree.transfer(t, f"A{credit:02d}", f"A{debit:02d}", f"{i + 1}.5")
+    tree.backdate()
+    store = warehouse_store(spark, str(tmp_path / "wh"))
+    m = IngestionPipeline(spark, tree.root, store).run_once()
+    assert m.extra["files_read"] == {
+        "meta": len(tenants) * per_tenant,  # 150
+        "events": 2 * n_transfers,  # 160: 310 meta+event files > 256
+        "transactions": n_transfers,  # 80 > 64
+    }
+    assert m.accounts_discovered == len(tenants) * per_tenant
+    assert m.transfers_discovered == n_transfers
+    _assert_exact(store, tree)
+
+
 def test_batch_over_cutoff_takes_the_spark_path(spark, tmp_path, monkeypatch):
     """Above ARROW_COMMIT_MAX_ROWS the same tick hands its batches to the
     Spark plans — jobs run, the path says so, the tables are the same."""

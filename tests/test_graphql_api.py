@@ -17,8 +17,8 @@ from data_warehouse_spark.streaming.ingest import IngestionPipeline, warehouse_s
 
 from .test_ingest import _write_transfer_fixture, write
 
-# streaming/serving e2e tier: full-pipeline ticks / HTTP / stateful
-# streams (see pytest.ini) - deselected from the per-commit unit core
+# ingest/serving e2e tier: full-pipeline ticks / HTTP / store e2e
+# (see pytest.ini) - deselected from the per-commit unit core
 pytestmark = pytest.mark.slow
 
 

@@ -46,6 +46,14 @@ def _as_map(df):
     }
 
 
+def _cdc(spark, images):
+    """CDC row images: ('insert' | 'delete', tenant, name, amount_cents)."""
+    return spark.createDataFrame(
+        images,
+        T.StructType([T.StructField(ivm.CHANGE_COL, T.StringType(), False)] + SCHEMA.fields),
+    )
+
+
 def test_maintenance_tracks_upserts_and_deletes(spark, tmp_path):
     """Across a mixed sequence of version swaps (insert, update, delete),
     applying each swap's CDC to the rollup equals recomputing the rollup
@@ -68,11 +76,12 @@ def test_maintenance_tracks_upserts_and_deletes(spark, tmp_path):
         _rows(spark, [("A", "x", 175), ("D", "q", 9)]),
         ["tenant", "name"],
     )
+    cdc = _cdc(
+        spark,
+        [("delete", "A", "x", 100), ("insert", "A", "x", 175), ("insert", "D", "q", 9)],
+    )
     store.overwrite(
-        "t_rollup",
-        ivm.maintain_rollup(
-            store.read("t_rollup"), store.diff_previous("t"), GROUP, SUMS
-        ),
+        "t_rollup", ivm.maintain_rollup(store.read("t_rollup"), cdc, GROUP, SUMS)
     )
     assert _as_map(store.read("t_rollup")) == _as_map(
         ivm.compute_rollup(store.read("t"), GROUP, SUMS)
@@ -80,11 +89,9 @@ def test_maintenance_tracks_upserts_and_deletes(spark, tmp_path):
 
     # swap 2: delete every C row — the group must LEAVE the rollup
     store.merge_delete("t", _rows(spark, [("C", "z", 0)]).select("tenant", "name"), ["tenant", "name"])
+    cdc = _cdc(spark, [("delete", "C", "z", 7)])
     store.overwrite(
-        "t_rollup",
-        ivm.maintain_rollup(
-            store.read("t_rollup"), store.diff_previous("t"), GROUP, SUMS
-        ),
+        "t_rollup", ivm.maintain_rollup(store.read("t_rollup"), cdc, GROUP, SUMS)
     )
     m = _as_map(store.read("t_rollup"))
     assert "C" not in m

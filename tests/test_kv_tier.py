@@ -33,8 +33,8 @@ from data_warehouse_spark.streaming.ingest import (
 )
 from tests.test_serving_cache import QUERIES, _fixture
 
-# streaming/serving e2e tier: full-pipeline ticks / HTTP / stateful
-# streams (see pytest.ini) - deselected from the per-commit unit core
+# ingest/serving e2e tier: full-pipeline ticks / HTTP / store e2e
+# (see pytest.ini) - deselected from the per-commit unit core
 pytestmark = pytest.mark.slow
 
 

@@ -15,8 +15,8 @@ import time
 
 from data_warehouse_spark.sources.listing import ListingCache
 
-# streaming/serving e2e tier: full-pipeline ticks / HTTP / stateful
-# streams (see pytest.ini) - deselected from the per-commit unit core
+# ingest/serving e2e tier: full-pipeline ticks / HTTP / store e2e
+# (see pytest.ini) - deselected from the per-commit unit core
 pytestmark = pytest.mark.slow
 
 

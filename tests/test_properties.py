@@ -71,7 +71,8 @@ def test_transaction_parse_roundtrip(spark, tmp_path_factory, rows, status):
         with open(os.path.join(tdir, txn), "w") as f:
             f.write("\n".join(lines) + "\n")
 
-    got = primary.read_transactions(spark, root).collect()
+    pattern = os.path.join(root, "t_*", "transaction", "*")
+    got = primary.read_transaction_paths(spark, [pattern]).collect()
     status_code = {"committed": 1, "rollbacked": 2}.get(status, 0)
     assert len(got) == len(expected)
     for r in got:
@@ -101,7 +102,11 @@ def test_account_meta_parse_roundtrip(spark, tmp_path_factory, metas):
         os.makedirs(os.path.dirname(p), exist_ok=True)
         with open(p, "w") as f:
             f.write(f"{ccy} {fmt}_T\n")  # suffix "_T" must be dropped
-    got = {r["name"]: r for r in primary.read_account_meta(spark, root).collect()}
+    pattern = os.path.join(root, "t_*", "account", "*", "snapshot", "0000000000")
+    got = {
+        r["name"]: r
+        for r in primary.read_account_meta_paths(spark, [pattern]).collect()
+    }
     assert set(got) == {m[0] for m in metas}
     for account, ccy, fmt in metas:
         assert got[account]["currency"] == ccy
@@ -409,7 +414,7 @@ def test_ivm_maintenance_matches_multiset_model(spark, ops):
     exist), applied step-by-step with ivm.maintain_rollup, must land the
     rollup exactly where recomputing over the surviving multiset lands it.
     Delete images are derived from the model so every batch is valid CDC
-    (the contract diff_previous provides)."""
+    (a delete image names a row that exists)."""
     from collections import Counter
 
     from pyspark.sql import types as T

@@ -19,8 +19,8 @@ from data_warehouse_spark.service import Service
 
 from .test_ingest import write
 
-# streaming/serving e2e tier: full-pipeline ticks / HTTP / stateful
-# streams (see pytest.ini) - deselected from the per-commit unit core
+# ingest/serving e2e tier: full-pipeline ticks / HTTP / store e2e
+# (see pytest.ini) - deselected from the per-commit unit core
 pytestmark = pytest.mark.slow
 
 PORT = 18231

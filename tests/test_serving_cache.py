@@ -19,8 +19,8 @@ from data_warehouse_spark.api.serving_cache import ServingCache
 from data_warehouse_spark.operators import balance_view
 from data_warehouse_spark.streaming.ingest import IngestionPipeline, warehouse_store
 
-# streaming/serving e2e tier: full-pipeline ticks / HTTP / stateful
-# streams (see pytest.ini) - deselected from the per-commit unit core
+# ingest/serving e2e tier: full-pipeline ticks / HTTP / store e2e
+# (see pytest.ini) - deselected from the per-commit unit core
 pytestmark = pytest.mark.slow
 
 

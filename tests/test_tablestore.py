@@ -113,26 +113,41 @@ def test_insert_missing_appends_into_current_version(spark, tmp_path):
     assert rows == {("A", "x"): 1, ("B", "z"): 1}
 
 
+def _read_version(spark, vdir):
+    return spark.read.schema(SCHEMA).parquet(vdir)
+
+
 def test_time_travel_reads_previous_snapshot(spark, tmp_path):
+    """Retention: a swap keeps the previous version dir on disk, readable
+    as it was, for readers that resolved it before the swap; the next swap
+    prunes it."""
     store = _store(spark, tmp_path)
-    assert store.read_previous("t") is None  # never written
     store.overwrite("t", _rows(spark, [("A", "x", 1)]))
-    assert store.read_previous("t") is None  # no snapshot before the first
+    v1 = store._resolve("t")
     store.overwrite("t", _rows(spark, [("A", "x", 2)]))
-    assert [r["v"] for r in store.read_previous("t").collect()] == [1]
+    v2 = store._resolve("t")
+    assert v2 != v1 and os.path.isdir(v1)  # survives one swap
+    assert [r["v"] for r in _read_version(spark, v1).collect()] == [1]
     assert [r["v"] for r in store.read("t").collect()] == [2]
     store.overwrite("t", _rows(spark, [("A", "x", 3)]))
-    assert [r["v"] for r in store.read_previous("t").collect()] == [2]
+    assert not os.path.exists(v1)  # pruned at the next
+    assert [r["v"] for r in _read_version(spark, v2).collect()] == [2]
 
 
 def test_time_travel_after_merge_shows_pre_merge_state(spark, tmp_path):
+    """The same retention across a copy-on-write upsert: the pre-merge
+    version dir still holds the pre-merge rows after the merge swaps, and
+    is pruned by the write after it."""
     store = _store(spark, tmp_path)
     store.overwrite("t", _rows(spark, [("A", "x", 1)]))
+    before_vdir = store._resolve("t")
     store.merge_upsert("t", _rows(spark, [("A", "x", 9), ("A", "y", 1)]), ["tenant", "name"])
     now = {(r["name"], r["v"]) for r in store.read("t").collect()}
-    before = {(r["name"], r["v"]) for r in store.read_previous("t").collect()}
+    before = {(r["name"], r["v"]) for r in _read_version(spark, before_vdir).collect()}
     assert now == {("x", 9), ("y", 1)}
     assert before == {("x", 1)}
+    store.merge_upsert("t", _rows(spark, [("A", "z", 2)]), ["tenant", "name"])
+    assert not os.path.exists(before_vdir)
 
 
 def test_append_path_compacts_small_files(spark, tmp_path):
@@ -243,15 +258,19 @@ def test_merge_delete_rewrites_only_touched_partition(spark, tmp_path):
         ["tenant", "name"],
     )
     b_before = _part_files(store, "t", "tenant=B")
+    before_vdir = store._resolve("t")
 
     n = store.merge_delete("t", _rows(spark, [("A", "x", 0)]), ["tenant", "name"])
     assert n == 1
     assert _part_files(store, "t", "tenant=B") == b_before
     rows = {(r["tenant"], r["name"]) for r in store.read("t").collect()}
     assert rows == {("A", "y"), ("B", "x")}
-    # previous snapshot still shows the deleted row until it ages out
-    prev = {(r["tenant"], r["name"]) for r in store.read_previous("t").collect()}
+    # the previous version dir still holds the deleted row until the next
+    # write prunes it
+    prev = {(r["tenant"], r["name"]) for r in _read_version(spark, before_vdir).collect()}
     assert ("A", "x") in prev
+    store.merge_delete("t", _rows(spark, [("B", "x", 0)]), ["tenant", "name"])
+    assert not os.path.exists(before_vdir)
 
 
 def test_merge_delete_is_idempotent_and_noop_safe(spark, tmp_path):
@@ -267,57 +286,6 @@ def test_merge_delete_is_idempotent_and_noop_safe(spark, tmp_path):
     assert store._resolve("t") == vdir2 != vdir
     # deleting a key that never existed is a no-op too
     assert store.merge_delete("t", _rows(spark, [("C", "q", 0)]), ["tenant", "name"]) == 0
-
-
-def test_delete_where_predicate_and_null_semantics(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    store = _store(spark, tmp_path)
-    store.merge_insert_missing(
-        "t",
-        _rows(spark, [("A", "x", 1), ("A", "y", 5), ("B", "x", 9)]),
-        ["tenant", "name"],
-    )
-    # retention expiry: drop everything with v >= 5
-    assert store.delete_where("t", F.col("v") >= 5) == 2
-    rows = {(r["tenant"], r["name"]) for r in store.read("t").collect()}
-    assert rows == {("A", "x")}
-    # nothing matches -> no new version churned
-    vdir = store._resolve("t")
-    assert store.delete_where("t", F.col("v") >= 5) == 0
-    assert store._resolve("t") == vdir
-    # survivors keep the declared hive partitioning
-    assert _part_files(store, "t", "tenant=A")
-
-
-def test_diff_previous_tags_inserts_updates_deletes(spark, tmp_path):
-    """Snapshot-diff CDC: the last write's effect as insert/delete row
-    images (an update = delete of the old image + insert of the new)."""
-    store = _store(spark, tmp_path)
-    store.merge_insert_missing(
-        "t", _rows(spark, [("A", "x", 1), ("B", "x", 1)]), ["tenant", "name"]
-    )
-    assert store.diff_previous("t") is None  # first write: nothing to diff
-
-    store.merge_upsert(
-        "t", _rows(spark, [("A", "x", 2), ("C", "q", 7)]), ["tenant", "name"]
-    )
-    changes = {
-        (r["_change"], r["tenant"], r["name"], r["v"])
-        for r in store.diff_previous("t").collect()
-    }
-    assert changes == {
-        ("delete", "A", "x", 1),  # old image of the update
-        ("insert", "A", "x", 2),  # new image of the update
-        ("insert", "C", "q", 7),  # genuine insert; untouched B absent
-    }
-
-    store.merge_delete("t", _rows(spark, [("B", "x", 0)]), ["tenant", "name"])
-    changes = {
-        (r["_change"], r["tenant"], r["name"])
-        for r in store.diff_previous("t").collect()
-    }
-    assert changes == {("delete", "B", "x")}
 
 
 def test_concurrent_merges_on_independent_tables(spark, tmp_path):
