@@ -1,9 +1,16 @@
 """Service entrypoint: the drop-in runtime shape of the reference.
 
 ``python -m data_warehouse_spark`` boots the same two loops the reference
-runs (Main.scala / boot modules): the primary-storage exploration cadence
-(2 s single-flight ticks) and the GraphQL HTTP server, with StatsD metrics
-and graceful SIGTERM shutdown.
+runs (Main.scala / boot modules): the primary-storage exploration loop
+(single-flight ticks) and the GraphQL HTTP server, with StatsD metrics and
+graceful SIGTERM shutdown.
+
+The reference ticks on a fixed 2 s timer (PrimaryDataExplorerActor.scala:
+34,43). Here a tick also starts as soon as a primary file lands: the loop
+waits on a Linux inotify watch of the tree (``sources/listing.py``
+:class:`DirWatcher`) or the timer, whichever comes first, so the interval
+is the upper bound on pick-up lag, not the lag itself. Without inotify the
+loop waits on the timer alone, as the reference does.
 
 Configuration via environment (the reference's DATA_WAREHOUSE_* convention —
 application.conf:46-111):
@@ -11,7 +18,8 @@ application.conf:46-111):
   DATA_WAREHOUSE_PRIMARY_STORAGE_PATH    primary storage root (default /data)
   DATA_WAREHOUSE_SECONDARY_STORAGE_PATH  warehouse table dir (default /warehouse)
   DATA_WAREHOUSE_HTTP_PORT               GraphQL/health port (default 8080)
-  DATA_WAREHOUSE_EXPLORATION_INTERVAL    seconds between ticks (default 2)
+  DATA_WAREHOUSE_EXPLORATION_INTERVAL    most seconds between ticks, the upper
+                                         bound on pick-up lag (default 2)
   DATA_WAREHOUSE_STATSD_ENDPOINT         host:port for metrics (off if empty)
 """
 
@@ -21,6 +29,7 @@ import logging
 import os
 import signal
 import threading
+import time
 
 log = logging.getLogger("data_warehouse_spark.service")
 
@@ -55,6 +64,10 @@ class Service:
         self.pipeline = IngestionPipeline(self.spark, self.primary_root, self.store)
         self._stop = threading.Event()
         self._ingest_thread: threading.Thread | None = None
+        # the running loop's file-event watcher; the lock keeps stop() from
+        # interrupting one the loop is closing
+        self._watcher = None
+        self._watcher_lock = threading.Lock()
 
     # --- ingestion loop (explorer actor equivalent) ---------------------
     def _ingest_loop(self) -> None:
@@ -68,21 +81,44 @@ class Service:
             )
         except Exception:  # pragma: no cover - session without a live sc
             pass
-        while not self._stop.is_set():
-            started = self._now()
-            try:
-                m = self.pipeline.run_once()
-                self.statsd.emit_tick(m)
-                self.statsd.emit_memory()
-            except Exception:  # supervisor-restart semantics: log, retry next tick
-                log.exception("exploration tick failed; will retry")
-            elapsed = self._now() - started
-            self._stop.wait(max(0.0, self.tick_seconds - elapsed))
+        watcher = self._open_watcher()
+        try:
+            while not self._stop.is_set():
+                started = self._now()
+                since_ns = time.time_ns()
+                try:
+                    m = self.pipeline.run_once()
+                    self.statsd.emit_tick(m)
+                    self.statsd.emit_memory()
+                except Exception:  # supervisor-restart semantics: log, retry next tick
+                    log.exception("exploration tick failed; will retry")
+                wait = max(0.0, self.tick_seconds - (self._now() - started))
+                if watcher is None:
+                    self._stop.wait(wait)
+                elif not watcher.sync(self.pipeline.watch_dirs(), since_ns):
+                    watcher.wait(wait)
+        finally:
+            if watcher is not None:
+                with self._watcher_lock:
+                    self._watcher = None
+                    watcher.close()
+
+    def _open_watcher(self):
+        """The loop's wake source, or None (timer only) when inotify is
+        unavailable here."""
+        from .sources.listing import DirWatcher
+
+        try:
+            watcher = DirWatcher()
+        except OSError as e:
+            log.warning("no file-event watcher (%s); ticking on the timer", e)
+            return None
+        with self._watcher_lock:
+            self._watcher = watcher
+        return watcher
 
     @staticmethod
     def _now() -> float:
-        import time
-
         return time.monotonic()
 
     def start_ingestion(self) -> None:
@@ -92,8 +128,12 @@ class Service:
         self._ingest_thread.start()
 
     def stop(self) -> None:
-        """Graceful: finish the in-flight tick, then stop (KillSwitch/D11)."""
+        """Graceful: finish the in-flight tick, then stop (KillSwitch/D11).
+        A loop waiting for its next tick wakes at once."""
         self._stop.set()
+        with self._watcher_lock:
+            if self._watcher is not None:
+                self._watcher.interrupt()
         if self._ingest_thread is not None:
             self._ingest_thread.join(timeout=60)
 

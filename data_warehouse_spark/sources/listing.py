@@ -11,11 +11,26 @@ finds the accounts whose directories changed since they were last
 examined, and rescans exactly those — snapshot and event files by name,
 never their content. Content reads happen later, against explicit path
 lists the watermark logic has pruned to O(new).
+
+:class:`DirWatcher` is the wake source beside it: a Linux inotify watch on
+the directories the cache tracks (plus the tenant and account levels
+above them), so the ingest loop can tick when a primary file lands instead
+of on the next timer beat. It only shortens the wait — a missed event costs
+at most the timer.
 """
 
 from __future__ import annotations
 
+import ctypes
+import errno
+import logging
+import math
 import os
+import select
+import struct
+import time
+
+log = logging.getLogger(__name__)
 
 
 # --- per-directory mtime watermark cache (idle ticks O(changed dirs)) --------
@@ -182,3 +197,178 @@ class ListingCache:
             state = self._accounts.get(key)
             if state is not None:
                 state[1] = key in active
+
+    def watch_dirs(self, root: str) -> set[str]:
+        """Every directory whose new entries can change a tick: the root
+        (new tenants), each tenant dir and its ``account/`` dir (new
+        accounts), each account dir (a new ``snapshot/`` or ``events/``)
+        and every dir the mtime sweep tracks."""
+        out = {root}
+        for tenant in self._parents:
+            tdir = os.path.join(root, f"t_{tenant}")
+            out.add(tdir)
+            out.add(os.path.join(tdir, "account"))
+        for (tenant, account), (dirs, _pending) in self._accounts.items():
+            out.add(os.path.join(root, f"t_{tenant}", "account", account))
+            out.update(dirs)
+        return out
+
+
+# --- inotify wake source (Linux, through ctypes; no package needed) ----------
+IN_CLOSE_WRITE = 0x00000008
+IN_MOVED_TO = 0x00000080
+IN_CREATE = 0x00000100
+IN_MOVE_SELF = 0x00000800
+IN_Q_OVERFLOW = 0x00004000
+IN_IGNORED = 0x00008000
+IN_ONLYDIR = 0x01000000
+IN_ISDIR = 0x40000000
+_WATCH_MASK = IN_CLOSE_WRITE | IN_MOVED_TO | IN_CREATE | IN_MOVE_SELF | IN_ONLYDIR
+_EVENT = struct.Struct("iIII")  # wd, mask, cookie, len (then len name bytes)
+
+# a wake is debounced: events are drained until the tree has been quiet for
+# QUIET_S, but no longer than DEBOUNCE_CAP_S after the first one, so a
+# burst of files coalesces into one tick
+QUIET_S = 0.02
+DEBOUNCE_CAP_S = 0.2
+# a directory first watched after a tick began may have had entries land
+# before its watch existed; its mtime (coarse-clock, so allow some slack)
+# tells. A miss here would only cost the timer.
+_MTIME_SLACK_NS = 50_000_000
+
+
+class DirWatcher:
+    """Linux inotify over a growing set of directories, plus a self-pipe
+    that :meth:`interrupt` writes, both waited on in one ``poll``.
+
+    It wakes on ``IN_CLOSE_WRITE`` / ``IN_MOVED_TO`` (a file is complete),
+    on ``IN_CREATE`` of a directory only (a created file may still be
+    half-written; its close follows) and on ``IN_Q_OVERFLOW`` (events were
+    dropped). Correctness never depends on it: the tick is a pure function
+    of (tree, account marks) and the listing cache's mtime guard re-examines
+    recently touched dirs, so a missed event costs at most the timer.
+
+    Raises :class:`OSError` when inotify is unavailable (non-Linux host,
+    instance limit); the caller then waits on the timer alone. A watch that
+    cannot be added is left to the timer too: a vanished dir is skipped,
+    and a full watch table (``ENOSPC``) stops further adds.
+    """
+
+    def __init__(self) -> None:
+        try:
+            libc = ctypes.CDLL(None, use_errno=True)
+            init1 = libc.inotify_init1
+            self._add = libc.inotify_add_watch
+            self._rm = libc.inotify_rm_watch
+        except (OSError, TypeError, AttributeError) as e:  # no inotify here
+            raise OSError(errno.ENOSYS, "inotify unavailable") from e
+        init1.argtypes, init1.restype = [ctypes.c_int], ctypes.c_int
+        self._add.argtypes = [ctypes.c_int, ctypes.c_char_p, ctypes.c_uint32]
+        self._add.restype = ctypes.c_int
+        self._rm.argtypes, self._rm.restype = [ctypes.c_int, ctypes.c_int], ctypes.c_int
+        fd = init1(os.O_NONBLOCK | os.O_CLOEXEC)
+        if fd < 0:
+            err = ctypes.get_errno()
+            raise OSError(err, os.strerror(err))
+        self._fd = fd
+        self._pipe_r, self._pipe_w = os.pipe()
+        self._poll = select.poll()
+        for f in (fd, self._pipe_r):
+            self._poll.register(f, select.POLLIN)
+        self._paths: dict[str, int] = {}  # watched path -> wd
+        self._wds: dict[int, str] = {}
+        self._full = False
+
+    def __len__(self) -> int:
+        return len(self._paths)
+
+    def sync(self, paths, since_ns: int) -> bool:
+        """Watch every path in ``paths`` not yet watched. True when a newly
+        watched dir changed at or after ``since_ns`` (the start of the tick
+        that listed it): an entry landed before its watch existed, so the
+        loop should tick again now."""
+        changed = False
+        for path in paths:
+            if self._full:
+                break
+            if path in self._paths:
+                continue
+            wd = self._add(self._fd, os.fsencode(path), _WATCH_MASK)
+            if wd < 0:
+                err = ctypes.get_errno()
+                if err in (errno.ENOSPC, errno.ENOMEM):
+                    log.warning(
+                        "inotify watch table full at %d watches; "
+                        "unwatched dirs wait for the timer", len(self._paths)
+                    )
+                    self._full = True
+                continue  # vanished / not a dir / no access: timer only
+            self._paths[path] = wd
+            self._wds[wd] = path
+            try:
+                changed |= os.stat(path).st_mtime_ns >= since_ns - _MTIME_SLACK_NS
+            except OSError:
+                pass
+        return changed
+
+    def _drain(self) -> bool:
+        """Read every queued event; True when one of them should wake."""
+        wake = False
+        while True:
+            try:
+                buf = os.read(self._fd, 65536)
+            except BlockingIOError:
+                return wake
+            off = 0
+            while off < len(buf):
+                wd, mask, _cookie, n = _EVENT.unpack_from(buf, off)
+                off += _EVENT.size + n
+                if mask & (IN_CLOSE_WRITE | IN_MOVED_TO | IN_Q_OVERFLOW):
+                    wake = True
+                elif mask & IN_CREATE and mask & IN_ISDIR:
+                    wake = True
+                if mask & (IN_IGNORED | IN_MOVE_SELF):
+                    # the dir is gone or moved: forget it so a dir created
+                    # again at the same path is watched again
+                    path = self._wds.pop(wd, None)
+                    if path is not None:
+                        self._paths.pop(path, None)
+                        if mask & IN_MOVE_SELF:
+                            self._rm(self._fd, wd)
+
+    def _ready(self, timeout: float) -> tuple[bool, bool]:
+        """(an inotify event is queued, interrupted) after waiting at most
+        ``timeout`` seconds."""
+        ready = {f for f, _ev in self._poll.poll(math.ceil(timeout * 1000))}
+        return self._fd in ready, self._pipe_r in ready
+
+    def wait(self, timeout: float) -> bool:
+        """Block until a debounced file event (True), the timeout or an
+        :meth:`interrupt` (False)."""
+        deadline = time.monotonic() + timeout
+        while True:
+            left = deadline - time.monotonic()
+            if left <= 0:
+                return False
+            event, interrupted = self._ready(left)
+            if interrupted:
+                return False
+            if event and self._drain():
+                break
+        cap = time.monotonic() + DEBOUNCE_CAP_S
+        while True:
+            quiet = min(QUIET_S, cap - time.monotonic())
+            if quiet <= 0:
+                return True
+            event, interrupted = self._ready(quiet)
+            if not event or interrupted:
+                return True
+            self._drain()
+
+    def interrupt(self) -> None:
+        """Make a pending or the next :meth:`wait` return at once."""
+        os.write(self._pipe_w, b"x")
+
+    def close(self) -> None:
+        for fd in (self._fd, self._pipe_r, self._pipe_w):
+            os.close(fd)

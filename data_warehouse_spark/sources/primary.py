@@ -135,13 +135,18 @@ def read_account_meta_rows(paths: list[str]) -> list[tuple[str, str, str, str]]:
     concurrent serving load (GIL-stretched driver coordination) vs ~50 ms
     of direct reads. Semantics identical to the Spark form, pinned by
     test_ingest: same framing bound on EVERY line (FramingException),
-    same substring parse, same path-derived tenant/account."""
+    same substring parse, same path-derived tenant/account. An empty
+    file yields no row, as Spark's text source does: it is a meta still
+    being written, and the tick leaves its account pending instead of
+    storing an empty currency and format."""
     import re
 
     out = []
     for p in paths:
         with open(p, "rb") as fh:
             text = fh.read().decode("utf-8", errors="replace")
+        if not text:
+            continue
         lines = text.split("\n")
         if any(len(line.encode("utf-8")) > MAX_LINE_BYTES for line in lines):
             raise ValueError(

@@ -67,14 +67,15 @@ drop the duplicates — the same guarantee the reference gets from ON CONFLICT
 DO NOTHING. A failed tick (a KV-marks lookup refused twice included) leaves
 every account it examined pending, so the next tick examines it again.
 
-``run_forever`` wraps ``run_once`` in the 2 s single-flight cadence
-(Trigger.ProcessingTime semantics; the reference's Lock/Free actor gives the
-same ≤1-in-flight property — PrimaryDataExplorerActor.scala:34-127).
+The cadence lives in ``Service._ingest_loop`` (service.py): one thread, so
+ticks never overlap (the reference's Lock/Free actor gives the same
+≤1-in-flight property — PrimaryDataExplorerActor.scala:34-127), woken when a
+primary file lands (:meth:`IngestionPipeline.watch_dirs` names the dirs to
+watch) and at the latest by its timer.
 """
 
 from __future__ import annotations
 
-import logging
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -299,6 +300,11 @@ class IngestionPipeline:
             "spark.scheduler.pool", "ingest"
         )
         return fn(*args, **kwargs)
+
+    def watch_dirs(self) -> set[str]:
+        """The primary-storage dirs whose new entries can change a tick
+        (``ListingCache.watch_dirs``) — what the ingest loop watches."""
+        return self._cache.watch_dirs(self.root)
 
     def run_once(self) -> TickMetrics:
         m = TickMetrics()
@@ -782,23 +788,3 @@ class IngestionPipeline:
         finally:
             if prep is not None and not committed:
                 store.merge_upsert_abort(prep)
-
-    # ------------------------------------------------------------------
-    def run_forever(self, tick_seconds: float = 2.0, max_ticks: int | None = None):
-        """The reference's 2 s single-flight cadence (D12). Ticks never
-        overlap; a failed tick is logged and the next one retries (the
-        supervisor-restart behavior). :class:`InvariantViolation` (D8) is the
-        one fatal case — it propagates so the outer supervisor decides."""
-        n = 0
-        while max_ticks is None or n < max_ticks:
-            started = time.monotonic()
-            try:
-                yield self.run_once()
-            except InvariantViolation:
-                raise
-            except Exception:  # noqa: BLE001 — supervisor semantics: log, retry next tick
-                logging.getLogger(__name__).exception("ingestion tick failed; retrying next tick")
-            n += 1
-            elapsed = time.monotonic() - started
-            if max_ticks is None or n < max_ticks:
-                time.sleep(max(0.0, tick_seconds - elapsed))

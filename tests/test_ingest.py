@@ -496,8 +496,9 @@ def test_listing_cache_matches_uncached_pipeline(spark, tmp_path):
 def test_driver_side_file_readers_match_spark_parsers(spark, tmp_path):
     """read_account_meta_rows / read_account_event_rows are the driver/
     executor twins of the Spark text parses (S4/S5) — row-identical on
-    tricky shapes: empty hint segment, embedded underscores, non-integer
-    fields (cast → NULL), and the 256-byte framing bound raising."""
+    tricky shapes: an empty meta file, empty hint segment, embedded
+    underscores, non-integer fields (cast → NULL), and the 256-byte
+    framing bound raising."""
     import pytest as _pytest
 
     from data_warehouse_spark.sources import primary
@@ -508,6 +509,7 @@ def test_driver_side_file_readers_match_spark_parsers(spark, tmp_path):
         ("T1", "A1", "CZK FORMAT_X\n"),
         ("T1", "A_2", "EUR F\n"),
         ("T2", "B", "USD LONGER_FORMAT_NAME\nsecond line\n"),
+        ("T2", "EMPTY", ""),  # still being written: no row on either path
     ]:
         p = os.path.join(root, f"t_{tenant}", "account", acc, "snapshot", "0000000000")
         write(p, content)

@@ -13,7 +13,8 @@ import pytest
 import os
 import time
 
-from data_warehouse_spark.sources.listing import ListingCache
+from data_warehouse_spark.sources import listing
+from data_warehouse_spark.sources.listing import DirWatcher, ListingCache
 
 # ingest/serving e2e tier: full-pipeline ticks / HTTP / store e2e
 # (see pytest.ini) - deselected from the per-commit unit core
@@ -144,3 +145,100 @@ def test_account_names_cached_when_parent_unchanged(tmp_path):
     assert sorted(cache._account_names(root, "A", now)) == ["acc1", "acc2"]
     # parent unchanged → cached key set, no scandir needed
     assert sorted(cache._account_names(root, "A", now)) == ["acc1", "acc2"]
+
+
+def test_watch_dirs_cover_every_level_a_tick_lists(tmp_path):
+    """The watched set: the root, each tenant and its account/ dir, each
+    account dir, and every dir the mtime sweep tracks."""
+    root = str(tmp_path)
+    _mk(root, "T", "A", events={0: ["1__X"]})
+    _age(root)
+    c = ListingCache()
+    for key in c.sweep(root, ["T"], time.time_ns()):
+        c.rescan_account(root, *key, time.time_ns())
+    adir = os.path.join(root, "t_T", "account", "A")
+    assert c.watch_dirs(root) == {
+        root,
+        os.path.join(root, "t_T"),
+        os.path.join(root, "t_T", "account"),
+        adir,
+        os.path.join(adir, "snapshot"),
+        os.path.join(adir, "events"),
+        os.path.join(adir, "events", "0000000000"),
+    }
+
+
+def test_dir_watcher_wakes_on_complete_files_and_new_dirs(tmp_path):
+    """A created file does not wake (it may be half-written); its close
+    does, and so does a new dir. A newly watched dir that changed since
+    the tick began asks for a tick at once; a vanished one is skipped."""
+    root = str(tmp_path)
+    w = DirWatcher()
+    try:
+        since = time.time_ns()
+        assert w.sync([root, os.path.join(root, "gone")], since) is True
+        assert len(w) == 1
+        assert w.sync([root], since) is False  # already watched
+
+        fh = open(os.path.join(root, "f"), "w")
+        assert w.wait(0.2) is False  # open alone: no wake
+        fh.write("1\n")
+        fh.close()
+        t0 = time.monotonic()
+        assert w.wait(5) is True
+        assert time.monotonic() - t0 < 1.0
+
+        os.mkdir(os.path.join(root, "sub"))
+        assert w.wait(5) is True
+        sub = os.path.join(root, "sub")
+        old = time.time() - 10
+        os.utime(sub, (old, old))
+        assert w.sync([sub], time.time_ns()) is False  # quiet since: no re-tick
+        os.rmdir(sub)  # its watch is dropped, so a new sub is watched anew
+        assert w.wait(0.2) is False
+        assert len(w) == 1
+
+        w.interrupt()
+        t0 = time.monotonic()
+        assert w.wait(30) is False
+        assert time.monotonic() - t0 < 0.5
+    finally:
+        w.close()
+
+
+def test_dir_watcher_coalesces_a_burst(tmp_path):
+    """A burst of files closing within the quiet window is one wake."""
+    root = str(tmp_path)
+    w = DirWatcher()
+    try:
+        w.sync([root], 0)
+        for i in range(50):
+            with open(os.path.join(root, f"f{i}"), "w") as fh:
+                fh.write("x")
+        assert w.wait(5) is True
+        assert w.wait(0.1) is False  # nothing left queued
+    finally:
+        w.close()
+
+
+@pytest.mark.parametrize("mask, wakes", [
+    (listing.IN_Q_OVERFLOW, True),  # events were dropped: tick
+    (listing.IN_CLOSE_WRITE, True),
+    (listing.IN_MOVED_TO, True),
+    (listing.IN_CREATE | listing.IN_ISDIR, True),
+    (listing.IN_CREATE, False),  # a file may still be half-written
+])
+def test_dir_watcher_wake_rule(mask, wakes):
+    """Which queued inotify events wake the loop, fed as raw records."""
+    w = DirWatcher()
+    r, wr = os.pipe()
+    os.set_blocking(r, False)
+    real, w._fd = w._fd, r
+    try:
+        os.write(wr, listing._EVENT.pack(-1, mask, 0, 4) + b"f\0\0\0")
+        assert w._drain() is wakes
+    finally:
+        w._fd = real
+        os.close(r)
+        os.close(wr)
+        w.close()

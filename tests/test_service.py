@@ -16,7 +16,9 @@ import pytest
 
 from data_warehouse_spark.metrics import StatsD
 from data_warehouse_spark.service import Service
+from data_warehouse_spark.sources import listing
 
+from .test_arrow_commit import _assert_exact, _Tree
 from .test_ingest import write
 
 # ingest/serving e2e tier: full-pipeline ticks / HTTP / store e2e
@@ -194,3 +196,185 @@ def test_management_stop_start_restart(spark, tmp_path):
     assert json.loads(client.get("/health").data)["healthy"] is True
     svc.stop()
     assert not svc._ingest_thread.is_alive()
+
+
+class _TickLog:
+    """Wraps a pipeline's ``run_once``: records each tick's start and end
+    (monotonic) and how many transfers it committed (None: it failed)."""
+
+    def __init__(self, pipeline):
+        self.cond = threading.Condition()
+        self.ticks: list[tuple[float, float, int | None]] = []
+        self.running = False
+        inner = pipeline.run_once
+
+        def run_once():
+            with self.cond:
+                self.running = True
+            start, found = time.monotonic(), None
+            try:
+                m = inner()
+                found = m.transfers_discovered
+                return m
+            finally:
+                with self.cond:
+                    self.running = False
+                    self.ticks.append((start, time.monotonic(), found))
+                    self.cond.notify_all()
+
+        pipeline.run_once = run_once
+
+    def wait_for(self, pred, timeout: float) -> None:
+        with self.cond:
+            assert self.cond.wait_for(lambda: pred(self.ticks), timeout), self.ticks
+
+    def started_after(self, t: float, timeout: float = 20.0) -> None:
+        """Block until a tick that started after ``t`` has ended."""
+        self.wait_for(lambda ticks: any(s > t for s, _e, _f in ticks), timeout)
+
+    def quiet(self, seconds: float, timeout: float = 30.0) -> None:
+        """Block until no tick has run or ended for ``seconds``."""
+        deadline = time.monotonic() + timeout
+        while time.monotonic() < deadline:
+            with self.cond:
+                last = self.ticks[-1][1] if self.ticks else 0.0
+                if not self.running and time.monotonic() - last >= seconds:
+                    return
+            time.sleep(0.05)
+        raise AssertionError(f"ticks never went quiet: {self.ticks[-5:]}")
+
+
+def _event_service(spark, tmp_path, tick_seconds: float):
+    tree = _Tree(str(tmp_path / "data"))
+    for a in ("A", "B", "C"):
+        tree.account("T1", a)
+    tree.transfer("T1", "A", "B", "1.50")
+    tree.backdate()
+    svc = Service(
+        spark=spark,
+        primary_root=tree.root,
+        warehouse_root=str(tmp_path / "wh"),
+        http_port=0,
+        tick_seconds=tick_seconds,
+        statsd=StatsD(endpoint=""),  # disabled
+    )
+    return tree, svc, _TickLog(svc.pipeline)
+
+
+def test_landed_transaction_wakes_the_tick(spark, tmp_path):
+    """With a 30 s timer, a transaction landed after the first tick is
+    committed within a few seconds: only a file event can start that tick.
+    stop() then returns at once, while the loop waits on the timer."""
+    tree, svc, log = _event_service(spark, tmp_path, tick_seconds=30)
+    svc.start_ingestion()
+    try:
+        log.wait_for(lambda ticks: len(ticks) >= 1, 120)
+        log.quiet(0.5)
+        landed = time.monotonic()
+        tree.transfer("T1", "C", "A", "2.25")
+        log.wait_for(lambda ticks: any(f for s, _e, f in ticks if s > landed), 10)
+        picked = next(e for s, e, f in log.ticks if s > landed and f)
+        assert picked - landed < 5.0, log.ticks
+        log.quiet(0.5)
+        assert len(svc._watcher) > 0
+        _assert_exact(svc.store, tree)
+        started = time.monotonic()
+        svc.stop()
+        assert time.monotonic() - started < 0.5
+    finally:
+        svc.stop()
+    assert not svc._ingest_thread.is_alive()
+    assert svc._watcher is None  # the loop closed its inotify fd
+
+
+def test_timer_ticks_without_a_watcher(spark, tmp_path, monkeypatch):
+    """An event-less filesystem: when inotify cannot be set up, the loop
+    ticks on the timer alone, as the reference does, and still ingests."""
+
+    class Unavailable:
+        def __init__(self):
+            raise OSError(38, "inotify unavailable")
+
+    monkeypatch.setattr(listing, "DirWatcher", Unavailable)
+    tree, svc, log = _event_service(spark, tmp_path, tick_seconds=0.5)
+    svc.start_ingestion()
+    try:
+        log.wait_for(lambda ticks: len(ticks) >= 3, 120)
+        assert svc._watcher is None
+        landed = time.monotonic()
+        tree.transfer("T1", "C", "A", "2.25")
+        log.wait_for(lambda ticks: any(f for s, _e, f in ticks if s > landed), 20)
+        # idle ticks follow each other at the timer's pace
+        log.wait_for(lambda ticks: sum(s > landed for s, _e, _f in ticks) >= 4, 20)
+        starts = [s for s, _e, _f in log.ticks if s > landed]
+        assert min(b - a for a, b in zip(starts, starts[1:])) > 0.4, starts
+        _assert_exact(svc.store, tree)
+    finally:
+        svc.stop()
+    assert not svc._ingest_thread.is_alive()
+
+
+class _HalfWrittenTree(_Tree):
+    """Writes every file in three steps a tick apart: open (an empty file
+    lands), write, close. The close of one file is the event that wakes
+    the tick which finds the next one still empty."""
+
+    def __init__(self, root: str, log: _TickLog):
+        super().__init__(root)
+        self.log = log
+        self.open_file = None
+
+    def _close(self) -> bool:
+        """Close the file left open; True when that wakes a tick. A
+        transaction file does not: it is read only once an event names
+        it, so its dir is not watched."""
+        fh, self.open_file = self.open_file, None
+        if fh is None:
+            return False
+        fh.close()
+        return "/transaction/" not in fh.name
+
+    def finish(self) -> None:
+        """Close the last file; wait for a tick that saw it closed."""
+        if self._close():
+            self.log.started_after(time.monotonic())
+
+    def _write(self, rel: str, content: str) -> str:
+        path = os.path.join(self.root, rel)
+        wakes = not os.path.isdir(os.path.dirname(path))  # a new dir wakes
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        fh = open(path, "w")
+        opened = time.monotonic()
+        if self._close() or wakes:
+            self.log.started_after(opened)  # this tick finds `path` empty
+        fh.write(content)
+        fh.flush()  # complete but not closed through the next tick
+        self.open_file = fh
+        return path
+
+
+def test_half_written_files_across_event_ticks_ingest_exactly(spark, tmp_path):
+    """Files written non-atomically while event-driven ticks run: an empty
+    event file fails its tick and an empty snapshot meta defers its
+    account; each examined account stays pending, so a retry picks it up.
+    The tables end equal to the tree's ground truth — no transfer lost or
+    duplicated, every marker exact."""
+    seed, svc, log = _event_service(spark, tmp_path, tick_seconds=30)
+    svc.start_ingestion()
+    try:
+        log.wait_for(lambda ticks: len(ticks) >= 1, 120)
+        log.quiet(0.5)
+        tree = _HalfWrittenTree(seed.root, log)
+        tree.versions, tree.transfers, tree.n = seed.versions, seed.transfers, seed.n
+        burst = time.monotonic()
+        tree.account("T1", "NEW")
+        tree.transfer("T1", "NEW", "A", "10")
+        tree.transfer("T1", "B", "C", "0.5")
+        tree.transfer("T1", "C", "NEW", "7.75")
+        tree.finish()
+        failed = [s for s, _e, f in log.ticks if s > burst and f is None]
+        assert failed, "no tick read an event file mid-write"
+        log.quiet(0.5)
+        _assert_exact(svc.store, tree)
+    finally:
+        svc.stop()
