@@ -286,7 +286,7 @@ class DirWatcher:
         """Watch every path in ``paths`` not yet watched. True when a newly
         watched dir changed at or after ``since_ns`` (the start of the tick
         that listed it): an entry landed before its watch existed, so the
-        loop should tick again now."""
+        loop should tick again without waiting for an event."""
         changed = False
         for path in paths:
             if self._full:
@@ -364,6 +364,13 @@ class DirWatcher:
             if not event or interrupted:
                 return True
             self._drain()
+
+    def hold(self, seconds: float) -> bool:
+        """Sleep ``seconds`` without reacting to file events (they stay
+        queued for the next :meth:`wait`); False when interrupted."""
+        if seconds <= 0:
+            return True
+        return not select.select([self._pipe_r], [], [], seconds)[0]
 
     def interrupt(self) -> None:
         """Make a pending or the next :meth:`wait` return at once."""

@@ -221,6 +221,30 @@ def test_dir_watcher_coalesces_a_burst(tmp_path):
         w.close()
 
 
+def test_dir_watcher_hold_keeps_events_queued(tmp_path):
+    """A hold sleeps through file events, which stay queued for the next
+    wait; an interrupt ends it at once."""
+    root = str(tmp_path)
+    w = DirWatcher()
+    try:
+        w.sync([root], 0)
+        with open(os.path.join(root, "f"), "w") as fh:
+            fh.write("x")
+        t0 = time.monotonic()
+        assert w.hold(0.3) is True
+        assert time.monotonic() - t0 >= 0.3
+        t0 = time.monotonic()
+        assert w.wait(5) is True  # the queued close
+        assert time.monotonic() - t0 < 1.0
+        assert w.hold(0) is True
+        w.interrupt()
+        t0 = time.monotonic()
+        assert w.hold(30) is False
+        assert time.monotonic() - t0 < 0.5
+    finally:
+        w.close()
+
+
 @pytest.mark.parametrize("mask, wakes", [
     (listing.IN_Q_OVERFLOW, True),  # events were dropped: tick
     (listing.IN_CLOSE_WRITE, True),

@@ -14,6 +14,7 @@ import urllib.request
 
 import pytest
 
+from data_warehouse_spark import service
 from data_warehouse_spark.metrics import StatsD
 from data_warehouse_spark.service import Service
 from data_warehouse_spark.sources import listing
@@ -285,6 +286,30 @@ def test_landed_transaction_wakes_the_tick(spark, tmp_path):
         svc.stop()
     assert not svc._ingest_thread.is_alive()
     assert svc._watcher is None  # the loop closed its inotify fd
+
+
+def test_event_ticks_keep_the_minimum_gap(spark, tmp_path):
+    """A steady trickle of writes, a transfer every 0.1 s for 3 s on a 30 s
+    timer: event-started ticks begin MIN_TICK_GAP_S apart or more, so the
+    trickle commits a few times, not once per file, and all of it lands."""
+    tree, svc, log = _event_service(spark, tmp_path, tick_seconds=30)
+    svc.start_ingestion()
+    try:
+        log.wait_for(lambda ticks: len(ticks) >= 1, 120)
+        log.quiet(0.5)
+        landed = time.monotonic()
+        for i in range(30):
+            time.sleep(0.1)
+            tree.transfer("T1", "ABC"[i % 3], "ABC"[(i + 1) % 3], "0.10")
+        log.started_after(time.monotonic())  # the last file's close wakes it
+        log.quiet(service.MIN_TICK_GAP_S + 0.5)
+        starts = [s for s, _e, _f in log.ticks]
+        assert min(b - a for a, b in zip(starts, starts[1:])) > service.MIN_TICK_GAP_S - 0.05
+        assert sum(s > landed for s in starts) <= 3 / service.MIN_TICK_GAP_S + 3, log.ticks
+        _assert_exact(svc.store, tree)
+    finally:
+        svc.stop()
+    assert not svc._ingest_thread.is_alive()
 
 
 def test_timer_ticks_without_a_watcher(spark, tmp_path, monkeypatch):
