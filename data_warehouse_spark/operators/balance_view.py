@@ -48,7 +48,8 @@ rows.
 
 Write amplification (the partitioned-MERGE scale path): the rollup is
 stored tenant-partitioned, and the delta path MERGEs only the changed
-groups through ``TableStore.merge_upsert`` — copy-on-write rewrites the
+tenants' groups (``TableStore.merge_upsert_prepare`` / ``merge_upsert``)
+— copy-on-write rewrites the
 tenant partitions the tick touched and hard-links every other tenant's
 files unchanged — plus a ``merge_delete`` of groups whose row count
 reached zero (impossible under the append-only change table, carried
@@ -73,10 +74,14 @@ import os
 import threading
 import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources import arrow_parts, tables
 from . import ivm
 
 # Guards lazy installation of ``store._fp_locks`` for store objects that
@@ -442,11 +447,15 @@ def maintain(
     the window path can serve; a broken window (compaction, foreign
     write) always converges immediately.
 
-    The delta path is a partitioned MERGE: only the groups the window's
-    files touch are upserted, so copy-on-write rewrites only the
-    touched tenant partitions (file-pinned in tests/test_balance_view.py);
-    zero-count groups are merge-deleted (CDC generality — unreachable
-    under the append-only change table)."""
+    The delta path is a partitioned MERGE: only the tenants the window's
+    files touch are upserted, so copy-on-write rewrites only the touched
+    tenant partitions (file-pinned in tests/test_balance_view.py). While
+    the window's files hold at most ``tables.ARROW_COMMIT_MAX_ROWS`` rows
+    it runs with no Spark job (:func:`_arrow_delta`), as does the full
+    recompute over a change table that size (:func:`_arrow_rollup`);
+    above it the Spark forms run (:func:`_spark_delta`, which also
+    merge-deletes zero-count groups — CDC generality, unreachable under
+    the append-only change table)."""
     fp_now = abc_fingerprint(store)
     if fp_now is None:
         return "noop"  # no changes ever: serving falls back to the empty direct agg
@@ -457,8 +466,6 @@ def maintain(
     if rollup_intact and st["abc"] == fp_now:
         return "noop"
 
-    spark = store.spark
-    sum_t = ROLLUP_SCHEMA["sum_amount"].dataType
     delta_files: list[str] | None = None
     win = stale_window(store) if rollup_intact else None
     if win is not None:
@@ -477,46 +484,9 @@ def maintain(
         # part files are precisely what the merge added
         delta_files = list(adopted_files)
     if delta_files:
-        # exact file-level CDC over the appended files.  basePath
-        # recovers the tenant partition column from the directory names —
-        # derived from the delta files themselves, NOT the current
-        # pointer: a compaction inside the merge swaps a new version dir
-        # while the adopted files live in the (still retained) one they
-        # were adopted into.  The delta stays exact through that:
-        # compaction rewrites files, not rows.
         try:
-            cdc = (
-                spark.read.option("basePath", _version_root(delta_files[0]))
-                .schema(store.schemas[ABC_TABLE])
-                .parquet(*delta_files)
-                .withColumn(ivm.CHANGE_COL, F.lit("insert"))
-            )
-            delta = ivm.cdc_delta(cdc, GROUP_COLS, SUM_COLS)
-            # restrict the old side to the touched GROUPS (null-safe semi
-            # join) so the upsert batch is O(changed groups); the literal
-            # tenant IN-list prunes the rollup scan to touched partitions
-            touched_tenants = [r[0] for r in delta.select("tenant").distinct().collect()]
-            old = store.read(ROLLUP_TABLE).filter(
-                store._partition_filter("tenant", touched_tenants)
-            )
-            keys = delta.select(*GROUP_COLS)
-            old_touched = old.join(
-                F.broadcast(keys), store._key_cond(old, keys, GROUP_COLS), "left_semi"
-            )
-            merged = ivm.apply_delta(
-                old_touched, delta, GROUP_COLS, SUM_COLS, drop_empty=False
-            ).persist()
-            try:
-                upserts = merged.filter(F.col("n_rows") > 0).withColumn(
-                    "sum_amount", F.col("sum_amount").cast(sum_t)
-                )
-                doomed = merged.filter(F.col("n_rows") <= 0).select(*GROUP_COLS)
-                store.merge_upsert(ROLLUP_TABLE, upserts, GROUP_COLS)
-                # doomed is computed from the persisted `merged` (its plan
-                # reads the PRE-upsert rollup version, still retained)
-                store.merge_delete(ROLLUP_TABLE, doomed, GROUP_COLS)
-            finally:
-                merged.unpersist()
+            if not _arrow_delta(store, delta_files):
+                _spark_delta(store, delta_files)
             _write_state(store, fp_now)
             return "delta"
         except Exception:
@@ -524,11 +494,160 @@ def maintain(
             # the recompute below (self-healing) rather than failing the
             # ingestion tick that hosts the maintenance
             pass
-    new_rollup = ivm.compute_rollup(store.read(ABC_TABLE), GROUP_COLS, SUM_COLS)
-    store.overwrite(ROLLUP_TABLE, new_rollup.withColumn(
-        "sum_amount", F.col("sum_amount").cast(sum_t)))
+    new_rollup = _arrow_rollup(store)
+    if new_rollup is None:
+        new_rollup = ivm.compute_rollup(
+            store.read(ABC_TABLE), GROUP_COLS, SUM_COLS
+        ).withColumn(
+            "sum_amount", F.col("sum_amount").cast(ROLLUP_SCHEMA["sum_amount"].dataType)
+        )
+    store.overwrite(ROLLUP_TABLE, new_rollup)
     _write_state(store, fp_now)
     return "recompute"
+
+
+# the rollup's columns as the pyarrow group-by builds them: group keys
+# nullable (Spark reads them back so), counts never NULL, a sum NULL for a
+# group without a non-NULL amount
+_SUM_T = arrow_parts.arrow_type(ROLLUP_SCHEMA["sum_amount"].dataType)
+_ARROW_ROLLUP = pa.schema([
+    pa.field("tenant", pa.string()),
+    pa.field("name", pa.string()),
+    pa.field("n_rows", pa.int64(), False),
+    pa.field("nn_amount", pa.int64(), False),
+    pa.field("sum_amount", _SUM_T),
+])
+
+
+def _arrow_sums(files) -> pa.Table:
+    """``ivm.compute_rollup`` over the change rows of ``files`` (path, dir
+    partition values, footer) as a pyarrow group-by: ``name`` and
+    ``amount`` read from each file, ``tenant`` from its dir when the table
+    is partitioned by it, ``amount`` widened to decimal(38,10) before the
+    sum, as Spark's SUM widens it."""
+    rows = arrow_parts.read_rows(files, pa.schema([
+        pa.field("tenant", pa.string()),
+        pa.field("name", pa.string()),
+        pa.field("amount", _SUM_T),
+    ]))
+    agg = rows.group_by(GROUP_COLS, use_threads=False).aggregate([
+        ([], "count_all"),
+        ("amount", "count"),
+        ("amount", "sum", pc.ScalarAggregateOptions(min_count=1)),
+    ])
+    return pa.Table.from_arrays(
+        [agg["tenant"], agg["name"], agg["count_all"], agg["amount_count"],
+         agg["amount_sum"]],
+        schema=_ARROW_ROLLUP,
+    )
+
+
+def _footers(files) -> tuple[list, int]:
+    """``files`` (path, dir partition values) with their footers, and the
+    rows they hold."""
+    out = [(path, fixed, pq.read_metadata(path)) for path, fixed in files]
+    return out, sum(md.num_rows for *_, md in out)
+
+
+def _arrow_rollup(store) -> pa.Table | None:
+    """The rollup of the whole change table by :func:`_arrow_sums`, or None
+    when its files hold more than ``tables.ARROW_COMMIT_MAX_ROWS`` rows
+    (footer counts)."""
+    vdir = store._resolve(ABC_TABLE)
+    files, n = _footers(store._arrow_files(ABC_TABLE, vdir, None))
+    return None if n > tables.ARROW_COMMIT_MAX_ROWS else _arrow_sums(files)
+
+
+def _arrow_delta(store, delta_files: list[str]) -> bool:
+    """Fold the appended change files into the rollup with pyarrow: their
+    per-group sums plus the touched tenants' rollup rows, summed again per
+    group (every measure adds up over an append-only window), upserted
+    through ``merge_upsert_prepare`` — which rewrites the touched tenant
+    partitions and links the rest. False, having written nothing, when the
+    files hold more than ``tables.ARROW_COMMIT_MAX_ROWS`` rows or the
+    upsert cannot be staged partition-pruned."""
+    pcols = store.partitions.get(ABC_TABLE, [])
+    files, n = _footers(
+        (path, {
+            c: v for c, v in arrow_parts.dir_values(
+                os.path.relpath(path, _version_root(path))
+            ).items() if c in pcols
+        })
+        for path in delta_files
+    )
+    if n > tables.ARROW_COMMIT_MAX_ROWS:
+        return False
+    delta = _arrow_sums(files)
+    tenants = sorted(set(delta["tenant"].to_pylist()), key=str)
+    rdir = store._resolve(ROLLUP_TABLE)
+    old = [
+        (path, fixed, None)
+        for path, fixed in (store._arrow_files(ROLLUP_TABLE, rdir, tenants) if rdir else [])
+    ]
+    agg = pa.concat_tables([arrow_parts.read_rows(old, _ARROW_ROLLUP), delta]).group_by(
+        GROUP_COLS, use_threads=False
+    ).aggregate([
+        ("n_rows", "sum"),
+        ("nn_amount", "sum"),
+        ("sum_amount", "sum", pc.ScalarAggregateOptions(min_count=1)),
+    ])
+    merged = pa.Table.from_arrays(
+        [agg["tenant"], agg["name"], agg["n_rows_sum"], agg["nn_amount_sum"],
+         agg["sum_amount_sum"]],
+        schema=_ARROW_ROLLUP,
+    )
+    prep = store.merge_upsert_prepare(
+        ROLLUP_TABLE, merged, GROUP_COLS, [(t,) for t in tenants], assume_unique=True
+    )
+    if prep is None:
+        return False
+    store.merge_upsert_commit(prep)
+    return True
+
+
+def _spark_delta(store, delta_files: list[str]) -> None:
+    """The Spark form of :func:`_arrow_delta`: exact file-level CDC over
+    the appended files (``ivm.cdc_delta`` / ``apply_delta``), published by
+    ``merge_upsert`` plus a ``merge_delete`` of groups whose count reached
+    zero (CDC generality — unreachable under the append-only change
+    table). basePath recovers the tenant partition column from the
+    directory names — derived from the delta files themselves, NOT the
+    current pointer: a compaction inside the merge swaps a new version dir
+    while the adopted files live in the (still retained) one they were
+    adopted into. The delta stays exact through that: compaction rewrites
+    files, not rows."""
+    cdc = (
+        store.spark.read.option("basePath", _version_root(delta_files[0]))
+        .schema(store.schemas[ABC_TABLE])
+        .parquet(*delta_files)
+        .withColumn(ivm.CHANGE_COL, F.lit("insert"))
+    )
+    delta = ivm.cdc_delta(cdc, GROUP_COLS, SUM_COLS)
+    # restrict the old side to the touched GROUPS (null-safe semi join) so
+    # the upsert batch is O(changed groups); the literal tenant IN-list
+    # prunes the rollup scan to touched partitions
+    touched_tenants = [r[0] for r in delta.select("tenant").distinct().collect()]
+    old = store.read(ROLLUP_TABLE).filter(
+        store._partition_filter("tenant", touched_tenants)
+    )
+    keys = delta.select(*GROUP_COLS)
+    old_touched = old.join(
+        F.broadcast(keys), store._key_cond(old, keys, GROUP_COLS), "left_semi"
+    )
+    merged = ivm.apply_delta(
+        old_touched, delta, GROUP_COLS, SUM_COLS, drop_empty=False
+    ).persist()
+    try:
+        upserts = merged.filter(F.col("n_rows") > 0).withColumn(
+            "sum_amount", F.col("sum_amount").cast(ROLLUP_SCHEMA["sum_amount"].dataType)
+        )
+        doomed = merged.filter(F.col("n_rows") <= 0).select(*GROUP_COLS)
+        store.merge_upsert(ROLLUP_TABLE, upserts, GROUP_COLS)
+        # doomed is computed from the persisted `merged` (its plan reads
+        # the PRE-upsert rollup version, still retained)
+        store.merge_delete(ROLLUP_TABLE, doomed, GROUP_COLS)
+    finally:
+        merged.unpersist()
 
 
 def read_if_fresh(store) -> DataFrame | None:

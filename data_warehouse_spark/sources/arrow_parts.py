@@ -4,10 +4,12 @@ The ingestion tick holds every new row on the driver. Committing a batch of
 a few hundred rows through a Spark write job costs a job submission, a
 python-worker round trip and a partitioned write task per table — about a
 second per tick on a 4-core box, most of the ingest-to-query lag. This
-module is the small-batch alternative the ``TableStore`` verbs use instead:
-a few primitive operators over a ``pyarrow.Table`` (dedupe, key probe,
-group by hive dir, sort, write), in the spirit of "Building Advanced SQL
-Analytics From Low-Level Plan Operators" (SIGMOD 2021).
+module is the small-batch alternative the ``TableStore`` verbs use instead
+(the tick's merges, and the overwrite and compaction of tables up to the
+store's row cut-off): a few primitive operators over a ``pyarrow.Table``
+(dedupe, key probe, one sort by hive dir and cluster key, a slice per dir,
+write), in the spirit of "Building Advanced SQL Analytics From Low-Level
+Plan Operators" (SIGMOD 2021).
 
 Every file it writes is laid out the way Spark's partitioned writer lays it
 out, so readers (Spark, the KV tier, DuckDB) and the store's own commit
@@ -285,13 +287,18 @@ def held_rows(
     return pa.array(held)
 
 
-def read_rows(files: list[tuple[str, dict, pq.FileMetaData]], schema: pa.Schema) -> pa.Table:
+def read_rows(files: list[tuple[str, dict, pq.FileMetaData | None]], schema: pa.Schema) -> pa.Table:
     """Every row of ``files`` (path, dir partition values, footer) as
-    ``schema``: partition columns filled from the dir values, INT96 read
-    as microseconds."""
+    ``schema``: partition columns filled from the dir values, the others
+    read from the file (only those columns), INT96 read as microseconds."""
     parts = []
     for path, fixed, _md in files:
-        t = pq.read_table(path, use_threads=False, coerce_int96_timestamp_unit="us")
+        t = pq.read_table(
+            path,
+            columns=[f.name for f in schema if f.name not in fixed],
+            use_threads=False,
+            coerce_int96_timestamp_unit="us",
+        )
         n = t.num_rows
         cols = []
         for f in schema:
@@ -334,6 +341,49 @@ def _dictionary_columns(part: pa.Table) -> list[str]:
     return out
 
 
+def sort_rows(table: pa.Table, cols: list[str]) -> pa.Table:
+    """``table`` stably sorted by ``cols`` ascending, nulls first (the
+    order of Spark's ``sortWithinPartitions``)."""
+    if not cols:
+        return table
+    keys = [(c, "ascending") for c in cols]
+    return table.take(pc.sort_indices(table, sort_keys=keys, null_placement="at_start"))
+
+
+def _run_starts(cols: list[pa.Array], n: int) -> list[int]:
+    """Boundaries ``[0, …, n]`` of the runs of equal rows in the sorted
+    columns ``cols`` (NULL equals NULL)."""
+    change = np.zeros(max(n - 1, 0), dtype=bool)
+    for col in cols:
+        a, b = col.slice(0, n - 1), col.slice(1)
+        neq = pc.not_equal(a, b)
+        neq = pc.if_else(pc.is_null(neq), pc.xor(pc.is_null(a), pc.is_null(b)), neq)
+        change |= neq.to_numpy(zero_copy_only=False)
+    return [0, *(np.flatnonzero(change) + 1).tolist(), n]
+
+
+def write_file(part: pa.Table, path: str, block_size: int | None) -> None:
+    """One part file of ``part``'s rows in Spark's encoding, row groups
+    sized to ``block_size`` bytes when given (else one group)."""
+    if block_size:
+        # parquet-mr closes a row group at parquet.block.size buffered
+        # bytes; Arrow sizes groups in rows, so convert at the batch's
+        # in-memory row width
+        rows = max(1, block_size * part.num_rows // max(1, part.nbytes))
+    else:
+        rows = max(1, part.num_rows)  # one group, as under Spark's 128 MB
+    pq.write_table(
+        part,
+        path,
+        version="1.0",
+        compression="snappy",
+        use_deprecated_int96_timestamps=True,
+        row_group_size=rows,
+        use_dictionary=_dictionary_columns(part) or False,
+        store_schema=False,
+    )
+
+
 def write_parts(
     table: pa.Table,
     dest: str,
@@ -344,7 +394,9 @@ def write_parts(
     block_size: int | None,
 ) -> None:
     """Write ``table`` under ``dest`` as Spark's partitioned writer would:
-    one part file per hive dir, plus the ``_SUCCESS`` marker.
+    one part file per hive dir, plus the ``_SUCCESS`` marker. An empty
+    table without hive levels still gets its one zero-row part file, as
+    from Spark, so a reader can take the schema from it.
     ``partition_cols`` excludes the derived month column, which
     ``month = (derived, timestamp source)`` adds."""
     data_cols = [
@@ -356,44 +408,30 @@ def write_parts(
         dirs = dirs.append_column(
             month[0], pc.strftime(table.column(month[1]), format="%Y-%m")
         )
-    combos = (
-        dirs.group_by(dirs.column_names, use_threads=False).aggregate([]).to_pylist()
-        if table.num_rows else []
-    )
-    data = table.select(data_cols)
-    sort_keys = [(c, "ascending") for c in cluster_by if c in data_cols]
+    keyed = table.select(data_cols)
+    dir_keys = [f"_dir{i}" for i in range(dirs.num_columns)]
+    for key, col in zip(dir_keys, dirs.columns):
+        keyed = keyed.append_column(key, col)
+    # one stable sort by (hive dir, cluster_by), then a slice per dir: each
+    # dir's rows come out in cluster order, ties in batch order
+    keyed = sort_rows(keyed, dir_keys + [c for c in cluster_by if c in data_cols])
+    dir_cols = [keyed.column(k).combine_chunks() for k in dir_keys]
+    data = keyed.drop_columns(dir_keys)
+    n = table.num_rows
+    if dir_cols:
+        bounds = _run_starts(dir_cols, n) if n else [0]  # no rows, no dir
+    else:
+        bounds = [0, n]  # one file, a zero-row one included
     os.makedirs(dest, exist_ok=True)
-    for combo in combos:
-        part = data
-        if len(combos) > 1:
-            mask = None
-            for c, v in combo.items():
-                m = pc.is_null(dirs.column(c)) if v is None else pc.equal(dirs.column(c), v)
-                mask = m if mask is None else pc.and_(mask, m)
-            part = data.filter(mask)
-        if sort_keys:
-            part = part.take(
-                pc.sort_indices(part, sort_keys=sort_keys, null_placement="at_start")
-            )
-        if block_size:
-            # parquet-mr closes a row group at parquet.block.size buffered
-            # bytes; Arrow sizes groups in rows, so convert at the batch's
-            # in-memory row width
-            rows = max(1, block_size * part.num_rows // max(1, part.nbytes))
-        else:
-            rows = max(1, part.num_rows)  # one group, as under Spark's 128 MB
-        d = os.path.join(
-            dest, *(f"{c}={escape_path_name(v)}" for c, v in combo.items())
-        )
+    for start, end in zip(bounds, bounds[1:]):
+        d = os.path.join(dest, *(
+            f"{c}={escape_path_name(col[start].as_py())}"
+            for c, col in zip(dirs.column_names, dir_cols)
+        ))
         os.makedirs(d, exist_ok=True)
-        pq.write_table(
-            part,
+        write_file(
+            data.slice(start, end - start),
             os.path.join(d, f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"),
-            version="1.0",
-            compression="snappy",
-            use_deprecated_int96_timestamps=True,
-            row_group_size=rows,
-            use_dictionary=_dictionary_columns(part) or False,
-            store_schema=False,
+            block_size,
         )
     open(os.path.join(dest, "_SUCCESS"), "w").close()

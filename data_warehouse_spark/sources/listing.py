@@ -34,13 +34,20 @@ log = logging.getLogger(__name__)
 
 
 # --- per-directory mtime watermark cache (idle ticks O(changed dirs)) --------
+# the tracked "mtime" of a missing dir: a trusted value of its own, so an
+# absence that persists compares unchanged, and the dir appearing compares
+# changed
+MISSING = -1
+
+
 def _guarded_mtime(path: str, now_ns: int, guard_ns: int) -> int | None:
-    """mtime_ns, or None when missing OR within the concurrency guard
-    window (a writer can land inside the same timestamp after our scan)."""
+    """mtime_ns; :data:`MISSING` when the path does not exist; None when
+    the mtime is within the concurrency guard window (a writer can land
+    inside the same timestamp after our scan)."""
     try:
         ns = os.stat(path).st_mtime_ns
     except OSError:
-        return None
+        return MISSING
     return None if ns > now_ns - guard_ns else ns
 
 
@@ -117,7 +124,9 @@ class ListingCache:
     Concurrency guard: an mtime recorded within ``GUARD_NS`` of the scan is
     untrusted (a concurrent writer can land inside the same timestamp after
     our scandir) — the dir is treated as changed until a sweep observes it
-    quiet. Crash safety: state is in-memory; a new cache starts empty, its
+    quiet. A missing dir (an account without ``events/`` yet) is tracked
+    as :data:`MISSING`, a trusted value: it stays unchanged until the dir
+    appears. Crash safety: state is in-memory; a new cache starts empty, its
     first sweep registers every account dir as pending, so a restarted
     pipeline examines the whole tree once and re-converges — the cache is
     an optimization, never a correctness input.
@@ -131,13 +140,14 @@ class ListingCache:
     def __init__(self) -> None:
         # tenant -> mtime_ns of t_<tenant>/account parent (None = rescan)
         self._parents: dict[str, int | None] = {}
-        # (tenant, account) -> [dirs: dict[path -> mtime_ns|None], pending]
+        # (tenant, account) -> [dirs: dict[path -> mtime_ns|MISSING|None],
+        # pending]
         self._accounts: dict[tuple[str, str], list] = {}
 
     # -- helpers ---------------------------------------------------------
     @staticmethod
     def _mtime(path: str, now_ns: int) -> int | None:
-        """mtime_ns, or None when missing OR too fresh to trust."""
+        """mtime_ns, MISSING, or None when too fresh to trust."""
         return _guarded_mtime(path, now_ns, ListingCache.GUARD_NS)
 
     def _account_names(self, root: str, tenant: str, now_ns: int) -> list[str]:
@@ -202,7 +212,8 @@ class ListingCache:
         """Every directory whose new entries can change a tick: the root
         (new tenants), each tenant dir and its ``account/`` dir (new
         accounts), each account dir (a new ``snapshot/`` or ``events/``)
-        and every dir the mtime sweep tracks."""
+        and every existing dir the mtime sweep tracks (a missing one is
+        covered by its parent's watch)."""
         out = {root}
         for tenant in self._parents:
             tdir = os.path.join(root, f"t_{tenant}")
@@ -210,7 +221,7 @@ class ListingCache:
             out.add(os.path.join(tdir, "account"))
         for (tenant, account), (dirs, _pending) in self._accounts.items():
             out.add(os.path.join(root, f"t_{tenant}", "account", account))
-            out.update(dirs)
+            out.update(p for p, mtime in dirs.items() if mtime != MISSING)
         return out
 
 

@@ -20,8 +20,10 @@ batch — the ingestion tick's — commits with NO Spark job while it and the
 hive dirs it touches hold at most :data:`ARROW_COMMIT_MAX_ROWS` rows: a
 PK-column probe of the touched dirs (row groups pruned by min/max), part
 files written in Spark's exact layout (``arrow_parts``), and the same
-staging / ``_adopt_files`` / ``_swap`` / commit machinery. Larger batches,
-compaction and the full-rewrite verbs stay on Spark.
+staging / ``_adopt_files`` / ``_swap`` / commit machinery. The same
+cut-off puts ``overwrite`` (a DataFrame is collected to Arrow once,
+capped one row past the cut-off) and ``compact`` (row counts from the
+footers) on the Arrow writer. Larger batches and tables stay on Spark.
 
 **Snapshot isolation** — a table directory holds immutable version dirs plus
 an atomically-replaced ``_current`` pointer::
@@ -360,10 +362,49 @@ class TableStore:
         self._write_table_parquet(name, df, vdir)
         return vdir
 
-    def overwrite(self, name: str, df: DataFrame) -> None:
+    def overwrite(self, name: str, df: DataFrame | pa.Table) -> None:
         """Full replace as a new snapshot + pointer swap (readers of the
-        previous snapshot keep their files until the next swap)."""
-        self._swap(name, self._write_version(name, df))
+        previous snapshot keep their files until the next swap).
+
+        Rows at or under :data:`ARROW_COMMIT_MAX_ROWS` are written with
+        pyarrow in Spark's layout (``arrow_parts``); a DataFrame gets there
+        through one collect capped one row past the cut-off. Above it, or
+        for a column type Arrow cannot write as Spark does, the Spark
+        writer writes the frame. ``last_merge_path[name]`` records which
+        writer ran."""
+        tbl = self._arrow_overwrite_rows(name, df)
+        if tbl is None:
+            if isinstance(df, pa.Table):
+                df = self._arrow_to_df(name, df)
+            self.last_merge_path[name] = "spark"
+            vdir = self._write_version(name, df)
+        else:
+            self.last_merge_path[name] = "arrow"
+            vdir = self._new_version_dir(name)
+            self._write_arrow(name, tbl, vdir)
+        self._swap(name, vdir)
+
+    def _arrow_overwrite_rows(self, name: str, df: DataFrame | pa.Table) -> pa.Table | None:
+        """``df``'s declared columns as an Arrow table with the declared
+        types and the frame's nullability, or None when the Spark writer
+        must write it: an Arrow-unwritable table, a frame whose column
+        types differ from the declared ones (the Spark writer keeps the
+        frame's), or more than ARROW_COMMIT_MAX_ROWS rows."""
+        if not self._arrow_writable(name):
+            return None
+        cols = [f.name for f in self.schemas[name].fields]
+        if isinstance(df, pa.Table):
+            return df.select(cols) if df.num_rows <= ARROW_COMMIT_MAX_ROWS else None
+        out = df.select(*cols)
+        declared = self.schemas[name]
+        if [f.dataType for f in out.schema.fields] != [f.dataType for f in declared.fields]:
+            return None
+        tbl = out.limit(ARROW_COMMIT_MAX_ROWS + 1).toArrow()
+        if tbl.num_rows > ARROW_COMMIT_MAX_ROWS:
+            return None
+        # toArrow hands timestamps over as timestamp[us, tz=UTC]; the files
+        # hold the same UTC instants as naive microseconds
+        return tbl.cast(arrow_parts.arrow_schema(out.schema))
 
     # ---- MERGE emulation ----------------------------------------------
 
@@ -715,33 +756,7 @@ class TableStore:
                     os.path.join(dirpath, f) for f in filenames if f.endswith(".parquet")
                 )
                 if dirpath in frag:
-                    # right-size output files to the target (ceil division)
-                    total = sum(os.path.getsize(f) for f in pq_files)
-                    n_out = max(1, -(-total // TARGET_FILE_BYTES))
-                    # read the raw part files (non-partition columns only —
-                    # rewriting into the same hive dir keeps the layout)
-                    merged = self.spark.read.parquet(*pq_files).coalesce(n_out)
-                    sort_cols = [
-                        c
-                        for c in self.cluster_by.get(name, [])
-                        if c in merged.columns
-                    ]
-                    if sort_cols:
-                        # sort WITHIN each output file: tight disjoint
-                        # row-group min/max stats without a global shuffle
-                        merged = merged.sortWithinPartitions(*sort_cols)
-                    cw = merged.write.mode("overwrite")
-                    if name in self.block_size:
-                        cw = cw.option(
-                            "parquet.block.size", str(self.block_size[name])
-                        )
-                    cw.parquet(staging)
-                    for f in os.listdir(staging):
-                        if f.endswith(".parquet"):
-                            os.rename(
-                                os.path.join(staging, f),
-                                os.path.join(dest_dir, f"compact-{uuid.uuid4().hex[:8]}-{f}"),
-                            )
+                    self._compact_dir(name, pq_files, dest_dir, staging)
                 else:
                     for fname in pq_files:
                         d = os.path.join(dest_dir, os.path.basename(fname))
@@ -753,6 +768,56 @@ class TableStore:
         finally:
             shutil.rmtree(staging, ignore_errors=True)
         return len(frag)
+
+    def _compact_dir(
+        self, name: str, pq_files: list[str], dest_dir: str, staging: str
+    ) -> None:
+        """Rewrite one fragmented hive dir's ``pq_files`` into ``dest_dir``
+        as ⌈bytes / TARGET_FILE_BYTES⌉ files sorted by ``cluster_by`` —
+        with pyarrow while the files hold at most ARROW_COMMIT_MAX_ROWS
+        rows (footer counts), else with Spark (via ``staging``). Either
+        writer reads the raw part files back, so every output column is
+        nullable; rewriting into the same hive dir keeps the layout."""
+        total = sum(os.path.getsize(f) for f in pq_files)
+        n_out = max(1, -(-total // TARGET_FILE_BYTES))
+        pcols = set(self.partitions.get(name, []))
+        data = [f for f in self.schemas[name].fields if f.name not in pcols]
+        sort_cols = self.cluster_by.get(name, [])  # non-partition columns
+        files = [(p, {}, pq.read_metadata(p)) for p in pq_files]
+        if (
+            self._arrow_writable(name)
+            and sum(md.num_rows for *_, md in files) <= ARROW_COMMIT_MAX_ROWS
+        ):
+            schema = arrow_parts.arrow_schema(T.StructType(data))
+            schema = pa.schema([f.with_nullable(True) for f in schema])
+            rows = arrow_parts.sort_rows(arrow_parts.read_rows(files, schema), sort_cols)
+            step = max(1, -(-rows.num_rows // n_out))
+            tag = uuid.uuid4().hex[:8]
+            for i, start in enumerate(range(0, max(1, rows.num_rows), step)):
+                arrow_parts.write_file(
+                    rows.slice(start, step),
+                    os.path.join(
+                        dest_dir,
+                        f"compact-{tag}-part-{i:05d}-{uuid.uuid4()}.c000.snappy.parquet",
+                    ),
+                    self.block_size.get(name),
+                )
+            return
+        merged = self.spark.read.parquet(*pq_files).coalesce(n_out)
+        if sort_cols:
+            # sort WITHIN each output file: tight disjoint row-group
+            # min/max stats without a global shuffle
+            merged = merged.sortWithinPartitions(*sort_cols)
+        cw = merged.write.mode("overwrite")
+        if name in self.block_size:
+            cw = cw.option("parquet.block.size", str(self.block_size[name]))
+        cw.parquet(staging)
+        for f in os.listdir(staging):
+            if f.endswith(".parquet"):
+                os.rename(
+                    os.path.join(staging, f),
+                    os.path.join(dest_dir, f"compact-{uuid.uuid4().hex[:8]}-{f}"),
+                )
 
     def _adopt_files(self, staging: str, target: str) -> tuple[int, list[str]]:
         """Move parquet part files from staging into the version dir
@@ -864,9 +929,9 @@ class TableStore:
         metadata, never O(table).
 
         A ``pyarrow.Table`` batch (the ingestion tick's account batch when
-        :meth:`merge_upsert_prepare` declines it) runs the same Spark plan."""
+        :meth:`merge_upsert_prepare` declines it) runs the same Spark plan;
+        ``last_merge_path[name]`` records "spark"."""
         _t0 = time.perf_counter()
-        self.last_merge_path[name] = "spark"
         if isinstance(batch, pa.Table):
             batch = self._arrow_to_df(name, batch)
         fresh = (batch if assume_unique else batch.dropDuplicates(keys)).cache()
@@ -898,6 +963,9 @@ class TableStore:
                                      insert_only_col)
         finally:
             fresh.unpersist()
+            # the verb ran its Spark plan, whichever writer a nested
+            # overwrite (first version, full rewrite) took
+            self.last_merge_path[name] = "spark"
             self.last_merge_laps[name] = {"write_action": time.perf_counter() - _t0}
 
     def merge_upsert_prepare(

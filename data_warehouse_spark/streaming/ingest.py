@@ -53,19 +53,22 @@ layout, the same adopt / pointer-swap commit (``sources/arrow_parts.py``).
 The content reads run on the driver too, at any width: a tick's meta,
 event and transaction files are one or a few lines each, and the driver
 read the 5,000 files of a 2,000-account first tick in ~0.15 s on a 4-core
-box, where executor jobs over the same files took ~5 s. Spark stays where the store needs it: batches whose
-touched partitions exceed ``tables.ARROW_COMMIT_MAX_ROWS`` (read from the
-parquet footers) go to the store's Spark plans, as do compaction and
-rollup convergence, and a transaction timestamp shape only Spark's
-``to_timestamp`` parses is read with the Spark text parse.
+box, where executor jobs over the same files took ~5 s. Compaction and
+the rollup's full recompute run on pyarrow under the same cut-off. Spark
+stays where the store needs it: batches whose touched partitions exceed
+``tables.ARROW_COMMIT_MAX_ROWS`` (read from the parquet footers) go to
+the store's Spark plans, as does the rollup's CDC delta convergence, and
+a transaction timestamp shape only Spark's ``to_timestamp`` parses is
+read with the Spark text parse.
 ``TickMetrics.extra["merge"]`` records, per table, which writer committed
 it (``arrow`` | ``spark``) and its seconds.
 
 Idempotence: every write is keyed MERGE and markers advance LAST; a crash
 anywhere replays the tick's reads (watermarks unchanged) and the PK merges
 drop the duplicates — the same guarantee the reference gets from ON CONFLICT
-DO NOTHING. A failed tick (a KV-marks lookup refused twice included) leaves
-every account it examined pending, so the next tick examines it again.
+DO NOTHING. A failed tick (a KV-marks lookup refused twice included, or a
+transaction file that is missing or yields no transfer yet) leaves every
+account it examined pending, so the next tick examines it again.
 
 The cadence lives in ``Service._ingest_loop`` (service.py): one thread, so
 ticks never overlap (the reference's Lock/Free actor gives the same
@@ -619,6 +622,15 @@ class IngestionPipeline:
                 tuple(r)
                 for r in primary.read_transaction_paths(spark, txn_paths).collect()
             ]
+        unread = sorted(set(active) - {(r[0], r[1]) for r in txn_rows})
+        if unread:
+            # a file read while still empty (its writer has not finished)
+            # yields no row: like a missing one it fails the tick, which
+            # leaves the examined accounts pending, so their markers never
+            # move past events whose transfer was not read
+            raise InvariantViolation(
+                f"event names transaction file(s) without a transfer: {unread[:3]}"
+            )
 
         # D7 relevance + D8 invariant, then PK-dedupe (both discovering
         # events name the same transfer; the merge still dedupes vs the

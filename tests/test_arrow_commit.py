@@ -63,8 +63,8 @@ def _account_rows(wave: int, tenants) -> list[tuple]:
 
 def _layout(spark, store, name, files) -> dict[str, dict]:
     """Per hive dir of ``files`` (relative to the current version): the
-    part file's column descriptors, the schema Spark infers from it and
-    its stored rows in file order."""
+    part file's column descriptors, its row-group count, the schema Spark
+    infers from it and its stored rows in file order."""
     vdir = store._resolve(name)
     out: dict[str, dict] = {}
     for path in files:
@@ -78,6 +78,9 @@ def _layout(spark, store, name, files) -> dict[str, dict]:
                  c.max_definition_level, c.length)
                 for c in cols
             ],
+            # the count only: Arrow sizes a group in rows at the batch's
+            # in-memory width, parquet-mr in buffered bytes
+            "row_groups": md.num_row_groups,
             "spark_schema": spark.read.parquet(path).schema,
             "rows": pq.read_table(path, coerce_int96_timestamp_unit="us").to_pylist(),
         }
@@ -88,6 +91,7 @@ def _assert_same_layout(name, want: dict, got: dict) -> None:
     assert sorted(got) == sorted(want), name  # dir names
     for rel in want:
         assert got[rel]["columns"] == want[rel]["columns"], (name, rel)
+        assert got[rel]["row_groups"] == want[rel]["row_groups"], (name, rel)
         assert got[rel]["spark_schema"] == want[rel]["spark_schema"], (name, rel)
         if name == "account_balance_change":
             # rows tied on cluster_by (name, value_date) keep no defined order
@@ -131,6 +135,37 @@ def _upsert_both(spark, stores, rows, struct, tenants) -> dict:
     return layouts["arrow"]
 
 
+def _kv_answers(store):
+    """The KV tier's lookup / sorted_page / delta_sums answers over a
+    warehouse store written from the rows of this module."""
+    kv = KVTier(store)
+    kv_t = KVTier(store, key_col="transaction")
+    keys = [(t, f"n{k}") for t in TENANTS for k in range(9)]
+    abc_files = [
+        os.path.join(d, f)
+        for d, _x, fs in os.walk(store._resolve("account_balance_change"))
+        for f in fs if f.endswith(".parquet")
+    ]
+    return (
+        kv.lookup(
+            "account", balance_view.table_fingerprint(store, "account"), keys,
+            ["currency", "format", "last_syn_snapshot", "last_syn_event"],
+        ),
+        [
+            kv_t.sorted_page(
+                "transfer", balance_view.table_fingerprint(store, "transfer"), t,
+                ["transaction", "transfer"], ["transaction", "transfer", "amount", "value_date"],
+                limit=100,
+            )
+            for t in TENANTS
+        ],
+        kv.delta_sums(
+            abc_files,
+            [(t, f"acc{k}") for t in TENANTS for k in range(3)], "amount",
+        ),
+    )
+
+
 def test_arrow_and_spark_writers_lay_out_identical_tables(spark, tmp_path):
     """Rows written once through the Arrow path and once through Spark:
     same hive dir names (escaped tenants included), same parquet physical
@@ -169,35 +204,7 @@ def test_arrow_and_spark_writers_lay_out_identical_tables(spark, tmp_path):
 
     assert snapshot(stores["arrow"]) == snapshot(stores["spark"])
 
-    def kv_answers(store):
-        kv = KVTier(store)
-        kv_t = KVTier(store, key_col="transaction")
-        keys = [(t, f"n{k}") for t in TENANTS for k in range(9)]
-        abc_files = [
-            os.path.join(d, f)
-            for d, _x, fs in os.walk(store._resolve("account_balance_change"))
-            for f in fs if f.endswith(".parquet")
-        ]
-        return (
-            kv.lookup(
-                "account", balance_view.table_fingerprint(store, "account"), keys,
-                ["currency", "format", "last_syn_snapshot", "last_syn_event"],
-            ),
-            [
-                kv_t.sorted_page(
-                    "transfer", balance_view.table_fingerprint(store, "transfer"), t,
-                    ["transaction", "transfer"], ["transaction", "transfer", "amount", "value_date"],
-                    limit=100,
-                )
-                for t in TENANTS
-            ],
-            kv.delta_sums(
-                abc_files,
-                [(t, f"acc{k}") for t in TENANTS for k in range(3)], "amount",
-            ),
-        )
-
-    assert kv_answers(stores["arrow"]) == kv_answers(stores["spark"])
+    assert _kv_answers(stores["arrow"]) == _kv_answers(stores["spark"])
     for mode, store in stores.items():
         assert balance_view.maintain(store) == "recompute", mode
     assert sorted(map(tuple, balance_view.read_if_fresh(stores["arrow"]).collect())) == sorted(
@@ -235,6 +242,114 @@ def test_arrow_upsert_keeps_insert_only_semantics(spark, tmp_path):
     rows = {(r["tenant"], r["name"]): (r["last_syn_snapshot"], r["last_syn_event"])
             for r in store.read("account").collect()}
     assert rows == {("A", "x"): (3, 4), ("A", "new"): (0, 0), ("B", "y"): (2, 5)}
+
+
+# --- overwrite and the rollup bootstrap on both writers ----------------------
+
+ROLLUP = balance_view.ROLLUP_TABLE
+
+
+def _version_files(store, name) -> list[str]:
+    vdir = store._resolve(name)
+    return sorted(
+        os.path.join(d, f) for d, _x, fs in os.walk(vdir) for f in fs if f.endswith(".parquet")
+    )
+
+
+def _on_writer(monkeypatch, mode, fn, *args):
+    """Run ``fn`` with the Arrow writer (``mode == "arrow"``, the default
+    cut-off) or the Spark writer (a cut-off no table fits under, an empty
+    one included)."""
+    with monkeypatch.context() as mp:
+        if mode == "spark":
+            mp.setattr(tables, "ARROW_COMMIT_MAX_ROWS", -1)
+        return fn(*args)
+
+
+def _overwrite_both(spark, stores, monkeypatch, name, df) -> dict:
+    """``df`` through each store's ``overwrite``; asserts the writer each
+    recorded and that both laid out the same files."""
+    layouts = {}
+    for mode, store in stores.items():
+        _on_writer(monkeypatch, mode, store.overwrite, name, df)
+        assert store.last_merge_path[name] == mode, name
+        layouts[mode] = _layout(spark, store, name, _version_files(store, name))
+    _assert_same_layout(name, layouts["spark"], layouts["arrow"])
+    return layouts["arrow"]
+
+
+def test_overwrite_writers_lay_out_identical_tables(spark, tmp_path, monkeypatch):
+    """The same DataFrames through both overwrite writers — pyarrow under
+    the cut-off, Spark above it: the same hive dir names (escaped
+    tenants included), physical schemas with the frame's nullability, row
+    groups per file and per-file sort order, and the same answers from
+    store.read and the KV tier. The rollup bootstrap then recomputes on
+    both writers — a pyarrow group-by and ivm.compute_rollup — into the
+    same files."""
+    stores = {
+        mode: warehouse_store(spark, str(tmp_path / mode)) for mode in ("spark", "arrow")
+    }
+    rows = _transfer_rows(1) + _transfer_rows(2)
+    frames = {
+        "tenant": driver_df(spark, [(t,) for t in TENANTS], ingest.TENANT_SCHEMA),
+        # a declared (non-null) frame and an all-nullable one
+        "transfer": driver_df(spark, rows, ingest._ingest_transfer_schema()),
+        "account_balance_change": driver_df(
+            spark, ingest._signed_change_rows(rows), ingest._ABC_BATCH
+        ),
+        # two tenants with several 64 KB row groups each
+        "account": driver_df(spark, _account_rows(1, TENANTS) + [
+            (t, f"bulk{k:05d}", "CZK", f"F{k % 7}", k, 3 * k) for t in TENANTS[:2] for k in range(5000)
+        ], ingest.ACCOUNT_SCHEMA),
+    }
+    layouts = {
+        name: _overwrite_both(spark, stores, monkeypatch, name, df)
+        for name, df in frames.items()
+    }
+    assert list(layouts["tenant"]) == ["."]
+    assert layouts["account"]["tenant=plain"]["row_groups"] > 1
+    assert {"tenant=a b", "tenant=s%2Fl", "tenant=p%25c", "tenant=x%3Ay%23z"} <= {
+        rel.split(os.sep)[0] for rel in layouts["transfer"]
+    }
+    assert _tables(stores["arrow"]) == _tables(stores["spark"])
+    assert _kv_answers(stores["arrow"]) == _kv_answers(stores["spark"])
+    for mode, store in stores.items():
+        assert _on_writer(monkeypatch, mode, balance_view.maintain, store) == "recompute"
+        assert store.last_merge_path[ROLLUP] == mode
+    want, got = (_layout(spark, s, ROLLUP, _version_files(s, ROLLUP)) for s in stores.values())
+    _assert_same_layout(ROLLUP, want, got)
+    assert sorted(map(tuple, balance_view.read_if_fresh(stores["arrow"]).collect())) == sorted(
+        map(tuple, balance_view.read_if_fresh(stores["spark"]).collect())
+    )
+
+
+@pytest.mark.parametrize("name", ["tenant", "transfer"])
+def test_overwrite_of_an_empty_frame_reads_back_empty(spark, tmp_path, monkeypatch, name):
+    """An empty frame through both overwrite writers: the table exists and
+    reads back empty with the declared column types. ``tenant`` is not
+    partitioned: Spark writes one zero-row part file there, and so does
+    the Arrow writer, so a reader can take the schema from it."""
+    files = {}
+    for mode in ("spark", "arrow"):
+        store = warehouse_store(spark, str(tmp_path / mode))
+        _on_writer(
+            monkeypatch, mode, store.overwrite, name,
+            spark.createDataFrame([], store.schemas[name]),
+        )
+        assert store.last_merge_path[name] == mode
+        assert store.exists(name)
+        df = store.read(name)
+        assert df.collect() == []
+        assert [(f.name, f.dataType) for f in df.schema.fields] == [
+            (f.name, f.dataType) for f in store.schemas[name].fields
+        ]
+        vdir = store._resolve(name)
+        files[mode] = [
+            (os.path.dirname(os.path.relpath(p, vdir)) or ".", pq.read_metadata(p).num_rows)
+            for p in _version_files(store, name)
+        ]
+    assert files["arrow"] == files["spark"]
+    assert files["arrow"] == ([(".", 0)] if name == "tenant" else [])
 
 
 # --- the ingestion tick on the Arrow path ------------------------------------
@@ -576,6 +691,28 @@ def test_crash_before_account_commit_replays_exactly(spark, tmp_path, monkeypatc
         assert len([e for e in os.listdir(tdir) if e.startswith("v-")]) <= 2
 
     _crash_replay(spark, tmp_path, monkeypatch, inject, partial)
+
+
+def test_transaction_file_read_while_empty_fails_the_tick_until_complete(spark, tmp_path):
+    """A transaction file read while still empty yields no row: the tick
+    fails, as for a missing file, and leaves both accounts pending with
+    their markers unmoved — so the tick after the file is completed
+    ingests the transfer, and the tables equal the ground truth."""
+    tree, store, pipe = _seed(tmp_path, spark)
+    path = tree.transfer("T1", "A", "C", "3.5")
+    with open(path) as fh:
+        content = fh.read()
+    open(path, "w").close()
+    tree.backdate()
+    before = _tables(store)
+    with pytest.raises(ingest.InvariantViolation, match="without a transfer"):
+        pipe.run_once()
+    assert _tables(store) == before
+    with open(path, "w") as fh:
+        fh.write(content)
+    tree.backdate()
+    assert pipe.run_once().transfers_discovered == 1
+    _assert_exact(store, tree)
 
 
 def test_kv_marks_refusal_fails_the_tick_and_the_next_tick_ingests(spark, tmp_path, monkeypatch):

@@ -8,13 +8,18 @@ cannot pass by agreeing with itself."""
 
 from __future__ import annotations
 
+import datetime
 import decimal
 import os
 
+import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_warehouse_spark.operators import balance_view, ivm
 from data_warehouse_spark.operators import queries as wh
+from data_warehouse_spark.sources import tables
 from data_warehouse_spark.streaming.ingest import (
     ABC_PRIMARY_KEYS,
     ingest_abc_schema,
@@ -467,3 +472,74 @@ def test_deferral_bound_worst_case_window_serves_and_converges(spark, tmp_path):
     assert action == "delta"
     assert _rollup_map(balance_view.read_if_fresh(store)) == _ground_truth(store)
     assert converge_sec < 30.0, f"max-deferral converge took {converge_sec:.1f}s"
+
+
+def test_arrow_rollup_equals_compute_rollup(spark, tmp_path, monkeypatch):
+    """The bootstrap's pyarrow group-by over the change table's part files
+    equals ``ivm.compute_rollup`` over the same table: an all-NULL group
+    sums to NULL with a non-null count of 0, and sums past 18 integer
+    digits (two decimal(28,10) maxima) stay exact in decimal(38,10).
+    ``maintain`` records which writer published the rollup: pyarrow
+    under the cut-off, ivm plus Spark at a cut-off of 0, the same rows."""
+    big = "999999999999999999.9999999999"
+    nullable = T.StructType([
+        T.StructField(f.name, f.dataType, f.name != "side") for f in ingest_abc_schema().fields
+    ])
+    rows = [
+        ("A", "x", "10.5", "t1"), ("A", "x", "-2", "t2"), ("B", "y", big, "t3"),
+        ("B", "y", big, "t4"), ("B", "z", None, "t5"), ("B", "z", None, "t6"),
+        ("C", "w", None, "t7"), ("C", "w", "1", "t8"),
+    ]
+    data = [
+        (t, n, datetime.datetime(2020, 1, 1), None if a is None else decimal.Decimal(a), t, trn, "t1", "c")
+        for t, n, a, trn in rows
+    ]
+    store = warehouse_store(spark, str(tmp_path / "wh"))
+    store.overwrite(ABC, spark.createDataFrame(data, nullable))
+    got = balance_view._arrow_rollup(store)
+    assert got.schema.field("sum_amount").type == pa.decimal128(38, 10)
+    want = _ground_truth(store)
+    assert {
+        (r["tenant"], r["name"]): (r["n_rows"], r["nn_amount"], r["sum_amount"])
+        for r in got.to_pylist()
+    } == want
+    assert want[("B", "z")] == (2, 0, None)
+    assert want[("B", "y")][2] == decimal.Decimal("1999999999999999999.9999999998")
+    assert balance_view.maintain(store) == "recompute"
+    assert store.last_merge_path[balance_view.ROLLUP_TABLE] == "arrow"
+    assert _rollup_map(balance_view.read_if_fresh(store)) == want
+    store.overwrite(ABC, spark.createDataFrame(data[:-1], nullable))
+    monkeypatch.setattr(tables, "ARROW_COMMIT_MAX_ROWS", 0)
+    assert balance_view._arrow_rollup(store) is None
+    assert balance_view.maintain(store) == "recompute"
+    assert store.last_merge_path[balance_view.ROLLUP_TABLE] == "spark"
+    monkeypatch.undo()
+    assert _rollup_map(balance_view.read_if_fresh(store)) == _ground_truth(store)
+
+
+@pytest.mark.parametrize("writer", ["arrow", "spark"])
+def test_window_delta_on_both_writers_equals_recompute(spark, tmp_path, monkeypatch, writer):
+    """The convergence of a stale window folds the appended files into the
+    rollup — with pyarrow under the cut-off, submitting no Spark job, and
+    with Spark above it — and either way equals the recompute: an existing
+    group's increment, a new group of a known tenant and a new tenant."""
+    store = warehouse_store(spark, str(tmp_path / "wh"))
+    store.merge_insert_missing(
+        ABC, _changes(spark, [("A", "x", "10", "t1"), ("B", "y", "1", "t2")]), ABC_PRIMARY_KEYS
+    )
+    assert balance_view.maintain(store) == "recompute"
+    store.merge_insert_missing(
+        ABC,
+        _changes(spark, [("A", "x", "5.25", "t3"), ("A", "w", "-1", "t4"), ("C", "z", "7", "t5")]),
+        ABC_PRIMARY_KEYS,
+    )
+    if writer == "spark":
+        monkeypatch.setattr(tables, "ARROW_COMMIT_MAX_ROWS", -1)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    assert balance_view.maintain(store) == "delta"
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert store.last_merge_path[balance_view.ROLLUP_TABLE] == writer
+    assert bool(jobs) == (writer == "spark"), jobs
+    monkeypatch.undo()
+    assert _rollup_map(balance_view.read_if_fresh(store)) == _ground_truth(store)

@@ -147,6 +147,33 @@ def test_account_names_cached_when_parent_unchanged(tmp_path):
     assert sorted(cache._account_names(root, "A", now)) == ["acc1", "acc2"]
 
 
+def test_missing_events_dir_is_examined_once_until_it_appears(tmp_path):
+    """Snapshot-only accounts (no ``events/`` yet), backdated past the
+    guard, are examined once: an unchanged absence is unchanged. The one
+    whose ``events/`` appears is examined again, alone; a missing dir is
+    not watched (its account dir's watch sees it appear)."""
+    root = str(tmp_path)
+    names = [f"acc{i}" for i in range(5)]
+    for a in names:
+        _mk(root, "T", a)
+    _age(root)
+    c = ListingCache()
+    examined = []
+    for _round in range(3):
+        keys = c.sweep(root, ["T"], time.time_ns())
+        examined.append(len(keys))
+        for key in keys:
+            c.rescan_account(root, *key, time.time_ns())
+        c.settle(keys, ())
+    assert examined == [5, 0, 0]
+    adir = os.path.join(root, "t_T", "account", "acc3")
+    assert os.path.join(adir, "events") not in c.watch_dirs(root)
+    assert adir in c.watch_dirs(root)
+    _mk(root, "T", "acc3", events={0: ["1__X"]})
+    _age(adir)
+    assert c.sweep(root, ["T"], time.time_ns()) == [("T", "acc3")]
+
+
 def test_watch_dirs_cover_every_level_a_tick_lists(tmp_path):
     """The watched set: the root, each tenant and its account/ dir, each
     account dir, and every dir the mtime sweep tracks."""

@@ -7,6 +7,7 @@ import os
 import pytest
 from pyspark.sql import types as T
 
+from data_warehouse_spark.sources import tables
 from data_warehouse_spark.sources.tables import TableStore
 
 SCHEMA = T.StructType(
@@ -150,10 +151,15 @@ def test_time_travel_after_merge_shows_pre_merge_state(spark, tmp_path):
     assert not os.path.exists(before_vdir)
 
 
-def test_append_path_compacts_small_files(spark, tmp_path):
-    """Many consecutive tiny appends must leave O(1) files per touched
-    partition (auto-compaction at threshold), with contents intact and
-    untouched partitions hard-linked, not rewritten."""
+def _jobs_during(spark, fn) -> set:
+    """Ids of the Spark jobs submitted while ``fn`` runs."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    fn()
+    return set(tracker.getJobIdsForGroup(None)) - before
+
+
+def _append_path_compacts_small_files(spark, tmp_path):
     store = TableStore(
         spark,
         str(tmp_path / "wh"),
@@ -175,6 +181,19 @@ def test_append_path_compacts_small_files(spark, tmp_path):
     # files (same inodes), never rewrote them
     b_after = _part_files(store, "t", "tenant=B")
     assert set(b_after.values()) <= set(b_before.values())
+
+
+def test_append_path_compacts_small_files(spark, tmp_path):
+    """Many consecutive tiny appends must leave O(1) files per touched
+    partition (auto-compaction at threshold), with contents intact and
+    untouched partitions hard-linked, not rewritten."""
+    _append_path_compacts_small_files(spark, tmp_path)
+
+
+def test_append_path_compacts_small_files_on_the_spark_writer(spark, tmp_path, monkeypatch):
+    """The same auto-compaction above the Arrow cut-off (Spark rewrite)."""
+    monkeypatch.setattr(tables, "ARROW_COMMIT_MAX_ROWS", 0)
+    _append_path_compacts_small_files(spark, tmp_path)
 
 
 def test_manual_compact_noop_below_threshold(spark, tmp_path):
@@ -210,11 +229,7 @@ def test_upsert_null_partition_value_not_duplicated(spark, tmp_path):
     assert sorted(rows, key=str) == [("B", "y", 1), (None, "x", 2)]
 
 
-def test_compact_clusters_files_by_sort_key(spark, tmp_path):
-    """With cluster_by, compaction rewrites fragmented files SORTED by the
-    key, so each file's parquet row groups carry tight disjoint min/max
-    stats (row-group skipping for point/range reads) — append order is
-    arbitrary, the rewrite restores locality."""
+def _compact_clusters_files_by_sort_key(spark, tmp_path, writer):
     import pyarrow.parquet as pq
 
     store = TableStore(
@@ -229,10 +244,10 @@ def test_compact_clusters_files_by_sort_key(spark, tmp_path):
         store.merge_insert_missing(
             "t", _rows(spark, [("A", f"n{99 - i:02d}", i)]), ["tenant", "name"]
         )
-    store.compact("t", threshold=1)
+    jobs = _jobs_during(spark, lambda: store.compact("t", threshold=1))
+    # the Arrow rewrite submits no Spark job; the Spark rewrite does
+    assert bool(jobs) == (writer == "spark"), jobs
     vdir = store._resolve("t")
-    import os
-
     pq_files = [
         os.path.join(dp, f)
         for dp, _dn, fns in os.walk(vdir)
@@ -243,9 +258,25 @@ def test_compact_clusters_files_by_sort_key(spark, tmp_path):
     for f in pq_files:
         vals = pq.read_table(f, columns=["name"])["name"].to_pylist()
         assert vals == sorted(vals), f"{f} not clustered by name"
+        # read back from raw part files, every rewritten column is nullable
+        assert all(fld.nullable for fld in pq.read_schema(f))
     # contents intact after the clustered rewrite
     rows = {r["name"]: r["v"] for r in store.read("t").collect()}
     assert len(rows) == 12 and rows["n99"] == 0 and rows["n88"] == 11
+
+
+def test_compact_clusters_files_by_sort_key(spark, tmp_path):
+    """With cluster_by, compaction rewrites fragmented files SORTED by the
+    key, so each file's parquet row groups carry tight disjoint min/max
+    stats (row-group skipping for point/range reads) — append order is
+    arbitrary, the rewrite restores locality."""
+    _compact_clusters_files_by_sort_key(spark, tmp_path, "arrow")
+
+
+def test_compact_clusters_files_by_sort_key_on_the_spark_writer(spark, tmp_path, monkeypatch):
+    """The same clustered rewrite above the Arrow cut-off (Spark job)."""
+    monkeypatch.setattr(tables, "ARROW_COMMIT_MAX_ROWS", 0)
+    _compact_clusters_files_by_sort_key(spark, tmp_path, "spark")
 
 
 def test_merge_delete_rewrites_only_touched_partition(spark, tmp_path):
