@@ -19,7 +19,7 @@ Scalar edge rules pinned by the reference: status int⇄{queued, committed,
 rollbacked} (GraphQLService.scala:38-59), DateTime as ISO
 ``yyyy-MM-ddTHH:mm:ss`` (:61-76), NaturalNumber = non-negative ints
 (:18-36). Filter-range arguments use the *intended* semantics (see
-operators/queries.py COMPAT_INVERTED_FILTERS note).
+the operators/queries.py filter-semantics note).
 """
 
 from __future__ import annotations
@@ -424,7 +424,7 @@ def _resolve_tenant(_src, info, tenant: str):
 
 def _resolve_accounts(_src, info, tenant: str, currency=None, format=None, limit=100, offset=0):  # noqa: A002
     ctx: WarehouseContext = info.context
-    acc_snap = None if wh.COMPAT_INVERTED_FILTERS else ctx._snapshot("accounts")
+    acc_snap = ctx._snapshot("accounts")
     page_keys = None
     if acc_snap is not None:
         rows = acc_snap["by_tenant"].get(tenant, [])
@@ -433,11 +433,7 @@ def _resolve_accounts(_src, info, tenant: str, currency=None, format=None, limit
         if format is not None:
             rows = [r for r in rows if r[2] == format]
         page_keys = [(tenant, r[0]) for r in _page(rows, limit, offset)]
-    elif (
-        not wh.COMPAT_INVERTED_FILTERS
-        and ctx.cache is not None
-        and hasattr(ctx.cache, "kv_accounts_page")
-    ):
+    elif ctx.cache is not None and hasattr(ctx.cache, "kv_accounts_page"):
         # past the snapshot bound: the page slices an LRU-kept sorted
         # Arrow materialization of ONE tenant partition (kv_tier) — other
         # tenants are never touched, and only ≤ limit rows reach Python
@@ -478,7 +474,7 @@ def _resolve_transfers(
         # (bounded row-group reads, no Spark job) — the page source that
         # survives ingest-tick fingerprint moves without queueing behind
         # the tick's own Spark jobs; range shapes keep the Spark path
-        # (COMPAT_INVERTED_FILTERS + month pruning live there)
+        # (month pruning lives there)
         no_ranges = all(
             v is None
             for v in (

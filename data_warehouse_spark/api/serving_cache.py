@@ -22,6 +22,9 @@ the live fingerprint (directory listings — no Spark job) and on ANY
 mismatch the caller falls back to the Spark path while the next access
 reloads.  A snapshot can be stale-and-unused, never stale-and-served —
 the contract pinned for the rollup extends to every snapshot here.
+After a tick that commits, the ingest loop revalidates the snapshots
+requests have asked for (:meth:`ServingCache.refresh`), so that reload
+usually runs on its thread rather than on a request's.
 
 Scale bound: snapshots hold O(rows) driver memory AND cost O(rows) of
 GIL-bound load time on every reload (a tick cadence invalidates them
@@ -126,6 +129,9 @@ class ServingCache:
         self.max_page_rows = max_page_rows
         self._lock = threading.Lock()
         self._snaps: dict[str, tuple[str, Any]] = {}
+        # {key: (fingerprint, loader)} of each snapshot a request has asked
+        # for since a publish last revalidated it: what the next one does
+        self._read: dict[str, tuple] = {}
         # fact-page result cache: {args_key: collected page}, valid only for
         # one transfer-table fingerprint (any table change clears it)
         self._pages: "collections.OrderedDict[tuple, Any]" = collections.OrderedDict()
@@ -155,33 +161,62 @@ class ServingCache:
         self.kv_transfer.counters = self.counters
 
     # ---- machinery ---------------------------------------------------
-    def _get(self, key: str, fingerprint, loader):
+    def _get(self, key: str, fingerprint, loader, publish: bool = False):
+        """The snapshot under ``key`` when fresh, reloading it when stale.
+        A ``publish`` call (:meth:`refresh`) serves no request, so it
+        counts only the reloads it does, never a hit or a fallback."""
+        tally = collections.Counter() if publish else self.counters
+        if not publish:
+            self._read[key] = (fingerprint, loader)
         try:
             fp = fingerprint()
         except Exception:
-            self.counters[f"{key}_fallback"] += 1
-            return None  # unit-fake stores without version plumbing
+            fp = None  # unit-fake stores without version plumbing
         if fp is None:
-            self.counters[f"{key}_fallback"] += 1
+            tally[f"{key}_fallback"] += 1
             return None
+        if publish:
+            self._read.pop(key, None)  # wanted again once a request asks
         snap = self._snaps.get(key)
         if snap is not None and snap[0] == fp:
-            self.counters[f"{key}_hit"] += 1
+            tally[f"{key}_hit"] += 1
             return snap[1]
         with self._lock:
             snap = self._snaps.get(key)
             if snap is not None and snap[0] == fp:
-                self.counters[f"{key}_hit"] += 1
+                tally[f"{key}_hit"] += 1
                 return snap[1]
             try:
                 payload = loader()
             except Exception:
                 payload = None  # damaged/foreign layout → Spark path
-            self.counters[
-                f"{key}_reload" if payload is not None else f"{key}_fallback"
-            ] += 1
+            if payload is None:
+                tally[f"{key}_fallback"] += 1
+            else:
+                self.counters[f"{key}_reload"] += 1
+                if publish:
+                    self.counters["reload_on_publish"] += 1
             self._snaps[key] = (fp, payload)
             return payload
+
+    def refresh(self) -> None:
+        """Publish after a commit: revalidate each snapshot a request has
+        asked for since the last publish that revalidated it, with the
+        fingerprint and loader of the accessor that asked, so the reload
+        a commit makes due runs on the caller's thread (the ingest loop's)
+        and the next request hits. An entry no request has asked for is
+        left unbuilt. One whose witness is not derivable yet (the rollup
+        inside a deferred window) stays wanted for the publish after the
+        tick that converges it. A request that finds a fingerprint moved
+        after this still reloads inline, as before.
+
+        A ``df:`` entry over a table the store reads without a declared
+        schema would infer one with a Spark job; the caller submits none,
+        so those stay with the request path."""
+        for key, (fingerprint, loader) in list(self._read.items()):
+            if key.startswith("df:") and not self.store._all_partitions(key[3:]):
+                continue
+            self._get(key, fingerprint, loader, publish=True)
 
     # ---- transfer page results -----------------------------------------
     def transfers_page(self, key: tuple, loader):
@@ -526,8 +561,8 @@ class ServingCache:
         """One transfers(...) page via bounded Arrow reads (KVTier.
         sorted_page) — the request path stays Spark-free across ingest
         ticks. Supports the tenant + eq-filter shapes; range-filtered
-        shapes return None (Spark path, where COMPAT_INVERTED_FILTERS
-        and month pruning live). Fingerprint-pinned like every tier."""
+        shapes return None (Spark path, where month pruning lives).
+        Fingerprint-pinned like every tier."""
         try:
             fp = balance_view.table_fingerprint(self.store, "transfer")
         except Exception:

@@ -9,8 +9,7 @@ Filter-semantics note: the reference implements its optional range arguments
 *inverted* (e.g. ``amount_gte`` compiles to ``amount <= v`` —
 GraphQLPersistence.scala:277-316; ``accounts.currency`` uses ``>=`` — :203).
 None of its own tests exercise these paths. We implement the *intended*
-semantics (name == operator); set ``COMPAT_INVERTED_FILTERS = True`` to
-reproduce the reference's literal behavior bug-for-bug.
+semantics (name == operator).
 """
 
 from __future__ import annotations
@@ -23,8 +22,6 @@ from pyspark.sql import functions as F
 
 from ..schemas import MONEY_SUM
 from .pagination import paginate
-
-COMPAT_INVERTED_FILTERS = False
 
 
 # --- Q1: tenants(limit, offset) — GraphQLPersistence.scala:149-165 ----------
@@ -50,10 +47,7 @@ def accounts(
 ) -> DataFrame:
     out = account_df.filter(F.col("tenant") == tenant)
     if currency is not None:
-        if COMPAT_INVERTED_FILTERS:
-            out = out.filter(F.col("currency") >= currency)  # reference :203
-        else:
-            out = out.filter(F.col("currency") == currency)
+        out = out.filter(F.col("currency") == currency)
     if format is not None:
         out = out.filter(F.col("format") == format)
     return paginate(
@@ -96,12 +90,6 @@ def transfers(
 
     def _rng(col: str, op: str, value) -> Column:
         c = F.col(col)
-        if COMPAT_INVERTED_FILTERS:
-            # the reference flips every range op (and collapses date
-            # strictness) — GraphQLPersistence.scala:277-316
-            op = {"lt": "gt", "lte": "gte", "gt": "lt", "gte": "lte"}[op]
-            if col == "value_date":
-                op = {"lt": "lte", "gt": "gte"}.get(op, op)
         return {"lt": c < value, "lte": c <= value, "gt": c > value, "gte": c >= value}[op]
 
     for op, val in (
@@ -127,7 +115,7 @@ def transfers(
     # it only prunes paths, the exact value_date filter above decides rows.
     # 'yyyy-MM' compares lexicographically == chronologically.
     if "value_month" in out.columns:
-        if date_bounds and not COMPAT_INVERTED_FILTERS:
+        if date_bounds:
             for op, val in date_bounds:
                 ts = F.lit(val).cast("timestamp")
                 if op in ("gt", "gte"):

@@ -10,9 +10,14 @@ The reference ticks on a fixed 2 s timer (PrimaryDataExplorerActor.scala:
 waits on a Linux inotify watch of the tree (``sources/listing.py``
 :class:`DirWatcher`) or the timer, whichever comes first, so the interval
 is the upper bound on pick-up lag, not the lag itself. An event starts a
-tick no sooner than ``MIN_TICK_GAP_S`` (1.25 s) after the previous tick
+tick no sooner than ``MIN_TICK_GAP_S`` (0.75 s) after the previous tick
 started, which bounds the commit rate under a steady trickle of writes.
 Without inotify the loop waits on the timer alone, as the reference does.
+
+A tick that commits also publishes: before it waits for the next tick,
+the loop revalidates the serving snapshots requests have read
+(:meth:`ServingCache.refresh`), so the reload after a commit runs on the
+tick thread instead of on the first request that finds it stale.
 
 Configuration via environment (the reference's DATA_WAREHOUSE_* convention —
 application.conf:46-111):
@@ -37,12 +42,17 @@ log = logging.getLogger("data_warehouse_spark.service")
 
 # a file event starts a tick no sooner than this many seconds after the
 # previous tick started (an interval shorter than it still wins): a steady
-# trickle of writes then commits once per gap, not once per landed
-# transaction. The gap is also the pick-up lag of a burst that lands right
-# after a tick: the tick and the serving reload after it vary by ~0.1 s
-# from run to run, small next to this lag but a third of the ~0.3 s lag
-# that an event-started tick with no gap gives
-MIN_TICK_GAP_S = 1.25
+# trickle of writes then commits at most 1/gap times a second, not once per
+# landed transaction. The gap is most of the pick-up lag of a burst that
+# lands right after a tick; the rest is the debounce, the merge tick, one
+# poll and the request, ~0.15-0.25 s. Measured on a 4-core box (perfbench,
+# two rounds of 10 pairs per workload against 1.25 s): fresh_p50_s
+# 1.38-1.45 -> 0.93-0.94 s on both workloads, every pair better. The
+# benchmark's ingest_tps (60 / burst span) swings more as the span
+# shrinks: its quartile spread grew from ~2 to 3-11/s, about the 25%
+# bound at the widest, so the gap stays here until the benchmark times
+# pick-up directly
+MIN_TICK_GAP_S = 0.75
 
 
 class Service:
@@ -79,6 +89,9 @@ class Service:
         # interrupting one the loop is closing
         self._watcher = None
         self._watcher_lock = threading.Lock()
+        # the app's snapshot cache (build_app), which a committing tick
+        # publishes to
+        self.serving_cache = None
 
     # --- ingestion loop (explorer actor equivalent) ---------------------
     def _ingest_loop(self) -> None:
@@ -97,10 +110,13 @@ class Service:
             while not self._stop.is_set():
                 started = self._now()
                 since_ns = time.time_ns()
+                mutations = self.store.mutations
                 try:
                     m = self.pipeline.run_once()
                     self.statsd.emit_tick(m)
                     self.statsd.emit_memory()
+                    if self.serving_cache is not None and self.store.mutations != mutations:
+                        self.serving_cache.refresh()
                 except Exception:  # supervisor-restart semantics: log, retry next tick
                     log.exception("exploration tick failed; will retry")
                 self._wait_next(watcher, started, since_ns)
@@ -160,11 +176,13 @@ class Service:
     def build_app(self):
         from .api.http import build_app
 
-        return build_app(self.store)
+        app = build_app(self.store)
+        self.serving_cache = app.serving_cache
+        return app
 
     def run(self) -> None:
-        self.start_ingestion()
         app = self.build_app()
+        self.start_ingestion()
         signal.signal(signal.SIGTERM, lambda *_: self.stop())
         try:
             app.run(host="0.0.0.0", port=self.http_port, use_reloader=False)

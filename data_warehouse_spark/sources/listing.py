@@ -255,7 +255,11 @@ class DirWatcher:
     It wakes on ``IN_CLOSE_WRITE`` / ``IN_MOVED_TO`` (a file is complete),
     on ``IN_CREATE`` of a directory only (a created file may still be
     half-written; its close follows) and on ``IN_Q_OVERFLOW`` (events were
-    dropped). Correctness never depends on it: the tick is a pure function
+    dropped). A dir created inside a watched one is watched, with every
+    dir below it, as soon as its creation is drained, so a file closed
+    there before the next :meth:`sync` still wakes the loop; this also
+    watches a new tenant's ``transaction/`` dir, which ``sync`` leaves out.
+    Correctness never depends on it: the tick is a pure function
     of (tree, account marks) and the listing cache's mtime guard re-examines
     recently touched dirs, so a missed event costs at most the timer.
 
@@ -300,27 +304,46 @@ class DirWatcher:
         loop should tick again without waiting for an event."""
         changed = False
         for path in paths:
-            if self._full:
-                break
-            if path in self._paths:
+            if path in self._paths or not self._watch(path):
                 continue
-            wd = self._add(self._fd, os.fsencode(path), _WATCH_MASK)
-            if wd < 0:
-                err = ctypes.get_errno()
-                if err in (errno.ENOSPC, errno.ENOMEM):
-                    log.warning(
-                        "inotify watch table full at %d watches; "
-                        "unwatched dirs wait for the timer", len(self._paths)
-                    )
-                    self._full = True
-                continue  # vanished / not a dir / no access: timer only
-            self._paths[path] = wd
-            self._wds[wd] = path
             try:
                 changed |= os.stat(path).st_mtime_ns >= since_ns - _MTIME_SLACK_NS
             except OSError:
                 pass
         return changed
+
+    def _watch(self, path: str) -> bool:
+        """Add a watch on ``path``; False when it cannot be added."""
+        if self._full:
+            return False
+        wd = self._add(self._fd, os.fsencode(path), _WATCH_MASK)
+        if wd < 0:
+            err = ctypes.get_errno()
+            if err in (errno.ENOSPC, errno.ENOMEM):
+                log.warning(
+                    "inotify watch table full at %d watches; "
+                    "unwatched dirs wait for the timer", len(self._paths)
+                )
+                self._full = True
+            return False  # vanished / not a dir / no access: timer only
+        self._paths[path] = wd
+        self._wds[wd] = path
+        return True
+
+    def _watch_tree(self, path: str) -> None:
+        """Watch a dir that appeared inside a watched one, and every dir
+        already below it: their entries may have landed before these
+        watches existed, which the wake that drained the dir's creation
+        covers; a file closed from now on wakes by itself."""
+        if path in self._paths or not self._watch(path):
+            return
+        try:
+            with os.scandir(path) as it:
+                subdirs = [e.path for e in it if e.is_dir(follow_symlinks=False)]
+        except OSError:
+            return
+        for sub in subdirs:
+            self._watch_tree(sub)
 
     def _drain(self) -> bool:
         """Read every queued event; True when one of them should wake."""
@@ -333,11 +356,16 @@ class DirWatcher:
             off = 0
             while off < len(buf):
                 wd, mask, _cookie, n = _EVENT.unpack_from(buf, off)
-                off += _EVENT.size + n
+                name_at, off = off + _EVENT.size, off + _EVENT.size + n
                 if mask & (IN_CLOSE_WRITE | IN_MOVED_TO | IN_Q_OVERFLOW):
                     wake = True
                 elif mask & IN_CREATE and mask & IN_ISDIR:
                     wake = True
+                if mask & IN_ISDIR and mask & (IN_CREATE | IN_MOVED_TO) and wd in self._wds:
+                    # watch the new dir now, not at the next sync: a file
+                    # closed in it before then would wake nothing
+                    name = os.fsdecode(buf[name_at:off].rstrip(b"\0"))
+                    self._watch_tree(os.path.join(self._wds[wd], name))
                 if mask & (IN_IGNORED | IN_MOVE_SELF):
                     # the dir is gone or moved: forget it so a dir created
                     # again at the same path is watched again

@@ -233,6 +233,36 @@ def test_dir_watcher_wakes_on_complete_files_and_new_dirs(tmp_path):
         w.close()
 
 
+def test_dir_watcher_file_closed_in_a_new_dir_before_sync_wakes(tmp_path):
+    """The ingest loop's order: a new dir's creation wakes a tick, the tick
+    finds a file in it still open, and the file closes before the loop's
+    sync after that tick has watched the dir. The close still wakes: the
+    drain that saw the dir created watched it, and every dir made below
+    it before that watch existed."""
+    root = str(tmp_path)
+    w = DirWatcher()
+    try:
+        w.sync([root], 0)
+        leaf = os.path.join(root, "acc", "events", "0000000000")
+        os.makedirs(leaf)
+        fh = open(os.path.join(leaf, "1_10_TRN"), "w")  # lands empty
+        assert w.wait(5) is True  # the new dir wakes a tick
+        assert len(w) == 4
+        dirs = [root, os.path.join(root, "acc"), os.path.dirname(leaf), leaf]
+        old = time.time() - 10
+        for d in dirs:
+            os.utime(d, (old, old))  # the dirs changed before the tick
+        since = time.time_ns()  # that tick starts and reads the empty file
+        fh.write("1\n")
+        fh.close()  # the writer finishes after the tick
+        assert w.sync(dirs, since) is False  # already watched: no catch-up
+        t0 = time.monotonic()
+        assert w.wait(5) is True  # the close is seen
+        assert time.monotonic() - t0 < 1.0
+    finally:
+        w.close()
+
+
 def test_dir_watcher_coalesces_a_burst(tmp_path):
     """A burst of files closing within the quiet window is one wake."""
     root = str(tmp_path)

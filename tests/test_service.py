@@ -16,6 +16,7 @@ import pytest
 
 from data_warehouse_spark import service
 from data_warehouse_spark.metrics import StatsD
+from data_warehouse_spark.operators import balance_view
 from data_warehouse_spark.service import Service
 from data_warehouse_spark.sources import listing
 
@@ -403,3 +404,108 @@ def test_half_written_files_across_event_ticks_ingest_exactly(spark, tmp_path):
         _assert_exact(svc.store, tree)
     finally:
         svc.stop()
+
+
+def _live_fingerprints(store) -> dict:
+    """The live freshness witness of each snapshot a request reads."""
+    return {
+        "tenant": balance_view.table_fingerprint(store, "tenant"),
+        "account": balance_view.table_fingerprint(store, "account"),
+        "balance_rollup": balance_view.freshness_token(store),
+        "df:transfer": balance_view.table_fingerprint(store, "transfer"),
+    }
+
+
+def test_committing_tick_publishes_what_requests_read(spark, tmp_path):
+    """After a tick that commits, each snapshot a request has read is fresh
+    before any request arrives (the reload ran on the tick thread), and
+    the next request hits it. A tick that fails after its commit publishes
+    nothing; the next request reloads inline and still answers the tree's
+    ground truth."""
+    from decimal import Decimal
+
+    from data_warehouse_spark.api.graphql_schema import execute
+
+    tree, svc, log = _event_service(spark, tmp_path, tick_seconds=30)
+    fail = threading.Event()
+    logged = svc.pipeline.run_once
+
+    def run_once():
+        m = logged()
+        if fail.is_set():
+            fail.clear()
+            raise RuntimeError("the tick fails after its commit")
+        return m
+
+    svc.pipeline.run_once = run_once
+    app = svc.build_app()
+    cache, client = app.serving_cache, app.test_client()
+    query = (
+        'query { tenants(limit: 10, offset: 0) { name } '
+        'accounts(tenant: "T1", limit: 10, offset: 0) { name balance } '
+        'transfers(tenant: "T1", amount_gte: 0, limit: 100, offset: 0) { transaction } }'
+    )
+
+    def ask() -> dict:
+        resp = client.post("/graphql", json={"query": query})
+        assert resp.status_code == 200, resp.data
+        data = json.loads(resp.data)["data"]
+        assert data == execute(svc.store, query).data  # the Spark path's answer
+        want = tree.balances()
+        assert {a["name"]: Decimal(str(a["balance"])) for a in data["accounts"]} == {
+            a: want.get(("T1", a), Decimal(0)) for a in "ABC"
+        }
+        assert len(data["transfers"]) == len(tree.transfers)
+        return data
+
+    def converge() -> None:
+        """Wake ticks until one is idle: it converges the rollup that the
+        merge tick deferred (a new dir that is no tenant wakes one)."""
+        for i in range(5):
+            if balance_view.freshness_token(svc.store) is not None:
+                return
+            woken = time.monotonic()
+            os.mkdir(os.path.join(tree.root, f"wake{i}"))
+            log.started_after(woken)
+        raise AssertionError("the rollup never converged")
+
+    svc.start_ingestion()
+    try:
+        log.wait_for(lambda ticks: len(ticks) >= 1, 120)
+        log.quiet(0.5)
+        ask()
+        assert set(cache._read) == set(_live_fingerprints(svc.store))
+
+        landed = time.monotonic()
+        tree.transfer("T1", "C", "A", "2.25")
+        log.wait_for(lambda ticks: any(f for s, _e, f in ticks if s > landed), 20)
+        converge()
+        live = _live_fingerprints(svc.store)
+
+        def published():  # every snapshot read before is fresh, unasked
+            assert {k: cache._snaps[k][0] for k in live} == live
+
+        eventually(published, timeout=10, interval=0.05)
+        assert cache.counters["reload_on_publish"] >= 2  # the rollup and df:transfer
+        before = dict(cache.counters)
+        ask()
+        for key in live:
+            assert cache.counters[f"{key}_hit"] > before.get(f"{key}_hit", 0), key
+            assert cache.counters[f"{key}_reload"] == before.get(f"{key}_reload", 0), key
+
+        reloads = cache.counters["reload_on_publish"]
+        fail.set()
+        landed = time.monotonic()
+        tree.transfer("T1", "A", "B", "0.75")
+        log.started_after(landed)
+        log.quiet(0.5)
+        assert not fail.is_set()  # the tick committed, then failed
+        assert cache.counters["reload_on_publish"] == reloads
+        stale = cache._snaps["df:transfer"][0]
+        assert stale != balance_view.table_fingerprint(svc.store, "transfer")
+        ask()
+        assert cache.counters["df:transfer_reload"] > before.get("df:transfer_reload", 0)
+        _assert_exact(svc.store, tree)
+    finally:
+        svc.stop()
+    assert not svc._ingest_thread.is_alive()

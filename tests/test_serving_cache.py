@@ -297,3 +297,55 @@ def test_transfer_page_follower_served_stale_during_reload(spark, tmp_path):
     assert got["leader"] == new_rows  # leader saw fresh
     # after the flight: the fresh page is cached and served
     assert cache.transfers_page(key, lambda: ["never"]) == new_rows
+
+
+def test_refresh_revalidates_only_what_requests_read(spark, tmp_path):
+    """A publish (ServingCache.refresh) after a commit reloads each
+    snapshot a request read, submits no Spark job, and leaves the rest
+    alone: an entry nobody read is not built, and a ``df:`` entry whose
+    rebuild would infer a schema with a Spark job waits for a request.
+    The next request then hits the published snapshot."""
+    from .test_tablestore import _jobs_during
+
+    root = str(tmp_path / "primary")
+    _fixture(root)
+    store = warehouse_store(spark, str(tmp_path / "wh"))
+    pipe = IngestionPipeline(spark, root, store)
+    pipe.run_once()
+    cache = ServingCache(store)
+    assert cache.tenant_names() == ["CACHE_ACC", "CACHE_TRN"]
+    assert cache.balances()[("CACHE_TRN", "CREDIT")] == decimal.Decimal("1.00")
+    for name in ("transfer", "tenant"):
+        assert cache.table_df(name) is not None
+
+    # the commit: a new tenant, and a second transfer in CACHE_TRN
+    t = os.path.join(root, "t_CACHE_TRN")
+    write(os.path.join(t, "transaction", "TRN2"),
+          "committed\nTRX CACHE_TRN CREDIT CACHE_TRN DEBIT 2020-01-02T00:00:00Z 2 CZK\n")
+    write(os.path.join(t, "account", "CREDIT", "events", "0000000000", "1_2_TRN2"), "1\n")
+    write(os.path.join(t, "account", "DEBIT", "events", "0000000000", "1_-2_TRN2"), "1\n")
+    write(os.path.join(root, "t_CACHE_NEW", "account", "N", "snapshot", "0000000000"),
+          "EUR FORMAT_N\n")
+    assert pipe.run_once().transfers_discovered == 1
+    balance_view.maintain(store)
+
+    before = dict(cache.counters)
+    assert _jobs_during(spark, cache.refresh) == set()
+    moved = {k: cache.counters[k] - before.get(k, 0) for k in cache.counters}
+    assert {k: v for k, v in moved.items() if v} == {
+        "tenant_reload": 1, "balance_rollup_reload": 1, "df:transfer_reload": 1,
+        "reload_on_publish": 3,
+    }
+    assert "account" not in cache._snaps  # no request read it
+    assert set(cache._read) == {"df:tenant"}  # the rest wait for a request
+
+    before = dict(cache.counters)
+    assert cache.tenant_names() == ["CACHE_ACC", "CACHE_NEW", "CACHE_TRN"]
+    assert cache.balances()[("CACHE_TRN", "CREDIT")] == decimal.Decimal("3.00")
+    assert cache.table_df("transfer").count() == 2
+    assert cache.table_df("tenant").count() == 3  # reloads here, on the request
+    moved = {k: cache.counters[k] - before.get(k, 0) for k in cache.counters}
+    assert {k: v for k, v in moved.items() if v} == {
+        "tenant_hit": 1, "balance_rollup_hit": 1, "df:transfer_hit": 1,
+        "df:tenant_reload": 1,
+    }
