@@ -148,9 +148,10 @@ class WarehouseContext:
     pages, account pages/details, balances — from version-pinned
     in-memory snapshots of the Spark-maintained artifacts, each used
     only when provably fresh (fingerprint check, no Spark job) and
-    memoized per request like the table reads.  Fact queries (transfers)
-    always run on Spark.  Without a cache every path is the original
-    Spark plan — the fallback the snapshots degrade to."""
+    memoized per request like the table reads.  Transfer pages go
+    through ``cache.transfers_page`` (the Arrow fact tier, or Spark for
+    range shapes).  Without a cache every path is the original Spark
+    plan — the fallback the snapshots degrade to."""
 
     def __init__(self, store, cache=None):
         self.store = store
@@ -200,7 +201,7 @@ class WarehouseContext:
     def _table(self, name: str):
         if name not in self._dfs:
             df = None
-            if self.cache is not None and hasattr(self.cache, "table_df"):
+            if self.cache is not None:
                 # shared fingerprint-pinned frame: amortizes the per-read
                 # file-index listing (driver-bound, ~5 s on the month-
                 # partitioned facts at sf1 — serializes across concurrent
@@ -258,9 +259,7 @@ class WarehouseContext:
 
         acc_snap = self._snapshot("accounts")
         acc_kv = None
-        if acc_snap is None and self.cache is not None and hasattr(
-            self.cache, "kv_account_details"
-        ):
+        if acc_snap is None and self.cache is not None:
             # the tier past the snapshot memory bound: row-group-pruned
             # point reads over the same artifact (api/kv_tier.py) — still
             # zero Spark jobs when the account table outgrows the snapshot.
@@ -309,7 +308,7 @@ class WarehouseContext:
             for k, row in rows.items():
                 row["balance"] = bal_snap.get(k, _ZERO_MONEY)
             return rows
-        if self.cache is not None and hasattr(self.cache, "kv_balances"):
+        if self.cache is not None:
             # KV point reads against the maintained rollup (same freshness
             # token as the snapshot); a key with no change rows is 0.00 —
             # identical to the snapshot's .get(k, 0) coalesce.  Pinned to
@@ -433,7 +432,7 @@ def _resolve_accounts(_src, info, tenant: str, currency=None, format=None, limit
         if format is not None:
             rows = [r for r in rows if r[2] == format]
         page_keys = [(tenant, r[0]) for r in _page(rows, limit, offset)]
-    elif ctx.cache is not None and hasattr(ctx.cache, "kv_accounts_page"):
+    elif ctx.cache is not None:
         # past the snapshot bound: the page slices an LRU-kept sorted
         # Arrow materialization of ONE tenant partition (kv_tier) — other
         # tenants are never touched, and only ≤ limit rows reach Python
@@ -469,28 +468,7 @@ def _resolve_transfers(
 ):
     ctx: WarehouseContext = info.context
 
-    def _load():
-        # tenant + eq-filter shapes first try the Arrow fact-page tier
-        # (bounded row-group reads, no Spark job) — the page source that
-        # survives ingest-tick fingerprint moves without queueing behind
-        # the tick's own Spark jobs; range shapes keep the Spark path
-        # (month pruning lives there)
-        no_ranges = all(
-            v is None
-            for v in (
-                amount_lt, amount_lte, amount_gt, amount_gte,
-                valueDate_lt, valueDate_lte, valueDate_gt, valueDate_gte,
-            )
-        )
-        if no_ranges and ctx.cache is not None and hasattr(
-            ctx.cache, "kv_transfers_page"
-        ):
-            rows = ctx.cache.kv_transfers_page(
-                tenant, currency=currency, status=status,
-                limit=limit, offset=offset,
-            )
-            if rows is not None:
-                return rows
+    def _spark_page():
         return wh.transfers(
             ctx.transfers_df(), tenant=tenant, currency=currency,
             status=status,  # already coerced by the Status scalar
@@ -501,21 +479,19 @@ def _resolve_transfers(
             limit=limit, offset=offset,
         ).collect()
 
-    if ctx.cache is not None and hasattr(ctx.cache, "transfers_page"):
-        # fingerprint-pinned page cache: repeat request shapes (the golden
-        # GraphQL queries cycle a handful per tenant) serve without a Spark
-        # job; any transfer-table change invalidates exactly
-        page = ctx.cache.transfers_page(
-            (
-                "transfers", tenant, currency, status,
+    if ctx.cache is None:
+        page = _spark_page()
+    else:
+        ranged = any(
+            v is not None
+            for v in (
                 amount_lt, amount_lte, amount_gt, amount_gte,
                 valueDate_lt, valueDate_lte, valueDate_gt, valueDate_gte,
-                limit, offset,
-            ),
-            _load,
+            )
         )
-    else:
-        page = _load()
+        page = ctx.cache.transfers_page(
+            tenant, currency, status, ranged, limit, offset, _spark_page
+        )
     # ONE batched account fetch for every credit/debit on the page (Q8)
     keys = [(r["credit_tenant"], r["credit_name"]) for r in page] + [
         (r["debit_tenant"], r["debit_name"]) for r in page

@@ -177,29 +177,6 @@ def build_app(store) -> Flask:
         except Exception:  # store without a live SparkContext (unit fakes)
             pass
 
-    # ---- response cache (serving layer 0) --------------------------------
-    # graphql-core execution is pure Python: a 1000-row nested page costs
-    # ~0.15-0.45 s of GIL-bound work, which under 32 concurrent request
-    # threads serializes into tens of seconds of latency (measured — the
-    # Spark side was NOT the bottleneck once the snapshot/page tiers
-    # landed). Repeat request shapes are the norm (the reference's clients
-    # poll fixed queries), so successful responses are LRU-cached keyed by
-    # the exact request triple, pinned to the store's mutation counter:
-    # any table/rollup change moves the counter and every entry dies.
-    # Error responses are never cached; stores without the counter (unit
-    # fakes, multi-writer deployments) disable the cache entirely.
-    import collections
-    import threading
-
-    resp_cache: "collections.OrderedDict[tuple, bytes]" = collections.OrderedDict()
-    resp_lock = threading.Lock()
-    resp_token = [None]
-    RESP_MAX_ENTRIES = 128
-    # SPARK_GRAFT_RESPONSE_CACHE=0 disables layer 0 entirely — the
-    # cold-execution arm, so the 20 s deadline is demonstrated against
-    # real execution, not LRU hits
-    resp_enabled = os.environ.get("SPARK_GRAFT_RESPONSE_CACHE", "1") != "0"
-
     def run_query(payload: dict) -> Response:
         query = payload.get("query")
         if not isinstance(query, str) or not query.strip():
@@ -210,28 +187,10 @@ def build_app(store) -> Flask:
             # execution — validate here so a malformed client request is
             # the documented JSON 400, not a Flask HTML 500
             return _json({"error": "variables must be an object"}, 400)
-        token = getattr(store, "mutations", None) if resp_enabled else None
-        key = None
-        if token is not None:
-            try:
-                key = (query, json.dumps(variables, sort_keys=True, default=str),
-                       payload.get("operationName"))
-            except Exception:
-                key = None
-            if key is not None:
-                with resp_lock:
-                    if resp_token[0] != token:
-                        resp_cache.clear()
-                        resp_token[0] = token
-                    body = resp_cache.get(key)
-                    if body is not None:
-                        resp_cache.move_to_end(key)
-                        cache.counters["response_hit"] += 1
-                        return Response(body, status=200, mimetype="application/json")
         result = execute(
             store,
             query,
-            variables=payload.get("variables"),
+            variables=variables,
             operation_name=payload.get("operationName"),
             cache=cache,
         )
@@ -246,16 +205,7 @@ def build_app(store) -> Flask:
                 },
                 status,
             )
-        resp = _json({"data": result.data}, 200)
-        if key is not None and getattr(store, "mutations", None) == token:
-            # counter unchanged across the whole execution → the response
-            # provably reflects that exact store state; cache it
-            with resp_lock:
-                if resp_token[0] == token:
-                    resp_cache[key] = resp.get_data()
-                    while len(resp_cache) > RESP_MAX_ENTRIES:
-                        resp_cache.popitem(last=False)
-        return resp
+        return _json({"data": result.data}, 200)
 
     @app.post("/graphql")
     def graphql_post():

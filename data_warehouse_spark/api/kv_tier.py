@@ -206,20 +206,6 @@ class KVTier:
         self._footers: "collections.OrderedDict[str, object]" = (
             collections.OrderedDict()
         )
-        # decoded row-group LRU: (path, rg_index, cols) → pa.Table. The
-        # pyarrow decode is the GIL-held cost that sets the 32-thread
-        # serving ceiling (measured: 2748/s at 1 thread vs 1044/s at
-        # 32 — a CPython decode convoy, not a tier lock); hot groups now
-        # decode ONCE and repeat lookups run GIL-cheap bisect+take over
-        # the cached Arrow table. Paths are immutable (copy-on-write
-        # store), so entries can never go stale — only cold. Bounded by
-        # a global row budget like the tenant pages (64 KB groups ≈
-        # 1–2k rows each → the default caps at ~100–200 MB).
-        self._rg_cache: "collections.OrderedDict[tuple, object]" = (
-            collections.OrderedDict()
-        )
-        self._rg_rows_total = 0
-        self.max_rg_cached_rows = 4_000_000
         # observability: row groups read vs skipped (tests pin pruning).
         # Counter += is read-modify-write — increments happen under
         # _counter_lock (NOT _lock: counters must never serialize reads)
@@ -254,50 +240,20 @@ class KVTier:
         # decode (the serving tier's concurrency ceiling)
         return pq.ParquetFile(path, metadata=md, memory_map=True)
 
-    def _read_groups_cached(self, path: str, indices: list[int], read_cols):
-        """Concatenated rows of the given row groups, each group's decode
-        served from the LRU when hot (paths are immutable, so a cached
-        decode can never be stale). Returns (table, present_columns)."""
-        import pyarrow as pa
-
-        pf = None
-        data_cols = None
-        parts = []
-        misses = 0
-        for idx in indices:
-            key = (path, idx, tuple(read_cols))
-            with self._lock:
-                t = self._rg_cache.get(key)
-                if t is not None:
-                    self._rg_cache.move_to_end(key)
-            if t is None:
-                if pf is None:
-                    pf = self._parquet_file(path)
-                    data_cols = [
-                        c for c in read_cols if c in pf.schema_arrow.names
-                    ]
-                # use_threads=False: a 64 KB group gains nothing from
-                # Arrow's GLOBAL pool and 32 request threads queueing on
-                # it was the r7 6.5× concurrent-p95 blowup
-                t = pf.read_row_group(idx, columns=data_cols, use_threads=False)
-                misses += 1
-                with self._lock:
-                    if key not in self._rg_cache:
-                        self._rg_cache[key] = t
-                        self._rg_rows_total += t.num_rows
-                        while (
-                            self._rg_cache
-                            and self._rg_rows_total > self.max_rg_cached_rows
-                        ):
-                            _, ev = self._rg_cache.popitem(last=False)
-                            self._rg_rows_total -= ev.num_rows
-            parts.append(t)
-        self._count(
-            ("kv_rg_cache_hit", len(indices) - misses),
-            ("kv_rg_cache_miss", misses),
-        )
-        tbl = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
-        return tbl, list(tbl.column_names)
+    def _read_groups(self, path: str, indices: list[int], read_cols):
+        """Rows of the given row groups of one file, in the columns of
+        ``read_cols`` the file has. Each decoded group counts under
+        ``kv_rg_cache_miss``: nothing is kept between reads, so every read
+        is a miss, and the benchmark derives its row groups per call from
+        that counter."""
+        pf = self._parquet_file(path)
+        cols = [c for c in read_cols if c in pf.schema_arrow.names]
+        # use_threads=False: a 64 KB group gains nothing from Arrow's
+        # GLOBAL pool and 32 request threads queueing on it was the r7
+        # 6.5× concurrent-p95 blowup
+        tbl = pf.read_row_groups(indices, columns=cols, use_threads=False)
+        self._count(("kv_rg_cache_miss", len(indices)))
+        return tbl
 
     def _match_rows(self, tbl, names: set):
         """Rows of ``tbl`` whose ``key_col`` is in ``names``.
@@ -486,11 +442,11 @@ class KVTier:
                     rg_skipped += len(entry.row_groups) - len(want)
                     if not want:
                         continue
-                    tbl, data_cols = self._read_groups_cached(
+                    tbl = self._read_groups(
                         entry.path, [rg.index for rg in want], read_cols
                     )
                     tbl = self._match_rows(tbl, here)
-                    cols = {c: tbl.column(c).to_pylist() for c in data_cols}
+                    cols = {c: tbl.column(c).to_pylist() for c in tbl.column_names}
                     n_rows = tbl.num_rows
                     for i in range(n_rows):
                         name = cols[self.key_col][i]
@@ -531,9 +487,9 @@ class KVTier:
         given immutable part files, restricted to the requested keys — the
         exact Arrow delta the stale-window balance path adds on top of the
         maintained rollup (balance_view.stale_window). Files are one
-        tick's appends (O(batch) rows); each decodes once into the
-        row-group LRU. Decimal aggregation is exact (order-free), so
-        rollup + delta ≡ the direct Spark SUM bit-for-bit."""
+        tick's appends (O(batch) rows), decoded on every call. Decimal
+        aggregation is exact (order-free), so rollup + delta ≡ the direct
+        Spark SUM bit-for-bit."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -552,7 +508,7 @@ class KVTier:
                 if tenant is not None and not names:
                     continue  # no requested key in this tenant's files
                 md = self._parquet_file(path)
-                t, _cols = self._read_groups_cached(
+                t = self._read_groups(
                     path,
                     list(range(md.metadata.num_row_groups)),
                     [self.key_col, "tenant", value_col],
@@ -594,28 +550,16 @@ class KVTier:
         return out
 
     # ---- sorted fact pages -----------------------------------------------
-    def _file_prefix_cached(self, path, read_cols, eq_filters, need):
+    def _file_prefix(self, path, read_cols, eq_filters, need):
         """First ``need`` rows of one (cluster_by-sorted) file that pass the
         eq filters, decoded via STREAMED Arrow batches — a month file holds
         one ~file-sized row group, so a row-group-granular read decoded the
-        whole file (measured: 250k rows per cold 1000-row page at sf1,
-        enough to blow the LRU budget and saturate the CPU under load).
-        Batches stop as soon as ``need`` filtered rows accumulate. The
-        bounded prefix is LRU-cached against the immutable path: a merge
-        moves the TABLE fingerprint but leaves every untouched tenant's
-        file paths alive, so repeat pages across ticks decode nothing."""
+        whole file (measured: 250k rows per cold 1000-row page at sf1).
+        Batches stop as soon as ``need`` filtered rows accumulate. Counts
+        one ``kv_rg_cache_miss`` per file, like :meth:`_read_groups`."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        eq_key = tuple(sorted((eq_filters or {}).items()))
-        key = (path, tuple(read_cols), eq_key, need)
-        with self._lock:
-            hit = self._rg_cache.get(key)
-            if hit is not None:
-                self._rg_cache.move_to_end(key)
-        if hit is not None:
-            self._count(("kv_rg_cache_hit", 1))
-            return hit
         pf = self._parquet_file(path)
         cols = [c for c in read_cols if c in pf.schema_arrow.names]
         taken = []
@@ -631,20 +575,10 @@ class KVTier:
                 got += t.num_rows
             if got >= need:
                 break
-        out = (
-            pa.concat_tables(taken).slice(0, need)
-            if taken
-            else pf.schema_arrow.empty_table().select(cols)
-        )
         self._count(("kv_rg_cache_miss", 1))
-        with self._lock:
-            if key not in self._rg_cache:
-                self._rg_cache[key] = out
-                self._rg_rows_total += out.num_rows
-                while self._rg_cache and self._rg_rows_total > self.max_rg_cached_rows:
-                    _, ev = self._rg_cache.popitem(last=False)
-                    self._rg_rows_total -= ev.num_rows
-        return out
+        if not taken:
+            return pf.schema_arrow.empty_table().select(cols)
+        return pa.concat_tables(taken).slice(0, need)
 
     def sorted_page(
         self,
@@ -663,12 +597,11 @@ class KVTier:
         fact-table page shape (``transfers(tenant, …, limit, offset)``)
         served by BOUNDED Arrow reads instead of a Spark job.
 
-        Why it exists: every ingest tick moves the fact fingerprint,
-        invalidating the page cache; under concurrent load each page
-        reload was a Spark job queueing behind the tick's own jobs — the
-        measured contention spiral (r9 serving bench: 41 page-load jobs
-        stretched the client window 7×). This path reads O(files ×
-        (offset+limit)) rows, GIL-light, regardless of fact size.
+        Why it exists: under concurrent load each Spark page was a job
+        queueing behind the ingest tick's own jobs — the measured
+        contention spiral (r9 serving bench: 41 page-load jobs stretched
+        the client window 7×). This path reads O(files × (offset+limit))
+        rows, GIL-light, regardless of fact size.
 
         Correctness: the table is cluster_by ``sort_cols``, so each
         file's row groups stream in sort order; the global first
@@ -693,9 +626,7 @@ class KVTier:
         parts = []
         try:
             for entry in idx.files_for(tenant):
-                t = self._file_prefix_cached(
-                    entry.path, read_cols, eq_filters, need
-                )
+                t = self._file_prefix(entry.path, read_cols, eq_filters, need)
                 if t.num_rows:
                     parts.append(t)
             if not parts:

@@ -12,8 +12,10 @@ lakehouse serving architecture splits the roles: **Spark maintains the
 artifacts** (the copy-on-write warehouse tables, the incrementally
 maintained balance rollup), and the **API tier memory-maps the small
 dimension artifacts** and answers from them directly — tenant, account,
-and the balance rollup are all O(accounts); the transfer FACT table
-stays on Spark (partition-pruned scans).
+and the balance rollup are all O(accounts).  The transfer FACT table is
+too big to snapshot: each transfers page is read afresh, from the Arrow
+fact tier for tenant + equality shapes and from Spark (partition-pruned
+scans) for range shapes.  No page or response is kept between requests.
 
 Freshness is the same witness the rollup maintenance uses
 (``balance_view.table_fingerprint``): every snapshot records the
@@ -97,19 +99,15 @@ def _read_columns(files: list[str], columns: list[str], vdir: str,
 
 
 class ServingCache:
-    """Thread-safe, fingerprint-keyed snapshots.  Every accessor returns
-    the snapshot ONLY when its recorded fingerprint equals the table's
-    live fingerprint, else None (caller uses the Spark path); loads are
-    serialized under a lock with a double-check so concurrent requests
-    after a tick reload once."""
+    """Thread-safe, fingerprint-keyed snapshots of the dimension tables,
+    and the read routing of the transfers page.  Every snapshot accessor
+    returns the snapshot ONLY when its recorded fingerprint equals the
+    table's live fingerprint, else None (caller uses the Spark path);
+    loads are serialized under a lock with a double-check so concurrent
+    requests after a tick reload once.  Transfer pages are never kept:
+    :meth:`transfers_page` reads each one from the KV tier or Spark."""
 
-    def __init__(
-        self,
-        store,
-        max_rows: int = 200_000,
-        max_pages: int = 256,
-        max_page_rows: int = 10_000,
-    ):
+    def __init__(self, store, max_rows: int = 200_000, max_page_rows: int = 10_000):
         # max_rows is a LOAD-TIME bound, not only a memory bound. The
         # snapshot loader decodes parquet into Python dicts at ~200k
         # rows/s of GIL-bound driver work, and every ingest tick moves
@@ -125,25 +123,12 @@ class ServingCache:
         # and O(file footers) per rebuild at any table size.
         self.store = store
         self.max_rows = max_rows
-        self.max_pages = max_pages
         self.max_page_rows = max_page_rows
         self._lock = threading.Lock()
         self._snaps: dict[str, tuple[str, Any]] = {}
         # {key: (fingerprint, loader)} of each snapshot a request has asked
         # for since a publish last revalidated it: what the next one does
         self._read: dict[str, tuple] = {}
-        # fact-page result cache: {args_key: collected page}, valid only for
-        # one transfer-table fingerprint (any table change clears it)
-        self._pages: "collections.OrderedDict[tuple, Any]" = collections.OrderedDict()
-        self._pages_fp: str | None = None
-        # the immediately-previous generation's pages (see transfers_page:
-        # serve-stale-while-revalidate across an ingest adopt)
-        self._pages_prev: dict = {}
-        self._pages_prev_fp: str | None = None
-        # request coalescing: concurrent identical page misses share one
-        # Spark job (key → {"event", "rows"}); a thundering herd of 32
-        # first-requests otherwise runs 32 identical jobs
-        self._inflight: dict[tuple, dict] = {}
         # observability: per-kind hit/miss/fallback counts (the
         # measurement of WHICH path served a run)
         self.counters: "collections.Counter[str]" = collections.Counter()
@@ -155,8 +140,8 @@ class ServingCache:
         self.kv.counters = self.counters
         # fact-page tier: transfer pages keyed/sorted by (transaction,
         # transfer) served as bounded Arrow reads — without it every
-        # post-tick page reload is a Spark job on the request path (the
-        # measured contention spiral under concurrent load)
+        # page is a Spark job on the request path (the measured
+        # contention spiral under concurrent load)
         self.kv_transfer = kv_tier.KVTier(store, key_col="transaction")
         self.kv_transfer.counters = self.counters
 
@@ -218,103 +203,22 @@ class ServingCache:
                 continue
             self._get(key, fingerprint, loader, publish=True)
 
-    # ---- transfer page results -----------------------------------------
-    def transfers_page(self, key: tuple, loader):
-        """Fingerprint-pinned LRU of materialized transfer PAGES (the
-        collected rows of one transfers(...) request).  The fact table is
-        too big to snapshot, but its QUERY RESULTS are tiny (≤ limit rows)
-        and highly repetitive — the reference's GraphQL surface always
-        pages with the same handful of argument shapes per tenant.  Pinning
-        to the table fingerprint gives exact invalidation: any merge,
-        compaction, or overwrite moves the fingerprint and drops every
-        page.  A page is cached only when the fingerprint is UNCHANGED
-        across the load (re-checked after), so a cached page provably
-        reflects that exact committed on-disk state.  Entry/row bounds
-        keep this O(pages), not O(fact).
-
-        Staleness across an ingest adopt (r11): a fingerprint move keeps
-        the outgoing generation's pages for ONE generation.  The LEADER
-        of each page's reload still loads inline — the first reader after
-        a change always sees the fresh state (the pinned golden-test
-        contract) — but FOLLOWERS arriving while that flight is running
-        are served the previous committed generation instead of blocking
-        on the leader's Spark job: bounded staleness of exactly one
-        committed snapshot, the read a Postgres client gets when its
-        query started before a concurrent ingest transaction committed
-        (the reference's semantics).  A stack-sampled serving run (r11)
-        measured follower blocking as the hottest request-side frame
-        during the merge window (32 threads × coalesced waits); the
-        bbtest poll contract is preserved because a poll repeats until
-        the revalidated page is visible.  A key the previous generation
-        never served (e.g. a NEW tenant — the bbtest poll shape) waits
-        for the leader as before, so polls never see phantom-stale
-        emptiness."""
-        try:
-            fp = balance_view.table_fingerprint(self.store, "transfer")
-        except Exception:
-            fp = None
-        if fp is None:
-            self.counters["transfer_page_fallback"] += 1
-            return loader()
-        stale_rows = None
-        with self._lock:
-            if fp != self._pages_fp:
-                if self._pages:
-                    # keep ONE outgoing generation for stale-serving
-                    self._pages_prev = dict(self._pages)
-                    self._pages_prev_fp = self._pages_fp
-                self._pages = collections.OrderedDict()
-                self._pages_fp = fp
-            if key in self._pages:
-                self._pages.move_to_end(key)
-                self.counters["transfer_page_hit"] += 1
-                return self._pages[key]
-            flight = self._inflight.get(key)
-            if flight is None:
-                flight = {"event": threading.Event(), "rows": None}
-                self._inflight[key] = flight
-                leader = True
-            else:
-                leader = False
-            if self._pages_prev_fp is not None and key in self._pages_prev:
-                stale_rows = self._pages_prev[key]
-        if stale_rows is not None and not leader:
-            # a reload flight is in progress: serve the previous committed
-            # generation NOW instead of blocking on the leader's Spark job
-            self.counters["transfer_page_stale_served"] += 1
-            return stale_rows
-        if not leader:
-            # follower: wait for the leader's result instead of running an
-            # identical Spark job (bounded — a stuck leader must not wedge
-            # the request; on timeout/failure run our own load)
-            flight["event"].wait(timeout=300)
-            if flight["rows"] is not None:
-                self.counters["transfer_page_coalesced"] += 1
-                return flight["rows"]
-            return loader()
-        return self._page_load_and_cache(key, loader, flight, fp)
-
-    def _page_load_and_cache(self, key, loader, flight, fp):
-        """Leader body of a transfers-page load: run the loader, publish
-        to followers, and cache iff the fingerprint held across the load
-        (a cached page provably reflects that exact on-disk state)."""
-        rows = None
-        try:
-            rows = loader()  # Spark job — outside the lock
-            flight["rows"] = rows
-        finally:
-            flight["event"].set()
-            with self._lock:
-                self._inflight.pop(key, None)
-        fp_after = balance_view.table_fingerprint(self.store, "transfer")
-        self.counters["transfer_page_load"] += 1
-        if rows is not None and fp_after == fp and len(rows) <= self.max_page_rows:
-            with self._lock:
-                if fp == self._pages_fp:
-                    self._pages[key] = rows
-                    while len(self._pages) > self.max_pages:
-                        self._pages.popitem(last=False)
-        return rows
+    # ---- transfer pages ----------------------------------------------
+    def transfers_page(self, tenant: str, currency, status, ranged: bool,
+                       limit, offset: int, loader) -> list:
+        """One transfers(...) page. A tenant + equality-filter shape reads
+        the Arrow fact tier (:meth:`kv_transfers_page`, no Spark job); a
+        range-filtered shape (``ranged``: month pruning lives in the Spark
+        plan), or one the tier refuses, runs ``loader``, the Spark page.
+        Nothing is kept between requests: every page is read from the
+        committed table it was asked of."""
+        if not ranged:
+            rows = self.kv_transfers_page(
+                tenant, currency=currency, status=status, limit=limit, offset=offset
+            )
+            if rows is not None:
+                return rows
+        return loader()
 
     def _bounded_files(self, name: str) -> list[str] | None:
         vdir = self.store._resolve(name)

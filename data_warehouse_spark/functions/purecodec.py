@@ -192,18 +192,6 @@ def wav_decode(raw: bytes) -> tuple[int, int]:
         return w.getframerate(), w.getnframes()
 
 
-def wav_encode(sample_rate: int, samples, sampwidth: int = 2) -> bytes:
-    """Mono PCM samples (ints) → WAV bytes via stdlib ``wave``."""
-    out = io.BytesIO()
-    with wave.open(out, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(sampwidth)
-        w.setframerate(sample_rate)
-        arr = np.asarray(samples, dtype="<i2" if sampwidth == 2 else "<i4")
-        w.writeframes(arr.tobytes())
-    return out.getvalue()
-
-
 def resize_nearest(
     pixels, width: int, height: int, channels: int, target_w: int, target_h: int
 ) -> np.ndarray:

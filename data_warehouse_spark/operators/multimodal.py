@@ -153,17 +153,6 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-IMAGE_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("channels", T.IntegerType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), False),
-    ]
-)
-
 FRAME_SAMPLE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -173,23 +162,17 @@ FRAME_SAMPLE_SCHEMA = T.StructType(
     ]
 )
 
-_EMBED_DIM = 16
-
-
-def _fake_decode(payload: bytes) -> tuple[int, int, int, np.ndarray]:
-    """Deterministic pseudo-decode that PARSES THE PAYLOAD HEADER, the way a
+def _fake_image_header(payload: bytes) -> tuple[int, int, int]:
+    """(width, height, channels) parsed from the payload header, the way a
     real codec reads an image header (PNG IHDR / JPEG SOF): dimensions from
-    the leading bytes, channel count from the next, features from the byte
-    stream. Stands in for PIL.Image.open/np.asarray — and because it reads
+    the leading bytes, channel count from the next. Because it reads
     actual payload bytes, the Spark→Arrow→pandas binary plumbing is
     oracle-checkable (the DuckDB twin recomputes the same header fields)."""
     p = payload + bytes(8)  # pad pathological tiny payloads
     width = 1 + int.from_bytes(p[0:2], "big") % 2048
     height = 1 + int.from_bytes(p[2:4], "big") % 2048
     channels = 1 + p[4] % 4
-    arr = np.frombuffer(p, dtype=np.uint8).astype(np.float32)
-    emb = np.resize(arr, _EMBED_DIM) / 255.0
-    return width, height, channels, emb
+    return width, height, channels
 
 
 def _fake_audio_header(raw: bytes) -> tuple[int, int]:
@@ -236,40 +219,6 @@ def media_from_documents(documents: DataFrame) -> DataFrame:
         mime.alias("mime"),
         F.col("source").alias("source"),
     )
-
-
-def extract_image_features(media: DataFrame, decode: str = "fake") -> DataFrame:
-    """payload → (width, height, channels, embedding) via Arrow-batched
-    mapInPandas (the Pandas-UDF slow path, used only because codecs are
-    inherently Python/native)."""
-    if decode not in ("fake", "real"):
-        raise ValueError("decode must be 'fake' or 'real'")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode_one = _fake_decode
-        if decode == "real":
-            real_decode = _real_image_decoder()
-
-            def decode_one(payload: bytes):
-                w, h, channels, pixels = real_decode(payload)
-                emb = np.resize(pixels.astype(np.float32), _EMBED_DIM) / 255.0
-                return w, h, channels, emb
-
-        for pdf in it:
-            rows = [decode_one(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "width": [r[0] for r in rows],
-                    "height": [r[1] for r in rows],
-                    "channels": [r[2] for r in rows],
-                    "n_bytes": [len(bytes(p)) for p in pdf["payload"]],
-                    "embedding": [r[3].tolist() for r in rows],
-                }
-            )
-
-    pruned = media.filter(F.col("kind") == "image").select("media_id", "payload")
-    return pruned.mapInPandas(batches, IMAGE_FEATURES_SCHEMA)
 
 
 def sample_frames(
@@ -501,7 +450,7 @@ def extract_media_metadata(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         if decode == "fake":
             def image_metrics(raw: bytes) -> list[tuple[str, int]]:
-                w, h, c, _emb = _fake_decode(raw)
+                w, h, c = _fake_image_header(raw)
                 return [
                     ("width", w), ("height", h),
                     ("channels", c), ("n_bytes", len(raw)),

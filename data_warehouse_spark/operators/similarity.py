@@ -767,8 +767,7 @@ def _batch_cells(vecs, vn_all, cmat, cnorm, cids, dim, fast):
     # NULL under the expression spec (zip_with pads the shorter
     # array with nulls, the fold propagates) and the struct-max
     # tie then falls through to the MAX cell — replicate that so
-    # e.g. append_to_ivf_index's dim guard can still materialize
-    # the assignment and refuse cleanly
+    # both modes assign a malformed vector to the same cell
     ok = np.asarray(
         [v is not None and len(v) == dim for v in vecs], dtype=bool
     )
@@ -994,215 +993,6 @@ def ivf_topk(
         .orderBy("query_id", "rank")
     )
     return _plan_cache_put(pk, out)
-
-
-# single source of truth for the stored-index layout — external tooling
-# must not re-hardcode it
-IVF_CORPUS_SUBDIR = "corpus"
-
-
-def save_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    n_cells: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    fast: bool = False,
-) -> None:
-    """Persist the IVF index as a storage artifact — the production shape
-    of "build once, probe for months" (the session cache in
-    :data:`_IVF_INDEX_CACHE` is the local stand-in; this is the real
-    thing). Layout under ``path``:
-
-      centroids/   (cell_id, cv, cnorm) — the tiny coarse quantizer
-      corpus/      (neighbor_id, n_vec, _vn) **partitioned by cell**
-      meta/        one row of geometry for load-time validation
-
-    Partitioning the corpus by cell is the point: a probe touching
-    ``nprobe`` of ``n_cells`` cells reads only those directories (Spark's
-    dynamic partition pruning turns the broadcast probe join into a
-    partition filter), so serving cost is ~nprobe/n_cells of the corpus —
-    sub-linear scans with zero custom index code.
-
-    ``n_cells=None`` (the default) auto-sizes √N from the corpus count —
-    a stored artifact should be built at corpus-derived geometry unless
-    the caller pins one deliberately.
-
-    ``fast=True`` builds the stored artifact with the BLAS assignment —
-    the shippable path for production-size corpora. The ASSIGNMENT keeps
-    the session build's measured 6–8× (sf30/sf100 attribution runs:
-    session auto-geometry build 316.7→38.4 s at 2 M vectors); the stored
-    END-TO-END build measures ~2.5× because the artifact write
-    (cell-partitioned parquet, one file per cell) is mode-independent
-    and dominates once assignment is fast. Centroid training is
-    mode-independent, so the artifact layout, geometry and probe plans
-    are identical; only the cell assignment's IEEE summation order
-    differs (witnessed by :func:`ivf_fast_agreement`, and pinned
-    stored-fast ≡ stored-parity at driver SFs by
-    ``test_stored_index_fast_build_matches_parity``).
-    """
-    n_cells = _resolve_n_cells(embeddings, n_cells)
-    centroids, cdf, corpus = ivf_index(
-        embeddings, n_cells, id_col, vec_col, fast=fast
-    )
-    cdf.write.mode("overwrite").parquet(f"{path}/centroids")
-    # shuffle each cell's rows into ONE task before the partitioned write:
-    # without this every task writes a file into every cell dir it sees —
-    # tasks × √N-cells files (measured: the stored-artifact write was the
-    # dominant build cost at 2 M vectors, sf100).
-    # After: one right-sized file per cell — fewer footers for the pruned
-    # probe reads too.
-    (
-        corpus.repartition(F.col("cell"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/{IVF_CORPUS_SUBDIR}")
-    )
-    dim = len(centroids[0][1]) if centroids else 0
-    embeddings.sparkSession.createDataFrame(
-        [(n_cells, id_col, vec_col, dim)],
-        "n_cells int, id_col string, vec_col string, dim int",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
-
-
-def load_ivf_index(spark, path: str, n_cells: int | None = None):
-    """Load a :func:`save_ivf_index` artifact → the same (centroids, cdf,
-    corpus) triple :func:`ivf_index` returns. The stored geometry is
-    validated: ``n_cells`` against the caller's expectation (``None`` =
-    accept whatever geometry the artifact was built at — the normal case
-    now that builds auto-size) and the centroid dimensionality against the
-    meta (``id_col``/``vec_col`` in meta are provenance only — the
-    artifact's own column names are fixed)."""
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    if n_cells is not None and meta["n_cells"] != n_cells:
-        raise ValueError(
-            f"index at {path} was built with n_cells={meta['n_cells']}, "
-            f"caller expects {n_cells}"
-        )
-    cdf = spark.read.parquet(f"{path}/centroids")
-    corpus = spark.read.parquet(f"{path}/{IVF_CORPUS_SUBDIR}")
-    centroids = _centroids_from_cdf(cdf)
-    if centroids and len(centroids[0][1]) != meta["dim"]:
-        raise ValueError(
-            f"index at {path} stores dim={meta['dim']} but centroids have "
-            f"dim={len(centroids[0][1])} — artifact is corrupt"
-        )
-    return centroids, cdf, corpus
-
-
-def _centroids_from_cdf(cdf: DataFrame):
-    return [
-        (int(r["cell_id"]), [float(x) for x in r["cv"]], float(r["cnorm"]))
-        for r in cdf.orderBy("cell_id").collect()
-    ]
-
-
-def append_to_ivf_index(
-    new_embeddings: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scratch_dir: str | None = None,
-    fast: bool = False,
-) -> int:
-    """Index freshness without a rebuild — the IVF maintenance path every
-    serving system needs: assign the new vectors to the STORED centroids
-    (the same :func:`_assign_cells` dispatch as the index build — stored
-    and appended assignments cannot diverge) and append them to the
-    cell-partitioned corpus. Assignment is the map-only vectorized
-    Arrow-batch pass at any geometry (see :func:`_assign_cells`) — no
-    corpus shuffle, but a caller appending every micro-batch
-    should budget the per-batch Arrow transfer (size the trigger so batches
-    amortize it). Centroids stay fixed, so existing cell assignments,
-    stored files, and in-flight probes are untouched; the classic
-    operational rule applies — rebuild (re-quantize) only when drift makes
-    cell sizes skew enough to hurt recall.
-
-    Returns the number of vectors appended. Id uniqueness is the caller's
-    contract (pair with a dedup gate or a keyed MERGE upstream).
-
-    ``fast=True`` assigns the appended batch with the BLAS kernel (same
-    scale mode as the fast build — the agreement witness generalizes to
-    appended batches since assignment is the same shared expression).
-    """
-    from ..materialize import storage_checkpoint
-
-    spark = new_embeddings.sparkSession
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    centroids = _centroids_from_cdf(spark.read.parquet(f"{path}/centroids"))
-    dim = int(meta["dim"])
-    # materialize ONCE: the dim guard, the returned count, and the write
-    # must all see the same rows (a live/nondeterministic source could
-    # otherwise slip a bad row in between guard and write)
-    # scratch_dir: repeated callers (one append per micro-batch) pass a
-    # REUSED location so each batch does not leak a process-lifetime temp
-    # dir holding a full copy of the batch
-    assigned = storage_checkpoint(
-        _assign_cells(new_embeddings, centroids, id_col, vec_col, fast=fast),
-        path=scratch_dir,
-    )
-    if dim:
-        bad = assigned.filter(F.size("n_vec") != dim).count()
-        if bad:
-            raise ValueError(
-                f"{bad} vector(s) have dim != {dim}; refusing to append"
-            )
-    n = assigned.count()
-    # same one-file-per-touched-cell discipline as the initial build
-    (
-        assigned.repartition(F.col("cell"))
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(f"{path}/{IVF_CORPUS_SUBDIR}")
-    )
-    return n
-
-
-def ivf_topk_stored(
-    spark,
-    path: str,
-    query_ids: list[int],
-    k: int = 5,
-    n_cells: int | None = None,
-    nprobe: int | None = None,
-) -> DataFrame:
-    """Serve approximate top-k straight from a stored IVF index — no
-    original embedding table needed (query vectors are fetched from the
-    index corpus by id; external query vectors would join the same way).
-    The candidate join keys on ``cell``, which is the artifact's partition
-    column, so the corpus scan prunes to the probed cells.
-
-    ``n_cells=None`` accepts the artifact's stored geometry; ``nprobe=None``
-    derives ⌊√n_cells⌋ from it."""
-    _centroids, cdf, corpus = load_ivf_index(spark, path, n_cells)
-    if nprobe is None:
-        nprobe = auto_nprobe(len(_centroids) or 1)
-    queries = corpus.filter(F.col("neighbor_id").isin(query_ids)).select(
-        F.col("neighbor_id").alias("query_id"),
-        F.col("n_vec").alias("q_vec"),
-        F.col("_vn").alias("_qn"),
-    )
-    probe_cos = V.dot("q_vec", "cv") / (F.col("_qn") * F.col("cnorm"))
-    pw = Window.partitionBy("query_id").orderBy(F.desc("probe_cos"), F.desc("cell_id"))
-    probed = (
-        queries.crossJoin(F.broadcast(cdf))
-        .select("query_id", "q_vec", "_qn", "cell_id", probe_cos.alias("probe_cos"))
-        .withColumn("prn", F.row_number().over(pw))
-        .filter(F.col("prn") <= nprobe)
-        .select("query_id", "q_vec", "_qn", F.col("cell_id").alias("cell"))
-    )
-    cands = corpus.join(F.broadcast(probed), "cell").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    sim = V.dot("q_vec", "n_vec") / (F.col("_qn") * F.col("_vn"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return (
-        cands.select("query_id", "neighbor_id", sim.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
-    )
 
 
 def recall_vs_exact(approx: DataFrame, exact: DataFrame, k: int) -> DataFrame:

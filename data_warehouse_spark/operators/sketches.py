@@ -120,15 +120,6 @@ def sketch_table(rows, width: int, depth: int) -> list[list[int]]:
     return table
 
 
-def merge_sketches(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Cell-wise sum of two same-geometry sketches (the mergeability that
-    makes CMS a distributed-systems primitive: per-shard sketches roll up
-    without re-reading data)."""
-    return (
-        a.unionByName(b).groupBy("d", "bucket").agg(F.sum("cnt").alias("cnt"))
-    )
-
-
 def cms_heavy_hitters(
     df: DataFrame,
     key_col: str,

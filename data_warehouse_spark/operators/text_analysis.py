@@ -400,14 +400,13 @@ def mixture_split(
 
 
 # --- character-n-gram LM quality scoring -----------------------------------
-# The KenLM-style signal every pretraining pipeline runs: train a gram
-# frequency model on (a trusted slice of) the corpus, score each document
-# by its mean gram log-probability; gibberish / binary junk / repeated
-# boilerplate score far below natural prose. Integer-permille log-probs so
-# scores are exact and comparable across runs.
+# The KenLM-style signal every pretraining pipeline runs: score each
+# document by its mean gram log-probability under a gram frequency model
+# ``(gram, logp_x1000)`` of (a trusted slice of) the corpus; gibberish /
+# binary junk / repeated boilerplate score far below natural prose.
+# Integer-permille log-probs so scores are exact and comparable across runs.
 
 LM_GRAM_N = 3
-LM_VOCAB_K = 4096
 LM_UNSEEN_PENALTY_X1000 = -18_000  # ~e^-18 — below any in-vocab gram
 
 
@@ -421,41 +420,6 @@ def _char_grams(text_col, n: int = LM_GRAM_N):
         F.transform(
             F.sequence(F.lit(1), F.length(norm) - (n - 1)),
             lambda i: norm.substr(i, F.lit(n)),
-        )
-    )
-
-
-def train_char_lm(
-    corpus: DataFrame,
-    text_col: str = "text",
-    vocab_k: int = LM_VOCAB_K,
-    gram_n: int = LM_GRAM_N,
-) -> DataFrame:
-    """Gram model: the ``vocab_k`` most frequent character n-grams with
-    integer-permille log-probabilities — ``(gram, logp_x1000)``.
-
-    One explode (map-side) + one count shuffle on the gram key + a top-k;
-    the result is dimension-table sized (vocab_k rows) and is meant to be
-    broadcast by :func:`lm_quality_score` — train once on a trusted slice,
-    score everything, exactly the IVF-index / signature-store artifact
-    pattern (persist with TableStore / parquet to reuse across sessions).
-    """
-    from ..materialize import storage_checkpoint
-
-    grams = corpus.select(F.explode(_char_grams(F.col(text_col), gram_n)).alias("gram"))
-    # materialize the gram counts once: both the total (collected here) and
-    # the returned model plan read the checkpoint — without it the full
-    # corpus explode+shuffle would run twice
-    counts = storage_checkpoint(grams.groupBy("gram").agg(F.count(F.lit(1)).alias("n")))
-    total = counts.agg(F.sum("n")).collect()[0][0] or 1
-    return (
-        counts.orderBy(F.desc("n"), "gram")
-        .limit(vocab_k)
-        .select(
-            "gram",
-            F.floor(F.log(F.col("n") / F.lit(float(total))) * 1000)
-            .cast("bigint")
-            .alias("logp_x1000"),
         )
     )
 
@@ -545,9 +509,9 @@ def chunk_documents(
 
 
 # --- URL / domain analysis --------------------------------------------------
-# Web-corpus curation staple: extract URLs, roll up by registrable domain,
-# gate documents by a domain blocklist. Pattern kept in the Java∩RE2 regex
-# subset (same discipline as PII_RULES) so a SQL twin can run it verbatim.
+# Web-corpus curation staple: extract URLs with their hostnames. Pattern
+# kept in the Java∩RE2 regex subset (same discipline as PII_RULES) so a SQL
+# twin can run it verbatim.
 
 URL_PATTERN = r"(?i:https?)://(?:[A-Za-z0-9._%+-]+@)?[A-Za-z0-9.-]+(?::[0-9]+)?(?:/[^\s]*)?"
 _DOMAIN_FROM_URL = r"(?i:https?)://(?:[A-Za-z0-9._%+-]+@)?([A-Za-z0-9.-]+)"
@@ -568,62 +532,6 @@ def extract_urls(
             "domain",
             F.lower(F.regexp_extract(F.col("url"), _DOMAIN_FROM_URL, 1)),
         )
-    )
-
-
-def domain_rollup(documents: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Corpus URL statistics by hostname: total occurrences and distinct
-    documents — the table a curation pass ranks to build block/allow
-    lists. One shuffle on the domain key for the agg (map-side extraction
-    before it), plus the output ranking sort.
-    """
-    return (
-        extract_urls(documents, id_col, text_col)
-        .groupBy("domain")
-        .agg(
-            F.count(F.lit(1)).alias("n_urls"),
-            F.count_distinct(F.col("doc_id")).alias("n_docs"),
-        )
-        .orderBy(F.desc("n_urls"), "domain")
-    )
-
-
-def domain_blocklist_filter(
-    documents: DataFrame,
-    blocked_domains: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Drop documents containing a URL on (or under) a blocked domain —
-    blocklists name registrable domains, so ``spam.example.com`` must hit
-    an ``example.com`` entry. Each extracted hostname explodes into its
-    dot-suffixes (≤ label count, map-side) and equi-joins the broadcast
-    blocklist — subdomain matching without a non-equi join. The blocklist
-    side is lowercased here so verbatim-pasted entries still match. Only
-    the genuinely-small blocklist is hint-broadcast; the doomed-id set
-    scales with the corpus, so its anti-join is left to AQE."""
-    urls = extract_urls(documents, id_col, text_col)
-    # "a.b.c" → ["a.b.c", "b.c", "c"]: suffix k = substring starting after
-    # the k-th dot — computed with JVM HOFs over the split labels
-    labels = F.split(F.col("domain"), r"\.")
-    suffixes = F.transform(
-        F.sequence(F.lit(0), F.size(labels) - 1),
-        lambda i: F.array_join(F.slice(labels, i + 1, F.size(labels)), "."),
-    )
-    doomed = (
-        urls.select("doc_id", F.explode(suffixes).alias("__suffix"))
-        .join(
-            F.broadcast(
-                blocked_domains.select(F.lower(F.col("domain")).alias("__suffix"))
-            ),
-            "__suffix",
-            "left_semi",
-        )
-        .select(F.col("doc_id").alias("__blocked_id"))
-        .distinct()
-    )
-    return documents.join(
-        doomed, documents[id_col] == doomed["__blocked_id"], "left_anti"
     )
 
 

@@ -9,9 +9,9 @@ properties that decide whether a query survives a 100× scale-up:
   * whole-stage codegen spans — expressions stay JVM-side
   * cartesian products — flagged unless explicitly intended
 
-Used by tests/test_plan_quality.py to pin the plan shape of every headline
-query, so a regression that silently de-optimizes a plan fails CI rather
-than a future cluster bill.
+Used by test_plan_quality.py and the other plan tests to pin the plan
+shape of every headline query, so a regression that silently
+de-optimizes a plan fails CI rather than a future cluster bill.
 """
 
 from __future__ import annotations

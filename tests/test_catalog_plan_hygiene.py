@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import pytest
 
-from data_warehouse_spark.plans.explain import plan_report
+from .explain import plan_report
 from data_warehouse_spark.queries_catalog import QUERIES
 
 from .conftest import SF_DIR

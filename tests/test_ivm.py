@@ -102,7 +102,7 @@ def test_maintenance_never_scans_base(spark):
     """The maintenance plan reads the rollup and the CDC batch only — no
     scan of the base table (that is the whole point; a 'maintenance' that
     rescanned the base would hide a full recompute)."""
-    from data_warehouse_spark.plans.explain import plan_report
+    from .explain import plan_report
 
     base = spark.createDataFrame(
         [("A", "x", 100), ("B", "y", 50)], SCHEMA

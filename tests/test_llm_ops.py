@@ -190,14 +190,16 @@ def test_multimodal_plumbing(spark):
     ]
     media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
 
-    feats = multimodal.extract_image_features(media).collect()
-    assert {r["media_id"] for r in feats} == {1, 2}
-    f1 = [r for r in feats if r["media_id"] == 1][0]
+    meta = {
+        (r["media_id"], r["metric"]): r["value"]
+        for r in multimodal.extract_media_metadata(media).collect()
+    }
+    assert {m for m, metric in meta if metric == "width"} == {1, 2}
     # header codec: width = 1 + first-two-bytes % 2048 (b"im" → 0x696d)
-    assert len(f1["embedding"]) == 16 and f1["width"] == 1 + 0x696D % 2048
-    # determinism: same payload → same features
-    again = multimodal.extract_image_features(media).collect()
-    assert sorted(map(str, feats)) == sorted(map(str, again))
+    assert meta[(1, "width")] == 1 + 0x696D % 2048
+    # determinism: same payload → same metadata
+    again = multimodal.extract_media_metadata(media).collect()
+    assert {(r["media_id"], r["metric"]): r["value"] for r in again} == meta
 
     frames = multimodal.sample_frames(media).collect()
     assert {r["media_id"] for r in frames} == {3}
@@ -474,6 +476,22 @@ _HAS_PIL = _ilu.find_spec("PIL") is not None
 _HAS_SOUNDFILE = _ilu.find_spec("soundfile") is not None
 
 
+def _wav(sample_rate: int, samples) -> bytes:
+    """Mono 16-bit PCM samples → WAV bytes via stdlib ``wave``."""
+    import io
+    import wave
+
+    import numpy as np
+
+    out = io.BytesIO()
+    with wave.open(out, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(sample_rate)
+        w.writeframes(np.asarray(samples, dtype="<i2").tobytes())
+    return out.getvalue()
+
+
 def _tiny_media(spark, kind, payload):
     # coalesce(1): exactly ONE task runs the decode, so tests asserting on
     # the surfaced executor error see THE ImportError, never a sibling
@@ -490,7 +508,7 @@ def test_real_image_decode_raises_clear_import_error(spark):
     error NAMING the missing dependency (not a bare NotImplementedError) —
     the vendored pure-Python codec covers PNG only."""
     with pytest.raises(Exception, match="PIL.Image"):
-        multimodal.extract_image_features(
+        multimodal.extract_media_metadata(
             _tiny_media(spark, "image", b"x" * 64), decode="real"
         ).collect()
     with pytest.raises(Exception, match="PIL.Image"):
@@ -530,35 +548,33 @@ def test_real_image_decode_runs_everywhere(spark):
     from data_warehouse_spark.functions import purecodec
 
     raw, pixels = _test_png(7, 5, 3)
-    feats = multimodal.extract_image_features(
-        _tiny_media(spark, "image", raw), decode="real"
-    ).collect()
-    assert len(feats) == 1
-    r = feats[0]
-    assert (r["width"], r["height"], r["channels"]) == (7, 5, 3)
-    assert r["n_bytes"] == len(raw)
-    # the embedding is computed from the REAL decoded pixels
-    import numpy as np
-
-    got = np.array(r["embedding"], dtype=np.float32)
-    assert np.allclose(got, np.resize(pixels.astype(np.float32), 16) / 255.0)
+    meta = {
+        r["metric"]: r["value"]
+        for r in multimodal.extract_media_metadata(
+            _tiny_media(spark, "image", raw), decode="real"
+        ).collect()
+    }
+    assert (meta["width"], meta["height"], meta["channels"]) == (7, 5, 3)
+    assert meta["n_bytes"] == len(raw)
 
     resized = multimodal.resize_images(
         _tiny_media(spark, "image", raw), 8, 8, decode="real"
     ).collect()
     assert (resized[0]["width"], resized[0]["height"]) == (8, 8)
     # output payload is a valid PNG of the target geometry on either codec
-    ow, oh, oc, _opix = purecodec.png_decode(bytes(resized[0]["payload"]))
+    ow, oh, oc, opix = purecodec.png_decode(bytes(resized[0]["payload"]))
     assert (ow, oh, oc) == (8, 8, 3)
+    if not _HAS_PIL:
+        # the vendored path resamples the REAL decoded pixels
+        want = purecodec.resize_nearest(pixels, 7, 5, 3, 8, 8)
+        assert opix.tolist() == want.tolist()
 
 
 def test_real_audio_decode_runs_everywhere(spark):
     """decode='real' reads an ACTUAL RIFF/WAVE payload (soundfile when
     installed, stdlib wave otherwise): rate, sample count and duration all
     come from the real container header."""
-    from data_warehouse_spark.functions import purecodec
-
-    raw = purecodec.wav_encode(16000, list(range(-500, 500)))  # 1000 frames
+    raw = _wav(16000, list(range(-500, 500)))  # 1000 frames
     rows = multimodal.extract_audio_features(
         _tiny_media(spark, "audio", raw), decode="real"
     ).collect()
@@ -573,10 +589,8 @@ def test_real_metadata_sweep_runs_everywhere(spark):
     """The fused metadata sweep's decode='real' arm over a mixed PNG+WAV
     corpus — the real-decode twin of the catalog's media_suite fake-codec
     sweep (same operator, same plumbing, real containers)."""
-    from data_warehouse_spark.functions import purecodec
-
     png, _ = _test_png(9, 4, 1)
-    wav = purecodec.wav_encode(24000, [0] * 600)
+    wav = _wav(24000, [0] * 600)
     media = spark.createDataFrame(
         [
             (1, "image", bytearray(png), "image/png", None),
@@ -875,45 +889,33 @@ def test_incremental_dedup_broadcasts_batch_not_corpus(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_ivf_index_roundtrip_and_partition_pruning(spark, tmp_path):
-    """Stored-index serving must equal in-memory serving, the artifact must
-    be laid out partitioned by cell, and the probe scan must carry a
-    partition filter on cell (dynamic pruning → sub-linear serving)."""
-    import os
+def _uniform_gram_model(spark, logp_x1000: int = -5000):
+    """A gram model ``(gram, logp_x1000)`` giving every character gram of a
+    few prose sentences the same log-probability — the model shape
+    ``lm_quality_score`` broadcasts."""
+    from data_warehouse_spark.operators import text_analysis
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    qids = [r["vec_id"] for r in emb.select("vec_id").orderBy("vec_id").limit(5).collect()]
-    path = str(tmp_path / "ivf")
-    similarity.save_ivf_index(emb, path)
-    cells = [d for d in os.listdir(f"{path}/corpus") if d.startswith("cell=")]
-    assert len(cells) > 1  # genuinely partitioned by cell
-    live = similarity.ivf_topk(emb, qids, k=5).collect()
-    stored = similarity.ivf_topk_stored(spark, path, qids, k=5).collect()
-    assert sorted(map(tuple, live)) == sorted(map(tuple, stored))
-    plan = (
-        similarity.ivf_topk_stored(spark, path, qids, k=5)
-        ._jdf.queryExecution().executedPlan().toString()
+    texts = spark.createDataFrame(
+        [
+            ("the warehouse keeps the balance of every account",),
+            ("each tenant reads its data through the service",),
+        ],
+        "text string",
     )
-    assert "dynamicpruning" in plan.lower() or "PartitionFilters: [isnotnull(cell" in plan
-
-
-def test_load_ivf_index_rejects_geometry_mismatch(spark, tmp_path):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    path = str(tmp_path / "ivf")
-    similarity.save_ivf_index(emb, path, n_cells=8)
-    with pytest.raises(ValueError, match="n_cells=8"):
-        similarity.load_ivf_index(spark, path, n_cells=16)
+    return (
+        texts.select(F.explode(text_analysis._char_grams(F.col("text"))).alias("gram"))
+        .distinct()
+        .withColumn("logp_x1000", F.lit(logp_x1000).cast("bigint"))
+    )
 
 
 def test_char_lm_scores_prose_above_gibberish(spark):
-    """The LM quality signal must separate natural prose from junk: docs
-    drawn from the corpus distribution score above a gibberish document
+    """The LM quality signal must separate natural prose from junk: a
+    sentence sharing the model's grams scores above a gibberish document
     scored with the same model."""
     from data_warehouse_spark.operators import text_analysis
 
-    corpus = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    model = text_analysis.train_char_lm(corpus)
-    assert model.count() <= text_analysis.LM_VOCAB_K
+    model = _uniform_gram_model(spark)
     probe = spark.createDataFrame(
         [
             (1, "the data warehouse keeps account balances for every tenant"),
@@ -939,42 +941,13 @@ def test_char_lm_score_is_broadcast_join(spark):
     from data_warehouse_spark.operators import text_analysis
 
     corpus = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    model = text_analysis.train_char_lm(corpus)
+    model = _uniform_gram_model(spark)
     plan = (
         text_analysis.lm_quality_score(corpus, model)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_ivf_index_append_serves_fresh_vectors(spark, tmp_path):
-    """Appending to the stored index (fixed centroids, map-side assignment)
-    makes new vectors immediately servable: a planted twin of a query
-    vector lands in the same cell and surfaces at rank 1 — no rebuild."""
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    path = str(tmp_path / "ivf")
-    similarity.save_ivf_index(emb, path)
-    base = emb.count()
-    q = emb.orderBy("vec_id").limit(1).collect()[0]
-    twin = spark.createDataFrame(
-        [(999_999, [float(x) for x in q["embedding"]], 0)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    assert similarity.append_to_ivf_index(twin, path) == 1
-    _c, _cdf, corpus = similarity.load_ivf_index(spark, path)
-    assert corpus.count() == base + 1
-    top = similarity.ivf_topk_stored(spark, path, [q["vec_id"]], k=3).collect()
-    assert top[0]["neighbor_id"] == 999_999 and top[0]["rank"] == 1
-    # wrong-dimensionality vectors are refused, store untouched
-    import pytest as _pytest
-
-    bad = spark.createDataFrame(
-        [(7, [1.0, 2.0], 0)], "vec_id long, embedding array<float>, label int"
-    )
-    with _pytest.raises(ValueError, match="refusing to append"):
-        similarity.append_to_ivf_index(bad, path)
-    assert similarity.load_ivf_index(spark, path)[2].count() == base + 1
 
 
 def test_chunk_documents_reconstruction_and_overlap(spark):
@@ -1015,7 +988,7 @@ def test_chunk_documents_reconstruction_and_overlap(spark):
 
 def test_chunk_documents_is_map_side(spark):
     from data_warehouse_spark.operators import text_analysis
-    from data_warehouse_spark.plans.explain import plan_report
+    from .explain import plan_report
 
     from data_warehouse_spark import catalog as cat
 
@@ -1028,6 +1001,9 @@ def test_chunk_documents_is_map_side(spark):
 
 
 def test_url_domain_rollup_and_blocklist(spark):
+    """``extract_urls`` yields one row per URL occurrence with its
+    hostname: case-folded, port stripped, userinfo not taken for the
+    host — the per-domain counts a curation pass ranks."""
     from data_warehouse_spark.operators import text_analysis
 
     docs = spark.createDataFrame(
@@ -1036,37 +1012,18 @@ def test_url_domain_rollup_and_blocklist(spark):
             (2, "plain text, no links at all"),
             (3, "dup domain http://ok.org/b http://ok.org:8080/c"),
             (4, "https://spam.example.com again"),
+            (9, "link https://trusted@evil.com/x here"),
         ],
         "doc_id long, text string",
     )
-    roll = {r["domain"]: (r["n_urls"], r["n_docs"]) for r in
-            text_analysis.domain_rollup(docs).collect()}
-    assert roll["ok.org"] == (3, 2)
-    assert roll["spam.example.com"] == (2, 2)  # case-folded
-    blocked = spark.createDataFrame([("spam.example.com",)], "domain string")
-    kept = {r["doc_id"] for r in
-            text_analysis.domain_blocklist_filter(docs, blocked).collect()}
-    assert kept == {2, 3}
-    # registrable-domain blocklists must catch subdomains, and verbatim
-    # mixed-case entries must still match
-    parent = spark.createDataFrame([("Example.com",)], "domain string")
-    kept2 = {r["doc_id"] for r in
-             text_analysis.domain_blocklist_filter(docs, parent).collect()}
-    assert kept2 == {2, 3}  # spam.example.com docs blocked via example.com
-    # userinfo must not be mistaken for the host
-    tricky = spark.createDataFrame(
-        [(9, "link https://trusted@evil.com/x here")], "doc_id long, text string"
-    )
-    doms = {r["domain"] for r in text_analysis.extract_urls(tricky).collect()}
-    assert doms == {"evil.com"}
-    # plan: the blocklist dimension join itself is broadcast (the doomed-id
-    # anti-join is deliberately AQE-decided — that set scales with the
-    # corpus and must never be hint-broadcast)
-    plan = (
-        text_analysis.domain_blocklist_filter(docs, blocked)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan
+    roll = {
+        r["domain"]: (r["n_urls"], r["n_docs"])
+        for r in text_analysis.extract_urls(docs)
+        .groupBy("domain")
+        .agg(F.count(F.lit(1)).alias("n_urls"), F.count_distinct("doc_id").alias("n_docs"))
+        .collect()
+    }
+    assert roll == {"ok.org": (3, 2), "spam.example.com": (2, 2), "evil.com": (1, 1)}
 
 
 # --- substring dedup (k-gram approximation of suffix-array dedup) ----------
@@ -1122,7 +1079,7 @@ def test_substring_dedup_merges_overlapping_windows(spark):
 
 
 def test_substring_dedup_two_shuffles_only(spark):
-    from data_warehouse_spark.plans.explain import plan_report
+    from .explain import plan_report
 
     df = dedup.substring_duplicate_spans(_substr_corpus(spark), k=8)
     rep = plan_report(df)
@@ -1162,7 +1119,7 @@ def test_column_stats_exact_and_one_scan(spark):
 
 def test_column_stats_approx_mode_drops_expand(spark):
     from data_warehouse_spark.operators import stats as st
-    from data_warehouse_spark.plans.explain import plan_report
+    from .explain import plan_report
 
     df = spark.range(1000).selectExpr("id AS k", "CAST(id % 7 AS DOUBLE) AS v")
     spec = [("k", "int"), ("v", "cents")]
@@ -1224,7 +1181,7 @@ def test_bloom_no_false_negatives_and_low_fp(spark):
 
 def test_bloom_gate_never_shuffles_big_side(spark):
     from data_warehouse_spark.functions import bloom as B
-    from data_warehouse_spark.plans.explain import plan_report
+    from .explain import plan_report
 
     build = spark.range(0, 100).selectExpr("id AS v")
     probe = spark.range(0, 1000).selectExpr("id AS v")
@@ -1259,10 +1216,22 @@ def test_fused_media_metadata_matches_per_kind_operators(spark):
     fused_rows = multimodal.extract_media_metadata(media).collect()
     fused = {(r["media_id"], r["metric"]): r["value"] for r in fused_rows}
     assert len(fused_rows) == len(fused)  # no duplicate (media, metric) rows
-    img = multimodal.extract_image_features(media).collect()
+    img = media.filter(F.col("kind") == "image").collect()
+    assert img
     for r in img:
-        for m in ("width", "height", "channels", "n_bytes"):
-            assert fused[(r["media_id"], m)] == r[m], (r["media_id"], m)
+        # the fake codec's header: 2-byte width and height, then channels
+        p = bytes(r["payload"]) + bytes(8)
+        header = {
+            "width": 1 + int.from_bytes(p[0:2], "big") % 2048,
+            "height": 1 + int.from_bytes(p[2:4], "big") % 2048,
+            "channels": 1 + p[4] % 4,
+            "n_bytes": len(r["payload"]),
+        }
+        for m, v in header.items():
+            assert fused[(r["media_id"], m)] == v, (r["media_id"], m)
+    resized = multimodal.resize_images(media).collect()
+    for r in resized:
+        assert fused[(r["media_id"], "channels")] == r["channels"], r["media_id"]
     aud = multimodal.extract_audio_features(media).collect()
     for r in aud:
         for m in ("sample_rate", "n_samples", "duration_ms", "n_bytes"):
@@ -1389,7 +1358,7 @@ def test_bm25_matches_pure_python_reference(spark):
 def test_bm25_plan_broadcasts_sides_and_pushes_term_filter(spark):
     from data_warehouse_spark import catalog as cat
     from data_warehouse_spark.operators import retrieval
-    from data_warehouse_spark.plans.explain import plan_report
+    from .explain import plan_report
 
     df = retrieval.bm25_topk(cat.load_table(spark, SF_DIR, "documents"))
     rep = plan_report(df)
@@ -1410,7 +1379,7 @@ def test_bm25_plan_broadcasts_sides_and_pushes_term_filter(spark):
 def test_phrase_match_is_single_scan(spark):
     from data_warehouse_spark import catalog as cat
     from data_warehouse_spark.operators import retrieval
-    from data_warehouse_spark.plans.explain import plan_report
+    from .explain import plan_report
 
     df = retrieval.phrase_match(cat.load_table(spark, SF_DIR, "documents"))
     rep = plan_report(df)
@@ -1459,7 +1428,7 @@ def test_vocab_with_oov_single_scan_and_model(spark):
 
     from data_warehouse_spark import catalog as cat
     from data_warehouse_spark.operators import retrieval
-    from data_warehouse_spark.plans.explain import plan_report
+    from .explain import plan_report
 
     docs = cat.load_table(spark, SF_DIR, "documents")
     freq = Counter()
@@ -1882,53 +1851,6 @@ def test_pair_scoring_salt_split_equals_unsplit(spark, monkeypatch):
     split_pairs, split_dedup = neardup(), semdedup()
     assert split_pairs == base_pairs
     assert split_dedup == base_dedup
-
-
-def test_stored_index_fast_build_matches_parity(spark, tmp_path):
-    """The stored-index LIFECYCLE in fast mode: save_ivf_index(fast=True)
-    and append_to_ivf_index(fast=True) must produce an artifact that
-    serves identically to the parity-built one at driver SFs (agreement ⇒
-    identical cells ⇒ identical probe candidates ⇒ identical top-k), with
-    the same cell-partitioned layout. This closes the r10 gap where the
-    7× BLAS build existed only for session indexes."""
-    import os
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    qids = [r["vec_id"] for r in
-            emb.select("vec_id").orderBy("vec_id").limit(5).collect()]
-    p_par = str(tmp_path / "ivf_parity")
-    p_fast = str(tmp_path / "ivf_fast")
-    similarity.save_ivf_index(emb, p_par)
-    similarity.save_ivf_index(emb, p_fast, fast=True)
-    # identical cell ASSIGNMENT row-for-row, not just identical serving
-    a = {r["neighbor_id"]: r["cell"]
-         for r in similarity.load_ivf_index(spark, p_par)[2]
-         .select("neighbor_id", "cell").collect()}
-    b = {r["neighbor_id"]: r["cell"]
-         for r in similarity.load_ivf_index(spark, p_fast)[2]
-         .select("neighbor_id", "cell").collect()}
-    assert a == b
-    # identical layout (cell dirs) and identical serving
-    assert (sorted(os.listdir(f"{p_par}/corpus"))
-            == sorted(os.listdir(f"{p_fast}/corpus")))
-    par = similarity.ivf_topk_stored(spark, p_par, qids, k=5).collect()
-    fst = similarity.ivf_topk_stored(spark, p_fast, qids, k=5).collect()
-    assert sorted(map(tuple, par)) == sorted(map(tuple, fst))
-
-    # append in fast mode against the fast-built artifact: the planted
-    # twin of a query vector must surface at rank 1, exactly as the
-    # parity append path pins
-    q = emb.orderBy("vec_id").limit(1).collect()[0]
-    twin = spark.createDataFrame(
-        [(999_999, [float(x) for x in q["embedding"]], 0)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    assert similarity.append_to_ivf_index(twin, p_fast, fast=True) == 1
-    assert similarity.append_to_ivf_index(twin, p_par) == 1
-    top_f = similarity.ivf_topk_stored(spark, p_fast, [q["vec_id"]], k=3).collect()
-    top_p = similarity.ivf_topk_stored(spark, p_par, [q["vec_id"]], k=3).collect()
-    assert top_f[0]["neighbor_id"] == 999_999 and top_f[0]["rank"] == 1
-    assert sorted(map(tuple, top_f)) == sorted(map(tuple, top_p))
 
 
 def test_ivfpq_refine_recall_and_limit(spark):

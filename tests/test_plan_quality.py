@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_spark import catalog as cat
 from data_warehouse_spark.operators import analytics
-from data_warehouse_spark.plans.explain import plan_report
+from .explain import plan_report
 
 from .conftest import SF_DIR
 

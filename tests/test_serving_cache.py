@@ -125,10 +125,28 @@ def test_cache_over_max_rows_falls_back(spark, tmp_path):
     assert execute(store, q, cache=cache).data == execute(store, q).data
 
 
+def _commit_second_transfer(spark, tmp_path, store) -> None:
+    """One ingest tick that lands a second CACHE_TRN transfer."""
+    root = str(tmp_path / "primary")
+    write(
+        os.path.join(root, "t_CACHE_TRN", "transaction", "TRN2"),
+        "committed\nTRX2 CACHE_TRN CREDIT CACHE_TRN DEBIT 2020-02-01T00:00:00Z 5 CZK\n",
+    )
+    write(os.path.join(root, "t_CACHE_TRN", "account", "CREDIT", "events",
+                       "0000000000", "1_1_TRN2"), "2\n")
+    write(os.path.join(root, "t_CACHE_TRN", "account", "DEBIT", "events",
+                       "0000000000", "1_-1_TRN2"), "2\n")
+    assert IngestionPipeline(spark, root, store).run_once().transfers_discovered == 1
+
+
+def _no_loader():
+    raise AssertionError("an equality shape must not reach the Spark loader")
+
+
 def test_transfer_page_cache_hits_and_invalidates(spark, tmp_path):
-    """Repeat transfer-page requests serve from the fingerprint-pinned
-    page cache (counter-visible), a table change drops every page, and
-    the cached response is byte-identical to the uncached one."""
+    """A transfers page through the cache equals the uncached Spark answer,
+    before and after a tick, and the tick's new transfer is visible to the
+    first read after it (no page outlives the table it was read from)."""
     store = _ticked_store(spark, tmp_path)
     cache = ServingCache(store)
     q = (
@@ -136,41 +154,108 @@ def test_transfer_page_cache_hits_and_invalidates(spark, tmp_path):
         "{ transaction amount credit { name balance } debit { name balance } } }"
     )
     first = execute(store, q, cache=cache)
-    assert cache.counters["transfer_page_load"] == 1
-    second = execute(store, q, cache=cache)
-    assert cache.counters["transfer_page_hit"] == 1
-    assert first.data == second.data == execute(store, q).data
-    # a different arg shape is a different entry (no false sharing)
-    q2 = q.replace("limit: 10", "limit: 1")
-    execute(store, q2, cache=cache)
-    assert cache.counters["transfer_page_load"] == 2
+    assert first.data == execute(store, q).data
+    assert len(first.data["transfers"]) == 1
 
-    # table change → every page invalidated, reload serves the new state
-    root2 = str(tmp_path / "primary")
-    write(
-        os.path.join(root2, "t_CACHE_TRN", "transaction", "TRN2"),
-        "committed\nTRX2 CACHE_TRN CREDIT CACHE_TRN DEBIT 2020-02-01T00:00:00Z 5 CZK\n",
-    )
-    write(os.path.join(root2, "t_CACHE_TRN", "account", "CREDIT", "events",
-                       "0000000000", "1_1_TRN2"), "2\n")
-    write(os.path.join(root2, "t_CACHE_TRN", "account", "DEBIT", "events",
-                       "0000000000", "1_-1_TRN2"), "2\n")
-    IngestionPipeline(spark, root2, store).run_once()
+    _commit_second_transfer(spark, tmp_path, store)
     after = execute(store, q, cache=cache)
     assert after.data == execute(store, q).data
     assert len(after.data["transfers"]) == 2  # the new transfer is visible
 
 
 def test_transfer_page_cache_respects_row_bound(spark, tmp_path):
-    """Pages above max_page_rows are served but never cached (driver
-    memory bound)."""
+    """A page past ``max_page_rows`` is refused by the KV tier and served
+    by the Spark loader, with the same answer."""
     store = _ticked_store(spark, tmp_path)
     cache = ServingCache(store, max_page_rows=0)
     q = 'query { transfers(tenant: "CACHE_TRN", limit: 10) { transaction } }'
-    execute(store, q, cache=cache)
-    execute(store, q, cache=cache)
-    assert cache.counters["transfer_page_load"] == 2
-    assert cache.counters["transfer_page_hit"] == 0
+    assert execute(store, q, cache=cache).data == execute(store, q).data
+    assert cache.counters["kv_page:transfer"] == 0
+
+
+def test_transfer_page_follower_served_stale_during_reload(spark, tmp_path):
+    """No previous generation is served across a commit: a reader that
+    arrives while a slow Spark page is in flight, and every reader after a
+    tick, gets the committed table's rows, never an older page."""
+    import threading
+
+    store = _ticked_store(spark, tmp_path)
+    cache = ServingCache(store)
+
+    def eq_page():
+        return cache.transfers_page("CACHE_TRN", None, None, False, 10, 0, _no_loader)
+
+    assert [r["transaction"] for r in eq_page()] == ["TRN"]
+    _commit_second_transfer(spark, tmp_path, store)
+
+    release = threading.Event()
+    entered = threading.Event()
+
+    def slow_loader():
+        entered.set()
+        release.wait(timeout=60)
+        return ["spark"]
+
+    got = {}
+    t = threading.Thread(target=lambda: got.update(ranged=cache.transfers_page(
+        "CACHE_TRN", None, None, True, 10, 0, slow_loader)))
+    t.start()
+    assert entered.wait(timeout=60)
+    # the range page is still loading: an equality reader is not held
+    # behind it and sees both committed transfers
+    assert sorted(r["transaction"] for r in eq_page()) == ["TRN", "TRN2"]
+    release.set()
+    t.join(timeout=60)
+    assert got["ranged"] == ["spark"]
+
+
+def test_transfers_page_routes_eq_shapes_to_kv_and_ranges_to_the_loader(spark, tmp_path):
+    """``transfers_page`` serves a tenant + ``status`` shape from the KV
+    tier with no Spark job, and hands an amount or ``valueDate`` range
+    shape to the loader. Both answers equal ``wh.transfers``."""
+    import datetime as dt
+
+    from data_warehouse_spark.operators import queries as wh
+
+    from .test_tablestore import _jobs_during
+
+    store = warehouse_store(spark, str(tmp_path / "wh"))
+    rows = [
+        (
+            "T", f"TRN{i:02d}", "TRX", i % 3, "T", f"A{i % 4}", "T", f"B{i % 5}",
+            decimal.Decimal(i * 7 % 50) + decimal.Decimal("0.25"),
+            "CZK" if i % 2 else "EUR", dt.datetime(2020, 1 + i % 12, 1 + i % 28),
+        )
+        for i in range(40)
+    ]
+    store.overwrite("transfer", spark.createDataFrame(rows, store.schemas["transfer"]))
+    cache = ServingCache(store)
+    tdf = store.read("transfer", keep_derived=True)
+    cols = ("transaction", "transfer", "status", "credit_tenant", "credit_name",
+            "debit_tenant", "debit_name", "amount", "currency", "value_date")
+
+    def same(got, **kw):
+        want = wh.transfers(tdf, tenant="T", limit=10, offset=2, **kw).collect()
+        assert want, kw
+        return [tuple(r[c] for c in cols) for r in got] == [
+            tuple(r[c] for c in cols) for r in want
+        ]
+
+    got = {}
+    jobs = _jobs_during(spark, lambda: got.update(
+        eq=cache.transfers_page("T", None, 1, False, 10, 2, _no_loader)))
+    assert jobs == set()
+    assert same(got["eq"], status=1)
+
+    calls = []
+    for kw in ({"amount_gte": decimal.Decimal("20")},
+               {"value_date_lt": dt.datetime(2020, 6, 1)}):
+        def loader(kw=kw):
+            calls.append(kw)
+            return wh.transfers(tdf, tenant="T", limit=10, offset=2, **kw).collect()
+
+        assert same(cache.transfers_page("T", None, None, True, 10, 2, loader), **kw)
+    assert len(calls) == 2
 
 
 def test_fake_store_without_versions_is_harmless(spark):
@@ -237,66 +322,6 @@ def test_torn_pin_served_from_window_history(spark, tmp_path):
     # (kv index rebuild hazard) and the request takes the Spark path
     assert balance_view.maintain(store) == "delta"
     assert cache.kv_balances(keys, pinned=pin) is None
-
-
-def test_transfer_page_follower_served_stale_during_reload(spark, tmp_path):
-    """r11: while a page's post-invalidation reload flight is running,
-    CONCURRENT requests for the same key are served the previous
-    committed generation instead of blocking on the leader's Spark job
-    (bounded one-generation staleness, MVCC semantics).  The leader
-    itself still returns the FRESH rows — first-reader freshness holds."""
-    import threading
-
-    store = _ticked_store(spark, tmp_path)
-    cache = ServingCache(store)
-    key = ("CACHE_TRN", None, None, 10, 0)
-    old_rows = [{"transaction": "OLD"}]
-    new_rows = [{"transaction": "NEW"}]
-    assert cache.transfers_page(key, lambda: old_rows) == old_rows
-
-    # invalidate: any content-changing op moves the transfer fingerprint
-    import datetime
-
-    from data_warehouse_spark.streaming.ingest import ingest_abc_schema
-
-    batch = spark.createDataFrame(
-        [("CACHE_TRN", "CREDIT", datetime.datetime(2020, 1, 3),
-          decimal.Decimal("1"), "CACHE_TRN", "TRNZ", "t1", "c")],
-        ingest_abc_schema(),
-    )
-    store.merge_insert_missing(
-        "transfer",
-        store.read("transfer").limit(0),  # no-op rows, still bumps state
-        ["tenant", "transaction", "transfer"],
-    )
-    del batch
-    # force a REAL fingerprint move via a direct write to the table dir
-    store.overwrite("transfer", store.read("transfer"))
-
-    release = threading.Event()
-    entered = threading.Event()
-
-    def slow_loader():
-        entered.set()
-        release.wait(timeout=60)
-        return new_rows
-
-    got = {}
-
-    def leader():
-        got["leader"] = cache.transfers_page(key, slow_loader)
-
-    t = threading.Thread(target=leader)
-    t.start()
-    assert entered.wait(timeout=60)
-    # follower while the flight is running: previous generation, instantly
-    assert cache.transfers_page(key, lambda: new_rows) == old_rows
-    assert cache.counters["transfer_page_stale_served"] == 1
-    release.set()
-    t.join(timeout=60)
-    assert got["leader"] == new_rows  # leader saw fresh
-    # after the flight: the fresh page is cached and served
-    assert cache.transfers_page(key, lambda: ["never"]) == new_rows
 
 
 def test_refresh_revalidates_only_what_requests_read(spark, tmp_path):

