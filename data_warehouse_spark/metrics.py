@@ -4,7 +4,9 @@ surface — StatsDClient.scala + MemoryMonitorActor.scala).
 Emitted series (names match the reference's observable set, prefix
 configurable):
   <prefix>.discovery.tenant / .account / .transfer   counters per tick
-  <prefix>.memory.bytes                              gauge
+  <prefix>.memory.bytes                              gauge: current resident
+                                                     bytes of this process
+                                                     plus the driver JVM
 
 Plain UDP datagrams in the statsd line format (``name:value|c`` /
 ``name:value|g``) — fire-and-forget, never blocks or fails the pipeline.
@@ -20,6 +22,7 @@ class StatsD:
     def __init__(self, endpoint: str | None = None, prefix: str = "dwh"):
         endpoint = endpoint or os.environ.get("DATA_WAREHOUSE_STATSD_ENDPOINT", "")
         self.prefix = prefix
+        self._jvm_pid: int | None = None
         self._addr: tuple[str, int] | None = None
         self._sock: socket.socket | None = None
         if endpoint:
@@ -51,8 +54,26 @@ class StatsD:
         self.count("discovery.account", m.accounts_discovered)
         self.count("discovery.transfer", m.transfers_discovered)
 
-    def emit_memory(self) -> None:
-        import resource
-
-        rss_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+    def emit_memory(self, spark) -> None:
+        """Current resident bytes of this process plus ``spark``'s driver
+        JVM (~3/4 of the service's memory); the JVM's pid is asked once."""
+        if not self.enabled:
+            return
+        if self._jvm_pid is None:
+            mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+            self._jvm_pid = mf.getRuntimeMXBean().getPid()
+        try:
+            rss_kb = _vm_rss_kb("self") + _vm_rss_kb(self._jvm_pid)
+        except OSError:
+            return  # no procfs, or the JVM is gone: skip this sample
         self.gauge("memory.bytes", rss_kb * 1024)
+
+
+def _vm_rss_kb(pid: int | str) -> int:
+    """A process's current resident set size in KiB (``VmRSS`` in
+    ``/proc/<pid>/status``)."""
+    with open(f"/proc/{pid}/status") as fh:
+        for line in fh:
+            if line.startswith("VmRSS:"):
+                return int(line.split()[1])
+    return 0

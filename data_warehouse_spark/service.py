@@ -114,7 +114,7 @@ class Service:
                 try:
                     m = self.pipeline.run_once()
                     self.statsd.emit_tick(m)
-                    self.statsd.emit_memory()
+                    self.statsd.emit_memory(self.spark)
                     if self.serving_cache is not None and self.store.mutations != mutations:
                         self.serving_cache.refresh()
                 except Exception:  # supervisor-restart semantics: log, retry next tick

@@ -16,6 +16,7 @@ from __future__ import annotations
 import argparse
 import hashlib
 import json
+import os
 import time
 
 import duckdb
@@ -62,7 +63,8 @@ def main() -> int:
 
     import importlib.util
 
-    spec = importlib.util.spec_from_file_location("entry_mod", "/root/repo/__spark_entry__.py")
+    entry = os.path.join(os.path.dirname(os.path.abspath(__file__)), "__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("entry_mod", entry)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     queries, oracles = mod.queries(), mod.oracle_sql()

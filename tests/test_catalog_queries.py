@@ -100,8 +100,11 @@ def test_running_balance_summary_tied_duplicate_rows(spark):
 
 def test_entry_smoke(spark):
     import importlib.util
+    import os
 
-    spec = importlib.util.spec_from_file_location("entry_mod", "/root/repo/__spark_entry__.py")
+    entry = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                         "__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("entry_mod", entry)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     df = mod.entry(spark)

@@ -138,6 +138,35 @@ def test_service_lifecycle(spark, tmp_path, statsd_listener):
     assert not svc._ingest_thread.is_alive()
 
 
+def _rss_bytes(pid) -> int:
+    with open(f"/proc/{pid}/status") as fh:
+        (line,) = [ln for ln in fh if ln.startswith("VmRSS:")]
+    return int(line.split()[1]) * 1024
+
+
+def test_memory_gauge_is_current_rss_of_python_and_the_jvm(spark, statsd_listener):
+    """``memory.bytes`` is this process's resident set plus the driver
+    JVM's, read now — the JVM is most of the service's memory."""
+    port, drain = statsd_listener
+    jvm_pid = spark.sparkContext._gateway.proc.pid  # spark-submit execs java
+    before = _rss_bytes("self") + _rss_bytes(jvm_pid)
+    StatsD(endpoint=f"127.0.0.1:{port}").emit_memory(spark)
+    after = _rss_bytes("self") + _rss_bytes(jvm_pid)
+    (line,) = [ln for ln in drain() if ".memory.bytes:" in ln]
+    name, _, rest = line.partition(":")
+    value, kind = rest.split("|")
+    assert (name, kind) == ("dwh.memory.bytes", "g")
+    assert 0.8 * min(before, after) <= int(value) <= 1.2 * max(before, after)
+
+
+def test_memory_gauge_does_no_work_when_statsd_is_off():
+    class NoSpark:
+        def __getattr__(self, name):
+            raise AssertionError(f"a disabled gauge touched spark.{name}")
+
+    StatsD(endpoint="").emit_memory(NoSpark())
+
+
 def test_management_stop_start_restart(spark, tmp_path):
     """The management.feature analogue (reference bbtest: stop unit → app
     not running; start → running; restart → running): Service.stop() halts
